@@ -213,3 +213,106 @@ def test_search_many_mixed_batch_splits_routes(spark, layouts):
          for r in idx.search_many(qs, "bm25", 10, route="spark").collect()]
     assert d == s
     assert idx._term_cache, "light queries must have used the cache"
+
+
+def test_empty_results_run_no_job(spark, layouts):
+    """A query answered empty — no match, k=0, stopwords only, the
+    noop_zero engine — returns a local relation that collects without a
+    Spark job, on either route and in a batch."""
+    idx = SearchIndex(spark, layouts["compacted"])
+    with _JobCounter(spark.sparkContext, "vg-route-empty") as jc:
+        for route in ("auto", "spark"):
+            assert idx.search("término inexistente xyzzy", "bm25", 10,
+                              route=route).collect() == []
+            assert idx.search("programación java", "bm25", 0,
+                              route=route).collect() == []
+        assert idx.search("el la de", "bm25", 10).collect() == []
+        assert idx.search("java", "noop_zero", 10).collect() == []
+        assert idx.search_many(["xyzzy", "el la de"], "bm25",
+                               10).collect() == []
+        assert jc.count() == 0
+
+
+def test_search_many_job_counts(spark, layouts):
+    """An all-light batch runs no job; a mixed batch runs its heavy
+    queries in the same single kernel job a route="spark" batch runs."""
+    sc = spark.sparkContext
+    qs = [q for q, _ in QUERIES[:6]]
+    idx = SearchIndex(spark, layouts["build"])
+    with _JobCounter(sc, "vg-batch-light") as jc:
+        assert idx.search_many(qs, "bm25", 10).collect()
+        assert jc.count() == 0
+    with _JobCounter(sc, "vg-batch-spark") as jc:
+        idx.search_many(qs, "bm25", 10, route="spark").collect()
+        n_spark = jc.count()
+    mixed = SearchIndex(spark, layouts["build"],
+                        driver_local_max_postings=250)
+    with _JobCounter(sc, "vg-batch-mixed") as jc:
+        mixed.search_many(qs, "bm25", 10).collect()
+        assert 0 < jc.count() == n_spark
+
+
+def _df(spark, pdf):
+    return spark.createDataFrame(pdf[["url", "text", "lang"]])
+
+
+class TestExplainQuery:
+    def test_plan_diagnostics(self, spark, tmp_path):
+        from visigoth_spark.query import SearchIndex
+
+        out = str(tmp_path / "idx")
+        build_index(spark, _df(spark, generate_corpus(120)), out,
+                    num_partitions=2)
+        idx = SearchIndex(spark, out)
+        d = idx.explain_query("curso java", "bm25", k=10)
+        assert d["route"] == "driver"  # tiny dfs -> hot path
+        assert not d["early_exit_empty"]
+        assert d["fetch_rows"] == 20  # tie-extended over-fetch
+        assert d["seg_files_total"] and \
+            0 < d["seg_files_planned"] <= d["seg_files_total"]
+        assert all(df > 0 for df in d["dfs"].values())
+        # plan-time AND early exit on a missing term
+        d2 = idx.explain_query("curso zzzznope", "bm25", k=10)
+        assert d2["early_exit_empty"] and d2["route"].startswith("none")
+        # forced-big df -> distributed
+        idx.driver_local_max_postings = 0
+        assert idx.explain_query("curso", "bm25", 10)["route"] == "spark"
+        # linear fetches exactly k (docid order, no url ties)
+        idx2 = SearchIndex(spark, out)
+        assert idx2.explain_query("curso", "linear", 5)["fetch_rows"] == 5
+
+    @pytest.mark.parametrize("bound", ["query", "query+exclude"])
+    def test_explain_route_is_the_route_search_takes(self, spark, layouts,
+                                                     bound):
+        """explain_query reports the route search executes. The NOT
+        terms' postings decode on whichever side serves the query, so
+        their dfs count in the route decision: with a postings bound the
+        query's own term fits but query + NOT term does not, both
+        explain and search go distributed."""
+        probe = SearchIndex(spark, layouts["build"])
+        df_q = sum(probe.explain_query("java")["dfs"].values())
+        df_x = sum(probe.explain_query("python")["dfs"].values())
+        idx = SearchIndex(
+            spark, layouts["build"],
+            driver_local_max_postings=(df_q if bound == "query"
+                                       else df_q + df_x))
+        plan = idx.explain_query("java", "bm25", 10, exclude="python")
+        with _JobCounter(spark.sparkContext, f"vg-explain-{bound}") as jc:
+            assert idx.search("java", "bm25", 10,
+                              exclude="python").collect()
+            taken = "driver" if jc.count() == 0 else "spark"
+        assert plan["route"] == taken
+        assert taken == ("spark" if bound == "query" else "driver")
+
+    def test_explain_reads_no_postings(self, spark, layouts):
+        """explain_query is the plan without execution: no Spark job, no
+        postings decoded, the hot-term cache untouched."""
+        idx = SearchIndex(spark, layouts["compacted"])
+        with _JobCounter(spark.sparkContext, "vg-explain-plan") as jc:
+            d = idx.explain_query("programación java", "bm25", 10,
+                                  exclude="python")
+            assert jc.count() == 0
+        assert not idx._term_cache and d["cached_terms"] == []
+        idx.search("programación java", "bm25", 10).collect()
+        assert idx.explain_query(
+            "programación java")["cached_terms"] == d["terms"]

@@ -98,3 +98,20 @@ def test_trained_recall_at_10(spark, emb, trained):
         }
         hits += len(brute & ivf)
     assert hits / 30 >= 0.5
+
+
+def test_ivf_oracle_follows_sf_dir_and_tolerates_missing_fixture(
+        tmp_path, monkeypatch):
+    """The trained-IVF oracle trains on the corpus SPARK_GRAFT_SF_DIR
+    names (the corpus the runner compares at); a corpus without
+    embeddings.parquet drops only that oracle key, not the whole map."""
+    from visigoth_spark import harness
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_DIR)
+    assert harness.sql_ann_ivf_trained() == harness.sql_ann_ivf_trained(
+        SF_DIR)
+    full = harness.get_oracles()
+    assert "ann_ivf_topk" in full
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))  # no fixtures
+    got = harness.get_oracles()
+    assert set(full) - set(got) == {"ann_ivf_topk"}

@@ -952,3 +952,36 @@ class TestSuggestQuery:
     def test_empty_and_stopword_only(self, pos_idx):
         assert pos_idx.suggest_query("") == []
         assert pos_idx.suggest_query("...") == []
+
+    def test_first_token_correction_enumerated(self, pos_idx):
+        """Every token's candidates are combined: per_term shrinks until
+        the full product fits max_candidates, instead of truncating a
+        product that varies only the last tokens (which kept the first
+        token on its top candidate)."""
+        out = pos_idx.suggest_query("datux beta beta beta beta", k=100,
+                                    max_candidates=40)
+        assert out[0] == ("datum beta beta beta beta", 2)
+        assert {q.split()[0] for q, _ in out} == {"datum", "datun"}
+
+    def test_cli_suggest_routes_on_analyzed_tokens(self, spark, pos_idx,
+                                                   capsys):
+        """One quoted multi-word argument is a whole-query suggestion, a
+        single word a term suggestion."""
+        import json
+
+        from visigoth_spark.cli import cmd_suggest
+
+        def run(query):
+            assert cmd_suggest(["--index", pos_idx.index_dir, "--no-stem",
+                                query]) == 0
+            return [json.loads(x)
+                    for x in capsys.readouterr().out.splitlines()]
+
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(conf)  # the cli session sets it
+        try:
+            assert run("datun alpa")[0] == {"query": "datum alpha",
+                                            "estimated_df": 2}
+            assert run("datun")[0] == {"term": "datum", "df": 2}
+        finally:
+            spark.conf.set(conf, saved)

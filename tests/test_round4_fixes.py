@@ -357,32 +357,6 @@ class TestCatalogRenameGuard:
         assert cat.search("b", "curso", k=3).count() > 0
 
 
-class TestExplainQuery:
-    def test_plan_diagnostics(self, spark, tmp_path):
-        from visigoth_spark.query import SearchIndex
-
-        out = str(tmp_path / "idx")
-        build_index(spark, _df(spark, generate_corpus(120)), out,
-                    num_partitions=2)
-        idx = SearchIndex(spark, out)
-        d = idx.explain_query("curso java", "bm25", k=10)
-        assert d["route"] == "driver"  # tiny dfs -> hot path
-        assert not d["early_exit_empty"]
-        assert d["fetch_rows"] == 20  # tie-extended over-fetch
-        assert d["seg_files_total"] and \
-            0 < d["seg_files_planned"] <= d["seg_files_total"]
-        assert all(df > 0 for df in d["dfs"].values())
-        # plan-time AND early exit on a missing term
-        d2 = idx.explain_query("curso zzzznope", "bm25", k=10)
-        assert d2["early_exit_empty"] and d2["route"].startswith("none")
-        # forced-big df -> distributed
-        idx.driver_local_max_postings = 0
-        assert idx.explain_query("curso", "bm25", 10)["route"] == "spark"
-        # linear fetches exactly k (docid order, no url ties)
-        idx2 = SearchIndex(spark, out)
-        assert idx2.explain_query("curso", "linear", 5)["fetch_rows"] == 5
-
-
 class TestKZero:
     def test_k_zero_returns_empty_not_degenerate(self, spark, tmp_path):
         """LIMIT 0 semantics: k=0 must return an empty frame on every

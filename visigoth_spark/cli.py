@@ -195,14 +195,17 @@ def cmd_suggest(argv: list[str]) -> int:
     p.add_argument("query", nargs="+")
     a = p.parse_args(argv)
 
-    from visigoth_spark.analysis import AnalyzerConfig, DEFAULT_ANALYZER
+    from visigoth_spark.analysis import (AnalyzerConfig, DEFAULT_ANALYZER,
+                                         analyze_text)
     from visigoth_spark.query import SearchIndex
 
     spark = _session("visigoth-suggest")
     analyzer = (AnalyzerConfig(stem=False) if a.no_stem else DEFAULT_ANALYZER)
     idx = SearchIndex(spark, a.index, analyzer=analyzer)
     q = " ".join(a.query)
-    if len(a.query) == 1:
+    # route on analyzed tokens, not argv words: one quoted argument may
+    # hold a whole query
+    if len(analyze_text(q, analyzer)) <= 1:
         out = idx.suggest(q, max_edits=a.max_edits, k=a.k)
         for term, df in out:
             print(json.dumps({"term": term, "df": df}))

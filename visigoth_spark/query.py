@@ -1,19 +1,29 @@
-"""Query execution: analyze the query, prune the postings scan, run the
-per-bucket kernel, merge the global top-k.
+"""Query execution: plan each query once, then execute the batch.
 
 Lifecycle (≙ SURVEY §3.2, re-expressed for Spark):
-  driver: analyze(query) with the SAME analyzer as indexing
-          (index_memory_index.go:45,63 — one pipeline for both)
-  driver: term-dictionary probe — a term with df=0 means AND-empty, return
-          without launching a job (the reference's LinearSearch early exit,
-          search_linear_search.go:65-67, promoted to plan time)
-  executors: postings scan pruned to the query terms (parquet row-group
-          skipping: postings are sorted by term within each bucket dir)
-          -> groupBy(bucket) applyInPandas kernel: decode segments, k-way
+  plan (SearchIndex._plan, driver, reads only the term dictionary):
+          analyze(query) with the SAME analyzer as indexing
+          (index_memory_index.go:45,63 — one pipeline for both), expand
+          prefix/fuzzy tokens, one termdict df probe over query + NOT
+          terms. A term with df=0 means AND-empty: answered without a job
+          (the reference's LinearSearch early exit,
+          search_linear_search.go:65-67, promoted to plan time). Then
+          idf x boost and the route (_route_driver's cost model).
+          explain_query renders this plan without executing it.
+  execute (SearchIndex._execute, one batch of plans — search is a batch
+          of one):
+    driver route: whole-term arrays from the hot-term cache, the same
+          kernel math as the executors (_decoded_body / _phrase_body).
+    spark route: ONE postings scan pruned to the batch's terms (segment
+          file manifest + parquet row-group skipping) -> groupBy(bucket)
+          applyInPandas multi-query kernel: decode segments, k-way
           galloping intersection via searchsorted (the vectorized analogue
           of two-pointer + skip pointers), exact BM25 scoring, local top-k
-  driver plan: union of local top-ks -> global orderBy(score DESC,
-          docid ASC).limit(k) -> broadcast-join docmap for url hydration.
+    merge: per query, engine order tie-extended at the k boundary -> one
+          docid-pruned docmap point lookup (_docmap_for) hydrates the urls
+          of the whole batch -> url re-tiebreak + head(k).
+  Unbounded results (k=None) stay distributed: a docmap join instead of
+  the point lookup.
 
 Determinism: the reference breaks exact-score ties on Document.ID() — the
 url STRING, ascending (search_result.go:31-38 + entities_doc.go:12-14).
@@ -30,6 +40,7 @@ from __future__ import annotations
 import json
 import math
 import os
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -83,6 +94,33 @@ _POS_KEY = "\x00pos\x00"
 # budget (~2M rows x ~24 B). Above it, a plain join keeps the match set
 # executor-side (AQE picks SMJ / shuffled hash).
 UNBOUNDED_BROADCAST_MAX_ROWS = 2_000_000
+
+# the route of a query answered at plan time, without reading postings
+_EMPTY_ROUTE = "none (plan-time empty)"
+
+# engines where every term must match: a df=0 term empties the query
+_AND_ENGINES = _AND_BM25 + ("linear", "phrase")
+
+_RESULT_TYPES = {"qid": "int", "url": "string", "docid": "long",
+                 "score": "double", "hits": "int", "raw": "string",
+                 "matches": "string"}
+
+
+@dataclass
+class QueryPlan:
+    """One query's plan, built once by SearchIndex._plan: what _execute
+    runs and what explain_query reports."""
+    engine: str  # kernel engine: the expansion engines plan as bm25_or
+    k: int | None
+    tokens: list[str]  # analyzed (expanded) tokens, in query order
+    terms: list[str]  # distinct tokens, sorted
+    dfs: dict[str, int]
+    excl_terms: list[str]  # NOT terms present in the index
+    idf: dict[str, float]  # idf x boost
+    mult: dict[str, int]  # multiplicity of each term in tokens
+    route: str  # "driver" | "spark" | _EMPTY_ROUTE
+    slop: int = 0
+    after: tuple | None = None
 
 
 def _filter_entries_visible(entries: list[dict],
@@ -615,8 +653,9 @@ class SearchIndex:
         Term frequency is zipfian, so in a real workload almost every
         query is under both bounds; at 10^12 docs a head term's df alone
         pushes past them and those queries stay distributed — exactly the
-        right split at scale."""
-        if route == "spark" or self._cached:
+        right split at scale. Executor-cached (:meth:`cache`) and
+        object-store indexes always route distributed."""
+        if route == "spark" or self._cached or self._local_root is None:
             return False
         if route == "driver":
             return True
@@ -683,19 +722,23 @@ class SearchIndex:
         except Exception:
             return None
 
-    def _decoded_term(self, term: str):
-        """(ids, tfs, dls) for one term, decoded driver-side, through the
-        LRU hot-term cache. None when the driver-side read isn't possible
-        (caller falls back to the distributed route)."""
-        hit = self._term_cache.get(term)
+    def _decoded_term(self, term: str, positional: bool = False):
+        """(ids, tfs, dls) for one term — plus the position stream when
+        ``positional`` (phrase queries) — decoded driver-side through the
+        LRU hot-term cache (positional entries under a reserved key
+        prefix). None when the driver-side read isn't possible (caller
+        falls back to the distributed route)."""
+        key = _POS_KEY + term if positional else term
+        hit = self._term_cache.get(key)
         if hit is not None:
-            self._term_cache.move_to_end(term)
+            self._term_cache.move_to_end(key)
             return hit
-        pdf = self._driver_seg_rows([term])
+        pdf = self._driver_seg_rows(
+            [term], cols=self._SEG_COLS_POS if positional else None)
         if pdf is None:
             return None
-        decoded = _decode_term_segments(pdf, term)
-        self._cache_put(term, decoded)
+        decoded = _decode_term_segments(pdf, term, positional)
+        self._cache_put(key, decoded)
         return decoded
 
     def _cache_put(self, key: str, decoded: tuple) -> None:
@@ -708,24 +751,6 @@ class SearchIndex:
             while self._term_cache_bytes > self.driver_cache_max_bytes:
                 _, old = self._term_cache.popitem(last=False)
                 self._term_cache_bytes -= sum(a.nbytes for a in old)
-
-    def _decoded_term_pos(self, term: str):
-        """(ids, tfs, dls, positions) for one term — the positional variant
-        of :meth:`_decoded_term` (phrase queries). Cached in the same LRU
-        under a reserved key prefix; None when the driver-side read isn't
-        possible."""
-        key = _POS_KEY + term
-        hit = self._term_cache.get(key)
-        if hit is not None:
-            self._term_cache.move_to_end(key)
-            return hit
-        pdf = self._driver_seg_rows(
-            [term], cols=self._SEG_COLS_POS)
-        if pdf is None:
-            return None
-        decoded = _decode_term_segments_pos(pdf, term)
-        self._cache_put(key, decoded)
-        return decoded
 
     @property
     def has_positions(self) -> bool:
@@ -754,21 +779,9 @@ class SearchIndex:
                 return tbl["term"].to_pylist()
             except Exception:
                 pass
-        if self._local_root is None:
-            # object-store index: row-group-pruned remote range seek —
-            # ranged GETs, no Spark job (same reader term_df uses)
-            try:
-                if self._remote_td is None:
-                    td_uri = vstore.join(self.index_dir, "termdict")
-                    if self._store.isdir(td_uri):
-                        self._remote_td = _RemoteTermdict(
-                            self._store, td_uri)
-                if self._remote_td is not None:
-                    return self._remote_td.scan_range(lo, hi)
-            except Exception:
-                if self._remote_td is not None:
-                    self._remote_td.close()
-                self._remote_td = None
+        got = self._remote_termdict(lambda td: td.scan_range(lo, hi))
+        if got is not None:
+            return got
         td_uri = vstore.join(self.index_dir, "termdict")
         if not self._store.isdir(td_uri):
             return None
@@ -776,6 +789,27 @@ class SearchIndex:
         if hi is not None:
             df = df.filter(F.col("term") < hi)
         return [r["term"] for r in df.select("term").collect()]
+
+    def _remote_termdict(self, read):
+        """``read(_RemoteTermdict)`` on an object-store index: a
+        row-group-pruned remote termdict seek (footers parsed once, cached)
+        — a few ranged GETs instead of a Spark job. None on a local index,
+        without a termdict, or when the read fails (the JVM streams are
+        released; callers fall back to a Spark scan)."""
+        if self._local_root is not None:
+            return None
+        try:
+            if self._remote_td is None:
+                td_uri = vstore.join(self.index_dir, "termdict")
+                if self._store.isdir(td_uri):
+                    self._remote_td = _RemoteTermdict(self._store, td_uri)
+            if self._remote_td is not None:
+                return read(self._remote_td)
+        except Exception:
+            if self._remote_td is not None:
+                self._remote_td.close()
+            self._remote_td = None
+        return None
 
     def expand_prefix(self, prefix: str, max_terms: int = 1024) -> list[str]:
         """Vocabulary terms starting with ``prefix`` (over the ANALYZED
@@ -838,9 +872,11 @@ class SearchIndex:
         query ASC. The original analyzed query never suggests itself; a
         token with no live candidates at all stays verbatim (df 0) so the
         rest of the query can still be corrected. Driver-side math over
-        at most ``per_term``^n_tokens (capped at ``max_candidates``)
-        combinations of already-computed (term, df) pairs — no extra
-        Spark jobs beyond the per-token ``suggest`` calls.
+        EVERY combination of each token's top ``per_term`` candidates,
+        with ``per_term`` lowered until per_term^n_tokens fits
+        ``max_candidates`` (a truncated product would vary only the last
+        tokens) — no extra Spark jobs beyond the per-token ``suggest``
+        calls.
 
         Returns [(suggested_query, estimated_df), ...], best first."""
         import itertools
@@ -848,14 +884,15 @@ class SearchIndex:
         toks = analyze_text(query, self.analyzer)
         if not toks:
             return []
+        while per_term > 1 and per_term ** len(toks) > max_candidates:
+            per_term -= 1
         per: list[list[tuple[str, int]]] = []
         for t in toks:
             opts = self.suggest(t, max_edits=max_edits, k=per_term)
             per.append(opts or [(t, 0)])
         orig = " ".join(toks)
         scored = []
-        for combo in itertools.islice(itertools.product(*per),
-                                      max_candidates):
+        for combo in itertools.product(*per):
             q = " ".join(c[0] for c in combo)
             if q == orig:
                 continue
@@ -946,23 +983,10 @@ class SearchIndex:
         storage."""
         if not terms:
             return {}
+        got = self._remote_termdict(lambda td: td.lookup(terms))
+        if got is not None:
+            return got
         out = {t: 0 for t in terms}
-        if self._local_root is None:
-            # object-store index: row-group-pruned remote seek (footers
-            # parsed once, cached) — a few ranged GETs instead of a Spark
-            # job per query; errors fall through to the Spark scan
-            try:
-                if self._remote_td is None:
-                    td_uri = vstore.join(self.index_dir, "termdict")
-                    if self._store.isdir(td_uri):
-                        self._remote_td = _RemoteTermdict(
-                            self._store, td_uri)
-                if self._remote_td is not None:
-                    return self._remote_td.lookup(terms)
-            except Exception:
-                if self._remote_td is not None:
-                    self._remote_td.close()  # release the JVM streams
-                self._remote_td = None
         td = (os.path.join(self._local_root, "termdict")
               if self._local_root is not None else "")
         if td and os.path.isdir(td):
@@ -1115,60 +1139,137 @@ class SearchIndex:
     def explain_query(self, query: str, engine: str = "bm25",
                       k: int | None = 10,
                       exclude: str | None = None) -> dict:
-        """Plan-level diagnostics WITHOUT running the query — what the
-        planner would do: analyzed terms, per-term dfs, the route the
-        cost model picks (driver hot-path vs distributed), the
-        k-boundary over-fetch, how many segment files the range manifest
-        admits (vs total), and the early-exit decision. The serving-ops
-        answer to `.explain("formatted")` for a layer whose planning
-        happens before Catalyst sees anything."""
-        tokens, _boosts = _parse_boosted_query(query, self.analyzer)
-        if engine in _EXPANSION and tokens:
-            expand = (self.expand_prefix if engine == "bm25_prefix"
-                      else self.expand_fuzzy)
-            expanded: set[str] = set()
-            for tok in dict.fromkeys(tokens):
-                expanded.update(expand(tok))
-            tokens = sorted(expanded)
-        terms = sorted(set(tokens))
-        dfs = self.term_df(terms) if terms else {}
-        eff = "bm25_or" if engine in _EXPANSION else engine
-        empty = (
-            not terms
-            or (eff in _AND_BM25 or eff in ("linear", "phrase"))
-            and any(dfs[t] == 0 for t in terms)
-            or eff == "bm25_or" and all(dfs[t] == 0 for t in terms)
-        )
-        excl_terms: list[str] = []
-        if exclude is not None:
-            cand = sorted(set(analyze_text(exclude, self.analyzer)))
-            excl_dfs = self.term_df(cand)
-            excl_terms = [t for t in cand if excl_dfs[t] > 0]
-        pruned = (self._seg_prune.prune(terms + excl_terms)
-                  if terms else None)
-        route = ("none (plan-time empty)" if empty else
-                 "driver" if k is not None and self._route_driver(dfs, "auto")
-                 else "spark")
+        """The plan :meth:`search` executes for this query, rendered
+        WITHOUT executing it (no postings decoded, no Spark job, the
+        hot-term cache untouched): analyzed terms, per-term dfs, the route
+        the cost model picks (driver hot-path vs distributed, NOT terms'
+        dfs included), the k-boundary over-fetch, how many segment files
+        the range manifest admits (vs total), and the early-exit decision.
+        The serving-ops answer to `.explain("formatted")` for a layer
+        whose planning happens before Catalyst sees anything."""
+        self._validate(engine, "auto", 0, False)
+        p = self._plan([query], engine, k, exclude=exclude)[0]
+        empty = p.route == _EMPTY_ROUTE
+        pruned = (self._seg_prune.prune(p.terms + p.excl_terms)
+                  if p.terms else None)
+        key = _POS_KEY if p.engine == "phrase" else ""
         return {
             "query": query,
             "engine": engine,
             "k": k,
-            "tokens": tokens,
-            "terms": terms,
-            "dfs": dfs,
-            "exclude_terms": excl_terms,
+            "tokens": p.tokens,
+            "terms": p.terms,
+            "dfs": p.dfs,
+            "exclude_terms": p.excl_terms,
             "n_tombstones": (0 if self._tombstones is None
                              else int(len(self._tombstones))),
-            "early_exit_empty": bool(empty),
-            "route": route,
+            "early_exit_empty": empty,
+            "route": p.route,
             "fetch_rows": (None if empty or k is None
-                           else (k if engine == "linear" else 2 * k)),
+                           else (k if p.engine == "linear" else 2 * k)),
             "seg_files_planned": (None if pruned is None else len(pruned)),
             "seg_files_total": (None if self._segfiles is None
                                 else len(self._segfiles)),
-            "cached_terms": [t for t in terms if t in self._term_cache],
+            "cached_terms": [t for t in p.terms
+                             if key + t in self._term_cache],
             "n_docs": self.stats["n_docs"],
         }
+
+    def _validate(self, engine: str, route: str, slop: int,
+                  include_raw: bool) -> None:
+        """Argument checks shared by search, search_many and
+        explain_query."""
+        if engine not in ENGINES:
+            raise ValueError(
+                f"unknown engine {engine!r}; expected one of {sorted(ENGINES)}"
+            )
+        if route not in ("auto", "driver", "spark"):
+            raise ValueError(f"unknown route {route!r}")
+        if slop:
+            if engine != "phrase":
+                raise ValueError("slop is only meaningful for engine='phrase'")
+            if slop < 0:
+                raise ValueError("slop must be >= 0")
+        if engine == "phrase" and not self.has_positions:
+            raise ValueError(
+                "engine='phrase' requires an index built with "
+                "store_positions=True"
+            )
+        if include_raw and not self.has_raw:
+            raise ValueError(
+                "include_raw requires an index built with store_raw=True"
+            )
+
+    def _plan(self, queries: list[str], engine: str, k: int | None,
+              route: str = "auto", slop: int = 0,
+              exclude: str | None = None,
+              after: tuple | None = None) -> list[QueryPlan]:
+        """Plan each query of a batch once: boosted parse, prefix/fuzzy
+        expansion, ONE term_df probe over every query and NOT term, the
+        plan-time empty decision (the reference's LinearSearch early exit,
+        search_linear_search.go:65-67, promoted to plan time), idf x boost,
+        multiplicity and the route. :meth:`_execute` runs these plans and
+        :meth:`explain_query` renders them, so the reported plan is the
+        executed one. Reads only the term dictionary."""
+        expand = {"bm25_prefix": self.expand_prefix,
+                  "bm25_fuzzy": self.expand_fuzzy}.get(engine)
+        parsed = []
+        for q in queries:
+            tokens, boosts = _parse_boosted_query(q, self.analyzer)
+            if expand is not None:
+                # expand each analyzed token against the term dictionary,
+                # then score the union as OR-BM25 (each expansion with its
+                # own idf — the Lucene MultiTermQuery boolean rewrite). A
+                # boosted piece's expansions inherit its boost.
+                expanded: set[str] = set()
+                eboosts: dict[str, float] = {}
+                for tok in dict.fromkeys(tokens):
+                    exp = expand(tok)
+                    expanded.update(exp)
+                    if tok in boosts:
+                        eboosts.update(dict.fromkeys(exp, boosts[tok]))
+                tokens, boosts = sorted(expanded), eboosts
+            parsed.append((tokens, boosts))
+        excl = (sorted(set(analyze_text(exclude, self.analyzer)))
+                if exclude is not None else [])
+        dfs_all = self.term_df(sorted(
+            {t for tokens, _ in parsed for t in tokens}.union(excl)))
+        # a NOT term absent from the index excludes nothing — drop it from
+        # the plan (no scan rows, no kernel decode)
+        excl = [t for t in excl if dfs_all[t] > 0]
+        kind = "bm25_or" if expand is not None else engine
+        n_docs = self.stats["n_docs"]
+        plans = []
+        for tokens, boosts in parsed:
+            terms = sorted(set(tokens))
+            dfs = {t: dfs_all[t] for t in terms}
+            empty = (k is not None and k <= 0 or kind == "noop_zero"
+                     or kind != "noop_all" and (
+                         not terms
+                         # AND with a missing term / OR with no matching term
+                         or kind in _AND_ENGINES and 0 in dfs.values()
+                         or kind == "bm25_or" and not any(dfs.values())))
+            if empty:
+                where = _EMPTY_ROUTE
+            elif k is not None and kind != "noop_all" and self._route_driver(
+                    # the NOT terms' postings decode on whichever side
+                    # serves the query, so their dfs count too
+                    {t: dfs_all[t] for t in terms + excl}, route):
+                where = "driver"
+            else:
+                where = "spark"
+            idf = {t: math.log((n_docs - d + 0.5) / (d + 0.5) + 1.0)
+                   for t, d in dfs.items()}
+            for t, b in boosts.items():
+                # boost = scaled idf: flows through exact scoring AND the
+                # WAND/OR block-max upper bounds identically (both are
+                # linear in idf), so pruning stays exact under boosts
+                if t in idf:
+                    idf[t] *= b
+            plans.append(QueryPlan(
+                kind, k, tokens, terms, dfs, excl, idf,
+                {t: tokens.count(t) for t in terms}, where, slop, after))
+        return plans
 
     # ---- engines ------------------------------------------------------------
     def search(self, query: str, engine: str = "bm25", k: int | None = 10,
@@ -1217,24 +1318,16 @@ class SearchIndex:
         — same pruned files, same kernels, no Spark job — and big ones
         distributed (_route_driver documents the cost model); "driver" /
         "spark" force a path. Results are identical on either route.
-        Unbounded results (k=None) always run distributed."""
-        if engine not in ENGINES:
-            raise ValueError(
-                f"unknown engine {engine!r}; expected one of {sorted(ENGINES)}"
-            )
-        if route not in ("auto", "driver", "spark"):
-            raise ValueError(f"unknown route {route!r}")
-        if slop:
-            if engine != "phrase":
-                raise ValueError("slop is only meaningful for engine='phrase'")
-            if slop < 0:
-                raise ValueError("slop must be >= 0")
-        if exclude is not None and engine in ("noop_zero", "noop_all"):
-            raise ValueError("exclude is not supported by the noop engines")
+        Unbounded results (k=None) always run distributed.
+
+        A top-k query is :meth:`search_many` of one: the same plan
+        (:meth:`explain_query` renders it) and the same executor."""
+        self._validate(engine, route, slop, include_raw)
+        if engine in ("noop_zero", "noop_all") and (
+                exclude is not None or after is not None or highlight):
+            raise ValueError("exclude, after and highlight are not "
+                             "supported by the noop engines")
         if after is not None:
-            if engine in ("noop_zero", "noop_all"):
-                raise ValueError(
-                    "after is not supported by the noop engines")
             if k is None:
                 raise ValueError("after (pagination) requires a top-k "
                                  "query (k is not None)")
@@ -1244,29 +1337,15 @@ class SearchIndex:
         if highlight:
             if not include_raw:
                 raise ValueError("highlight requires include_raw=True")
-            if engine in ("noop_zero", "noop_all"):
-                raise ValueError(
-                    "highlight is not supported by the noop engines")
             if k is None:
                 raise ValueError(
                     "highlight requires a top-k query (k is not None) — "
                     "it runs driver-side on the hydrated rows"
                 )
-        if include_raw and not self.has_raw:
-            raise ValueError(
-                "include_raw requires an index built with store_raw=True"
-            )
-        if k is not None and k <= 0:
-            # LIMIT 0 semantics; also keeps the kernels' k-boundary
-            # arithmetic (argpartition/iloc[k-1]) out of degenerate range
-            return self._empty_result(include_raw, highlight)
-        if engine == "noop_zero":
-            return self._empty_result(include_raw, highlight)
-        if engine == "noop_all":
-            cols = ["url", "docid", F.lit(0.0).alias("score"),
-                    F.lit(0).alias("hits")]
-            if include_raw:
-                cols.append("raw")
+        cols = _result_cols(include_raw, highlight)
+        if engine == "noop_all" and (k is None or k > 0):
+            sel = ["url", "docid", F.lit(0.0).alias("score"),
+                   F.lit(0).alias("hits")] + (["raw"] if include_raw else [])
             src = self._docmap
             if self._tombstones is not None:
                 if len(self._tombstones) <= self._TOMB_BROADCAST_MIN:
@@ -1279,223 +1358,35 @@ class SearchIndex:
                         [(int(d),) for d in self._tombstones],
                         "docid long")
                     src = src.join(F.broadcast(tdf), "docid", "left_anti")
-            out = src.select(*cols).orderBy("docid")
+            out = src.select(*sel).orderBy("docid")
             return out.limit(k) if k is not None else out
 
-        tokens, boosts = _parse_boosted_query(query, self.analyzer)
-        if not tokens:
-            return self._empty_result(include_raw, highlight)
-        if engine in _EXPANSION:
-            # expand each analyzed token against the term dictionary, then
-            # score the union as OR-BM25 (each expansion with its own idf —
-            # the Lucene MultiTermQuery boolean rewrite). A boosted piece's
-            # expansions inherit its boost.
-            expand = (self.expand_prefix if engine == "bm25_prefix"
-                      else self.expand_fuzzy)
-            expanded: set[str] = set()
-            eboosts: dict[str, float] = {}
-            for tok in dict.fromkeys(tokens):
-                exp = expand(tok)
-                expanded.update(exp)
-                if tok in boosts:
-                    for e in exp:
-                        eboosts[e] = boosts[tok]
-            if not expanded:
-                return self._empty_result(include_raw, highlight)
-            tokens = sorted(expanded)
-            boosts = eboosts
-            engine = "bm25_or"
-        if engine == "phrase" and not self.has_positions:
-            raise ValueError(
-                "engine='phrase' requires an index built with "
-                "store_positions=True"
-            )
-        terms = sorted(set(tokens))
-        multiplicity = {t: tokens.count(t) for t in terms}
-
-        excl_terms: list[str] = []
-        if exclude is not None:
-            excl_terms = sorted(set(analyze_text(exclude, self.analyzer)))
-        dfs_all = self.term_df(terms + [t for t in excl_terms
-                                        if t not in terms])
-        dfs = {t: dfs_all[t] for t in terms}
-        # a NOT term absent from the index excludes nothing — drop it from
-        # the plan (no scan rows, no kernel decode)
-        excl_terms = [t for t in excl_terms if dfs_all[t] > 0]
-        if (engine in ("linear", "phrase") or engine in _AND_BM25) and any(
-            dfs[t] == 0 for t in terms
-        ):
-            return self._empty_result(include_raw, highlight)  # AND with a missing term
-        if engine == "bm25_or" and all(dfs[t] == 0 for t in terms):
-            return self._empty_result(include_raw, highlight)  # OR, no matching term
-
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        idf = {
-            t: math.log((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)
-            for t in terms
-        }
-        for t, b in boosts.items():
-            # boost = scaled idf: flows through exact scoring AND the
-            # WAND/OR block-max upper bounds identically (both are linear
-            # in idf), so pruning stays exact under boosts
-            if t in idf:
-                idf[t] *= b
-
-        kernel = _make_kernel(engine, terms, multiplicity, idf, avgdl,
-                              threshold=len(tokens), k=k, dfs=dfs,
-                              tokens=tokens, slop=slop,
-                              excl_terms=excl_terms,
-                              excl_ids=self._tombstone_ref(), after=after)
-        # routing accounts for the NOT terms too: their postings decode on
-        # whichever side serves the query
-        route_dfs = dict(dfs)
-        for t in excl_terms:
-            route_dfs[t] = max(route_dfs.get(t, 0), dfs_all[t])
-        top = None
-        if k is not None and self._route_driver(route_dfs, route):
-            decoded = {}
-            for t in terms:
-                d = (self._decoded_term_pos(t) if engine == "phrase"
-                     else self._decoded_term(t))
-                if d is None:  # can't read driver-side -> distributed
-                    decoded = None
-                    break
-                decoded[t] = d
-            excl_arr = self._tombstones
-            if decoded is not None and excl_terms:
-                parts = []
-                for t in excl_terms:
-                    d = self._decoded_term(t)
-                    if d is None:
-                        decoded = None
-                        break
-                    if len(d[0]):
-                        parts.append(d[0])
-                if decoded is not None and parts:
-                    tex = (parts[0] if len(parts) == 1
-                           else np.unique(np.concatenate(parts)))
-                    excl_arr = (tex if excl_arr is None
-                                else np.union1d(excl_arr, tex))
-            if decoded is not None:
-                if engine == "phrase":
-                    out = _phrase_body(decoded, tokens, idf, avgdl, k,
-                                       slop=slop, excl=excl_arr,
-                                       after=after)
-                else:
-                    # with whole-term decoded arrays in hand, exhaustive
-                    # exact scoring IS the fastest plan (WAND's partial
-                    # decode saves nothing once everything is decoded);
-                    # scores bit-identical (TestWandParity)
-                    body_engine = ("bm25_exhaustive" if engine in
-                                   ("bm25", "bm25_wand") else engine)
-                    out = _decoded_body(decoded, body_engine, terms,
-                                        multiplicity, idf, avgdl,
-                                        threshold=len(tokens), k=k,
-                                        excl=excl_arr, after=after)
-                top = _order_and_head(out, engine, k)
-        if top is None:
-            seg = self._seg_scan(
-                terms + excl_terms,
-                cols=(self._SEG_COLS_POS
-                      if engine == "phrase" else None),
-            )
-            if seg is None:  # no segment file can contain any query term
-                return self._empty_result(include_raw, highlight)
-            local = seg.groupBy("bucket").applyInPandas(
-                kernel, RESULT_KERNEL_SCHEMA)
-            if engine == "hits":
-                ordered = local.orderBy(F.desc("hits"), F.asc("docid"))
-            elif engine == "linear":
-                ordered = local.orderBy(F.asc("docid"))
-            else:
-                ordered = local.orderBy(F.desc("score"), F.asc("docid"))
-            if k is None:
-                # unbounded result: stay fully distributed. Broadcast the
-                # ranked ids into the docmap join only when the termdict
-                # already proves the match set is small (AND matches <=
-                # min df; OR/hits <= sum df): a head-term unbounded query
-                # would otherwise collect every matching row onto the
-                # driver just to ship it back out — past broadcast limits
-                # long before 10^12 docs. Above the bound, a plain join
-                # (AQE picks SMJ/shuffled-hash) keeps it executor-side.
-                out_cols = ["url", "docid", "score", "hits"] + (
-                    ["raw"] if include_raw else []
-                )
-                est = (min(dfs.values())
-                       if engine in _AND_BM25 or engine == "linear"
-                       else sum(dfs.values()))
-                ranked = (F.broadcast(ordered)
-                          if est <= UNBOUNDED_BROADCAST_MAX_ROWS
-                          else ordered)
-                return (
-                    self._docmap.join(ranked, "docid")
-                    .select(*out_cols)
-                    .orderBy(*_order_cols(engine))
-                )
-            # top-k path: collect the (tiny) ranked ids, then hydrate with a
-            # docid-pruned docmap scan — docmap files are docid-sorted with
-            # small row groups, so the isin filter prunes at row-group level
-            # (two short jobs instead of one join over the whole docmap).
-            # Non-linear engines fetch 2k: kernels tie-extend their caps,
-            # so the k-boundary tie class (up to k extra rows) arrives
-            # here for the url re-tiebreak below (linear's order IS docid
-            # — no url ties to resolve)
-            fetch = k if engine == "linear" else 2 * k
-            top = ordered.limit(fetch).collect()
-        if not top:
-            return self._empty_result(include_raw, highlight)
-        ids = [int(r["docid"]) for r in top]
-        doc_of = self._docmap_for(ids, with_raw=include_raw)
-        # Ordering contract: the reference breaks exact-score ties on
-        # Document.ID() — the NAME string, i.e. url ASC
-        # (search_result.go:31-38 + entities_doc.go:12-14). Kernels select
-        # the k-set on (score DESC, docid ASC) TIE-EXTENDED at the k
-        # boundary (<=2k rows, _head_k_with_ties); docid ≡ url order for
-        # pure batch builds and after compact_index, so there the contract
-        # holds end to end. For APPENDED indexes (docid = ingest order)
-        # the hydrated rows — including the boundary tie class — are
-        # re-tiebroken on url below and trimmed back to k, so the
-        # RETURNED SET matches the reference's url-order selection too.
-        # Residual: a tie class larger than k straddling the boundary is
-        # truncated to the docid-smallest 2k before hydration (bounded by
-        # design; exact again after compact_index).
-        # result as a pandas-backed (Arrow) local relation: collect() on it
-        # is jobless, so a driver-routed query runs ZERO Spark jobs end to
-        # end (the distributed route reuses this block after its collect)
-        out_pd = pd.DataFrame({
-            "url": [doc_of[r["docid"]][0] for r in top],
-            "docid": np.array([r["docid"] for r in top], dtype=np.int64),
-            "score": np.array([r["score"] for r in top], dtype=np.float64),
-            "hits": np.array([r["hits"] for r in top], dtype=np.int32),
-        })
-        schema = "url string, docid long, score double, hits int"
-        if include_raw:
-            out_pd["raw"] = [doc_of[r["docid"]][1] for r in top]
-            schema += ", raw string"
-        out_pd = _retiebreak_on_url(out_pd, engine)
-        if k is not None and len(out_pd) > k:
-            # drop the boundary-tie over-fetch now that urls decided it
-            out_pd = out_pd.head(k)
-        if highlight:
-            out_pd = out_pd.copy()
-            if engine == "phrase":
-                # positions-aware: spans = the matched chain windows the
-                # kernel counted, not every term occurrence
-                out_pd["matches"] = [
-                    json.dumps(phrase_highlight_spans(
-                        r or "", tokens, slop, self.analyzer))
-                    for r in out_pd["raw"]
-                ]
-            else:
-                hl_terms = frozenset(terms)
-                out_pd["matches"] = [
-                    json.dumps(highlight_spans(r or "", hl_terms,
-                                               self.analyzer))
-                    for r in out_pd["raw"]
-                ]
-            schema += ", matches string"
-        return self.spark.createDataFrame(out_pd, schema)
+        plan = self._plan([query], engine, k, route, slop, exclude, after)[0]
+        if k is not None or plan.route == _EMPTY_ROUTE:
+            return self._local_result(
+                self._execute([plan], include_raw, highlight)[0], cols)
+        # unbounded result: stay fully distributed. Broadcast the ranked
+        # ids into the docmap join only when the termdict already proves
+        # the match set is small (AND matches <= min df; OR/hits <= sum
+        # df): a head-term unbounded query would otherwise collect every
+        # matching row onto the driver just to ship it back out — past
+        # broadcast limits long before 10^12 docs. Above the bound, a
+        # plain join (AQE picks SMJ/shuffled-hash) keeps it executor-side.
+        seg = self._plan_scan([plan])
+        if seg is None:  # no segment file can contain any query term
+            return self._local_result(None, cols)
+        ranked = seg.groupBy("bucket").applyInPandas(
+            self._kernel(plan), RESULT_KERNEL_SCHEMA)
+        est = (min(plan.dfs.values())
+               if plan.engine in _AND_BM25 + ("linear",)
+               else sum(plan.dfs.values()))
+        if est <= UNBOUNDED_BROADCAST_MAX_ROWS:
+            ranked = F.broadcast(ranked)
+        return (
+            self._docmap.join(ranked, "docid")
+            .select(*cols)
+            .orderBy(*_order_cols(plan.engine))
+        )
 
     def search_iter(self, query: str, engine: str = "bm25",
                     k: int | None = None, include_raw: bool = False,
@@ -1533,268 +1424,146 @@ class SearchIndex:
 
         Returns (qid, url, docid, score, hits[, raw]), each qid's rows in
         the engine's order. qid = position in ``queries``."""
-        if engine not in ENGINES or engine in ("noop_zero", "noop_all"):
+        if engine in ("noop_zero", "noop_all"):
             raise ValueError(f"unsupported batch engine {engine!r}")
-        if engine == "phrase" and not self.has_positions:
-            raise ValueError(
-                "engine='phrase' requires an index built with "
-                "store_positions=True"
-            )
-        if slop and engine != "phrase":
-            raise ValueError("slop is only meaningful for engine='phrase'")
-        if route not in ("auto", "driver", "spark"):
-            raise ValueError(f"unknown route {route!r}")
-        if k <= 0:  # LIMIT 0 semantics (see search())
-            return self._empty_batch_result(include_raw)
-        if include_raw and not self.has_raw:
-            raise ValueError(
-                "include_raw requires an index built with store_raw=True"
-            )
-        expand = None
-        if engine in _EXPANSION:
-            # per-query termdict expansion, then the whole batch scores as
-            # OR-BM25 (identical to search()'s expansion rewrite)
-            expand = (self.expand_prefix if engine == "bm25_prefix"
-                      else self.expand_fuzzy)
-            engine = "bm25_or"
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        plans: dict[int, dict] = {}
-        all_terms: set[str] = set()
-        for qid, q in enumerate(queries):
-            tokens, boosts = _parse_boosted_query(q, self.analyzer)
-            if expand is not None and tokens:
-                expanded: set[str] = set()
-                eboosts: dict[str, float] = {}
-                for tok in dict.fromkeys(tokens):
-                    exp_t = expand(tok)
-                    expanded.update(exp_t)
-                    if tok in boosts:
-                        for e in exp_t:
-                            eboosts[e] = boosts[tok]
-                tokens = sorted(expanded)
-                boosts = eboosts
-            if tokens:
-                terms = sorted(set(tokens))
-                plans[qid] = {"tokens": tokens, "terms": terms,
-                              "boosts": boosts}
-                all_terms.update(terms)
-        if not plans:
-            return self._empty_batch_result(include_raw)
-        dfs = self.term_df(sorted(all_terms))
-        kernels: list[tuple[int, object]] = []
-        for qid, p in sorted(plans.items()):
-            terms = p["terms"]
-            if (engine in ("linear", "phrase") or engine in _AND_BM25) and any(
-                dfs[t] == 0 for t in terms
-            ):
+        self._validate(engine, route, slop, include_raw)
+        plans = self._plan(queries, engine, k, route, slop)
+        found = []
+        for qid, out in enumerate(self._execute(plans, include_raw)):
+            if out is not None:
+                out.insert(0, "qid", np.int32(qid))
+                found.append(out)
+        return self._local_result(
+            pd.concat(found, ignore_index=True) if found else None,
+            _result_cols(include_raw, qid=True))
+
+    def _execute(self, plans: list[QueryPlan], include_raw: bool = False,
+                 highlight: bool = False) -> list[pd.DataFrame | None]:
+        """Run a batch of top-k plans. Driver-routed plans decode through
+        the hot-term cache; every other plan shares ONE
+        groupBy(bucket).applyInPandas job (the multi-query kernel). Each
+        plan's rows then get one engine-order merge, tie-extended at the k
+        boundary, the whole batch one docmap point lookup, and each plan
+        the url re-tiebreak + head(k) (the ordering contract, see
+        _head_k_with_ties / _retiebreak_on_url) and highlighting.
+        Returns per plan its result frame (url, docid, score, hits[, raw]
+        [, matches]) in engine order, or None when nothing matched."""
+        found: dict[int, pd.DataFrame] = {}
+        distributed: list[int] = []
+        decoded: dict[tuple, tuple | None] = {}  # batch-local decode memo
+        for i, p in enumerate(plans):
+            if p.route == "driver":
+                out = self._driver_body(p, decoded)
+                if out is not None:
+                    found[i] = out
+                    continue
+            if p.route != _EMPTY_ROUTE:  # spark, or unreadable driver-side
+                distributed.append(i)
+        seg = (self._plan_scan([plans[i] for i in distributed])
+               if distributed else None)
+        if seg is not None:  # None: no segment file holds any term
+            kernels = [(i, self._kernel(plans[i])) for i in distributed]
+            rows = seg.groupBy("bucket").applyInPandas(
+                _multi_kernel(kernels), "qid int, " + RESULT_KERNEL_SCHEMA,
+            ).toPandas()
+            found.update((int(i), g) for i, g in rows.groupby("qid"))
+        tops = {}
+        for i, out in found.items():
+            p = plans[i]
+            if not len(out):
                 continue
-            if engine == "bm25_or" and all(dfs[t] == 0 for t in terms):
-                continue
-            idf = {
-                t: math.log((n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)
-                for t in terms
-            }
-            for t, b in p.get("boosts", {}).items():
-                if t in idf:
-                    idf[t] *= b
-            mult = {t: p["tokens"].count(t) for t in terms}
-            plans[qid]["idf"] = idf
-            plans[qid]["mult"] = mult
-            kernels.append((qid, _make_kernel(
-                engine, terms, mult, idf, avgdl,
-                threshold=len(p["tokens"]), k=k, dfs=dfs,
-                tokens=p["tokens"], slop=slop,
-                excl_ids=self._tombstone_ref(),
-            )))
-        if not kernels:
-            return self._empty_batch_result(include_raw)
-        live_terms = sorted(
-            {t for qid, _ in kernels for t in plans[qid]["terms"]}
-        )
-
-        def make_multi_kernel(subset: list):
-            def multi_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                outs = []
-                for qid, kern in subset:
-                    out = kern(pdf)
-                    if len(out):
-                        out = out.copy()
-                        out.insert(0, "qid", np.int32(qid))
-                        outs.append(out)
-                if not outs:
-                    return pd.DataFrame({
-                        "qid": pd.Series(dtype=np.int32),
-                        "docid": pd.Series(dtype=np.int64),
-                        "score": pd.Series(dtype=np.float64),
-                        "hits": pd.Series(dtype=np.int32),
-                    })
-                return pd.concat(outs, ignore_index=True)
-            return multi_kernel
-
-        # per-QUERY routing: each query whose own terms fit the bounds is
-        # served from the hot-term cache; the heavy queries share ONE
-        # distributed job (route="driver" forces everything driver-side,
-        # route="spark" everything distributed — a mixed serving batch
-        # pays one job for its head queries instead of one per batch)
-        local = None
-        if route != "spark" and not self._cached:
-            light, heavy = [], []
-            for qid, kern in kernels:
-                own = {t: dfs[t] for t in plans[qid]["terms"]}
-                if self._route_driver(own, route):
-                    light.append(qid)
-                else:
-                    heavy.append((qid, kern))
-            rows_out: list | None = []
-            if light:
-                need = sorted({t for qid in light
-                               for t in plans[qid]["terms"]})
-                decoded = {}
-                for t in need:
-                    d = (self._decoded_term_pos(t) if engine == "phrase"
-                         else self._decoded_term(t))
-                    if d is None:  # can't read driver-side
-                        rows_out = None
-                        break
-                    decoded[t] = d
-                if rows_out is not None:
-                    body_engine = ("bm25_exhaustive" if engine in
-                                   ("bm25", "bm25_wand") else engine)
-                    for qid in light:
-                        p = plans[qid]
-                        if engine == "phrase":
-                            out = _phrase_body(
-                                {t: decoded[t] for t in p["terms"]},
-                                p["tokens"], p["idf"], avgdl, k, slop=slop,
-                                excl=self._tombstones,
-                            )
-                        else:
-                            out = _decoded_body(
-                                {t: decoded[t] for t in p["terms"]},
-                                body_engine, p["terms"], p["mult"],
-                                p["idf"], avgdl,
-                                threshold=len(p["tokens"]), k=k,
-                                excl=self._tombstones,
-                            )
-                        if len(out):
-                            rows_out.extend(
-                                {"qid": qid, "docid": int(r.docid),
-                                 "score": float(r.score),
-                                 "hits": int(r.hits)}
-                                for r in out.itertuples()
-                            )
-            if rows_out is not None:
-                if heavy:
-                    heavy_terms = sorted(
-                        {t for qid, _ in heavy
-                         for t in plans[qid]["terms"]}
-                    )
-                    seg = self._seg_scan(
-                        heavy_terms,
-                        cols=(self._SEG_COLS_POS
-                              if engine == "phrase" else None),
-                    )
-                    if seg is not None:  # None -> provably no rows
-                        rows_out.extend(
-                            seg.groupBy("bucket").applyInPandas(
-                                make_multi_kernel(heavy),
-                                "qid int, " + RESULT_KERNEL_SCHEMA,
-                            ).collect()
-                        )
-                local = rows_out
-        if local is None:
-            seg = self._seg_scan(
-                live_terms,
-                cols=(self._SEG_COLS_POS
-                      if engine == "phrase" else None),
-            )
-            if seg is None:  # no segment file can contain any live term
-                return self._empty_batch_result(include_raw)
-            local = seg.groupBy("bucket").applyInPandas(
-                make_multi_kernel(kernels), "qid int, " + RESULT_KERNEL_SCHEMA
-            ).collect()
-
-        # driver-side merge: per qid, global engine-order top-k
-        by_qid: dict[int, list] = {}
-        for r in local:
-            by_qid.setdefault(r["qid"], []).append(r)
-        results: list[tuple] = []
-        ids: set[int] = set()
-        for qid in sorted(by_qid):
-            rows = by_qid[qid]
-            if engine == "hits":
-                rows.sort(key=lambda r: (-r["hits"], r["docid"]))
-                rows = _tie_extended_slice(rows, "hits", k)
-            elif engine == "linear":
-                rows.sort(key=lambda r: r["docid"])
-                rows = rows[:k]
+            if p.engine == "linear":  # docid order: no url ties to resolve
+                tops[i] = out.sort_values("docid").head(p.k)
             else:
-                rows.sort(key=lambda r: (-r["score"], r["docid"]))
-                rows = _tie_extended_slice(rows, "score", k)
-            results.extend(
-                (qid, int(r["docid"]), float(r["score"]), int(r["hits"]))
-                for r in rows
-            )
-            ids.update(int(r["docid"]) for r in rows)
-        if not results:
-            return self._empty_batch_result(include_raw)
-        doc_of = self._docmap_for(sorted(ids), with_raw=include_raw)
-        schema = "qid int, url string, docid long, score double, hits int"
-        out_pd = pd.DataFrame({
-            "qid": np.array([q for q, *_ in results], dtype=np.int32),
-            "url": [doc_of[d][0] for _, d, _, _ in results],
-            "docid": np.array([d for _, d, _, _ in results],
-                              dtype=np.int64),
-            "score": np.array([s for _, _, s, _ in results],
-                              dtype=np.float64),
-            "hits": np.array([h for _, _, _, h in results],
-                             dtype=np.int32),
-        })
-        if include_raw:
-            out_pd["raw"] = [doc_of[d][1] for _, d, _, _ in results]
-            schema += ", raw string"
-        # per-qid url tiebreak on the hydrated rows (see search())
-        if engine == "hits":
-            by, asc = ["qid", "hits", "url"], [True, False, True]
-        elif engine == "linear":
-            by, asc = ["qid", "docid"], [True, True]
-        else:
-            by, asc = ["qid", "score", "url"], [True, False, True]
-        out_pd = out_pd.sort_values(by, ascending=asc, kind="stable",
-                                    ignore_index=True)
-        # trim each qid's boundary-tie over-fetch now that urls decided it
-        out_pd = out_pd.groupby("qid", sort=False).head(k).reset_index(
-            drop=True)
+                tops[i] = _head_k_with_ties(
+                    out, "hits" if p.engine == "hits" else "score", p.k)
+        ids = sorted({d for out in tops.values()
+                      for d in out["docid"].tolist()})
+        doc_of = self._docmap_for(ids, with_raw=include_raw) if ids else {}
+        results: list[pd.DataFrame | None] = [None] * len(plans)
+        for i, out in tops.items():
+            p = plans[i]
+            docids = out["docid"].to_numpy(np.int64)
+            res = pd.DataFrame({
+                "url": [doc_of[d][0] for d in docids.tolist()],
+                "docid": docids,
+                "score": out["score"].to_numpy(np.float64),
+                "hits": out["hits"].to_numpy(np.int32),
+            })
+            if include_raw:
+                res["raw"] = [doc_of[d][1] for d in docids.tolist()]
+            # drop the boundary-tie over-fetch now that urls decided it
+            res = _retiebreak_on_url(res, p.engine).head(p.k)
+            if highlight:
+                if p.engine == "phrase":
+                    # positions-aware: spans = the matched chain windows
+                    # the kernel counted, not every term occurrence
+                    spans = [phrase_highlight_spans(
+                        r or "", p.tokens, p.slop, self.analyzer)
+                        for r in res["raw"]]
+                else:
+                    hl_terms = frozenset(p.terms)
+                    spans = [highlight_spans(r or "", hl_terms,
+                                             self.analyzer)
+                             for r in res["raw"]]
+                res = res.assign(matches=[json.dumps(s) for s in spans])
+            results[i] = res
+        return results
+
+    def _driver_body(self, p: QueryPlan, decoded: dict
+                     ) -> pd.DataFrame | None:
+        """One driver-routed plan over whole-term arrays from the hot-term
+        cache (``decoded`` memoizes them across the batch). None when a
+        term can't be read driver-side — the caller runs it distributed."""
+        def get(t: str, positional: bool = False):
+            if (t, positional) not in decoded:
+                decoded[t, positional] = self._decoded_term(t, positional)
+            return decoded[t, positional]
+
+        arrays = {t: get(t, p.engine == "phrase") for t in p.terms}
+        excl = [get(t) for t in p.excl_terms]
+        if any(d is None for d in [*arrays.values(), *excl]):
+            return None
+        excl_ids = _with_excl(self._tombstones, [d[0] for d in excl])
+        avgdl = self.stats["avgdl"]
+        if p.engine == "phrase":
+            return _phrase_body(arrays, p.tokens, p.idf, avgdl, p.k,
+                                slop=p.slop, excl=excl_ids, after=p.after)
+        # with whole-term decoded arrays in hand, exhaustive exact scoring
+        # IS the fastest plan (WAND's partial decode saves nothing once
+        # everything is decoded); scores bit-identical (TestWandParity)
+        body_engine = ("bm25_exhaustive" if p.engine in ("bm25", "bm25_wand")
+                       else p.engine)
+        return _decoded_body(arrays, body_engine, p.terms, p.mult, p.idf,
+                             avgdl, threshold=len(p.tokens), k=p.k,
+                             excl=excl_ids, after=p.after)
+
+    def _kernel(self, p: QueryPlan):
+        """The per-bucket executor kernel for one plan."""
+        return _make_kernel(p.engine, p.terms, p.mult, p.idf,
+                            self.stats["avgdl"], threshold=len(p.tokens),
+                            k=p.k, dfs=p.dfs, tokens=p.tokens, slop=p.slop,
+                            excl_terms=p.excl_terms,
+                            excl_ids=self._tombstone_ref(), after=p.after)
+
+    def _plan_scan(self, plans: list[QueryPlan]):
+        """Pruned postings scan over the plans' query and NOT terms."""
+        terms = sorted({t for p in plans for t in p.terms + p.excl_terms})
+        return self._seg_scan(terms, cols=(
+            self._SEG_COLS_POS if plans[0].engine == "phrase" else None))
+
+    def _local_result(self, out_pd: pd.DataFrame | None,
+                      cols: list[str]) -> DataFrame:
+        """A result as a pandas-backed (Arrow) local relation: collect()
+        on it runs no Spark job, so a driver-routed query runs ZERO jobs
+        end to end. An empty result is a one-null-row frame limited to 0
+        — collecting createDataFrame of an empty frame launches a job."""
+        schema = ", ".join(f"{c} {_RESULT_TYPES[c]}" for c in cols)
+        if out_pd is None:
+            return self.spark.createDataFrame(
+                pd.DataFrame([[None] * len(cols)], columns=cols),
+                schema).limit(0)
         return self.spark.createDataFrame(out_pd, schema)
-
-    def _empty_batch_result(self, include_raw: bool = False) -> DataFrame:
-        schema = "qid int, url string, docid long, score double, hits int"
-        if include_raw:
-            schema += ", raw string"
-        return self.spark.createDataFrame([], schema)
-
-    def _empty_result(self, include_raw: bool = False,
-                      highlight: bool = False) -> DataFrame:
-        schema = "url string, docid long, score double, hits int"
-        if include_raw:
-            schema += ", raw string"
-        if highlight:
-            schema += ", matches string"
-        return self.spark.createDataFrame([], schema)
-
-
-def _tie_extended_slice(rows: list, metric: str, k: int) -> list:
-    """List twin of _head_k_with_ties for search_many's per-qid merge:
-    ``rows`` is already sorted (metric DESC, docid ASC); keep the first k
-    plus rows tied with the k-th metric value, bounded to 2k total."""
-    if len(rows) <= k:
-        return rows
-    kth = rows[k - 1][metric]
-    n_keep = k
-    while n_keep < min(len(rows), 2 * k) and rows[n_keep][metric] == kth:
-        n_keep += 1
-    return rows[:n_keep]
 
 
 def _head_k_with_ties(out: pd.DataFrame, metric: str, k: int
@@ -1830,94 +1599,82 @@ def _retiebreak_on_url(out_pd: pd.DataFrame, engine: str) -> pd.DataFrame:
     docid ≡ url order (rows arrive already so ordered); for appended
     indexes this re-sorts the (tie-extended, <=2k) hydrated rows — the
     callers trim back to k after."""
-    if engine == "hits":
-        by, asc = ["hits", "url"], [False, True]
-    elif engine in ("linear", "noop_all"):
-        by, asc = ["docid"], [True]
-    else:
-        by, asc = ["score", "url"], [False, True]
+    by, asc = _order_keys(engine)
     return out_pd.sort_values(by, ascending=asc, kind="stable",
                               ignore_index=True)
 
 
-def _order_and_head(allr: pd.DataFrame, engine: str, k: int | None) -> list:
-    """Engine-order global top-k over a kernel-output frame — the
-    driver-side twin of orderBy(...).limit(k), tie-extended at the k
-    boundary (<=2k rows) so the caller's url re-tiebreak can select the
-    reference's k-set on appended indexes. Returns rows shaped like the
-    collected distributed result (dict access by column name)."""
-    if not len(allr):
-        return []
+def _order_keys(engine: str) -> tuple[list[str], list[bool]]:
+    """An engine's result order as (columns, ascending)."""
     if engine == "hits":
-        allr = allr.sort_values(["hits", "docid"],
-                                ascending=[False, True])
-        if k is not None and len(allr) > k:
-            allr = _head_k_with_ties(allr, "hits", k)
-    elif engine == "linear":
-        allr = allr.sort_values("docid")
-        if k is not None:
-            allr = allr.head(k)
-    else:
-        allr = allr.sort_values(["score", "docid"],
-                                ascending=[False, True])
-        if k is not None and len(allr) > k:
-            allr = _head_k_with_ties(allr, "score", k)
-    return [
-        {"docid": int(r.docid), "score": float(r.score),
-         "hits": int(r.hits)}
-        for r in allr.itertuples()
-    ]
-
-
-def _order_cols(engine: str):
-    if engine == "hits":
-        return [F.desc("hits"), F.asc("url")]
+        return ["hits", "url"], [False, True]
     if engine in ("linear", "noop_all"):
-        return [F.asc("docid")]
-    return [F.desc("score"), F.asc("url")]
+        return ["docid"], [True]
+    return ["score", "url"], [False, True]
 
 
-def _decode_term_segments(pdf: pd.DataFrame, term: str):
-    """Concat a term's (disjoint, docid-ranged) segments in docid order."""
+def _order_cols(engine: str) -> list:
+    """:func:`_order_keys` as Spark sort columns."""
+    return [F.col(c).asc() if a else F.col(c).desc()
+            for c, a in zip(*_order_keys(engine))]
+
+
+def _result_cols(include_raw: bool = False, highlight: bool = False,
+                 qid: bool = False) -> list[str]:
+    """Result columns of search (qid=False) / search_many (qid=True)."""
+    return ((["qid"] if qid else []) + ["url", "docid", "score", "hits"]
+            + (["raw"] if include_raw else [])
+            + (["matches"] if highlight else []))
+
+
+def _multi_kernel(kernels: list):
+    """One applyInPandas kernel for a batch: every (qid, kernel) runs on
+    the bucket and its rows carry their qid."""
+    def multi_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        outs = [(qid, out) for qid, kern in kernels
+                if len(out := kern(pdf))]
+        if not outs:
+            return _EMPTY.assign(qid=np.int32(0))
+        res = pd.concat([out for _, out in outs], ignore_index=True)
+        res["qid"] = np.repeat(np.array([q for q, _ in outs], np.int32),
+                               [len(out) for _, out in outs])
+        return res
+    return multi_kernel
+
+
+def _with_excl(excl: np.ndarray | None, id_lists: list[np.ndarray]
+               ) -> np.ndarray | None:
+    """The sorted exclusion docid array plus the NOT terms' docid lists."""
+    parts = [p for p in id_lists if len(p)]
+    if not parts:
+        return excl
+    tex = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
+    return tex if excl is None else np.union1d(excl, tex)
+
+
+def _decode_term_segments(pdf: pd.DataFrame, term: str,
+                          positional: bool = False):
+    """Concat a term's (disjoint, docid-ranged) segments in docid order:
+    (ids, tfs, dls), plus with ``positional`` the flat per-occurrence
+    position stream (posting runs tiling it in docid order, ascending
+    within a posting)."""
     rows = pdf[pdf["term"] == term].sort_values("min_docid")
-    ids, tfs, dls = [], [], []
-    for blob in rows["blob"]:
-        d, t, l = decode_segment(bytes(blob))
-        ids.append(d)
-        tfs.append(t)
-        dls.append(l)
-    return (
-        np.concatenate(ids) if ids else np.zeros(0, dtype=np.int64),
-        np.concatenate(tfs) if tfs else np.zeros(0, dtype=np.int64),
-        np.concatenate(dls) if dls else np.zeros(0, dtype=np.int64),
-    )
-
-
-def _decode_term_segments_pos(pdf: pd.DataFrame, term: str):
-    """Positional variant of :func:`_decode_term_segments`: concat a term's
-    segments in docid order, returning (ids, tfs, dls, positions) where
-    ``positions`` is the flat per-occurrence position stream (posting runs
-    tiling it in docid order, ascending within a posting)."""
-    rows = pdf[pdf["term"] == term].sort_values("min_docid")
-    ids, tfs, dls, pos = [], [], [], []
-    for blob, pblob in zip(rows["blob"], rows["pos_blob"]):
-        d, t, l = decode_segment(bytes(blob))
-        if pblob is None:
-            raise ValueError(
-                "segment has no pos_blob — phrase queries require an index "
-                "built with store_positions=True"
-            )
-        ids.append(d)
-        tfs.append(t)
-        dls.append(l)
-        pos.append(decode_positions(bytes(pblob), t))
-    z = np.zeros(0, dtype=np.int64)
-    return (
-        np.concatenate(ids) if ids else z,
-        np.concatenate(tfs) if tfs else z.copy(),
-        np.concatenate(dls) if dls else z.copy(),
-        np.concatenate(pos) if pos else z.copy(),
-    )
+    parts = []
+    for blob, pblob in zip(rows["blob"], rows["pos_blob"] if positional
+                           else rows["blob"]):
+        part = decode_segment(bytes(blob))
+        if positional:
+            if pblob is None:
+                raise ValueError(
+                    "segment has no pos_blob — phrase queries require an "
+                    "index built with store_positions=True"
+                )
+            part = (*part, decode_positions(bytes(pblob), part[1]))
+        parts.append(part)
+    return tuple(
+        np.concatenate([pt[j] for pt in parts]) if parts
+        else np.zeros(0, dtype=np.int64)
+        for j in range(4 if positional else 3))
 
 
 def _deletion_neighborhood(term: str, d: int) -> list[str]:
@@ -2054,9 +1811,7 @@ def _phrase_body(decoded: dict, tokens: list[str], idf: dict[str, float],
         np.float64)
     coeff = float(sum(idf[tok] for tok in tokens))
     ptf_f = ptf.astype(np.float64)
-    score = coeff * (ptf_f * (BM25_K1 + 1.0)) / (
-        ptf_f + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-    )
+    score = _bm25(coeff, ptf_f, dl, avgdl)
     if after is not None:
         keepm = _after_keep(score, docs, after)
         docs, score, ptf = docs[keepm], score[keepm], ptf[keepm]
@@ -2097,6 +1852,13 @@ def _parse_boosted_query(query: str, analyzer: AnalyzerConfig
             for t in toks:
                 boosts[t] = b
     return tokens, boosts
+
+
+def _bm25(idf, tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """One term's BM25 contribution — the single scoring expression of
+    every engine and route, so their float64 scores stay bit-identical."""
+    return idf * (tf * (BM25_K1 + 1.0)) / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
 
 
 def _after_keep(metric: np.ndarray, docids: np.ndarray,
@@ -2256,9 +2018,7 @@ def _wand_kernel_body(pdf: pd.DataFrame, terms: list[str],
         for t in sorted(terms):  # sorted-term summation: float determinism
             tf = tf_c[t][sel]
             dl = dl_c[t][sel]
-            s += idf[t] * (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-            )
+            s += _bm25(idf[t], tf, dl, avgdl)
         return s
 
     if k is None or len(cand) <= k:
@@ -2353,9 +2113,7 @@ def _or_kernel_body(pdf: pd.DataFrame, terms: list[str],
             m = ids[pos] == sub
             tf = tfs[pos[m]].astype(np.float64)
             dl = dls[pos[m]].astype(np.float64)
-            s[m] += idf[t] * (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-            )
+            s[m] += _bm25(idf[t], tf, dl, avgdl)
         return s
 
     # hits = number of distinct present terms matching each doc
@@ -2424,13 +2182,8 @@ def _make_kernel(engine: str, terms: list[str], multiplicity: dict[str, int],
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         # excl_ids is an ndarray or a Spark Broadcast of one
         excl = getattr(excl_ids, "value", excl_ids)
-        if excl_terms:
-            parts = [p for p in (_decode_term_segments(pdf, t)[0]
-                                 for t in excl_terms) if len(p)]
-            if parts:
-                tex = (parts[0] if len(parts) == 1
-                       else np.unique(np.concatenate(parts)))
-                excl = tex if excl is None else np.union1d(excl, tex)
+        excl = _with_excl(excl, [_decode_term_segments(pdf, t)[0]
+                                 for t in excl_terms or []])
         if engine in ("bm25", "bm25_wand"):
             if after is not None:
                 # paging wants top-k BELOW the cursor — the inverse of what
@@ -2448,7 +2201,7 @@ def _make_kernel(engine: str, terms: list[str], multiplicity: dict[str, int],
             return _or_kernel_body(pdf, terms, idf, avgdl, k, excl=excl,
                                    after=after)
         if engine == "phrase":
-            decoded = {t: _decode_term_segments_pos(pdf, t) for t in terms}
+            decoded = {t: _decode_term_segments(pdf, t, True) for t in terms}
             return _phrase_body(decoded, tokens, idf, avgdl, k, slop=slop,
                                 excl=excl, after=after)
         decoded = {t: _decode_term_segments(pdf, t) for t in terms}
@@ -2521,9 +2274,7 @@ def _decoded_body(decoded: dict, engine: str, terms: list[str],
             m = ids[pos] == uniq
             tf = tfs[pos[m]].astype(np.float64)
             dl = dls[pos[m]].astype(np.float64)
-            score[m] += idf[t] * (tf * (BM25_K1 + 1.0)) / (
-                tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-            )
+            score[m] += _bm25(idf[t], tf, dl, avgdl)
             hits[m] += 1
         if after is not None:
             keepm = _after_keep(score, uniq, after)
@@ -2565,9 +2316,7 @@ def _decoded_body(decoded: dict, engine: str, terms: list[str],
         pos = np.searchsorted(ids, cand)
         tf = tfs[pos].astype(np.float64)
         dl = dls[pos].astype(np.float64)
-        score += idf[t] * (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-        )
+        score += _bm25(idf[t], tf, dl, avgdl)
     if after is not None:
         keepm = _after_keep(score, cand, after)
         cand, score = cand[keepm], score[keepm]
