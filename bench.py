@@ -63,9 +63,9 @@ QUERY_SUITE = [
 
 
 def _planned_per_query(ix) -> float | None:
-    """Median number of segment files the segfiles manifest admits per
+    """Median number of segment files the per-file term ranges admit per
     suite query — driver-side arithmetic over the same range check
-    _seg_scan runs before planning. None when the index has no manifest."""
+    _seg_scan runs before planning. None when no ranges are loaded."""
     from visigoth_spark.analysis import analyze_text
 
     if not ix._segfiles:
@@ -299,6 +299,8 @@ def resume_measurement() -> dict:
     import signal
     import subprocess
 
+    from visigoth_spark.build import load_snapshot
+
     tmp = tempfile.mkdtemp(prefix="vg_resume_", dir="/dev/shm")
     cold_dir = os.path.join(tmp, "cold")
     res_dir = os.path.join(tmp, "res")
@@ -323,11 +325,8 @@ def resume_measurement() -> dict:
     if killed:
         p.send_signal(signal.SIGKILL)
         p.wait()
-    manifests = os.path.join(res_dir, "_manifests")
-    batches_done = (
-        len([f for f in os.listdir(manifests) if f.startswith("batch_")])
-        if os.path.isdir(manifests) else 0
-    )
+    snap = load_snapshot(res_dir)
+    batches_done = len(snap["batches"]) if snap else 0
     t0 = time.time()
     p = child(res_dir)
     p.wait()
@@ -474,9 +473,9 @@ def main() -> None:
 
     idx = SearchIndex(spark, idx_hi)
     # plan-level pruning on the NEVER-maintained fresh build: build_index
-    # finalizes segments term-range partitioned and writes segfiles.json,
-    # so file-level pruning works from the first query (r3 gap — a fresh
-    # index scheduled one split per corpus partition per query)
+    # finalizes segments term-range partitioned and records per-file term
+    # ranges, so file-level pruning works from the first query (r3 gap — a
+    # fresh index scheduled one split per corpus partition per query)
     fresh_index_info = {
         "seg_files_total": len(idx._segfiles or []),
         "seg_files_planned_per_query": _planned_per_query(idx),
@@ -785,8 +784,8 @@ pairs in the JSON. Details + host-noise evidence: BASELINE.md.
 | BM25 p50: appended (pre-merge) vs merged | {r['merge']['bm25_p50_appended']} s -> {r['merge']['bm25_p50_merged']} s | same index, best of 2 passes each |
 | compaction (force-merge) wall | {r['compact']['wall']} s | full rewrite: decode -> url-order remap -> re-encode, local[{b['cores_hi']}] |
 | BM25 p50 on compacted layout | {r['compact']['bm25_p50']} s | term-range segment files, best of 2 passes |
-| segment files planned per query, FRESH build | {r['fresh_index']['seg_files_planned_per_query']} of {r['fresh_index']['seg_files_total']} | never-merged index: build-time term-range finalize + segfiles.json (r4) |
-| segment files planned per query, compacted | {r['compact']['seg_files_planned_per_query']} of {r['compact']['seg_files_total']} | segfiles.json file-range manifest, median over the suite |
+| segment files planned per query, FRESH build | {r['fresh_index']['seg_files_planned_per_query']} of {r['fresh_index']['seg_files_total']} | never-merged index: build-time term-range finalize + per-file term ranges (r4) |
+| segment files planned per query, compacted | {r['compact']['seg_files_planned_per_query']} of {r['compact']['seg_files_total']} | per-file term ranges in the snapshot, median over the suite |
 | batched (8-checkpoint) cold build wall | {r['resume']['cold_batched_wall']} s | n_batches=8, local[{b['cores_hi']}] |
 | kill+resume: resumed-build wall | {r['resume']['resume_wall']} s | SIGKILL at {r['resume']['killed_after_sec']} s ({r['resume']['batches_committed_at_kill']}/8 batches committed); resume completes only the rest |
 | resumed ≡ cold segments | {r['resume']['segments_identical_to_cold']} | content digest over every posting segment row |

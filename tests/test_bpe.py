@@ -84,6 +84,14 @@ def test_frozen_merges_file_shape():
         known.add(a + b)
 
 
+def test_frozen_merges_have_unique_outputs():
+    """Rank-order folding equals priority-queue BPE only when no two
+    merges produce the same symbol (bpe.py module docstring)."""
+    merges = load_merges(MERGES_FILE)
+    outputs = [a + b for a, b in merges]
+    assert len(set(outputs)) == len(outputs)
+
+
 # --- Spark plan == python reference == DuckDB oracle -------------------------
 
 

@@ -16,6 +16,7 @@ from visigoth_spark.build import (
     append_index,
     build_index,
     compact_index,
+    load_snapshot,
     load_stats,
 )
 from visigoth_spark.corpus import generate_corpus
@@ -42,6 +43,16 @@ def _appended_index(spark, tmp_path, name, slices, **kw):
     for s in slices[1:]:
         append_index(spark, _df(spark, s), out, num_partitions=2, **kw)
     return out
+
+
+def _files(out, kind):
+    """The snapshot's per-file range entries (``segfiles``/``docfiles``)."""
+    return [e for b in load_snapshot(out)["batches"] for e in b[kind]]
+
+
+def _last_batch(out):
+    """Path prefix of the snapshot's newest batch."""
+    return f"data/batch={load_snapshot(out)['batches'][-1]['batch']}/"
 
 
 def _docmap_rows(spark, out, cols=("docid", "url", "doclen")):
@@ -244,10 +255,9 @@ class TestCompactModes:
 
 class TestCompactStreamingInterplay:
     def test_stream_epoch_ledger_survives_compaction(self, spark, tmp_path):
-        """Compaction must carry the streaming epoch ledger
-        (stream_epochs.json) across the _manifests swap: a restarted stream
-        replays its last epoch, and a lost ledger would re-ingest it as a
-        duplicate batch."""
+        """Compaction must carry the stream's ``last_epoch`` into its
+        snapshot: a restarted stream replays its last epoch, and a lost
+        epoch id would re-ingest it as a duplicate batch."""
         from visigoth_spark.streaming import foreach_batch_indexer
 
         pdf = generate_corpus(120).sort_values("url").reset_index(drop=True)
@@ -289,17 +299,15 @@ class TestCompactStreamingInterplay:
 
 
 class TestFileLevelTermPruning:
-    """compact_index writes _manifests/segfiles.json (per-file term
-    ranges); SearchIndex._seg_scan enumerates only covering files. The
-    pruned plan must be invisible semantically: same results as the full
-    hive scan, and appends must invalidate the manifest."""
+    """compact_index records per-file term ranges in the snapshot;
+    SearchIndex._seg_scan enumerates only covering files. The pruned plan
+    must be invisible semantically: same results as the full scan of the
+    executor-cached mode, and appends must extend the ranges."""
 
     def test_manifest_written_and_results_identical(self, spark, tmp_path):
         pdf, slices = _interleaved_slices(150, 3)
         out = _appended_index(spark, tmp_path, "fp", slices)
         compact_index(spark, out, num_partitions=4)
-        mpath = os.path.join(out, "_manifests", "segfiles.json")
-        assert os.path.exists(mpath)
         idx = SearchIndex(spark, out)
         assert idx._segfiles is not None and len(idx._segfiles) >= 2
         # disjoint, ordered file ranges
@@ -310,8 +318,7 @@ class TestFileLevelTermPruning:
         for q in QUERIES:
             pruned[q] = [(r["url"], r["score"], r["hits"]) for r in
                          idx.search(q, "bm25", k=10).collect()]
-        os.remove(mpath)
-        full = SearchIndex(spark, out)
+        full = SearchIndex(spark, out).cache()  # unpruned scan
         assert full._segfiles is None
         for q in QUERIES:
             got = [(r["url"], r["score"], r["hits"]) for r in
@@ -329,32 +336,26 @@ class TestFileLevelTermPruning:
         assert idx.search("ÿÿÿÿ", "hits", k=10).count() == 0
 
     def test_append_maintains_manifest(self, spark, tmp_path):
-        """An append EXTENDS the file-range manifest with its own batch's
-        file ranges (it used to delete it, costing file-level pruning
-        until the next merge/compact): the appended doc's never-seen term
-        must be findable through the maintained manifest, and the old
-        batches keep their tight pruning entries."""
-        import json
-
+        """An append EXTENDS the file ranges with its own batch's (it used
+        to delete them, costing file-level pruning until the next
+        merge/compact): the appended doc's never-seen term must be
+        findable through the maintained ranges, and the old batches keep
+        their tight pruning entries."""
         import pandas as pd
 
         pdf, slices = _interleaved_slices(60, 2)
         out = _appended_index(spark, tmp_path, "fp3", slices)
         compact_index(spark, out, num_partitions=2)
-        mpath = os.path.join(out, "_manifests", "segfiles.json")
-        with open(mpath) as f:
-            before = json.load(f)["files"]
+        before = _files(out, "segfiles")
         extra = pd.DataFrame({
             "url": ["zz-new-doc"],
             "text": ["palabrarara inventada"],
             "lang": ["es"],
         })
         append_index(spark, _df(spark, extra), out, num_partitions=1)
-        assert os.path.exists(mpath)
-        with open(mpath) as f:
-            after = json.load(f)["files"]
-        new_entries = [e for e in after
-                       if e["path"].startswith("data/batch=1/")]
+        after = _files(out, "segfiles")
+        new = _last_batch(out)
+        new_entries = [e for e in after if e["path"].startswith(new)]
         assert len(after) == len(before) + len(new_entries) > len(before)
         idx = SearchIndex(spark, out)
         assert idx._segfiles is not None  # pruning still live
@@ -369,7 +370,7 @@ class TestFileLevelTermPruning:
 
         stem = analyze_text("palabrarara", idx.analyzer)[0]
         pruned = idx._seg_prune.prune([stem])
-        assert any(p.startswith("data/batch=1/") for p in pruned)
+        assert any(p.startswith(new) for p in pruned)
 
     def test_search_many_pruned_parity(self, spark, tmp_path):
         pdf, slices = _interleaved_slices(90, 3)
@@ -387,9 +388,9 @@ class TestFileLevelTermPruning:
 
 
 class TestDocfilesHydrationPruning:
-    """compact_index writes _manifests/docfiles.json (per-docmap-file docid
-    ranges); _docmap_for opens only covering files. Must be semantically
-    invisible, and appends must invalidate it."""
+    """compact_index records per-docmap-file docid ranges in the snapshot;
+    _docmap_for opens only covering files. Must be semantically invisible,
+    and appends must extend them."""
 
     def test_hydration_identical_with_and_without_manifest(
         self, spark, tmp_path
@@ -398,15 +399,13 @@ class TestDocfilesHydrationPruning:
         out = _appended_index(spark, tmp_path, "df1", slices,
                               store_raw=True)
         compact_index(spark, out, num_partitions=3)
-        mpath = os.path.join(out, "_manifests", "docfiles.json")
-        assert os.path.exists(mpath)
         idx = SearchIndex(spark, out)
-        assert idx._docfiles is not None
+        assert idx._docfiles
         ids = [0, 7, 59, 119]
         fast = idx._docmap_for(ids, with_raw=True)
         assert set(fast) == set(ids)
-        os.remove(mpath)
-        slow = SearchIndex(spark, out)._docmap_for(ids, with_raw=True)
+        slow = {r["docid"]: (r["url"], r["raw"]) for r in
+                idx._docmap.filter(idx._docmap.docid.isin(ids)).collect()}
         assert fast == slow
         # raw round-trips through the pruned read
         urls = {u: r for u, r in
@@ -415,47 +414,41 @@ class TestDocfilesHydrationPruning:
             assert raw == urls[u]
 
     def test_append_maintains_docfiles(self, spark, tmp_path):
-        """Appends now EXTEND docfiles.json with their own batch's docid
-        ranges (they used to delete it): hydration of an appended docid
-        must work through the maintained manifest."""
-        import json
-
+        """Appends EXTEND the docid ranges with their own batch's (they
+        used to delete them): hydration of an appended docid must work
+        through the maintained ranges."""
         import pandas as pd
 
         pdf, slices = _interleaved_slices(60, 2)
         out = _appended_index(spark, tmp_path, "df2", slices)
         compact_index(spark, out, num_partitions=2)
-        mpath = os.path.join(out, "_manifests", "docfiles.json")
-        assert os.path.exists(mpath)
         extra = pd.DataFrame({
             "url": ["zz-df-new"], "text": ["palabrota nueva"],
             "lang": ["es"],
         })
         append_index(spark, _df(spark, extra), out, num_partitions=1)
-        assert os.path.exists(mpath)
-        with open(mpath) as f:
-            files = json.load(f)["files"]
-        assert any(e["path"].startswith("data/batch=1/") for e in files)
+        new = _last_batch(out)
+        assert any(e["path"].startswith(new)
+                   for e in _files(out, "docfiles"))
         idx = SearchIndex(spark, out)
         assert idx._docfiles is not None
         # docid 60 = the appended doc; admitted by the maintained ranges
         pruned = idx._doc_prune.prune([60])
-        assert any(p.startswith("data/batch=1/") for p in pruned)
+        assert any(p.startswith(new) for p in pruned)
         got = idx._docmap_for([60])
         assert got[60][0] == "zz-df-new"
 
 
 class TestManifestSupersetVisibility:
-    """The file-range manifests are maintained as a SUPERSET of the visible
-    files (extended before each op's commit point); batch-visibility
-    filtering at index open is what keeps that safe across crashes."""
+    """The file ranges a reader plans from are the current snapshot's:
+    an op's new files join them only with its commit, so no crash can
+    make a reader plan an uncommitted batch's files."""
 
-    def test_orphan_batch_entries_are_filtered(self, spark, tmp_path):
-        """Crash after the segfiles extension but before the batch commit:
-        the manifest carries entries for an invisible batch. A reader must
-        neither plan those files nor surface the orphan's docs."""
-        import json
-
+    def test_orphan_batch_entries_are_filtered(self, spark, tmp_path,
+                                               crash_store):
+        """Crash after the appended batch and its termdict version are
+        written but before the commit: a reader must neither plan the
+        orphan's files nor surface its docs."""
         import pandas as pd
 
         pdf, slices = _interleaved_slices(60, 2)
@@ -465,17 +458,15 @@ class TestManifestSupersetVisibility:
             "url": ["zz-orphan"], "text": ["fantasma palabra"],
             "lang": ["es"],
         })
-        append_index(spark, _df(spark, extra), out, num_partitions=1)
-        # simulate the crash: batch manifest gone, segfiles extension kept
-        os.remove(os.path.join(out, "_manifests", "batch_1.json"))
-        with open(os.path.join(out, "_manifests", "segfiles.json")) as f:
-            raw = json.load(f)["files"]
-        assert any(e["path"].startswith("data/batch=1/") for e in raw)
+        orphan = f"data/batch={load_snapshot(out)['batches'][-1]['batch'] + 1}/"
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, _df(spark, extra), out, num_partitions=1)
+        assert st["fired"] and os.path.isdir(os.path.join(out, orphan))
         idx = SearchIndex(spark, out)
-        # visibility filter dropped the orphan's entries...
-        assert all(not e["path"].startswith("data/batch=1/")
+        # the snapshot names none of the orphan's files...
+        assert all(not e["path"].startswith(orphan)
                    for e in idx._segfiles)
-        assert all(not e["path"].startswith("data/batch=1/")
+        assert all(not e["path"].startswith(orphan)
                    for e in idx._docfiles)
         # ...so the orphan doc is invisible and other queries still work
         assert idx.search("fantasma", "bm25", k=5).count() == 0
@@ -483,10 +474,8 @@ class TestManifestSupersetVisibility:
 
     def test_replayed_append_replaces_entries(self, spark, tmp_path):
         """A replayed append (pinned batch id) rewrites its batch dir with
-        fresh file names; the manifest extension must REPLACE the batch's
-        old entries — every planned path must exist on disk."""
-        import json
-
+        fresh file names; its snapshot entry must REPLACE the batch's old
+        one — every planned path must exist on disk."""
         import pandas as pd
 
         pdf, slices = _interleaved_slices(60, 2)
@@ -496,14 +485,13 @@ class TestManifestSupersetVisibility:
             "url": ["zz-replay"], "text": ["replay documento unico"],
             "lang": ["es"],
         })
-        kw = dict(num_partitions=1, batch_id=1, base_docid=60,
+        bid = 1 + load_snapshot(out)["batches"][-1]["batch"]
+        kw = dict(num_partitions=1, batch_id=bid, base_docid=60,
                   bucket_base=load_stats(out)["n_buckets"])
         append_index(spark, _df(spark, extra), out, **kw)
         append_index(spark, _df(spark, extra), out, **kw)  # replay
-        with open(os.path.join(out, "_manifests", "segfiles.json")) as f:
-            files = json.load(f)["files"]
-        b1 = [e["path"] for e in files
-              if e["path"].startswith("data/batch=1/")]
+        b1 = [e["path"] for e in _files(out, "segfiles")
+              if e["path"].startswith(f"data/batch={bid}/")]
         assert b1, "replayed batch entries present"
         for p in b1:
             assert os.path.exists(os.path.join(out, p)), p
@@ -515,8 +503,9 @@ class TestManifestSupersetVisibility:
 
 
 class TestPreCompactRecovery:
-    """A crash inside the in-place swap leaves _pre_compact holding the
-    old index; the next compact_index must auto-restore and complete."""
+    """A crash inside an in-place compaction leaves a readable index (the
+    old generation before its commit, the new one after), and the next
+    compact_index completes from there."""
 
     def _build(self, spark, tmp_path, name):
         pdf, slices = _interleaved_slices(90, 3)
@@ -533,86 +522,54 @@ class TestPreCompactRecovery:
         exp = oracle.bm25_search("curso java", k=10)
         assert [u for u, _ in got] == [u for u, _ in exp]
 
-    def test_phase1_crash_recovered(self, spark, tmp_path):
-        """Crash while parking the old index: some pieces moved to
-        _pre_compact, none of the staged ones moved in."""
-        import shutil
-
+    def test_phase1_crash_recovered(self, spark, tmp_path, crash_store):
+        """Crash before the commit (clearing the staging dir): the old
+        generation stays current and readable; the re-run completes."""
         pdf, out = self._build(spark, tmp_path, "p1")
-        pre = os.path.join(out, "_pre_compact")
-        os.makedirs(pre)
-        for piece in ("data", "termdict"):
-            shutil.move(os.path.join(out, piece),
-                        os.path.join(pre, piece))
-        # index root is now unreadable (no data/) — recovery + compaction
+        with crash_store(match="_compact_tmp") as st:
+            compact_index(spark, out, num_partitions=2)
+        assert st["fired"]
+        assert load_stats(out)["n_batches"] == 3
+        self._oracle_check(spark, pdf, out)
         compact_index(spark, out, num_partitions=2)
-        assert not os.path.exists(pre)
         assert load_stats(out)["n_batches"] == 1
         self._oracle_check(spark, pdf, out)
 
-    def test_phase2_crash_recovered(self, spark, tmp_path):
-        """Crash while moving staged pieces in: _pre_compact holds ALL old
-        pieces, the root holds a mixed set (one staged piece made it)."""
-        import shutil
-
+    def test_phase2_crash_recovered(self, spark, tmp_path, crash_store):
+        """Crash at the commit itself: the compacted batch and termdict
+        version are written but unreferenced; the old generation stays
+        current, and the re-run replaces the debris."""
         pdf, out = self._build(spark, tmp_path, "p2")
-        pre = os.path.join(out, "_pre_compact")
-        os.makedirs(pre)
-        for piece in ("data", "termdict", "_manifests", "stats.json"):
-            shutil.move(os.path.join(out, piece), os.path.join(pre, piece))
-        # fake a new-generation piece that made it to the root
-        os.makedirs(os.path.join(out, "data"))
-        with open(os.path.join(out, "data", "_marker"), "w") as f:
-            f.write("staged-generation")
+        with crash_store(match="snapshot-") as st:
+            compact_index(spark, out, num_partitions=2)
+        assert st["fired"]
+        assert load_stats(out)["n_batches"] == 3
+        self._oracle_check(spark, pdf, out)
         compact_index(spark, out, num_partitions=2)
-        assert not os.path.exists(pre)
-        assert not os.path.exists(os.path.join(out, "data", "_marker"))
         assert load_stats(out)["n_batches"] == 1
+        assert sorted(os.listdir(os.path.join(out, "data"))) == [
+            f"batch={load_snapshot(out)['batches'][0]['batch']}"]
         self._oracle_check(spark, pdf, out)
 
     def test_completed_swap_leftover_preserves_later_appends(
-            self, spark, tmp_path):
-        """Crash AFTER the swap finished but BEFORE _pre_compact was
-        deleted: the root is the live new generation, and batches appended
-        after that crash live only in the new data/_manifests. The next
-        compaction must treat _pre_compact as a finished swap's leftover
-        (all pieces present at the root) and DELETE it — restoring it
-        would silently destroy the post-crash appends."""
-        from visigoth_spark import storage as vstore
-        from visigoth_spark.build import _COMPACT_PIECES
-
+            self, spark, tmp_path, crash_store):
+        """Crash AFTER the commit, while deleting the old generation: the
+        compacted generation is live with old batch dirs left behind.
+        Batches appended after that crash must survive the next
+        compaction."""
         pdf, out = self._build(spark, tmp_path, "done")
-        # first compaction, crashing at the final rmtree(_pre_compact):
-        # the old generation stays parked while the root is fully swapped
-        real_rmtree = vstore.LocalStore.rmtree
-        def crashing_rmtree(self_, path):
-            if path.endswith("_pre_compact"):
-                raise RuntimeError("injected crash before cleanup")
-            real_rmtree(self_, path)
-        vstore.LocalStore.rmtree = crashing_rmtree
-        try:
-            with pytest.raises(RuntimeError, match="injected crash"):
-                compact_index(spark, out, num_partitions=2)
-        finally:
-            vstore.LocalStore.rmtree = real_rmtree
-        pre = os.path.join(out, "_pre_compact")
-        assert os.path.exists(pre)
-        for piece in _COMPACT_PIECES:
-            assert os.path.exists(os.path.join(out, piece))
-        # the crashed run's writer lock is a dead-pid leftover in-process
-        # (same pid, still alive) — clear it like an operator would
-        lock = os.path.join(out, "WRITER_LOCK")
-        if os.path.exists(lock):
-            os.remove(lock)
-        # post-crash append: committed only in the NEW generation
+        with crash_store(match="batch=0") as st:
+            compact_index(spark, out, num_partitions=2)
+        assert st["fired"]
+        assert load_stats(out)["n_batches"] == 1
+        assert os.path.isdir(os.path.join(out, "data", "batch=0"))
+        # post-crash append: committed on top of the compacted generation
         extra = generate_corpus(8, seed=777)
         extra = extra.assign(url="zz-postcrash-" + extra["url"],
                              text=extra["text"] + " postcrash")
         append_index(spark, _df(spark, extra), out, num_partitions=1)
         n_after = load_stats(out)["n_docs"]
-        # second compaction: must NOT roll back to _pre_compact
         compact_index(spark, out, num_partitions=2)
-        assert not os.path.exists(pre)
         assert load_stats(out)["n_docs"] == n_after
         idx = SearchIndex(spark, out)
         got = [r["url"] for r in

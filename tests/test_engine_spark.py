@@ -4,7 +4,6 @@ the single-process oracle, plus the ported reference behavioral contracts."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -276,25 +275,23 @@ class TestHeadTermSkew:
 class TestResume:
     def test_empty_batch_slice_is_readable(self, spark, tmp_path, oracle):
         # n_batches > num_partitions -> some slices get zero partitions.
-        # Those batches commit a manifest but never write a batch dir;
-        # readers must plan around them (regression: SearchIndex used to
-        # schedule the nonexistent batch=N path and raise).
+        # Those batches are listed in the snapshot but never write a batch
+        # dir; readers must plan around them (regression: SearchIndex used
+        # to schedule the nonexistent batch=N path and raise).
+        from visigoth_spark.build import load_snapshot
+
         corpus_pd = generate_corpus(120)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         out = str(tmp_path / "idx")
         build_index(spark, corpus, out, num_partitions=2, n_buckets=2,
                     n_batches=5)
-        man_dir = os.path.join(out, "_manifests")
         empties = []
-        for f in sorted(os.listdir(man_dir)):
-            if f.startswith("batch_"):
-                with open(os.path.join(man_dir, f)) as fh:
-                    m = json.load(fh)
-                if m["n_docs"] == 0:
-                    empties.append(m["batch"])
-                    assert not os.path.isdir(
-                        os.path.join(out, "data", f"batch={m['batch']}")
-                    )
+        for m in load_snapshot(out)["batches"]:
+            if m["n_docs"] == 0:
+                empties.append(m["batch"])
+                assert not os.path.isdir(
+                    os.path.join(out, "data", f"batch={m['batch']}")
+                )
         assert empties, "fixture must produce at least one empty slice"
         idx = SearchIndex(spark, out)
         assert len(idx) == 120
@@ -306,35 +303,40 @@ class TestResume:
         exp = sub.bm25_search("programación java", k=10)
         assert [u for u, _ in got] == [u for u, _ in exp]
 
-    def test_resume_skips_completed_batches(self, spark, tmp_path):
+    def test_resume_skips_completed_batches(self, spark, tmp_path,
+                                            crash_store):
         corpus_pd = generate_corpus(120)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
-        out = str(tmp_path / "idx")
-        build_index(spark, corpus, out, num_partitions=4, n_buckets=4,
+        cold = str(tmp_path / "cold")
+        build_index(spark, corpus, cold, num_partitions=4, n_buckets=4,
                     n_batches=3)
-        stats1 = load_stats(out)
-        # delete one batch's manifest -> only that batch rebuilds
-        os.remove(os.path.join(out, "_manifests", "batch_1.json"))
-        m0 = os.path.getmtime(os.path.join(out, "_manifests", "batch_0.json"))
+        stats1 = load_stats(cold)
+        # crash at batch 1's progress commit -> only batches 1, 2 rebuild
+        out = str(tmp_path / "idx")
+        with crash_store(match="snapshot-1") as st:
+            build_index(spark, corpus, out, num_partitions=4, n_buckets=4,
+                        n_batches=3)
+        assert st["fired"]
+        b0 = os.path.join(out, "data", "batch=0")
+        m0 = os.path.getmtime(b0)
         build_index(spark, corpus, out, num_partitions=4, n_buckets=4,
                     n_batches=3, resume=True)
         stats2 = load_stats(out)
         assert stats2["n_postings"] == stats1["n_postings"]
         assert stats2["total_tokens"] == stats1["total_tokens"]
-        assert os.path.getmtime(
-            os.path.join(out, "_manifests", "batch_0.json")
-        ) == m0  # untouched
+        assert os.path.getmtime(b0) == m0  # untouched
 
-    def test_resume_equals_cold_build(self, spark, tmp_path):
+    def test_resume_equals_cold_build(self, spark, tmp_path, crash_store):
         corpus_pd = generate_corpus(120)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         cold = str(tmp_path / "cold")
         warm = str(tmp_path / "warm")
         build_index(spark, corpus, cold, num_partitions=4, n_buckets=4,
                     n_batches=2)
-        build_index(spark, corpus, warm, num_partitions=4, n_buckets=4,
-                    n_batches=2)
-        os.remove(os.path.join(warm, "_manifests", "batch_1.json"))
+        with crash_store(match="snapshot-1") as st:
+            build_index(spark, corpus, warm, num_partitions=4, n_buckets=4,
+                        n_batches=2)
+        assert st["fired"]
         build_index(spark, corpus, warm, num_partitions=4, n_buckets=4,
                     n_batches=2, resume=True)
         q = "programación java"
@@ -349,8 +351,9 @@ class TestResume:
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         out = str(tmp_path / "idx")
         build_index(spark, corpus, out, num_partitions=2, n_buckets=2)
-        with open(os.path.join(out, "_manifests", "batch_0.json")) as f:
-            m = json.load(f)
+        from visigoth_spark.build import load_snapshot
+
+        m = load_snapshot(out)["batches"][0]
         for field in ("n_segments", "n_postings", "total_tokens",
                       "bytes_blob", "wall_sec", "docid_range", "partitions"):
             assert field in m, field

@@ -3,13 +3,13 @@ index_memory_index.go:44-60) and Structured Streaming indexing."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pandas as pd
 import pytest
 
-from visigoth_spark.build import append_index, build_index, load_stats
+from visigoth_spark.build import (append_index, build_index, load_snapshot,
+                                  load_stats)
 from visigoth_spark.corpus import generate_corpus
 from visigoth_spark.query import SearchIndex
 from visigoth_spark.reference_engine import OracleIndex
@@ -109,24 +109,19 @@ class TestStreaming:
                                          split_corpus):
         """An empty FIRST micro-batch (trigger fires before the source has
         any data) must not kill the stream: build_index raises on an empty
-        corpus, so the indexer commits the epoch as a no-op and the next
-        epoch takes the fresh-build path itself."""
-        import json
-
+        corpus, so the indexer skips the epoch (nothing to commit) and the
+        next epoch takes the fresh-build path itself."""
         from visigoth_spark.streaming import foreach_batch_indexer
 
         part1, _ = split_corpus
         out = str(tmp_path / "eidx")
         fn = foreach_batch_indexer(out, num_partitions=2)
         fn(_df(spark, part1).limit(0), epoch_id=0)  # empty first epoch
-        assert not os.path.exists(os.path.join(out, "stats.json"))
-        with open(os.path.join(out, "_manifests",
-                               "stream_epochs.json")) as f:
-            eps = json.load(f)
-        assert eps["0"]["state"] == "committed" and eps["0"]["n_docs"] == 0
-        fn(_df(spark, part1).limit(0), epoch_id=0)  # replay: skipped
+        assert load_snapshot(out) is None
+        fn(_df(spark, part1).limit(0), epoch_id=0)  # replay: still a no-op
         fn(_df(spark, part1), epoch_id=1)  # first real data: fresh build
         assert load_stats(out)["n_docs"] == 160
+        assert load_snapshot(out)["last_epoch"] == 1
 
     def test_epoch_replay_is_idempotent(self, spark, tmp_path, split_corpus):
         from visigoth_spark.streaming import foreach_batch_indexer
@@ -146,7 +141,6 @@ class TestStreamAutoMerge:
         epoch the stream (the single writer) folds its appended tiers, so
         a long-running ingest keeps a bounded batch count with results
         identical to the unmerged ingest."""
-        from visigoth_spark.build import _visible_batches
         from visigoth_spark.streaming import foreach_batch_indexer
 
         pdf = generate_corpus(250).sort_values("url").reset_index(drop=True)
@@ -159,7 +153,7 @@ class TestStreamAutoMerge:
         # boundary); appends fire the merge on every 2nd APPEND: epoch 2
         # (append #2) folds appends 1-2 into a tier, epoch 4 (append #4)
         # folds tier+appends 3-4 -> base + ONE tier remain
-        vis = [m["batch"] for m in _visible_batches(out)]
+        vis = [m["batch"] for m in load_snapshot(out)["batches"]]
         assert len(vis) == 2 and vis[0] == 0
         assert load_stats(out)["n_docs"] == 250
 
@@ -177,29 +171,25 @@ class TestStreamAutoMerge:
         # replay of a committed epoch is still a no-op after merges
         fn(_df(spark, pdf.iloc[0:50]), 1)
         assert load_stats(out)["n_docs"] == 250
-        assert [m["batch"] for m in _visible_batches(out)] == vis
+        assert [m["batch"] for m in load_snapshot(out)["batches"]] == vis
 
 
 class TestIncrementalTermdict:
-    """append_index refreshes the term dictionary INCREMENTALLY (old
-    termdict UNION the new batch's aggregate — O(vocabulary), not
-    O(total segments) per append); the covers key in the termdict manifest
-    gates correctness: mismatch -> full recompute, replay -> skip."""
+    """append_index writes each new termdict version INCREMENTALLY (the
+    snapshot's termdict UNION the new batch's aggregate — O(vocabulary),
+    not O(total segments) per append); a replay of a batch the snapshot
+    already names recounts every batch, and a crash anywhere before the
+    commit leaves the previous version current."""
 
     @staticmethod
     def _td(spark, idx_dir):
         import pandas as pd
 
-        pdf = (spark.read.parquet(os.path.join(idx_dir, "termdict"))
+        td = os.path.join(idx_dir, load_snapshot(idx_dir)["termdict"])
+        pdf = (spark.read.parquet(td)
                .toPandas().sort_values("term").reset_index(drop=True))
         return pdf[["term", "df", "sum_tf"]].astype(
             {"df": "int64", "sum_tf": "int64"})
-
-    @staticmethod
-    def _td_manifest(idx_dir):
-        with open(os.path.join(idx_dir, "_manifests",
-                               "termdict.json")) as f:
-            return json.load(f)
 
     def test_incremental_equals_one_shot(self, spark, tmp_path):
         pdf = generate_corpus(200)
@@ -209,29 +199,27 @@ class TestIncrementalTermdict:
                     num_partitions=2)
         append_index(spark, _df(spark, pdf.iloc[100:150]), inc,
                      num_partitions=1)
-        assert self._td_manifest(inc)["mode"] == "incremental"
         append_index(spark, _df(spark, pdf.iloc[150:]), inc,
                      num_partitions=1)
-        assert self._td_manifest(inc)["mode"] == "incremental"
         build_index(spark, _df(spark, pdf), one, num_partitions=2)
         assert self._td(spark, inc).equals(self._td(spark, one))
 
-    def test_covers_mismatch_falls_back_to_full(self, spark, tmp_path):
+    def test_covers_mismatch_falls_back_to_full(self, spark, tmp_path,
+                                                crash_store):
+        """An append that crashed after writing its termdict version but
+        before the commit leaves the old version current; the re-run's
+        termdict equals the one-shot build's."""
         pdf = generate_corpus(120)
         out = str(tmp_path / "fb")
         build_index(spark, _df(spark, pdf.iloc[:80]), out,
                     num_partitions=2)
-        # corrupt the covers key: the next append must NOT trust the
-        # on-disk termdict
-        mp = os.path.join(out, "_manifests", "termdict.json")
-        with open(mp) as f:
-            m = json.load(f)
-        m["covers_md5"] = "bogus"
-        with open(mp, "w") as f:
-            json.dump(m, f)
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, _df(spark, pdf.iloc[80:]), out,
+                         num_partitions=1)
+        assert st["fired"]
+        assert load_stats(out)["n_docs"] == 80
         append_index(spark, _df(spark, pdf.iloc[80:]), out,
                      num_partitions=1)
-        assert self._td_manifest(out)["mode"] == "full"
         one = str(tmp_path / "fb_one")
         build_index(spark, _df(spark, pdf), one, num_partitions=2)
         assert self._td(spark, out).equals(self._td(spark, one))
@@ -241,22 +229,18 @@ class TestIncrementalTermdict:
         out = str(tmp_path / "rp")
         build_index(spark, _df(spark, pdf.iloc[:80]), out,
                     num_partitions=2)
-        from visigoth_spark.build import _batch_manifests
-
-        bid = 1 + max(m["batch"] for m in _batch_manifests(out))
+        bid = 1 + max(m["batch"] for m in load_snapshot(out)["batches"])
         base = load_stats(out)["n_docs"]
         nb = load_stats(out)["n_buckets"]
         kw = dict(num_partitions=1, batch_id=bid, base_docid=base,
                   bucket_base=nb)
         append_index(spark, _df(spark, pdf.iloc[80:]), out, **kw)
         td1 = self._td(spark, out)
-        # crash replay: same pinned allocation. The covers set already
-        # contains this batch id, and batch-id equality does NOT prove
-        # content equality (an orphan id can be reclaimed with different
-        # data — test_orphan_batch_is_overwritten), so the replay pays a
-        # FULL recompute; either way the counts never double.
+        # replay: same pinned allocation. The snapshot already names this
+        # batch id, and batch-id equality does NOT prove content equality,
+        # so the replay replaces the batch and recounts every batch; the
+        # counts never double.
         append_index(spark, _df(spark, pdf.iloc[80:]), out, **kw)
-        assert self._td_manifest(out)["mode"] == "full"
         assert self._td(spark, out).equals(td1)  # not double-counted
 
     def test_random_append_splits_equal_one_shot(self, spark, tmp_path):
@@ -277,7 +261,6 @@ class TestIncrementalTermdict:
         for lo, hi in zip(bounds[1:], bounds[2:]):
             append_index(spark, _df(spark, pdf.iloc[lo:hi]), out,
                          num_partitions=1)
-            assert self._td_manifest(out)["mode"] == "incremental"
         one = str(tmp_path / "rnd_one")
         build_index(spark, _df(spark, pdf), one, num_partitions=2)
         assert self._td(spark, out).equals(self._td(spark, one))
@@ -292,13 +275,14 @@ class TestIncrementalTermdict:
         for lo, hi in ((100, 150), (150, 200)):
             append_index(spark, _df(spark, pdf.iloc[lo:hi]), out,
                          num_partitions=1)
+        td = load_snapshot(out)["termdict"]
         merge_appends(spark, out, num_partitions=2)
-        # merge re-pointed covers at the post-merge batch set, so the next
-        # append stays on the incremental path...
+        # the merge keeps the termdict version (vocabulary and counts
+        # unchanged), and the next append extends it...
+        assert load_snapshot(out)["termdict"] == td
         extra = generate_corpus(40, seed=7)
         extra["url"] = "x-" + extra["url"]
         append_index(spark, _df(spark, extra), out, num_partitions=1)
-        assert self._td_manifest(out)["mode"] == "incremental"
         # ...and the values still match a one-shot build over everything
         one = str(tmp_path / "mg_one")
         both = pd.concat([pdf, extra], ignore_index=True)
@@ -306,21 +290,23 @@ class TestIncrementalTermdict:
         assert self._td(spark, out).equals(self._td(spark, one))
 
     def test_crash_between_swap_and_covers_forces_full(self, spark,
-                                                       tmp_path):
-        """Crash window inside the refresh: termdict already swapped but
-        the covers manifest not yet written (simulated by deleting it).
-        A pinned-batch replay must take the FULL recompute (no covers ->
-        no incremental trust) and land on correct counts — the incremental
-        path would have double-counted the replayed batch."""
+                                                       tmp_path,
+                                                       crash_store):
+        """Crash inside the commit's cleanup: the new snapshot is written
+        but the old termdict version not yet deleted. A pinned-batch
+        replay then lands on the same counts — it never double-counts the
+        replayed batch."""
         pdf = generate_corpus(120)
         out = str(tmp_path / "cw")
         build_index(spark, _df(spark, pdf.iloc[:80]), out,
                     num_partitions=2)
         kw = dict(num_partitions=1, batch_id=1, base_docid=80,
                   bucket_base=load_stats(out)["n_buckets"])
-        append_index(spark, _df(spark, pdf.iloc[80:]), out, **kw)
+        with crash_store(match="termdict/") as st:
+            append_index(spark, _df(spark, pdf.iloc[80:]), out, **kw)
+        assert st["fired"]
+        assert len(os.listdir(os.path.join(out, "termdict"))) == 2
         td1 = self._td(spark, out)
-        os.remove(os.path.join(out, "_manifests", "termdict.json"))
         append_index(spark, _df(spark, pdf.iloc[80:]), out, **kw)  # replay
-        assert self._td_manifest(out)["mode"] == "full"
         assert self._td(spark, out).equals(td1)
+        assert load_stats(out)["n_docs"] == 120

@@ -1,17 +1,16 @@
 """Tiered (minor) compaction (build.merge_appends) and the manifest-driven
-batch-visibility model it rests on.
+one-commit snapshot model it rests on.
 
 merge_appends is a FILE-LAYOUT rewrite: appended batches collapse into one
 term-range-partitioned tier with docids, buckets, blobs, and therefore
 scores and result order byte-identical to the pre-merge index (unlike
 compact_index, which remaps docids to url order). Visibility is flipped by
-ONE atomic manifest write carrying ``replaces=[...]``; orphan dirs and
-half-GC'd replaced batches must be invisible to queries, stats, and the
-termdict refresh."""
+ONE snapshot commit listing the merged batch (with ``replaces=[...]``) in
+place of the batches it folds; orphan dirs and not-yet-GC'd replaced
+batches must be invisible to queries, stats, and the termdict refresh."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -19,11 +18,11 @@ import pandas as pd
 import pytest
 
 from visigoth_spark.build import (
-    _visible_batches,
     append_index,
     build_index,
     compact_index,
     gc_index,
+    load_snapshot,
     load_stats,
     merge_appends,
 )
@@ -56,6 +55,10 @@ def _results(idx, engine="bm25"):
         out[q] = [(r["url"], r["docid"], round(float(r["score"]), 12),
                    r["hits"]) for r in idx.search(q, engine, k=10).collect()]
     return out
+
+
+def _visible(out):
+    return load_snapshot(out)["batches"]
 
 
 def _batch_dirs(out):
@@ -100,7 +103,7 @@ class TestMergeIdentity:
         out, before, _ = built
         # base batch 0 + ONE merged tier; appended dirs gone
         assert _batch_dirs(out) == ["batch=0", "batch=3"]
-        vis = _visible_batches(out)
+        vis = _visible(out)
         assert [m["batch"] for m in vis] == [0, 3]
         merged = vis[1]
         assert merged["merged"] is True and merged["replaces"] == [1, 2]
@@ -115,8 +118,7 @@ class TestMergeIdentity:
 
     def test_segfiles_covers_whole_index(self, spark, built):
         out, _, _ = built
-        with open(os.path.join(out, "_manifests", "segfiles.json")) as f:
-            files = json.load(f)["files"]
+        files = [e for b in _visible(out) for e in b["segfiles"]]
         assert any(e["path"].startswith("data/batch=0/") for e in files)
         assert any(e["path"].startswith("data/batch=3/") for e in files)
         idx = SearchIndex(spark, out)
@@ -158,18 +160,22 @@ class TestMergeIdentity:
 
 
 class TestVisibilityModel:
-    def test_orphan_batch_invisible_to_queries(self, spark, tmp_path):
-        """A crashed append (batch dir present, manifest absent) must not
-        leak postings into results, stats refreshes, or hydration."""
+    def test_orphan_batch_invisible_to_queries(self, spark, tmp_path,
+                                              crash_store):
+        """A crashed append (batch dir written, snapshot not committed)
+        must not leak postings into results, stats refreshes, or
+        hydration."""
         pdf, slices = _slices(60, 2)
         out = _appended(spark, tmp_path, "vis", slices)
-        # simulate the crash: append, then delete the manifest
+        # the crash: the append dies at its snapshot commit
         ghost = pd.DataFrame({
             "url": ["gg-ghost"], "text": ["fantasmagoria espectral"],
             "lang": ["es"],
         })
-        append_index(spark, _df(spark, ghost), out, num_partitions=1)
-        os.remove(os.path.join(out, "_manifests", "batch_2.json"))
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, _df(spark, ghost), out, num_partitions=1)
+        assert st["fired"]
+        assert "batch=2" in _batch_dirs(out)
         idx = SearchIndex(spark, out)
         assert idx._batches == [0, 1]
         assert idx.search("fantasmagoria", "bm25", k=5).count() == 0
@@ -194,34 +200,26 @@ class TestVisibilityModel:
         m = merge_appends(spark, out, num_partitions=2)
         assert m is not None
         idx2 = SearchIndex(spark, out)
-        assert [mm["batch"] for mm in _visible_batches(out)] == [0, 3]
+        assert [mm["batch"] for mm in _visible(out)] == [0, 3]
         assert _results(idx2) == before
 
-    def test_half_gcd_replaced_manifest_stays_hidden(self, spark, tmp_path):
-        """Crash AFTER the merge manifest commit but BEFORE GC: the
-        replaced batches' manifests and dirs still exist, yet queries and
-        stats must not double-count them."""
+    def test_half_gcd_replaced_manifest_stays_hidden(self, spark, tmp_path,
+                                                     crash_store):
+        """Crash AFTER the merge's snapshot commit but BEFORE GC: the
+        replaced batches' dirs and the previous snapshot still exist, yet
+        queries and stats must not double-count them."""
         pdf, slices = _slices(90, 3)
         out = _appended(spark, tmp_path, "vis3", slices)
         before = _results(SearchIndex(spark, out))
         n_docs = load_stats(out)["n_docs"]
-        # snapshot the replaced state so we can resurrect it post-GC
-        mdir = os.path.join(out, "_manifests")
-        data = os.path.join(out, "data")
-        saved = {}
-        for b in (1, 2):
-            with open(os.path.join(mdir, f"batch_{b}.json")) as f:
-                saved[b] = f.read()
-            shutil.copytree(os.path.join(data, f"batch={b}"),
-                            str(tmp_path / f"save_batch_{b}"))
-        merge_appends(spark, out, num_partitions=2)
-        # resurrect: replaced manifests + dirs back on disk
-        for b in (1, 2):
-            with open(os.path.join(mdir, f"batch_{b}.json"), "w") as f:
-                f.write(saved[b])
-            shutil.copytree(str(tmp_path / f"save_batch_{b}"),
-                            os.path.join(data, f"batch={b}"))
-        vis = _visible_batches(out)
+        # the crash: the merge dies deleting the first replaced batch dir
+        with crash_store(match="batch=1") as st:
+            merge_appends(spark, out, num_partitions=2)
+        assert st["fired"]
+        assert _batch_dirs(out) == ["batch=0", "batch=1", "batch=2",
+                                    "batch=3"]
+        assert len(os.listdir(os.path.join(out, "_manifests"))) == 2
+        vis = _visible(out)
         assert [m["batch"] for m in vis] == [0, 3]
         idx = SearchIndex(spark, out)
         assert idx._batches == [0, 3]
@@ -241,18 +239,27 @@ class TestVisibilityModel:
         assert merge_appends(spark, out, min_batches=3) is None
         assert _batch_dirs(out) == ["batch=0", "batch=1"]
 
-    def test_merge_respects_stream_epoch_allocation(self, spark, tmp_path):
-        """A stream epoch that durably allocated batch id N must keep it:
-        the merge takes N+1, so the epoch's replay cannot overwrite the
-        merged tier."""
-        pdf, slices = _slices(60, 3)
-        out = _appended(spark, tmp_path, "vis5", slices)
-        ledger = os.path.join(out, "_manifests", "stream_epochs.json")
-        with open(ledger, "w") as f:
-            json.dump({"7": {"state": "allocated", "batch": 3,
-                             "base_docid": 60, "bucket_base": 9}}, f)
-        merge_appends(spark, out, num_partitions=2)
-        assert [m["batch"] for m in _visible_batches(out)] == [0, 4]
+    def test_merge_respects_stream_epoch_allocation(self, spark, tmp_path,
+                                                    crash_store):
+        """A stream epoch that crashed before its commit left an orphan
+        batch dir at the id the merge then claims; the epoch's replay
+        re-derives its ids from the merged snapshot, so it can neither
+        overwrite the merged tier nor ingest twice."""
+        from visigoth_spark.streaming import foreach_batch_indexer
+
+        pdf, slices = _slices(90, 3)
+        out = _appended(spark, tmp_path, "vis5", slices[:2])
+        fn = foreach_batch_indexer(out, num_partitions=2)
+        with crash_store(match="snapshot-") as st:
+            fn(_df(spark, slices[2]), 7)
+        assert st["fired"] and "batch=2" in _batch_dirs(out)
+        merge_appends(spark, out, num_partitions=2, min_batches=1)
+        assert [m["batch"] for m in _visible(out)] == [0, 2]
+        fn(_df(spark, slices[2]), 7)  # the replay
+        assert [m["batch"] for m in _visible(out)] == [0, 2, 3]
+        assert load_stats(out)["n_docs"] == 90
+        fn(_df(spark, slices[2]), 7)  # committed: skipped
+        assert load_stats(out)["n_docs"] == 90
 
     def test_merge_twice_is_tiered(self, spark, tmp_path):
         """append after a merge, merge again: the second merge folds the
@@ -265,7 +272,7 @@ class TestVisibilityModel:
         before = _results(SearchIndex(spark, out))
         m = merge_appends(spark, out, num_partitions=2, min_batches=2)
         assert m is not None
-        assert [mm["batch"] for mm in _visible_batches(out)] == [0, 5]
+        assert [mm["batch"] for mm in _visible(out)] == [0, 5]
         assert _results(SearchIndex(spark, out)) == before
 
 
@@ -309,11 +316,9 @@ class TestMergeEdgeCases:
         before = _results(old_reader)
         m = merge_appends(spark, out, num_partitions=2, gc=False)
         assert m is not None
-        # replaced manifests + dirs retained
+        # replaced dirs retained
         assert _batch_dirs(out) == ["batch=0", "batch=1", "batch=2",
                                     "batch=3"]
-        assert os.path.exists(
-            os.path.join(out, "_manifests", "batch_1.json"))
         # old reader: same snapshot, still fully functional
         assert old_reader._batches == [0, 1, 2]
         assert _results(old_reader) == before
@@ -328,27 +333,29 @@ class TestMergeEdgeCases:
         assert _results(SearchIndex(spark, out)) == before
 
 
-def test_half_written_manifests_regenerated_by_next_merge(spark, tmp_path):
-    """A crash between the first merge's segfiles and docfiles writes
-    leaves only segfiles.json; the next merge must detect the incomplete
-    pair and regenerate BOTH (had_manifest requires both), not strand the
-    hydration manifest forever."""
+def test_half_written_manifests_regenerated_by_next_merge(spark, tmp_path,
+                                                          crash_store):
+    """A merge that crashed at its commit leaves the previous snapshot
+    whole; the re-run and the next merge record the per-file term AND
+    docid ranges of every visible batch, so hydration stays pruned."""
     pdf = generate_corpus(160).sort_values("url").reset_index(drop=True)
     out = str(tmp_path / "hm")
     build_index(spark, _df(spark, pdf.iloc[:80]), out, num_partitions=2)
     for lo, hi in ((80, 120), (120, 160)):
         append_index(spark, _df(spark, pdf.iloc[lo:hi]), out,
                      num_partitions=1)
+    with crash_store(match="snapshot-") as st:
+        merge_appends(spark, out, num_partitions=2)
+    assert st["fired"]
     merge_appends(spark, out, num_partitions=2)
-    # simulate the crashed first sweep: docfiles gone, segfiles kept
-    os.remove(os.path.join(out, "_manifests", "docfiles.json"))
     extra = generate_corpus(30, seed=5)
     extra["url"] = "hm-" + extra["url"]
     for half in (extra.iloc[:15], extra.iloc[15:]):
         append_index(spark, _df(spark, half), out, num_partitions=1)
     merge_appends(spark, out, num_partitions=2)
-    for mf in ("segfiles.json", "docfiles.json"):
-        assert os.path.exists(os.path.join(out, "_manifests", mf)), mf
+    for b in _visible(out):
+        assert b["segfiles"] and b["docfiles"], b["batch"]
     idx = SearchIndex(spark, out)
-    assert idx._docfiles is not None
+    assert len(idx._docfiles) == sum(len(b["docfiles"])
+                                     for b in _visible(out))
     assert idx.search("curso", "bm25", 10).count() > 0

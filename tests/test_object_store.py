@@ -1,7 +1,7 @@
 """Object-store index storage: the full index lifecycle (build -> append ->
 merge -> compact -> gc -> catalog) over a ``file://`` URI, which routes every
-control-plane operation (manifest commits, batch GC, compaction swap, footer
-sweeps, writer lock, stream ledger) through the Hadoop FileSystem JVM API —
+control-plane operation (snapshot commits, batch GC, footer
+sweeps, writer lock, stream epochs) through the Hadoop FileSystem JVM API —
 the exact code path an ``s3a://`` or ``hdfs://`` index takes, minus the
 wire. Results must be identical to the same ops on a plain POSIX path."""
 
@@ -13,11 +13,11 @@ import pytest
 
 from visigoth_spark import storage as vstore
 from visigoth_spark.build import (
-    _visible_batches,
     append_index,
     build_index,
     compact_index,
     gc_index,
+    load_snapshot,
     load_stats,
     merge_appends,
 )
@@ -77,14 +77,13 @@ class TestHadoopStoreLifecycle:
             gc_index(out)
         assert _results(SearchIndex(spark, uri)) == \
             _results(SearchIndex(spark, posix))
-        vis = _visible_batches(uri)
+        vis = load_snapshot(uri)["batches"]
         assert len(vis) == 2  # base + merged tier
-        # merged tier regenerated the file-range manifests on the URI store
+        # the merged tier's file ranges were swept on the URI store
         st = vstore.get_store(uri, spark)
-        assert st.exists(vstore.join(uri, "_manifests", "segfiles.json"))
-        assert st.exists(vstore.join(uri, "_manifests", "docfiles.json"))
+        assert vis[1]["segfiles"] and vis[1]["docfiles"]
 
-        # in-place compaction: staged rewrite + Hadoop-rename swap
+        # in-place compaction: one snapshot commit, no rename
         for out in (posix, uri):
             compact_index(spark, out, num_partitions=2)
         idx_u = SearchIndex(spark, uri)
@@ -141,11 +140,7 @@ class TestHadoopStoreLifecycle:
         fn(_df(spark, corpus_pdf.iloc[60:90]), epoch_id=1)
         fn(_df(spark, corpus_pdf.iloc[60:90]), epoch_id=1)  # replay: no-op
         assert load_stats(uri)["n_docs"] == 90
-        st = vstore.get_store(uri, spark)
-        eps = st.read_json(
-            vstore.join(uri, "_manifests", "stream_epochs.json"))
-        assert eps["0"]["state"] == "committed"
-        assert eps["1"]["state"] == "committed"
+        assert load_snapshot(uri)["last_epoch"] == 1
 
     def test_catalog_on_uri(self, spark, tmp_path, corpus_pdf):
         from visigoth_spark.catalog import Catalog
@@ -173,7 +168,8 @@ class TestHadoopStoreLifecycle:
         build_index(spark, _df(spark, corpus_pdf), uri, num_partitions=4)
         idx = SearchIndex(spark, uri)
         st = vstore.get_store(uri, spark)
-        rtd = _RemoteTermdict(st, vstore.join(uri, "termdict"))
+        rtd = _RemoteTermdict(
+            st, vstore.join(uri, load_snapshot(uri)["termdict"]))
         # termdict stores ANALYZED terms (default analyzer stems)
         terms = ["curs", "jav", "program", "zzz-missing"]
         assert rtd.lookup(terms) == idx.term_df(terms)
@@ -212,7 +208,7 @@ class TestHadoopStoreLifecycle:
 
     def test_refresh_on_uri(self, spark, tmp_path, corpus_pdf):
         """SearchIndex.refresh() over a file:// URI: the snapshot re-open
-        (manifest re-read, pruner swap, remote-termdict stream close)
+        (snapshot re-read, pruner swap, remote-termdict stream close)
         runs through HadoopStore; the hot-term cache is empty on
         non-local indexes so eviction degenerates to a no-op."""
         uri = "file://" + str(tmp_path / "rf_idx")
@@ -233,16 +229,16 @@ class TestHadoopStoreLifecycle:
         assert post == fresh
         assert pre  # sanity: the query matched something
 
-    def test_resume_on_uri(self, spark, tmp_path, corpus_pdf):
-        """Batched build with resume on a URI index: the per-batch
-        manifests + _SUCCESS markers round-trip through the store."""
+    def test_resume_on_uri(self, spark, tmp_path, corpus_pdf, crash_store):
+        """Batched build with resume on a URI index: the progress
+        snapshots round-trip through the store."""
         uri = "file://" + str(tmp_path / "rs_idx")
-        build_index(spark, _df(spark, corpus_pdf), uri,
-                    num_partitions=4, n_batches=2)
-        st = vstore.get_store(uri, spark)
-        # wipe one batch's manifest: resume must redo exactly that batch
-        st.remove(vstore.join(uri, "_manifests", "batch_1.json"))
+        # crash at batch 1's progress commit: resume redoes exactly it
+        with crash_store(match="snapshot-1") as st:
+            build_index(spark, _df(spark, corpus_pdf), uri,
+                        num_partitions=4, n_batches=2)
+        assert st["fired"]
         build_index(spark, _df(spark, corpus_pdf), uri,
                     num_partitions=4, n_batches=2, resume=True)
         assert load_stats(uri)["n_docs"] == len(corpus_pdf)
-        assert len(_visible_batches(uri)) == 2
+        assert len(load_snapshot(uri)["batches"]) == 2

@@ -9,7 +9,6 @@ phrase tf; ties (score DESC, url ASC)).
 from __future__ import annotations
 
 import math
-import os
 import shutil
 
 import numpy as np
@@ -360,10 +359,12 @@ def test_phrase_and_expansion_on_object_store_uri(spark, tmp_path):
     # no local pyarrow path exists) returns the same window, driven
     # through the HadoopStore seekable stream
     from visigoth_spark import storage as vstore
+    from visigoth_spark.build import load_snapshot
     from visigoth_spark.query import _RemoteTermdict
 
     st = vstore.get_store(out, spark)
-    rtd = _RemoteTermdict(st, vstore.join(out, "termdict"))
+    rtd = _RemoteTermdict(
+        st, vstore.join(out, load_snapshot(out)["termdict"]))
     assert rtd.scan_range("pre", "prf") == ["prefab", "prefix", "presto"]
     assert "datum" in rtd.scan_range("", None)  # fuzzy's full-vocab pass
     rtd.close()
@@ -640,7 +641,8 @@ def test_suggest_ranks_by_df(pos_idx):
 
 
 class TestFuzzydictSidecar:
-    def test_sidecar_equals_scan_and_staleness(self, spark, tmp_path):
+    def test_sidecar_equals_scan_and_staleness(self, spark, tmp_path,
+                                               crash_store):
         from visigoth_spark.build import (append_index, build_fuzzydict,
                                           build_index)
 
@@ -672,14 +674,16 @@ class TestFuzzydictSidecar:
         assert idx3._fuzzydict_ok
         assert idx3._fuzzy_sidecar_candidates("qqqq") == ["qqqx"]
         assert idx3.expand_fuzzy("qqqq") == ["qqqx"]
-        # staleness fallback: a lost manifest (crash mid-extend) demotes
-        # to the always-correct scan; an explicit rebuild restores it
-        import os
-
-        os.remove(os.path.join(out, "_manifests", "fuzzydict.json"))
+        # a crash mid-extend (the next append dies at its commit) leaves
+        # the previous snapshot's sidecar, whose candidates stay correct
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, spark.createDataFrame(
+                [("u98", "qqqw content")], "url string, text string"),
+                out, analyzer=AN, num_partitions=1)
+        assert st["fired"]
         idx3b = SearchIndex(spark, out, analyzer=AN)
-        assert idx3b._fuzzy_sidecar_candidates("qqqq") is None  # stale
-        assert idx3b.expand_fuzzy("qqqq") == ["qqqx"]  # scan, correct
+        assert idx3b._fuzzy_sidecar_candidates("qqqq") == ["qqqx"]
+        assert idx3b.expand_fuzzy("qqqq") == ["qqqx"]
         build_fuzzydict(spark, out)
         idx4 = SearchIndex(spark, out, analyzer=AN)
         assert idx4._fuzzy_sidecar_candidates("qqqq") == ["qqqx"]
@@ -706,10 +710,11 @@ def _ed_ok(a, b):
     return _edit_distance_le(a, b, 1)
 
 
-def test_merge_repoints_fuzzydict_and_refresh_sees_rebuild(spark, tmp_path):
-    """A minor merge keeps a fresh sidecar live (vocabulary unchanged —
-    covers re-pointed with the termdict's); a rebuild after an append
-    becomes visible at refresh() (snapshot semantics)."""
+def test_merge_repoints_fuzzydict_and_refresh_sees_rebuild(spark, tmp_path,
+                                                          crash_store):
+    """A minor merge keeps the sidecar live (vocabulary unchanged — the
+    snapshot keeps naming its files); a rebuild after an append becomes
+    visible at refresh() (snapshot semantics)."""
     from visigoth_spark.build import (append_index, build_fuzzydict,
                                       build_index, merge_appends)
 
@@ -744,19 +749,20 @@ def test_merge_repoints_fuzzydict_and_refresh_sees_rebuild(spark, tmp_path):
     assert idx2._fuzzydict_ok
     assert idx2.expand_fuzzy("qqqz") == ["qqqz"]
     assert idx2._fuzzy_sidecar_candidates("qqqz") == ["qqqz"]
-    # snapshot semantics: a handle opened while the manifest was removed
-    # (simulated crash mid-extend) pins the stale view; refresh() after a
-    # rebuild restores the sidecar path
-    import os
-
-    os.remove(os.path.join(out, "_manifests", "fuzzydict.json"))
+    # snapshot semantics: a handle pins the sidecar it opened with; a
+    # d=2 rebuild that crashed at its commit changes nothing, and
+    # refresh() after the completed rebuild sees the new sidecar
     idx3 = SearchIndex(spark, out, analyzer=AN)
-    assert not idx3._fuzzydict_ok
-    assert idx3.expand_fuzzy("qqqz") == ["qqqz"]  # scan fallback, correct
-    build_fuzzydict(spark, out)
-    assert not idx3._fuzzydict_ok  # pinned snapshot
+    assert idx3._fuzzydict_d == 1
+    with crash_store(match="snapshot-") as st:
+        build_fuzzydict(spark, out, max_edits=2)
+    assert st["fired"]
+    assert SearchIndex(spark, out, analyzer=AN)._fuzzydict_d == 1
+    assert idx3.expand_fuzzy("qqqz") == ["qqqz"]
+    build_fuzzydict(spark, out, max_edits=2)
+    assert idx3._fuzzydict_d == 1  # pinned snapshot
     idx3.refresh()
-    assert idx3._fuzzydict_ok
+    assert idx3._fuzzydict_d == 2
     assert idx3._fuzzy_sidecar_candidates("qqqz") == ["qqqz"]
 
 
@@ -823,9 +829,11 @@ class TestFuzzydictLifecycle:
         assert idx._fuzzy_sidecar_candidates("vocabword") == ["vocabword"]
         assert idx.expand_fuzzy("datun") == ["datum", "datun"]
 
-    def test_merge_rebuilds_stale_sidecar(self, spark, tmp_path):
-        """Appends BEFORE the sidecar existed leave it nonexistent; a
-        sidecar made stale by a lost manifest is rebuilt by the merge."""
+    def test_merge_rebuilds_stale_sidecar(self, spark, tmp_path,
+                                          crash_store):
+        """An append that crashed before its commit (its variant file
+        written, unreferenced) never leaves a sidecar missing terms: the
+        re-run and the next append extend it, and the merge keeps it."""
         from visigoth_spark.build import (append_index, build_fuzzydict,
                                           build_index, merge_appends)
 
@@ -834,14 +842,16 @@ class TestFuzzydictLifecycle:
             DOCS[:8], "url string, text string"), out, analyzer=AN,
             num_partitions=2)
         build_fuzzydict(spark, out)
-        os.remove(os.path.join(out, "_manifests", "fuzzydict.json"))
-        append_index(spark, spark.createDataFrame(
-            [("u91", "qqqy stuff")], "url string, text string"), out,
-            analyzer=AN, num_partitions=1)
+        first = spark.createDataFrame(
+            [("u91", "qqqy stuff")], "url string, text string")
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, first, out, analyzer=AN, num_partitions=1)
+        assert st["fired"]
+        append_index(spark, first, out, analyzer=AN, num_partitions=1)
         append_index(spark, spark.createDataFrame(
             [("u92", "more stuff")], "url string, text string"), out,
             analyzer=AN, num_partitions=1)
-        assert not SearchIndex(spark, out, analyzer=AN)._fuzzydict_ok
+        assert SearchIndex(spark, out, analyzer=AN)._fuzzydict_ok
         merge_appends(spark, out, num_partitions=2)
         idx = SearchIndex(spark, out, analyzer=AN)
         assert idx._fuzzydict_ok

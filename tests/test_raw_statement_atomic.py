@@ -5,14 +5,14 @@ the streaming epoch pinning."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from visigoth_spark.analysis import AnalyzerConfig
-from visigoth_spark.build import append_index, build_index, load_stats
+from visigoth_spark.build import (append_index, build_index, load_snapshot,
+                                  load_stats)
 from visigoth_spark.query import SearchIndex
 
 NOSTEM = AnalyzerConfig(stopwords=frozenset(), stem=False)
@@ -149,19 +149,22 @@ class TestAppendCrashSafety:
         idx = SearchIndex(spark, out, analyzer=NOSTEM)
         assert idx.search("epoch", "bm25", 10).count() == 2
 
-    def test_orphan_batch_is_overwritten(self, spark, tmp_path):
-        """A crash after the batch write but before the manifest leaves an
+    def test_orphan_batch_is_overwritten(self, spark, tmp_path,
+                                         crash_store):
+        """A crash after the batch write but before the commit leaves an
         orphan dir; the next append claims the same batch id + docid range
         and overwrites it — no overlap, no duplicate."""
         out = str(tmp_path / "idx")
         rows = [(f"u{i}", f"base doc {i} common") for i in range(6)]
         build_index(spark, _corpus_df(spark, rows), out, analyzer=NOSTEM,
                     num_partitions=2)
-        # simulate the crashed append: batch dir present, NO manifest
+        # the crashed append: batch dir written, snapshot NOT committed
         orphan = [("o1", "orphan ghost document")]
-        append_index(spark, _corpus_df(spark, orphan), out, analyzer=NOSTEM,
-                     num_partitions=2)
-        os.remove(os.path.join(out, "_manifests", "batch_1.json"))
+        with crash_store(match="snapshot-") as st:
+            append_index(spark, _corpus_df(spark, orphan), out,
+                         analyzer=NOSTEM, num_partitions=2)
+        assert st["fired"]
+        assert os.path.isdir(os.path.join(out, "data", "batch=1"))
         # the next (real) append must reuse batch 1 / docids 6.. and replace
         # the orphan entirely
         real = [("r1", "replacement document zebra")]
@@ -172,9 +175,8 @@ class TestAppendCrashSafety:
         assert len(idx) == 7
         assert idx.search("ghost", "bm25", 10).count() == 0
         assert idx.search("zebra", "bm25", 10).count() == 1
-        with open(os.path.join(out, "_manifests", "batch_1.json")) as f:
-            man = json.load(f)
-        assert man["docid_range"] == [6, 7]
+        man = load_snapshot(out)["batches"][-1]
+        assert man["batch"] == 1 and man["docid_range"] == [6, 7]
 
 
 class TestStreamingEpochPinning:
@@ -192,18 +194,16 @@ class TestStreamingEpochPinning:
         fn(b1, 1)
         st = load_stats(out)
         assert st["n_docs"] == 5
-        manifest = os.path.join(out, "_manifests", "stream_epochs.json")
-        with open(manifest) as f:
-            eps = json.load(f)
-        assert eps["0"]["state"] == "committed"
-        assert eps["1"]["state"] == "committed"
-        assert eps["1"]["batch"] == 1 and eps["1"]["base_docid"] == 4
+        snap = load_snapshot(out)
+        assert snap["last_epoch"] == 1
+        assert snap["batches"][-1]["batch"] == 1
+        assert snap["batches"][-1]["docid_range"] == [4, 5]
         # replay of a COMMITTED epoch is a no-op
         fn(b1, 1)
         assert load_stats(out)["n_docs"] == 5
 
     def test_allocated_but_uncommitted_epoch_replays_idempotently(
-        self, spark, tmp_path
+        self, spark, tmp_path, crash_store
     ):
         from visigoth_spark.streaming import foreach_batch_indexer
 
@@ -211,15 +211,10 @@ class TestStreamingEpochPinning:
         fn = foreach_batch_indexer(out, analyzer=NOSTEM, num_partitions=2)
         fn(_corpus_df(spark, [(f"u{i}", f"first {i}") for i in range(4)]), 0)
         b1 = _corpus_df(spark, [("v1", "epoch one unique zebra")])
-        fn(b1, 1)
-        # simulate the crash: flip epoch 1 back to allocated (the batch data
-        # and manifests from the "crashed" attempt remain on disk)
-        manifest = os.path.join(out, "_manifests", "stream_epochs.json")
-        with open(manifest) as f:
-            eps = json.load(f)
-        eps["1"]["state"] = "allocated"
-        with open(manifest, "w") as f:
-            json.dump(eps, f)
+        # the crash: epoch 1's batch data is written, its commit is not
+        with crash_store(match="snapshot-") as st:
+            fn(b1, 1)
+        assert st["fired"]
         fn(b1, 1)  # replay
         st = load_stats(out)
         assert st["n_docs"] == 5  # not 6: replay overwrote its own batch

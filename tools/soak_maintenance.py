@@ -9,8 +9,9 @@ three boundedness properties a 10^12-doc deployment needs:
    + the base) no matter how many epochs run — tiered merges keep L0
    from accumulating;
 2. on-disk state stays bounded: GC removes replaced batch dirs, and the
-   control-plane manifests stay small (stream ledger grows one small
-   record per epoch; segfiles/docfiles stay proportional to live files);
+   control plane stays small (``_manifests/`` holds the current snapshot,
+   whose file ranges are proportional to the live files, and at most one
+   tombstone file);
 3. query latency stays flat — the p50 of a fixed query over the last
    fifth of the run is within noise of the first fifth (reported; only
    asserted loosely, this host's compute swings 2-4x — BASELINE.md).
@@ -51,8 +52,8 @@ def run_soak(spark, out_dir: str, epochs: int, docs_per_epoch: int,
     that: structural counters flat, query p50 drifting with the bucket
     count). The full steady-state story is merge-often + compact-rarely."""
     from visigoth_spark import storage as vstore
-    from visigoth_spark.build import (_visible_batches, compact_index,
-                                      gc_index, load_stats)
+    from visigoth_spark.build import (compact_index, gc_index,
+                                      load_snapshot, load_stats)
     from visigoth_spark.corpus import generate_corpus
     from visigoth_spark.query import SearchIndex
     from visigoth_spark.streaming import foreach_batch_indexer
@@ -73,7 +74,7 @@ def run_soak(spark, out_dir: str, epochs: int, docs_per_epoch: int,
         if compact_every and epoch and epoch % compact_every == 0:
             compact_index(spark, out_dir,
                           num_partitions=num_partitions * 4)
-        vis = _visible_batches(out_dir)
+        vis = [b for b in load_snapshot(out_dir)["batches"] if b["n_docs"]]
         man_dir = os.path.join(out_dir, "_manifests")
         man_bytes = sum(store.getsize(os.path.join(man_dir, f))
                         for f in store.listdir(man_dir))

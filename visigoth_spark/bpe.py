@@ -20,12 +20,16 @@ module provides:
 Cross-engine application semantics (the part all three sides must agree
 on): a word is spelled as delimited symbols ``<h><o><l><a>`` and the
 frozen merges are applied IN RANK ORDER, each as one plain (non-regex)
-leftmost non-overlapping replace-all of ``<a><b>`` with ``<ab>``. This is
-equivalent to the textbook priority-queue application because a merge's
-constituent symbols can only be produced by strictly earlier merges
-(training creates pairs of already-existing symbols), so by the time rank
-r is processed every occurrence it could ever match already exists; the
-delimited spelling makes the string replace safe against cross-symbol
+leftmost non-overlapping replace-all of ``<a><b>`` with ``<ab>``. This
+equals the textbook priority-queue application only when no two merges
+produce the same symbol — e.g. ``(a, bc)`` and ``(ab, c)`` both make
+``abc``. Under that condition a symbol has exactly one producing merge,
+which (training creates pairs of already-existing symbols) ranks below
+every merge that consumes it, so by the time rank r is processed every
+occurrence it could ever match already exists. Without it, the later of
+two producers can create a symbol after a lower-ranked merge consuming it
+has already been folded, and the fold misses that merge. The frozen table
+meets the condition (tests/test_bpe.py checks it). The delimited spelling makes the string replace safe against cross-symbol
 false matches (``<b><b>`` never matches inside ``<ab><b>``) and the
 replace-all scan reproduces the left-to-right non-overlapping pass on
 repeats (``<a><a><a><a>`` -> ``<aa><aa>``). Python ``str.replace``,

@@ -15,7 +15,8 @@ Dataflow — ONE fused mapInPandas pass over the corpus, ZERO wide shuffles:
          -> SEGMENT rows (kind='s') for every term in the partition
          -> DOCMAP rows (kind='d') (docid, url, doclen)
        written ONCE, partitioned by (kind, batch).
-  stats.json (N, total_tokens, avgdl) derived from segment metadata.
+  stats (N, total_tokens, avgdl) derived from segment metadata, committed
+  with the batch list in the index's snapshot (below).
 
 Why no (term, docid) shuffle: docids are assigned CONTIGUOUSLY per corpus
 partition, so with bucket := partition id every (term, bucket) posting group
@@ -41,11 +42,24 @@ Scale rationale (100 TB / 10^12 docs):
   happen inside the partition that read the text; only compressed segment
   blobs and (docid, url) docmap rows are written out (SURVEY §1.5).
 - **checkpoint/resume**: the corpus is built in ``n_batches`` partition-range
-  batches; each batch writes its own parquet subdir + a lineage manifest
-  JSON (inputs, counts, bytes, wall time). Resume skips batches whose
-  manifest is present and whose output has a _SUCCESS marker. Batches are
+  batches; each batch writes its own parquet subdir and then commits a
+  progress snapshot naming it (lineage: counts, bytes, wall time, per-file
+  ranges). Resume skips the batches the last snapshot names. Batches are
   disjoint docid ranges, so segments across batches concatenate in sorted
   order at query time.
+
+Control plane — one committed snapshot per index. The index's whole state
+(visible batches with their per-file term/docid ranges, stats, the termdict
+version, the fuzzydict file list, the tombstone file, the last streaming
+epoch) is ONE immutable ``_manifests/snapshot-<n>.json``; readers take the
+highest n. Every write op writes its new pieces to paths no snapshot names
+yet (a new batch id, ``termdict/<n>/``, ``fuzzydict/<n>/``,
+``_manifests/tombstones-<n>.json``), commits by writing snapshot n — a new
+file name, so no rename and no window where the current state is absent —
+and then deletes what the commit left unreferenced. A crash before the
+commit leaves the previous snapshot current and only unreferenced debris
+(reclaimed by ``gc_index``, or overwritten when the next op claims the same
+paths).
 
 Catalog-level semantics (index naming, aliases) live in catalog.py.
 """
@@ -53,7 +67,6 @@ Catalog-level semantics (index naming, aliases) live in catalog.py.
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 from dataclasses import dataclass
@@ -99,19 +112,16 @@ import socket
 def _writer_lock(index_dir: str, op: str):
     """Enforce the single-concurrent-writer contract the maintenance ops
     (append/merge/compact/gc) document: two writers claiming the same batch
-    id would corrupt the manifest set. A create-exclusive lock file under
-    ``_manifests/`` records (pid, host, op); a second writer fails with a
-    clear error instead of corrupting. A lock whose pid is dead ON THIS
-    host is a crashed writer's leftover and is broken automatically; a
-    live-pid or foreign-host lock raises. Atomic on POSIX/HDFS
+    id or snapshot number would corrupt the index. A create-exclusive
+    lock file at the index root records (pid, host, op); a second writer
+    fails with a clear error instead of corrupting. A lock whose pid is
+    dead ON THIS host is a crashed writer's leftover and is broken
+    automatically; a live-pid or foreign-host lock raises. Atomic on POSIX/HDFS
     (O_EXCL / create(overwrite=false)); best-effort on S3-like stores —
     pair with an external lease there (storage.py module notes).
 
-    The lock lives at the INDEX ROOT, not under ``_manifests/``: the
-    in-place compaction swap renames ``_manifests`` away mid-operation,
-    and a lock inside it would vanish during exactly the window it must
-    protect (a concurrent writer could acquire a fresh lock and race the
-    swap).
+    The lock lives at the INDEX ROOT, not under ``_manifests/``, which
+    ``gc_index`` clears of everything the current snapshot does not name.
 
     Breaking a stale lock goes through a second exclusive file, the
     BREAK CLAIM (``WRITER_LOCK.break``): removing the dead holder's lock
@@ -222,17 +232,6 @@ def _locked(op: str, dir_arg: int):
                 return fn(*args, **kwargs)
         return wrapper
     return deco
-
-
-def _covers_key(batches: list[int]) -> str:
-    """Digest of a visible-batch set — recorded in the termdict manifest so
-    append_index can prove the on-disk termdict covers exactly the batches
-    it is about to extend (incremental merge) or already covers the
-    post-append set (crash replay), and fall back to a full recompute on
-    any mismatch."""
-    import hashlib
-
-    return hashlib.md5(json.dumps(sorted(batches)).encode()).hexdigest()
 
 
 def _input_file_size(f: str, spark) -> int:
@@ -523,9 +522,9 @@ def build_index(
 
     ``finalize_segments`` (default True): after each batch's fused
     zero-shuffle write, rewrite that batch's segment files term-range
-    partitioned (the same layout ``compact_index`` produces) and record
-    per-file term/docid ranges in ``_manifests/segfiles.json`` /
-    ``docfiles.json``. A fresh index is then query-ready with file-level
+    partitioned (the same layout ``compact_index`` produces). Every batch
+    records its per-file term/docid ranges in the snapshot either way;
+    finalized files make the term ranges tight. A fresh index is then query-ready with file-level
     pruning from the first search: the planner enumerates ~1 segment file
     per query term instead of scheduling one split per corpus partition
     (the reference analogue is the hash-map probe being O(1) from the
@@ -556,6 +555,16 @@ def build_index(
     stable sort), which tests/test_engine_spark.py pins via docmap url
     monotonicity. The resulting index is identical to the shuffle path when
     the guarantee holds."""
+    return _build(**locals())
+
+
+def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
+           num_partitions=None, n_batches=1, resume=False,
+           assume_sorted=False, flush_docs=500_000, n_buckets=None,
+           store_raw=False, statement_col=None, finalize_segments=True,
+           store_positions=False, commit=None) -> BuildMetrics:
+    """``build_index``; ``commit`` holds extra snapshot fields for the
+    final commit (the streaming epoch of a stream's first build)."""
     t0 = time.time()
     import visigoth_spark
 
@@ -577,9 +586,10 @@ def build_index(
 
     tmark = [t0]
     store = vstore.get_store(out_dir, spark)
-    store.makedirs(out_dir)
-    manifest_dir = os.path.join(out_dir, "_manifests")
-    store.makedirs(manifest_dir)
+    store.makedirs(vstore.join(out_dir, "_manifests"))
+    snap = load_snapshot(out_dir, store)
+    done = ({b["batch"]: b for b in snap["batches"]}
+            if resume and snap is not None else {})
 
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
     saved_mpb = None
@@ -625,19 +635,17 @@ def build_index(
                  round((i + 1) * len(pids) / n_batches)]
             for i in range(n_batches)
         ]
-        metrics = BuildMetrics(n_docs=n_docs)
-        data_root = os.path.join(out_dir, "data")
+        batches = []
         for bi, batch_pids in enumerate(batch_bounds):
-            batch_path = os.path.join(data_root, f"batch={bi}")
-            man_path = os.path.join(manifest_dir, f"batch_{bi}.json")
-            if resume and _is_complete(man_path, batch_path):
+            if bi in done:
+                batches.append(done[bi])
                 continue
             if not batch_pids:
-                _write_manifest(man_path, kind="batch", batch=bi,
-                                partitions=[], n_segments=0, n_docs=0,
-                                wall_sec=0.0)
+                batches.append({"batch": bi, "partitions": [],
+                                "buckets": [], "n_docs": 0})
                 continue
             tb = time.time()
+            batch_path = vstore.join(out_dir, "data", f"batch={bi}")
             part = src
             if len(batch_pids) < P:
                 part = src.withColumn(
@@ -661,93 +669,36 @@ def build_index(
             )
             tick(f"batch {bi}", tmark)
             if finalize_segments:
-                # term-range rewrite BEFORE the manifest commit: a crash
-                # mid-rewrite leaves the batch manifestless (invisible) and
-                # resume redoes it wholesale via mode("overwrite")
+                # term-range rewrite of the not-yet-committed batch dir
                 _finalize_batch_segments(
                     spark, store, batch_path,
                     n_files=max(1, min(64, len(batch_pids))))
                 tick(f"batch {bi} finalize", tmark)
-            # lineage + metrics from the written segment metadata (exact,
-            # no extra corpus pass). Read the batch ROOT filtered on kind so
-            # a batch with zero posting segments (all docs analyzed to zero
-            # tokens) doesn't raise on a missing kind=s partition dir.
-            seg_meta = _seg_meta(spark, batch_path)
-            _write_manifest(
-                man_path, kind="batch", batch=bi,
-                partitions=batch_pids,
-                docid_range=[offsets[batch_pids[0]],
-                             (offsets[batch_pids[-1] + 1]
-                              if batch_pids[-1] + 1 in offsets else n_docs)],
-                n_docs=(offsets[batch_pids[-1] + 1]
-                        if batch_pids[-1] + 1 in offsets else n_docs)
-                       - offsets[batch_pids[0]],
-                n_segments=int(seg_meta["n_segments"] or 0),
-                n_postings=int(seg_meta["n_postings"] or 0),
-                total_tokens=int(seg_meta["total_tokens"] or 0),
-                bytes_blob=int(seg_meta["bytes_blob"] or 0),
-                wall_sec=time.time() - tb,
-            )
+            end = offsets.get(batch_pids[-1] + 1, n_docs)
+            widths = [offsets.get(p + 1, n_docs) - offsets[p]
+                      for p in batch_pids]
+            batches.append(_batch_entry(
+                spark, out_dir, bi, partitions=batch_pids,
+                buckets=batch_pids,
+                docid_range=[offsets[batch_pids[0]], end],
+                n_docs=end - offsets[batch_pids[0]],
+                bucket_width=max(widths), wall_sec=time.time() - tb))
+            # progress commit: resume skips the batches it names
+            snap = _commit(store, out_dir, _next(
+                snap, batches=list(batches), stats=None, termdict=None),
+                snap)
 
         # ---- term dictionary: term -> (df, sum_tf) --------------------------
         # one aggregation over segment METADATA columns (no blobs touched);
         # term-sorted with small row groups so the query coordinator resolves
         # df/idf with a driver-side pruned read instead of a Spark job per
         # query (the Lucene term-dictionary-seek analogue).
-        td_path = os.path.join(out_dir, "termdict")
-        td_manifest = os.path.join(manifest_dir, "termdict.json")
-        if not (resume and _is_complete(td_manifest, td_path)):
-            seg_all = (
-                spark.read.option("basePath", data_root).parquet(data_root)
-                .filter(F.col("kind") == "s")
-            )
-            n_td = max(1, min(32, P // 4))
-            (
-                seg_all.groupBy("term")
-                .agg(F.sum("df_seg").alias("df"),
-                     F.sum("sum_tf").alias("sum_tf"))
-                .repartitionByRange(n_td, "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(1 << 20))
-                .parquet(td_path)
-            )
-            vis_now = [m["batch"] for m in _visible_batches(out_dir)]
-            _write_manifest(td_manifest, kind="termdict",
-                            covers_md5=_covers_key(vis_now),
-                            covers_n=len(vis_now),
-                            wall_sec=time.time() - tmark[0])
-            tick("termdict", tmark)
-
-        # ---- aggregate stats from manifests (cheap, exact) ------------------
-        total_tokens = n_postings = n_segments = bytes_blob = 0
-        for bi in range(n_batches):
-            m = store.read_json(
-                os.path.join(manifest_dir, f"batch_{bi}.json"))
-            total_tokens += m.get("total_tokens", 0)
-            n_postings += m.get("n_postings", 0)
-            n_segments += m.get("n_segments", 0)
-            bytes_blob += m.get("bytes_blob", 0)
-        metrics.total_tokens = total_tokens
-        metrics.n_postings = n_postings
-        metrics.n_segments = n_segments
-        metrics.bytes_blob = bytes_blob
-        metrics.wall_sec = time.time() - t0
-
-        part_sizes = [offsets[p + 1] - offsets[p] for p in pids[:-1]]
-        part_sizes.append(n_docs - offsets[pids[-1]])
+        n = _next(snap)["id"]
+        td = f"termdict/{n}"
+        _write_termdict(_term_rows(spark, out_dir, batches),
+                        vstore.join(out_dir, td), P)
+        tick("termdict", tmark)
         stats = {
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": total_tokens / n_docs,
-            "n_postings": n_postings,
-            "n_segments": n_segments,
-            "bytes_blob": bytes_blob,
-            # bucket == corpus partition: the structural per-segment bound is
-            # the largest partition's doc count
-            "bucket_width": max(part_sizes),
-            "n_buckets": P,
-            "n_batches": n_batches,
             "bm25": {"k1": 1.2, "b": 0.75},
             "store_raw": raw_col is not None,
             "store_positions": store_positions,
@@ -759,26 +710,16 @@ def build_index(
                 "n_stopwords": len(analyzer.stopwords),
             },
             "built_at_sec": time.time(),
-            "wall_sec": metrics.wall_sec,
+            "wall_sec": time.time() - t0,
         }
-        # file-range pruning manifests from the FIRST build (r3 gap: only
-        # merge/compact created them, so a fresh never-maintained index
-        # scheduled one split per corpus partition per query). With
-        # finalize_segments the segment ranges are tight (~1 file per
-        # term); without it they are wide-but-honest (docfiles ranges are
-        # tight either way — docids are assigned in partition order).
-        # append_index EXTENDS these from here on (_extend_file_manifests).
-        _write_segfiles_manifest(
-            out_dir, manifest_dir,
-            [os.path.join(data_root, f"batch={bi}", "kind=s")
-             for bi in range(n_batches)])
-        _write_docfiles_manifest(
-            out_dir, manifest_dir,
-            [os.path.join(data_root, f"batch={bi}", "kind=d")
-             for bi in range(n_batches)])
-        tick("file manifests", tmark)
-        store.write_json_atomic(os.path.join(out_dir, "stats.json"), stats)
-        return metrics
+        fresh = dict(_EMPTY, batches=batches, stats=stats, termdict=td)
+        snap = _commit(store, out_dir,
+                       _next(snap, **{**fresh, **(commit or {})}), snap)
+        st = snap["stats"]
+        return BuildMetrics(
+            n_docs=n_docs, n_postings=st["n_postings"],
+            n_segments=st["n_segments"], bytes_blob=st["bytes_blob"],
+            total_tokens=st["total_tokens"], wall_sec=time.time() - t0)
     finally:
         if saved_mpb is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes", saved_mpb)
@@ -796,14 +737,14 @@ def _finalize_batch_segments(spark: SparkSession, store, batch_path: str,
                              n_files: int) -> None:
     """Rewrite one batch's ``kind=s`` dir term-range partitioned (disjoint
     per-file term ranges, term-sorted rows, 4 MB row groups) — the layout
-    ``compact_index`` produces, established at build time so the segfiles
-    manifest prunes to ~1 file per query term from the first search. Only
+    ``compact_index`` produces, established at build time so the per-file
+    term ranges prune to ~1 file per query term from the first search. Only
     the compressed posting blobs move (one read+write of ~bytes_blob);
     the docmap files never do. Content is row-identical — file placement
     is the only thing that changes (the bench's resume digest compares
-    sorted rows for exactly this reason). Crash-safe: the caller commits
-    the batch manifest only after this returns, so a crash mid-rewrite
-    leaves the batch invisible and resume redoes it wholesale."""
+    sorted rows for exactly this reason). The batch dir is not named by
+    any snapshot yet (the caller commits it after this returns), so a
+    crash mid-rewrite leaves it unreferenced and resume redoes it."""
     seg_dir = os.path.join(batch_path, "kind=s")
     if not store.isdir(seg_dir):
         return  # batch whose docs all analyzed to zero tokens
@@ -841,37 +782,206 @@ def _seg_meta(spark: SparkSession, batch_path: str):
     )
 
 
-def _batch_manifests(out_dir: str) -> list[dict]:
-    """All committed batch manifests, sorted by batch number. These — not
-    stats.json — are the source of truth for docid/bucket allocation:
-    stats.json is a derived cache that a crash can leave stale."""
-    store = vstore.get_store(out_dir)
-    manifest_dir = vstore.join(out_dir, "_manifests")
-    out = []
-    for f in store.listdir(manifest_dir):
-        if f.startswith("batch_") and f.endswith(".json"):
-            out.append(store.read_json(vstore.join(manifest_dir, f)))
-    return sorted(out, key=lambda m: m["batch"])
+# ---- the committed snapshot -------------------------------------------------
+_SNAP = "snapshot-"
+
+# a snapshot's fields besides ``id``: what a fresh index starts from
+_EMPTY = {"batches": [], "stats": None, "termdict": None, "fuzzydict": None,
+          "tombstones": None, "last_epoch": None}
 
 
-def _visible_batches(out_dir: str) -> list[dict]:
-    """Committed batch manifests that are CURRENTLY part of the index:
-    a merged batch's manifest carries ``replaces=[...]``, which hides the
-    batches it subsumed even while their manifests/dirs still exist (the
-    window between a merge's manifest commit and its GC). This — one
-    atomic manifest write flipping visibility — is what makes
-    ``merge_appends`` crash-atomic without a directory swap: readers and
-    stats plan from this set, never from a directory listing."""
-    ms = _batch_manifests(out_dir)
-    replaced: set[int] = set()
-    for m in ms:
-        replaced.update(m.get("replaces", []))
-    # an empty batch (n_docs == 0, e.g. an n_batches slice that got no
-    # partitions) commits a manifest but never writes a batch dir — it owns
-    # no rows, so readers and stats must not try to plan its (nonexistent)
-    # path. Only an explicit 0 excludes; absent n_docs keeps the batch.
-    return [m for m in ms
-            if m["batch"] not in replaced and m.get("n_docs", 1) != 0]
+def _snapshot_ids(store, index_dir: str) -> list[int]:
+    """Numbers of the committed snapshots, ascending."""
+    man = vstore.join(index_dir, "_manifests")
+    if not store.isdir(man):
+        return []
+    return sorted(int(f[len(_SNAP):-5]) for f in store.listdir(man)
+                  if f.startswith(_SNAP) and f.endswith(".json")
+                  and f[len(_SNAP):-5].isdigit())
+
+
+def _snapshot_path(index_dir: str, n: int) -> str:
+    return vstore.join(index_dir, "_manifests", f"{_SNAP}{n}.json")
+
+
+def load_snapshot(index_dir: str, store=None) -> dict | None:
+    """The index's current state: the highest-numbered committed
+    ``_manifests/snapshot-<n>.json``, or None when nothing is committed.
+    A writer deletes the snapshot it superseded, so a read that loses
+    that race lists again."""
+    store = store or vstore.get_store(index_dir)
+    for attempt in range(3):
+        ids = _snapshot_ids(store, index_dir)
+        if not ids:
+            return None
+        try:
+            return store.read_json(_snapshot_path(index_dir, ids[-1]))
+        except Exception:
+            if attempt == 2:
+                raise
+
+
+def _require(index_dir: str, store) -> dict:
+    """The current snapshot of a finished build; FileNotFoundError when
+    there is none (nothing committed, or only an unfinished build's
+    progress snapshots)."""
+    snap = load_snapshot(index_dir, store)
+    if snap is None or snap["stats"] is None:
+        raise FileNotFoundError(f"no committed index at {index_dir!r}")
+    return snap
+
+
+def load_stats(index_dir: str) -> dict:
+    """The current snapshot's stats (n_docs, avgdl, ...). Raises
+    FileNotFoundError when no finished build is committed — the one
+    "does this index exist" check."""
+    return _require(index_dir, vstore.get_store(index_dir))["stats"]
+
+
+def index_exists(index_dir: str) -> bool:
+    """True once a build of ``index_dir`` has committed (see load_stats)."""
+    try:
+        load_stats(index_dir)
+        return True
+    except FileNotFoundError:
+        return False
+
+
+def _next(snap: dict | None, **changes) -> dict:
+    """The snapshot after ``snap``: its fields with ``changes`` applied,
+    numbered one past it."""
+    prev = snap or dict(_EMPTY, id=-1)
+    return {**prev, **changes, "id": prev["id"] + 1}
+
+
+def _batch_totals(batches: list[dict]) -> dict:
+    """The stats the batch list determines."""
+    live = [b for b in batches if b["n_docs"]]
+    n_docs = max(b["docid_range"][1] for b in live)
+    total = sum(b["total_tokens"] for b in live)
+    return {
+        "n_docs": n_docs,
+        "total_tokens": total,
+        "avgdl": total / n_docs,
+        "n_postings": sum(b["n_postings"] for b in live),
+        "n_segments": sum(b["n_segments"] for b in live),
+        "bytes_blob": sum(b["bytes_blob"] for b in live),
+        # bucket == corpus partition: the structural per-segment bound is
+        # the largest partition's doc count
+        "bucket_width": max(b["bucket_width"] for b in live),
+        "n_buckets": 1 + max(max(b["buckets"]) for b in live),
+        "n_batches": len(live),
+    }
+
+
+def _named(snap: dict) -> set[str]:
+    """Root-relative paths ``snap`` references: batch dirs, the termdict
+    version, the fuzzydict dirs, the tombstone file."""
+    out = {f"data/batch={b['batch']}" for b in snap["batches"]}
+    out.update(p for p in (snap["termdict"], snap["tombstones"]) if p)
+    if snap["fuzzydict"]:
+        out.update(f.rsplit("/", 1)[0] for f in snap["fuzzydict"]["files"])
+    return out
+
+
+def _commit(store, index_dir: str, snap: dict, base: dict | None,
+            gc: bool = True) -> dict:
+    """The op's single commit point: write ``snap`` as a NEW snapshot
+    file. Then, with ``gc``, delete what ``base`` (the snapshot the op
+    started from) named and ``snap`` does not, and ``base``'s file."""
+    snap["batches"] = sorted(snap["batches"], key=lambda b: b["batch"])
+    if snap["stats"] is not None:
+        snap["stats"] = {**snap["stats"], **_batch_totals(snap["batches"])}
+    store.write_json_atomic(_snapshot_path(index_dir, snap["id"]), snap,
+                            indent=None)
+    if gc and base is not None:
+        for rel in sorted(_named(base) - _named(snap)):
+            path = vstore.join(index_dir, rel)
+            if rel.startswith("_manifests/"):
+                with contextlib.suppress(FileNotFoundError):
+                    store.remove(path)
+            else:
+                store.rmtree(path)
+        with contextlib.suppress(FileNotFoundError):
+            store.remove(_snapshot_path(index_dir, base["id"]))
+    return snap
+
+
+def _read_batches(spark: SparkSession, index_dir: str, batches: list[dict]
+                  ) -> DataFrame:
+    """The rows of the given batches (hive columns ``batch`` and ``kind``
+    included)."""
+    data_root = vstore.join(index_dir, "data")
+    return spark.read.option("basePath", data_root).parquet(
+        *[vstore.join(data_root, f"batch={b['batch']}")
+          for b in batches if b["n_docs"]])
+
+
+def _term_rows(spark: SparkSession, index_dir: str, batches: list[dict]
+               ) -> DataFrame:
+    """(term, df, sum_tf) per segment row of the given batches."""
+    return (_read_batches(spark, index_dir, batches)
+            .filter(F.col("kind") == "s")
+            .select("term", F.col("df_seg").cast("long").alias("df"),
+                    "sum_tf"))
+
+
+def _write_termdict(rows: DataFrame, path: str, n_buckets: int) -> None:
+    """One termdict version: ``rows`` (term, df, sum_tf) summed per term,
+    term-range partitioned and term-sorted with 1 MB row groups — the
+    driver-side df seek reads only the row groups covering a query term."""
+    (
+        rows.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("sum_tf").alias("sum_tf"))
+        .repartitionByRange(max(1, min(32, n_buckets // 4)), "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("parquet.block.size", str(1 << 20))
+        .parquet(path)
+    )
+
+
+def _batch_entry(spark: SparkSession, index_dir: str, batch: int,
+                 **fields) -> dict:
+    """A batch's snapshot entry: ``fields`` plus the segment totals and
+    the per-file term and docid ranges, swept once from the footers of
+    the batch as written."""
+    path = vstore.join(index_dir, "data", f"batch={batch}")
+    meta = _seg_meta(spark, path)
+    return dict(
+        fields, batch=batch,
+        n_segments=int(meta["n_segments"] or 0),
+        n_postings=int(meta["n_postings"] or 0),
+        total_tokens=int(meta["total_tokens"] or 0),
+        bytes_blob=int(meta["bytes_blob"] or 0),
+        segfiles=_sweep_file_ranges(
+            index_dir, [vstore.join(path, "kind=s")], "term", "term"),
+        docfiles=_sweep_file_ranges(
+            index_dir, [vstore.join(path, "kind=d")], "docid", "docid"),
+    )
+
+
+def _tombstone_ids(store, index_dir: str, snap: dict | None) -> list[int]:
+    if snap is None or not snap["tombstones"]:
+        return []
+    path = vstore.join(index_dir, snap["tombstones"])
+    return sorted(int(d) for d in store.read_json(path)["docids"])
+
+
+def _write_tombstones(store, index_dir: str, n: int, docids) -> str:
+    """The tombstone file snapshot ``n`` will name (a fresh path)."""
+    rel = f"_manifests/tombstones-{n}.json"
+    store.write_json_atomic(vstore.join(index_dir, rel),
+                            {"docids": sorted(int(d) for d in docids)},
+                            indent=None)
+    return rel
+
+
+def _metrics(entry: dict, n_docs: int, t0: float) -> BuildMetrics:
+    return BuildMetrics(
+        n_docs=n_docs, n_postings=entry["n_postings"],
+        n_segments=entry["n_segments"], bytes_blob=entry["bytes_blob"],
+        total_tokens=entry["total_tokens"], wall_sec=time.time() - t0)
 
 
 @_locked("append", dir_arg=2)
@@ -903,21 +1013,17 @@ def append_index(
     (disjoint from every existing bucket), so query-time per-bucket kernels
     and cross-batch segment concatenation keep working unchanged.
 
-    Crash-safety / idempotence contract (single concurrent writer):
-    - ``batch_id`` / ``base_docid`` / ``bucket_base`` are derived from the
-      committed BATCH MANIFESTS, never from stats.json (a crash between the
-      batch write and the stats rewrite leaves stats stale; manifests are
-      written atomically and are the commit point).
-    - The batch parquet is written mode=overwrite to its final path. A crash
-      AFTER the parquet write but BEFORE the manifest leaves an orphan dir
-      whose batch number and docid range are exactly what the next append
-      (or an idempotent replay with pinned ``batch_id``/``base_docid`` —
-      see streaming.foreach_batch_indexer) will claim and overwrite — the
-      docid-disjoint-segment invariant cannot be violated by a partial
-      append. The orphan is INVISIBLE to queries in that window:
-      ``SearchIndex`` and the termdict/stats refreshes plan from the
-      committed batch manifests (``_visible_batches``), never from a
-      directory listing.
+    One commit (single concurrent writer): ``batch_id`` / ``base_docid`` /
+    ``bucket_base`` are derived from the current snapshot; the batch dir,
+    a new termdict version (the old termdict UNION the batch's aggregate —
+    O(vocabulary), never a re-scan of every batch) and, when the index has
+    a fuzzydict, the batch's deletion-variant file are written to paths no
+    snapshot names, and the next snapshot commits them together. A crash
+    before that leaves the previous snapshot current; the orphan batch dir
+    is overwritten by the next append, which claims the same id. Pinning
+    ``batch_id`` to a batch the snapshot already names REPLACES that batch
+    (a replay: the termdict is then recomputed over every batch, so the
+    counts never double).
 
     Ordering note: WITHIN each appended batch docids follow url order; ACROSS
     batches they follow ingest order. The reference breaks exact-score ties
@@ -929,18 +1035,28 @@ def append_index(
     ``compact_index`` restores url-ordered docids and with them the full
     contract. Exact-score ranking is unaffected (BM25 stats are global).
     """
+    return _append(**locals())
+
+
+def _append(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
+            num_partitions=None, flush_docs=500_000, store_raw=False,
+            statement_col=None, batch_id=None, base_docid=None,
+            bucket_base=None, store_positions=None, commit=None
+            ) -> BuildMetrics:
+    """``append_index`` without the writer lock; ``commit`` holds extra
+    fields for its snapshot (update_docs' tombstones, a streaming epoch)."""
     t0 = time.time()
     import visigoth_spark
 
     visigoth_spark.ensure_shipped(spark)
     store = vstore.get_store(out_dir, spark)
-    if not store.exists(os.path.join(out_dir, "stats.json")):
-        return build_index(spark, corpus, out_dir, analyzer=analyzer,
-                           num_partitions=num_partitions,
-                           flush_docs=flush_docs, store_raw=store_raw,
-                           statement_col=statement_col,
-                           store_positions=bool(store_positions))
-    stats = load_stats(out_dir)
+    base = load_snapshot(out_dir, store)
+    if base is None or base["stats"] is None:
+        return _build(spark, corpus, out_dir, analyzer=analyzer,
+                      num_partitions=num_partitions, flush_docs=flush_docs,
+                      store_raw=store_raw, statement_col=statement_col,
+                      store_positions=bool(store_positions), commit=commit)
+    stats = base["stats"]
     # positions are an index-level invariant: a mixed index (some batches
     # with pos_blob, some without) would silently break phrase queries on
     # the gap — appends always inherit the base index's setting
@@ -952,21 +1068,12 @@ def append_index(
             "invariant — rebuild (or compact into a new index) to change it"
         )
     store_positions = inherited
-    manifests = _batch_manifests(out_dir)
     if base_docid is None:
-        base_docid = max(
-            (m.get("docid_range", [0, 0])[1] for m in manifests),
-            default=stats["n_docs"],
-        )
+        base_docid = stats["n_docs"]
     if bucket_base is None:
-        bucket_base = max(
-            (max(m.get("buckets", [-1])) + 1 for m in manifests),
-            default=stats["n_buckets"],
-        )
-        bucket_base = max(bucket_base, stats["n_buckets"])
+        bucket_base = stats["n_buckets"]
     if batch_id is None:
-        batch_id = 1 + max(m["batch"] for m in manifests)
-    manifest_dir = os.path.join(out_dir, "_manifests")
+        batch_id = 1 + max(b["batch"] for b in base["batches"])
     if statement_col is None:
         # inherit the index's statement/content split — an append must
         # analyze the same column the original build did
@@ -998,7 +1105,7 @@ def append_index(
         offsets = {pid: off + base_docid for pid, off in offsets.items()}
         P = len(offsets)
 
-        batch_path = os.path.join(out_dir, "data", f"batch={batch_id}")
+        batch_path = vstore.join(out_dir, "data", f"batch={batch_id}")
         fused = src.mapInPandas(
             _fused_generator(offsets, analyzer, flush_docs, bucket_base,
                              index_col=index_col, raw_col=raw_col,
@@ -1011,166 +1118,38 @@ def append_index(
             .partitionBy("kind")
             .parquet(batch_path)
         )
-        seg_meta = _seg_meta(spark, batch_path)
-        part_sizes = [offsets[p] for p in sorted(offsets)]
-        widths = [b - a for a, b in zip(part_sizes, part_sizes[1:])]
-        widths.append(base_docid + n_new - part_sizes[-1])
-        # MAINTAIN the file-range pruning manifests (when present) instead
-        # of invalidating them: sweep ONLY the new batch's files and extend
-        # the entry list, so an appended index keeps file-level pruning
-        # live (previously every append disabled it until the next
-        # merge/compact — measured ~2x on bm25 p50 at sf0.1). Ordering and
-        # crash safety: the extension is written BEFORE the commit point,
-        # so the manifest is always a SUPERSET of the visible batches'
-        # files — readers filter entries by batch visibility at open
-        # (query.py::_filter_entries_visible), which makes an orphan
-        # batch's extra entries harmless, while a manifest MISSING a
-        # visible batch's files (the dangerous direction) cannot occur.
-        # A replayed append rewrites its batch dir with fresh file names,
-        # so existing entries under this batch's path are replaced, never
-        # duplicated or left dangling.
-        _extend_file_manifests(store, out_dir, manifest_dir, batch_id,
-                               batch_path)
-        # commit point: the manifest makes the batch part of the index
-        _write_manifest(
-            os.path.join(manifest_dir, f"batch_{batch_id}.json"),
-            kind="batch", batch=batch_id, appended=True,
+        starts = [offsets[p] for p in sorted(offsets)]
+        widths = [b - a for a, b in zip(starts, starts[1:])]
+        widths.append(base_docid + n_new - starts[-1])
+        entry = _batch_entry(
+            spark, out_dir, batch_id, appended=True,
             partitions=sorted(offsets),
             buckets=[bucket_base + i for i in range(P)],
-            docid_range=[base_docid, base_docid + n_new],
-            n_docs=n_new,
-            bucket_width=max(widths),
-            n_segments=int(seg_meta["n_segments"] or 0),
-            n_postings=int(seg_meta["n_postings"] or 0),
-            total_tokens=int(seg_meta["total_tokens"] or 0),
-            bytes_blob=int(seg_meta["bytes_blob"] or 0),
-            wall_sec=time.time() - t0,
-        )
-
-        # refresh the term dictionary (global df/sum_tf changed).
-        # INCREMENTAL by default: merge the existing termdict (V terms —
-        # bounded by vocabulary) with ONLY the new batch's aggregate,
-        # instead of re-aggregating every visible batch's segment metadata
-        # (O(total segments) — at 10^12 docs that is billions of metadata
-        # rows scanned per small append). The termdict manifest records the
-        # md5 of the batch set it covers; the incremental merge runs ONLY
-        # when that set provably EXCLUDES this batch id. Everything else —
-        # an older crash, manual surgery, a pre-covers manifest, or a
-        # covers set that already contains this batch id (a crash replay OR
-        # an orphan batch id being reclaimed with DIFFERENT data — batch-id
-        # equality does not prove content equality) — pays the full
-        # recompute, which is always correct.
-        data_root = os.path.join(out_dir, "data")
-        td_path = os.path.join(out_dir, "termdict")
-        visible = [m["batch"] for m in _visible_batches(out_dir)]
-        n_td = max(1, min(32, (bucket_base + P) // 4))
-        td_man_path = os.path.join(manifest_dir, "termdict.json")
-        td_covers = None
-        if store.exists(td_man_path):
-            td_covers = store.read_json(td_man_path).get("covers_md5")
-        post_key = _covers_key(visible)
-        pre_key = _covers_key([b for b in visible if b != batch_id])
-        # invalidate the covers manifest BEFORE any termdict mutation: a
-        # crash at ANY point inside the refresh then leaves no covers key,
-        # forcing the next writer onto the always-correct full recompute.
-        # Without this there is a window (termdict swapped, covers not yet
-        # rewritten) where a pinned-batch replay would see the PRE-append
-        # key against a POST-append termdict and union the batch in twice.
-        if td_covers is not None:
-            with contextlib.suppress(FileNotFoundError):
-                store.remove(td_man_path)
-        if td_covers == pre_key and store.exists(td_path):
-            td_mode = "incremental"
-            # incremental: old termdict UNION new batch's aggregate
-            batch_agg = (
-                spark.read.parquet(batch_path)
-                .filter(F.col("kind") == "s")
-                .select("term", F.col("df_seg").cast("long").alias("df"),
-                        "sum_tf")
-            )
-            old_td = spark.read.parquet(td_path)
-            merged = (
-                old_td.select("term", "df", "sum_tf")
-                .unionByName(batch_agg)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"),
-                     F.sum("sum_tf").alias("sum_tf"))
-            )
-            # old termdict is an INPUT: stage to a tmp dir, then swap
-            # (Spark cannot overwrite a path it is reading). In the
-            # swap window the termdict is absent, which term_df treats
-            # as "no fast path", never as df=0.
-            tmp_td = os.path.join(out_dir, "_termdict_tmp")
-            store.rmtree(tmp_td)
-            (
-                merged.repartitionByRange(n_td, "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(1 << 20))
-                .parquet(tmp_td)
-            )
-            store.rmtree(td_path)
-            store.rename(tmp_td, td_path)
+            docid_range=[base_docid, base_docid + n_new], n_docs=n_new,
+            bucket_width=max(widths), wall_sec=time.time() - t0)
+        batches = [b for b in base["batches"] if b["batch"] != batch_id]
+        n = base["id"] + 1
+        td = f"termdict/{n}"
+        new_rows = _term_rows(spark, out_dir, [entry])
+        if len(batches) < len(base["batches"]):  # replay: recount all
+            rows = _term_rows(spark, out_dir, batches + [entry])
         else:
-            td_mode = "full"
-            # fallback: full recompute over the visible batches
-            seg_all = (
-                spark.read.option("basePath", data_root)
-                .parquet(data_root)
-                .filter(F.col("kind") == "s")
-                .filter(F.col("batch").isin(visible))
-            )
-            (
-                seg_all.groupBy("term")
-                .agg(F.sum("df_seg").alias("df"),
-                     F.sum("sum_tf").alias("sum_tf"))
-                .repartitionByRange(n_td, "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(1 << 20))
-                .parquet(td_path)
-            )
-        _write_manifest(td_man_path, kind="termdict", mode=td_mode,
-                        covers_md5=post_key, covers_n=len(visible),
-                        wall_sec=time.time() - t0)
-        # fuzzydict lifecycle: a fresh sidecar stays fresh across the
-        # append (delta-extended with the batch's terms); absent/stale
-        # sidecars cost one manifest existence check and nothing else
-        _fuzzydict_extend(spark, store, out_dir, batch_path,
-                          pre_key, post_key)
-
-        # stats: RECOMPUTED from the VISIBLE committed manifests (idempotent
-        # under replay — a re-run of the same pinned batch converges, never
-        # double-counts; a merge's half-GC'd leftovers don't inflate totals),
-        # not incremented from the possibly-stale cache
-        manifests = _visible_batches(out_dir)
-        stats["n_docs"] = max(m.get("docid_range", [0, 0])[1]
-                              for m in manifests)
-        stats["total_tokens"] = sum(m.get("total_tokens", 0)
-                                    for m in manifests)
-        stats["avgdl"] = stats["total_tokens"] / stats["n_docs"]
-        stats["n_postings"] = sum(m.get("n_postings", 0) for m in manifests)
-        stats["n_segments"] = sum(m.get("n_segments", 0) for m in manifests)
-        stats["bytes_blob"] = sum(m.get("bytes_blob", 0) for m in manifests)
-        stats["bucket_width"] = max(
-            [stats["bucket_width"]]
-            + [m["bucket_width"] for m in manifests if "bucket_width" in m]
-        )
-        stats["n_buckets"] = bucket_base + P
-        stats["n_batches"] = len(manifests)
-        stats["store_raw"] = raw_col is not None or bool(
-            stats.get("store_raw")
-        )
-        stats["built_at_sec"] = time.time()
-        store.write_json_atomic(os.path.join(out_dir, "stats.json"), stats)
-        return BuildMetrics(
-            n_docs=stats["n_docs"],
-            n_postings=int(seg_meta["n_postings"] or 0),
-            n_segments=int(seg_meta["n_segments"] or 0),
-            bytes_blob=int(seg_meta["bytes_blob"] or 0),
-            total_tokens=int(seg_meta["total_tokens"] or 0),
-            wall_sec=time.time() - t0,
-        )
+            rows = (spark.read.parquet(vstore.join(out_dir, base["termdict"]))
+                    .select("term", "df", "sum_tf").unionByName(new_rows))
+        _write_termdict(rows, vstore.join(out_dir, td), bucket_base + P)
+        fd = base["fuzzydict"]
+        if fd:
+            # keep the sidecar complete: add the batch's terms' variants
+            # (rows for terms it already holds are harmless duplicates —
+            # readers dedup candidates; compaction rebuilds it)
+            fd = dict(fd, files=fd["files"] + _fuzzy_files(
+                spark, store, out_dir, n, new_rows.select("term").distinct(),
+                fd["max_edits"], 1))
+        snap = _commit(store, out_dir, _next(
+            base, batches=batches + [entry], termdict=td, fuzzydict=fd,
+            stats=dict(stats, built_at_sec=time.time()),
+            **(commit or {})), base)
+        return _metrics(entry, snap["stats"]["n_docs"], t0)
     finally:
         src.unpersist()
 
@@ -1197,18 +1176,14 @@ def merge_appends(
       result order are byte-identical to the pre-merge index — no docid
       remap, no re-encode, no text touched.
     - **Bounds query fan-out.** N appends leave N batch dirs and ~N file
-      splits per query term; after a merge a term touches ~1 merged file,
-      and the regenerated ``segfiles.json`` covers EVERY visible segment
-      file, so file-level pruning serves the whole index again (appends
-      invalidate it).
-    - **Crash-atomic via manifest visibility, not a directory swap.** The
-      merged batch dir is written under ``data/`` but stays invisible
-      (readers plan from batch manifests) until its own manifest —
-      carrying ``replaces=[...]`` — is atomically written. A crash before
-      that leaves an inert orphan dir, reclaimed by the next merge; a
-      crash after it but before GC leaves replaced manifests that
-      ``_visible_batches`` already hides. Single concurrent writer, same
-      as ``append_index`` (pause streams across a merge).
+      splits per query term; after a merge a term touches ~1 merged file.
+    - **One commit.** The merged batch is written under a new batch id
+      that no snapshot names; the next snapshot lists it (with
+      ``replaces=[...]``) in place of the batches it folds. The termdict
+      and fuzzydict stay as they are: the vocabulary and every (term, df,
+      sum_tf) are unchanged. A crash before the commit leaves an inert
+      orphan dir, overwritten by the next merge. Single concurrent writer,
+      same as ``append_index``.
 
     At 10^12-doc scale this is the steady-state maintenance op: appends
     accumulate small L0 batches, ``merge_appends`` rolls them into the L1
@@ -1216,10 +1191,9 @@ def merge_appends(
     re-encode) runs rarely, when the ingest-order tiebreak or bucket-count
     drift starts to matter.
 
-    ``gc=False`` defers reclamation: replaced batches stay on disk (hidden
-    from every new reader by ``replaces``) so readers that planned before
-    the merge keep a consistent snapshot; run ``gc_index`` when they're
-    gone.
+    ``gc=False`` defers reclamation: the replaced batches stay on disk, so
+    readers that opened the previous snapshot keep working; ``gc_index``
+    deletes them once those readers are gone.
 
     Returns the merged batch's metrics, or None when fewer than
     ``min_batches`` appended batches exist."""
@@ -1228,32 +1202,16 @@ def merge_appends(
 
     visigoth_spark.ensure_shipped(spark)
     store = vstore.get_store(index_dir, spark)
-    stats = load_stats(index_dir)
-    manifest_dir = os.path.join(index_dir, "_manifests")
-    vis_now = _visible_batches(index_dir)
-    pre_visible = [m["batch"] for m in vis_now]
-    to_merge = [m for m in vis_now
-                if m.get("appended") or m.get("merged")]
+    base = _require(index_dir, store)
+    to_merge = [b for b in base["batches"]
+                if b.get("appended") or b.get("merged")]
     if len(to_merge) < min_batches:
         return None
-    src_ids = [m["batch"] for m in to_merge]
-    data_root = os.path.join(index_dir, "data")
-    new_batch = 1 + max(m["batch"] for m in _batch_manifests(index_dir))
-    # never claim a batch id a stream epoch has durably ALLOCATED but not
-    # yet committed (stream_epochs.json): the epoch's crash-replay writes
-    # its pinned batch id mode=overwrite and would destroy the merged batch
-    ledger = os.path.join(manifest_dir, "stream_epochs.json")
-    if store.exists(ledger):
-        epochs = store.read_json(ledger)
-        new_batch = max(new_batch, 1 + max(
-            (r["batch"] for r in epochs.values() if "batch" in r),
-            default=-1,
-        ))
-    batch_path = os.path.join(data_root, f"batch={new_batch}")
-    if store.exists(batch_path):
-        store.rmtree(batch_path)  # inert orphan from a crashed prior merge
-    paths = [os.path.join(data_root, f"batch={b}") for b in src_ids]
-    rows = spark.read.option("basePath", data_root).parquet(*paths)
+    src_ids = [b["batch"] for b in to_merge]
+    new_batch = 1 + max(b["batch"] for b in base["batches"])
+    batch_path = vstore.join(index_dir, "data", f"batch={new_batch}")
+    store.rmtree(batch_path)  # inert orphan from a crashed prior merge
+    rows = _read_batches(spark, index_dir, to_merge)
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
     (
         rows.filter(F.col("kind") == "s").drop("batch")
@@ -1273,169 +1231,65 @@ def merge_appends(
         .partitionBy("kind")
         .parquet(batch_path)
     )
-    seg_meta = _seg_meta(spark, batch_path)
-    # extend the file-range manifests with the merged batch's entries
-    # BEFORE the commit point, KEEPING the replaced batches' entries: the
-    # manifest stays a SUPERSET of the visible files on both sides of the
-    # commit (readers filter entries by batch visibility), so neither a
-    # crash before the commit (merged batch invisible, its extra entries
-    # ignored) nor after it (replaced batches hidden, their entries
-    # ignored) can make pruning miss a visible file. The sweep touches
-    # ONLY the merged batch's files — O(merged files), not O(index files).
-    had_manifest = store.exists(
-        os.path.join(manifest_dir, "segfiles.json")
-    ) and store.exists(os.path.join(manifest_dir, "docfiles.json"))
-    _extend_file_manifests(store, index_dir, manifest_dir, new_batch,
-                           batch_path)
-    # commit point: ONE atomic manifest write makes the merged batch
-    # visible and simultaneously hides the batches it replaces
-    _write_manifest(
-        os.path.join(manifest_dir, f"batch_{new_batch}.json"),
-        kind="batch", batch=new_batch, merged=True,
-        replaces=src_ids,
-        docid_range=[min(m["docid_range"][0] for m in to_merge),
-                     max(m["docid_range"][1] for m in to_merge)],
-        n_docs=sum(m["n_docs"] for m in to_merge),
-        buckets=sorted({b for m in to_merge
-                        for b in m.get("buckets", [])}),
-        bucket_width=max(m.get("bucket_width", 0) for m in to_merge),
-        n_segments=int(seg_meta["n_segments"] or 0),
-        n_postings=int(seg_meta["n_postings"] or 0),
-        total_tokens=int(seg_meta["total_tokens"] or 0),
-        bytes_blob=int(seg_meta["bytes_blob"] or 0),
-        wall_sec=time.time() - t0,
-    )
-    # GC the replaced batches: manifests first (visibility already hides
-    # them), dirs after — a crash anywhere in here is harmless. With
-    # gc=False the replaced batches stay on disk, hidden by ``replaces``:
-    # readers constructed BEFORE the merge keep a working snapshot (their
-    # planned file paths still resolve) while new readers see the merged
-    # tier; reclaim later with ``gc_index`` once old readers are gone.
-    if gc:
-        for b in src_ids:
-            mp = os.path.join(manifest_dir, f"batch_{b}.json")
-            if store.exists(mp):
-                store.remove(mp)
-        for b in src_ids:
-            store.rmtree(os.path.join(data_root, f"batch={b}"))
-    vis_after = _visible_batches(index_dir)
-    if had_manifest:
-        # cleanup: drop the replaced batches' (already reader-invisible)
-        # entries — pure entry filtering, no footer sweeps. A crash before
-        # this only leaves dead entries that visibility filtering hides.
-        vis_prefixes = tuple(f"data/batch={m['batch']}/" for m in vis_after)
-        for mf in ("segfiles.json", "docfiles.json"):
-            mp = os.path.join(manifest_dir, mf)
-            if store.exists(mp):
-                files = [e for e in store.read_json(mp)["files"]
-                         if e["path"].startswith(vis_prefixes)]
-                _write_manifest(mp, files=files)
-    else:
-        # first manifest for this index (build-layout base + merged tier):
-        # one full sweep over every visible segment/docmap file. The
-        # merged tier has tight disjoint term ranges; base build-layout
-        # files carry whatever their footer stats give (wide).
-        _write_segfiles_manifest(
-            index_dir, manifest_dir,
-            [os.path.join(data_root, f"batch={m['batch']}", "kind=s")
-             for m in vis_after],
-        )
-        _write_docfiles_manifest(
-            index_dir, manifest_dir,
-            [os.path.join(data_root, f"batch={m['batch']}", "kind=d")
-             for m in vis_after],
-        )
-    # the merge moved postings between batches without changing a single
-    # (term, df, sum_tf) — the termdict VALUES stay valid, but its covers
-    # key must be re-pointed at the post-merge batch set, or the next
-    # append would see a mismatch and pay a full recompute. Only re-point
-    # a termdict that provably covered the pre-merge set.
-    td_man_path = os.path.join(manifest_dir, "termdict.json")
-    if store.exists(td_man_path):
-        td_man = store.read_json(td_man_path)
-        if td_man.get("covers_md5") == _covers_key(pre_visible):
-            vis_ids = [m["batch"] for m in vis_after]
-            td_man["covers_md5"] = _covers_key(vis_ids)
-            td_man["covers_n"] = len(vis_ids)
-            store.write_json_atomic(td_man_path, td_man)
-            # the fuzzydict sidecar is derived from the (unchanged)
-            # vocabulary — re-point a fresh one the same way, or every
-            # merge would silently false-stale it back to the O(V) scan
-            fd_man_path = os.path.join(manifest_dir, "fuzzydict.json")
-            if store.exists(fd_man_path):
-                fd_man = store.read_json(fd_man_path)
-                if fd_man.get("covers_md5") == _covers_key(pre_visible):
-                    fd_man["covers_md5"] = _covers_key(vis_ids)
-                    store.write_json_atomic(fd_man_path, fd_man)
-    # fuzzydict lifecycle: a sidecar the re-point above could NOT keep
-    # fresh (it was already stale, e.g. appends ran before the sidecar
-    # existed or a crash dropped its manifest) is rebuilt here from the
-    # post-merge termdict, under the merge's writer lock — maintenance
-    # never demotes fuzzy/suggest to the O(vocabulary) scan
-    _fuzzydict_refresh_if_stale(spark, store, index_dir)
-    # stats: recomputed from the visible manifests (same rule as append)
-    stats["n_docs"] = max(m.get("docid_range", [0, 0])[1]
-                          for m in vis_after)
-    stats["total_tokens"] = sum(m.get("total_tokens", 0) for m in vis_after)
-    stats["avgdl"] = stats["total_tokens"] / stats["n_docs"]
-    stats["n_postings"] = sum(m.get("n_postings", 0) for m in vis_after)
-    stats["n_segments"] = sum(m.get("n_segments", 0) for m in vis_after)
-    stats["bytes_blob"] = sum(m.get("bytes_blob", 0) for m in vis_after)
-    stats["n_batches"] = len(vis_after)
-    stats["merged_at_sec"] = time.time()
-    store.write_json_atomic(os.path.join(index_dir, "stats.json"), stats)
-    return BuildMetrics(
-        n_docs=stats["n_docs"],
-        n_postings=int(seg_meta["n_postings"] or 0),
-        n_segments=int(seg_meta["n_segments"] or 0),
-        bytes_blob=int(seg_meta["bytes_blob"] or 0),
-        total_tokens=int(seg_meta["total_tokens"] or 0),
-        wall_sec=time.time() - t0,
-    )
+    entry = _batch_entry(
+        spark, index_dir, new_batch, merged=True, replaces=src_ids,
+        docid_range=[min(b["docid_range"][0] for b in to_merge),
+                     max(b["docid_range"][1] for b in to_merge)],
+        n_docs=sum(b["n_docs"] for b in to_merge),
+        buckets=sorted({x for b in to_merge for x in b["buckets"]}),
+        bucket_width=max(b["bucket_width"] for b in to_merge),
+        wall_sec=time.time() - t0)
+    batches = [b for b in base["batches"] if b["batch"] not in src_ids]
+    snap = _commit(store, index_dir, _next(
+        base, batches=batches + [entry],
+        stats=dict(base["stats"], merged_at_sec=time.time())), base, gc=gc)
+    return _metrics(entry, snap["stats"]["n_docs"], t0)
 
 
 @_locked("gc", dir_arg=0)
 def gc_index(index_dir: str) -> list[int]:
-    """Reclaim batches hidden by a merge's ``replaces`` field — the
-    deferred half of ``merge_appends(gc=False)``. Manifests are removed
-    first (visibility already excludes them), directories after; safe to
-    crash anywhere and safe to re-run. Only call once readers that planned
-    BEFORE the merge are gone (single-writer contract, like every other
-    maintenance op here). Returns the batch ids reclaimed."""
-    ms = _batch_manifests(index_dir)
-    replaced: set[int] = set()
-    for m in ms:
-        replaced.update(m.get("replaces", []))
-    victims = sorted(replaced & {m["batch"] for m in ms})
+    """Delete everything the current snapshot does not name: older
+    snapshots, batch dirs (the replaced batches ``merge_appends(gc=False)``
+    left behind, orphans of crashed ops), termdict and fuzzydict versions,
+    tombstone files. Only call once readers of older snapshots are gone
+    (single-writer contract, like every other maintenance op here). Safe
+    to re-run. Returns the batch ids reclaimed."""
     store = vstore.get_store(index_dir)
-    manifest_dir = os.path.join(index_dir, "_manifests")
-    data_root = os.path.join(index_dir, "data")
-    for b in victims:
-        mp = os.path.join(manifest_dir, f"batch_{b}.json")
-        if store.exists(mp):
-            store.remove(mp)
-    for b in victims:
-        store.rmtree(os.path.join(data_root, f"batch={b}"))
-    return victims
-
-
-TOMBSTONES_FILE = "tombstones.json"
+    snap = load_snapshot(index_dir, store)
+    if snap is None:
+        return []
+    keep = _named(snap) | {f"_manifests/{_SNAP}{snap['id']}.json"}
+    victims = []
+    for sub in ("data", "termdict", "fuzzydict", "_manifests"):
+        d = vstore.join(index_dir, sub)
+        if not store.isdir(d):
+            continue
+        for name in store.listdir(d):
+            if f"{sub}/{name}" in keep:
+                continue
+            path = vstore.join(d, name)
+            if sub == "_manifests":
+                store.remove(path)
+            else:
+                store.rmtree(path)
+                if name.startswith("batch="):
+                    victims.append(int(name[len("batch="):]))
+    return sorted(victims)
 
 
 def load_tombstones(index_dir: str) -> list[int]:
     """The index's tombstoned docids (sorted), [] when none."""
     store = vstore.get_store(index_dir)
-    path = os.path.join(index_dir, "_manifests", TOMBSTONES_FILE)
-    if not store.exists(path):
-        return []
-    return sorted(int(d) for d in store.read_json(path).get("docids", []))
+    return _tombstone_ids(store, index_dir, load_snapshot(index_dir, store))
 
 
 @_locked("delete", dir_arg=1)
 def delete_docs(spark: SparkSession, index_dir: str,
                 urls=None, docids=None) -> int:
-    """LSM-style document deletion: record the docids as TOMBSTONES in
-    ``_manifests/tombstones.json`` (atomic rewrite under the writer lock).
+    """LSM-style document deletion: commit the docids as TOMBSTONES — a
+    new immutable ``_manifests/tombstones-<n>.json`` holding the whole
+    set, named by the next snapshot (later appends carry its path, never
+    a copy of the set).
 
     Semantics (exactly Lucene's deleted-docs model):
     - queries mask tombstoned docs BEFORE scoring and k-capping (exact —
@@ -1446,42 +1300,38 @@ def delete_docs(spark: SparkSession, index_dir: str,
       (docmap rows dropped pre-remap, postings dropped by the remap join)
       and clears the tombstone set;
     - ``merge_appends`` is unaffected (file layout only — docids stable).
-    An update is delete + append (the reference's Put always appends a
-    NEW doc even for a repeated url — entities_doc.go:12-14 identity is
-    the url STRING; tombstoning the old docid gives replace semantics).
+    An update is delete + append (``update_docs`` commits both at once;
+    the reference's Put always appends a NEW doc even for a repeated url —
+    entities_doc.go:12-14 identity is the url STRING; tombstoning the old
+    docid gives replace semantics).
 
-    ``urls`` resolve against the VISIBLE docmap; unknown urls delete
-    nothing. Returns the number of newly tombstoned docids (idempotent:
-    re-deleting is 0). Scale note: the tombstone set ships to query
-    kernels with the task closure — keep it modest (<~1M) and compact to
-    reclaim; the upgrade path is a per-batch roaring-bitmap sidecar
-    behind this same file."""
+    ``urls`` resolve against the current snapshot's docmap; unknown urls
+    delete nothing. Returns the number of newly tombstoned docids
+    (idempotent: re-deleting is 0 and commits nothing). Scale note: the
+    tombstone set ships to query kernels with the task closure — keep it
+    modest (<~1M) and compact to reclaim."""
     if (urls is None) == (docids is None):
         raise ValueError("pass exactly one of urls= or docids=")
     store = vstore.get_store(index_dir, spark)
-    manifest_dir = os.path.join(index_dir, "_manifests")
+    base = _require(index_dir, store)
     if docids is None:
         urls = list(urls)
         if not urls:
             return 0
-        vis = [m["batch"] for m in _visible_batches(index_dir)]
-        data_root = os.path.join(index_dir, "data")
-        data = spark.read.option("basePath", data_root).parquet(data_root)
         rows = (
-            data.filter(F.col("kind") == "d")
-            .filter(F.col("batch").isin(vis))
+            _read_batches(spark, index_dir, base["batches"])
+            .filter(F.col("kind") == "d")
             .filter(F.col("url").isin(urls))
             .select("docid").collect()
         )
         docids = [r["docid"] for r in rows]
-    path = os.path.join(manifest_dir, TOMBSTONES_FILE)
-    cur: set[int] = set()
-    if store.exists(path):
-        cur = set(store.read_json(path).get("docids", []))
+    cur = set(_tombstone_ids(store, index_dir, base))
     new = {int(d) for d in docids} - cur
     if new:
-        store.write_json_atomic(
-            path, {"docids": sorted(cur | new)})
+        n = base["id"] + 1
+        _commit(store, index_dir, _next(
+            base, tombstones=_write_tombstones(store, index_dir, n,
+                                               cur | new)), base)
     return len(new)
 
 
@@ -1507,112 +1357,28 @@ def _deletion_variants(term_col, max_edits: int):
     return F.array_distinct(out)
 
 
-def _fuzzydict_rebuild(spark: SparkSession, store, root: str,
-                       num_files: int, max_edits: int, covers) -> None:
-    """(Re)build the sidecar under ``root`` from ``root``'s termdict —
-    atomic tmp+swap, manifest-gated (the manifest is REMOVED before any
-    directory mutation and re-written only after the swap completes; on
-    object stores rename is copy+delete, so readers in the window fail
-    the freshness check and take the always-correct scan fallback).
-    Shared by the public ``build_fuzzydict`` and the maintenance ops'
-    lifecycle hooks (which already hold the writer lock)."""
-    td_path = os.path.join(root, "termdict")
-    terms = spark.read.parquet(td_path).select("term")
-    rows = terms.select(
-        F.explode(_deletion_variants(F.col("term"), max_edits))
-        .alias("variant"),
-        "term",
-    )
-    tmp = os.path.join(root, "_fuzzydict_tmp")
-    store.rmtree(tmp)
-    (
-        rows.repartitionByRange(num_files, "variant")
-        .sortWithinPartitions("variant", "term")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(1 << 20))
-        .parquet(tmp)
-    )
-    final = os.path.join(root, "fuzzydict")
-    man_path = os.path.join(root, "_manifests", "fuzzydict.json")
-    with contextlib.suppress(FileNotFoundError):
-        store.remove(man_path)
-    store.rmtree(final)
-    store.rename(tmp, final)
-    _write_manifest(man_path, kind="fuzzydict", covers_md5=covers,
-                    max_edits=max_edits, num_files=num_files)
-
-
-def _fuzzydict_extend(spark: SparkSession, store, index_dir: str,
-                      batch_path: str, pre_key: str, post_key: str) -> None:
-    """Keep a FRESH sidecar fresh across an append by delta-extending it
-    with the new batch's (distinct) terms' deletion variants — O(batch
-    vocabulary) work, not O(total vocabulary). Rows for terms the sidecar
-    already covers are harmless duplicates (readers dedup candidates);
-    the next merge/compact rebuilds the sidecar and squashes them. A
-    sidecar that is absent, or already stale w.r.t. the pre-append batch
-    set, is left alone (the merge/compact hooks rebuild it). Manifest-
-    gated like the rebuild: a crash mid-extend leaves no manifest, which
-    reads as stale — never as wrong candidates."""
-    man_path = os.path.join(index_dir, "_manifests", "fuzzydict.json")
-    if not store.exists(man_path):
-        return
-    man = store.read_json(man_path)
-    if man.get("covers_md5") != pre_key:
-        return  # already stale — nothing to keep fresh
-    fd_dir = os.path.join(index_dir, "fuzzydict")
-    if not store.isdir(fd_dir):
-        return
-    max_edits = int(man.get("max_edits", 1))
-    with contextlib.suppress(FileNotFoundError):
-        store.remove(man_path)
-    terms = (
-        spark.read.parquet(batch_path)
-        .filter(F.col("kind") == "s")
-        .select("term").distinct()
-    )
+def _fuzzy_files(spark: SparkSession, store, root: str, n: int,
+                 terms: DataFrame, max_edits: int, n_files: int
+                 ) -> list[str]:
+    """Write the (variant, term) rows of ``terms`` to ``fuzzydict/<n>/`` —
+    a path only snapshot ``n`` will name — variant-range partitioned and
+    variant-sorted; return its parquet files, root-relative."""
+    rel = f"fuzzydict/{n}"
+    path = vstore.join(root, rel)
     (
         terms.select(
             F.explode(_deletion_variants(F.col("term"), max_edits))
             .alias("variant"),
             "term",
         )
-        .coalesce(1)
+        .repartitionByRange(n_files, "variant")
         .sortWithinPartitions("variant", "term")
-        .write.mode("append")
+        .write.mode("overwrite")
         .option("parquet.block.size", str(1 << 20))
-        .parquet(fd_dir)
+        .parquet(path)
     )
-    _write_manifest(man_path, kind="fuzzydict", covers_md5=post_key,
-                    max_edits=max_edits,
-                    num_files=int(man.get("num_files", 4)), mode="delta")
-
-
-def _fuzzydict_refresh_if_stale(spark: SparkSession, store,
-                                index_dir: str) -> None:
-    """Post-merge/compact hook: if a sidecar EXISTS but no longer matches
-    the live termdict covers key, rebuild it from the (fresh) termdict
-    under the caller's writer lock — the lifecycle integration that keeps
-    ``expand_fuzzy``/``suggest`` on the O(keys) SymSpell path across
-    maintenance instead of demoting to the O(vocabulary) scan. No-ops
-    when no sidecar was ever built, or when it is already fresh (the
-    cheap re-point paths)."""
-    fd_dir = os.path.join(index_dir, "fuzzydict")
-    man_path = os.path.join(index_dir, "_manifests", "fuzzydict.json")
-    had_dir = store.isdir(fd_dir)
-    had_man = store.exists(man_path)
-    if not (had_dir or had_man):
-        return
-    td_man = os.path.join(index_dir, "_manifests", "termdict.json")
-    if not store.exists(td_man):
-        return  # no provably-fresh vocabulary to rebuild from
-    covers = store.read_json(td_man).get("covers_md5")
-    man = store.read_json(man_path) if had_man else {}
-    if had_dir and man.get("covers_md5") == covers:
-        return  # fresh already
-    _fuzzydict_rebuild(spark, store, index_dir,
-                       num_files=int(man.get("num_files", 4)),
-                       max_edits=int(man.get("max_edits", 1)),
-                       covers=covers)
+    return [f"{rel}/{f}" for f in store.listdir(path)
+            if f.endswith(".parquet")]
 
 
 @_locked("fuzzydict", dir_arg=1)
@@ -1631,34 +1397,34 @@ def build_fuzzydict(spark: SparkSession, index_dir: str,
     2-deletion one; extra candidates die at the exact verify) at
     O(len^2) variants per term.
 
-    Lifecycle: the sidecar records the termdict manifest's covers key;
-    ``expand_fuzzy`` uses it ONLY while that key still matches the live
-    termdict and silently falls back to the always-correct vocab scan
-    otherwise. The maintenance ops keep it fresh automatically —
-    ``append_index`` delta-extends it with the batch's terms,
-    ``merge_appends`` re-points (vocabulary unchanged) or rebuilds, and
-    ``compact_index`` rebuilds it in the staged layout (the vocabulary
-    can SHRINK there: tombstone purge drops fully-deleted terms) — so
-    one explicit build keeps the O(keys) path live for the index's
-    lifetime. Returns the variant row count."""
+    Lifecycle: the snapshot names the sidecar's file list, so it is fresh
+    by construction. The maintenance ops keep it so — ``append_index``
+    adds a file of the batch's terms' variants in its own commit,
+    ``merge_appends`` keeps it (vocabulary unchanged), and
+    ``compact_index`` rebuilds it (the vocabulary can SHRINK there:
+    tombstone purge drops fully-deleted terms) — so one explicit build
+    keeps the O(keys) path live for the index's lifetime. Returns the
+    variant row count."""
     import visigoth_spark
 
     visigoth_spark.ensure_shipped(spark)
     if max_edits not in (1, 2):
         raise ValueError("max_edits must be 1 or 2")
     store = vstore.get_store(index_dir, spark)
-    td_path = os.path.join(index_dir, "termdict")
-    if not store.isdir(td_path):
-        raise ValueError("index has no termdict — build the index first")
-    td_man = os.path.join(index_dir, "_manifests", "termdict.json")
-    covers = (store.read_json(td_man).get("covers_md5")
-              if store.exists(td_man) else None)
-    _fuzzydict_rebuild(spark, store, index_dir, num_files, max_edits,
-                       covers)
+    base = _require(index_dir, store)
+    n = base["id"] + 1
+    terms = spark.read.parquet(
+        vstore.join(index_dir, base["termdict"])).select("term")
+    files = _fuzzy_files(spark, store, index_dir, n, terms, max_edits,
+                         num_files)
+    _commit(store, index_dir, _next(base, fuzzydict={
+        "files": files, "max_edits": max_edits, "num_files": num_files}),
+        base)
     return spark.read.parquet(
-        os.path.join(index_dir, "fuzzydict")).count()
+        *[vstore.join(index_dir, f) for f in files]).count()
 
 
+@_locked("update", dir_arg=1)
 def update_docs(spark: SparkSession, index_dir: str, corpus: DataFrame,
                 analyzer: AnalyzerConfig = DEFAULT_ANALYZER,
                 num_partitions: int | None = None,
@@ -1666,14 +1432,11 @@ def update_docs(spark: SparkSession, index_dir: str, corpus: DataFrame,
                 tombstone_max: int = 2_000_000,
                 **append_kwargs) -> int:
     """Replace-by-url: tombstone the index's CURRENT docs for ``corpus``'s
-    urls (``delete_docs``), then append ``corpus`` as new docs
-    (``append_index``) — the engine-level update primitive. Returns how
-    many urls existed before (were replaced); the rest are plain inserts.
-
-    Two sequential writer-locked ops, not one transaction: a crash between
-    them leaves the urls tombstoned but not yet re-added — retrying the
-    SAME update converges only if the append hadn't committed (use the
-    streaming path's pinned-epoch idempotence for exactly-once pipelines).
+    urls and append ``corpus`` as new docs — the engine-level update
+    primitive, ONE commit: the tombstones and the appended batch become
+    visible in the same snapshot, so a crash leaves either the old docs or
+    the new ones, never neither. Returns how many urls existed before
+    (were replaced); the rest are plain inserts.
 
     Scale guard: batches of up to ``driver_url_max`` distinct urls take
     the point path (url IN-list pruned docmap scan). Bigger batches
@@ -1689,15 +1452,12 @@ def update_docs(spark: SparkSession, index_dir: str, corpus: DataFrame,
     # "replaced" accounting url-unique by construction
     urls_df = corpus.select("url").distinct()
     n_urls = urls_df.count()
-    replaced = 0
-    if n_urls:
-        vis = [m["batch"] for m in _visible_batches(index_dir)]
-        data_root = os.path.join(index_dir, "data")
-        docmap = (
-            spark.read.option("basePath", data_root).parquet(data_root)
-            .filter(F.col("kind") == "d")
-            .filter(F.col("batch").isin(vis))
-        )
+    store = vstore.get_store(index_dir, spark)
+    base = load_snapshot(index_dir, store)
+    replaced, commit = 0, None
+    if n_urls and base is not None and base["stats"] is not None:
+        docmap = (_read_batches(spark, index_dir, base["batches"])
+                  .filter(F.col("kind") == "d"))
         if n_urls <= driver_url_max:
             # point path: IN-list filter prunes docmap files/row-groups
             urls = [r["url"] for r in urls_df.collect()]
@@ -1718,17 +1478,19 @@ def update_docs(spark: SparkSession, index_dir: str, corpus: DataFrame,
                     "compact_index between them."
                 )
             rows = matched.collect()
-        live = set(load_tombstones(index_dir))
+        live = set(_tombstone_ids(store, index_dir, base))
         found = [(r["url"], int(r["docid"])) for r in rows
                  if int(r["docid"]) not in live]
         # replaced = DISTINCT urls currently visible (a url ingested twice
         # counts once; an already-tombstoned url counts zero — it no
-        # longer "exists"); the delete itself tombstones by docid set
+        # longer "exists"); the tombstones themselves are by docid
         replaced = len({u for u, _ in found})
         if found:
-            delete_docs(spark, index_dir, docids=[d for _, d in found])
-    append_index(spark, corpus, index_dir, analyzer=analyzer,
-                 num_partitions=num_partitions, **append_kwargs)
+            commit = {"tombstones": _write_tombstones(
+                store, index_dir, base["id"] + 1,
+                live | {d for _, d in found})}
+    _append(spark, corpus, index_dir, analyzer=analyzer,
+            num_partitions=num_partitions, commit=commit, **append_kwargs)
     return replaced
 
 
@@ -1774,9 +1536,8 @@ def compact_index(
         --join map on docid_old (broadcast when small, SMJ at scale)-->
         --groupBy(bucket, docid_new // flush_docs) applyInPandas-->
           re-encoded segment rows  --repartitionByRange(term)--> write
-      termdict rebuilt; stats/manifests rewritten; for in-place compaction
-      the staged index swaps in via directory renames, with the previous
-      index preserved at ``_pre_compact`` until the swap completes.
+      a new termdict version (and fuzzydict, when the index has one);
+      ONE snapshot commits the compacted batch in place of every batch.
 
     Invariants preserved (asserted by tests/test_compact.py): the multiset
     of per-term (url, tf, doclen) postings, n_docs, total_tokens,
@@ -1787,38 +1548,38 @@ def compact_index(
     build).
 
     ``dest``: write the compacted index to a NEW directory, leaving
-    ``index_dir`` untouched (the safe cluster mode — repoint an alias after,
-    catalog.py). ``dest=None`` compacts in place: stage under
-    ``index_dir/_compact_tmp``, then swap via renames. The swap is a
-    single-writer maintenance window; a crash mid-swap leaves both halves on
-    disk (``_pre_compact`` + staged pieces) for manual recovery, and a stale
-    ``_compact_tmp`` from a crashed run is cleared on the next call.
+    ``index_dir`` untouched (repoint an alias after, catalog.py).
+    ``dest=None`` compacts in place, with the same commit rule as every
+    other op: the compacted batch gets a new batch id, its termdict a new
+    version, the next snapshot names them instead of the old generation,
+    and the old generation is deleted after that commit. Readers see the
+    old index or the new one at every step — no rename is involved, so the
+    same holds on object stores. The docid-map staging dir
+    (``_compact_tmp``) is deleted before the commit; a stale one from a
+    crashed run is cleared on the next call.
     """
     import visigoth_spark
 
     visigoth_spark.ensure_shipped(spark)
     t0 = time.time()
     store = vstore.get_store(index_dir, spark)
-    _recover_pre_compact(store, index_dir)
-    stats = load_stats(index_dir)
-    in_place = dest is None
-    stage = os.path.join(index_dir, "_compact_tmp") if in_place else dest
+    base = _require(index_dir, store)
+    stats = base["stats"]
     # dest may live on a DIFFERENT store than the source index (e.g.
-    # compact a POSIX index into s3a://); the swap path is in-place only,
-    # so src/dst stores never mix inside a rename
-    stage_store = store if in_place else vstore.get_store(stage, spark)
-    if in_place and store.exists(stage):
-        store.rmtree(stage)  # stale staging from a crashed prior run
-    stage_store.makedirs(stage)
+    # compact a POSIX index into s3a://)
+    root = index_dir if dest is None else dest
+    root_store = store if dest is None else vstore.get_store(dest, spark)
+    root_store.makedirs(vstore.join(root, "_manifests"))
+    prev = base if dest is None else load_snapshot(dest, root_store)
+    sid = _next(prev)["id"]
+    new_batch = 1 + max((b["batch"] for b in prev["batches"]), default=-1) \
+        if prev else 0
+    stage = vstore.join(root, "_compact_tmp")
+    root_store.rmtree(stage)  # stale staging from a crashed prior run
 
-    old_root = os.path.join(index_dir, "data")
-    data = spark.read.option("basePath", old_root).parquet(old_root)
-    # fold ONLY visible batches: a crashed append leaves an orphan batch
-    # dir (invisible to queries — SearchIndex plans from the manifests) and
-    # a crashed merge_appends can leave a replaced batch's manifest behind
-    # — folding either would make uncommitted/duplicate ingest permanent
-    committed = [m["batch"] for m in _visible_batches(index_dir)]
-    data = data.filter(F.col("batch").isin(committed))
+    # fold ONLY the snapshot's batches: orphan dirs of crashed ops are
+    # not part of the index
+    data = _read_batches(spark, index_dir, base["batches"])
     has_raw = bool(stats.get("store_raw")) and "raw" in data.columns
     has_pos = (bool(stats.get("store_positions"))
                and "pos_blob" in data.columns)
@@ -1831,7 +1592,7 @@ def compact_index(
     # data, so n_docs/df/avgdl stop counting them — the Lucene merge
     # semantics — and the tombstone set is NOT carried to the new
     # generation (old docids would alias remapped ones).
-    tombs = load_tombstones(index_dir)
+    tombs = _tombstone_ids(store, index_dir, base)
     if tombs:
         tdf = spark.createDataFrame([(int(t),) for t in tombs],
                                     "docid long")
@@ -1886,7 +1647,7 @@ def compact_index(
         # stage the docid map as parquet: the range shuffle samples
         # boundaries nondeterministically, so the TWO downstream consumers
         # (docmap write, postings join) must read ONE pinned materialization
-        map_path = os.path.join(stage, "map")
+        map_path = vstore.join(stage, "map")
         src.mapInPandas(
             remap_gen,
             "docid_old long, docid long, bucket int, url string, "
@@ -1897,7 +1658,7 @@ def compact_index(
     map_df = spark.read.parquet(map_path)
 
     # ---- new docmap (kind=d), docid-sorted files, 4 MB row groups ----------
-    batch_path = os.path.join(stage, "data", "batch=0")
+    batch_path = vstore.join(root, "data", f"batch={new_batch}")
     n = F.lit
     docmap_new = map_df.repartitionByRange(
         P, "docid"
@@ -2006,202 +1767,34 @@ def compact_index(
         .parquet(batch_path)
     )
 
-    # ---- termdict + manifests + stats --------------------------------------
-    new_root = os.path.join(stage, "data")
-    seg_meta = _seg_meta(spark, batch_path)
-    td_path = os.path.join(stage, "termdict")
-    seg_all = (
-        spark.read.option("basePath", new_root).parquet(new_root)
-        .filter(F.col("kind") == "s")
-    )
-    n_td = max(1, min(32, P // 4))
-    (
-        seg_all.groupBy("term")
-        .agg(F.sum("df_seg").alias("df"), F.sum("sum_tf").alias("sum_tf"))
-        .repartitionByRange(n_td, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(1 << 20))
-        .parquet(td_path)
-    )
-
-    manifest_dir = os.path.join(stage, "_manifests")
-    stage_store.makedirs(manifest_dir)
-    # termdict completeness marker (matches build_index/append_index):
-    # without it, a later resumed build's completeness check would rebuild
-    # the termdict unnecessarily. The compacted layout is one batch 0.
-    _write_manifest(os.path.join(manifest_dir, "termdict.json"),
-                    kind="termdict", covers_md5=_covers_key([0]),
-                    covers_n=1, wall_sec=time.time() - t0)
+    # ---- termdict + fuzzydict + the commit ---------------------------------
     pids = sorted(offsets)
     part_sizes = [offsets[p + 1] - offsets[p] for p in pids[:-1]]
     part_sizes.append(n_docs - offsets[pids[-1]])
-    wall = time.time() - t0
-    _write_manifest(
-        os.path.join(manifest_dir, "batch_0.json"),
-        kind="batch", batch=0, compacted=True,
-        compacted_from=stats.get("n_batches", 1),
-        partitions=pids,
-        docid_range=[0, n_docs],
-        n_docs=n_docs,
-        bucket_width=max(part_sizes),
-        n_segments=int(seg_meta["n_segments"] or 0),
-        n_postings=int(seg_meta["n_postings"] or 0),
-        total_tokens=int(seg_meta["total_tokens"] or 0),
-        bytes_blob=int(seg_meta["bytes_blob"] or 0),
-        wall_sec=wall,
-    )
-    # file-level range manifests: compacted segment files are term-range
-    # partitioned (disjoint ranges), so recording each file's
-    # (term_min, term_max) lets SearchIndex enumerate ~1 file per query
-    # term instead of scheduling a split per segment file (query.py
-    # _seg_scan); likewise docmap files are docid-partitioned, so the
-    # docid ranges let hydration open ~1 file per result id (query.py
-    # _docmap_for). The stage root becomes the index root after the swap.
-    _write_segfiles_manifest(stage, manifest_dir,
-                             [os.path.join(batch_path, "kind=s")])
-    _write_docfiles_manifest(stage, manifest_dir,
-                             [os.path.join(batch_path, "kind=d")])
-    # carry over non-batch manifest state — e.g. the streaming epoch ledger
-    # (stream_epochs.json): losing it across the swap would make a restarted
-    # stream re-ingest its replayed epochs as duplicates
-    old_manifest_dir = os.path.join(index_dir, "_manifests")
-    for fname in store.listdir(old_manifest_dir):
-        if fname.startswith("batch_") or ".tmp" in fname or (
-            # termdict/segfiles/docfiles: regenerated above for the staged
-            # layout. ".tmp" also matches HadoopStore's ".tmp-<uuid>"
-            # write_atomic debris a crash can leave — carrying it over
-            # would immortalize it in every compacted index.
-            # tombstones: PURGED physically above — carrying the old
-            # docids over would mask freshly-remapped docs that reuse them.
-            # fuzzydict: regenerated below when a sidecar exists (the
-            # vocabulary can SHRINK across a compaction — tombstone purge
-            # drops fully-deleted terms — so a re-point is not enough).
-            fname in ("termdict.json", "segfiles.json", "docfiles.json",
-                      "fuzzydict.json", TOMBSTONES_FILE)
-        ):
-            continue
-        stage_store.write_atomic(
-            os.path.join(manifest_dir, fname),
-            store.read_bytes(os.path.join(old_manifest_dir, fname)),
-        )
-    # fuzzydict lifecycle: an index that had a sidecar gets a fresh one in
-    # the staged layout, rebuilt from the staged termdict with the old
-    # sidecar's settings (writer lock already held by this op)
-    old_fd_man = os.path.join(old_manifest_dir, "fuzzydict.json")
-    had_fuzzydict = (store.exists(old_fd_man)
-                     or store.isdir(os.path.join(index_dir, "fuzzydict")))
-    if had_fuzzydict:
-        fd_prev = (store.read_json(old_fd_man)
-                   if store.exists(old_fd_man) else {})
-        _fuzzydict_rebuild(spark, stage_store, stage,
-                           num_files=int(fd_prev.get("num_files", 4)),
-                           max_edits=int(fd_prev.get("max_edits", 1)),
-                           covers=_covers_key([0]))
-    new_stats = dict(stats)
-    new_stats.update(
-        n_docs=n_docs,
-        total_tokens=int(seg_meta["total_tokens"] or 0),
-        avgdl=int(seg_meta["total_tokens"] or 0) / n_docs,
-        n_postings=int(seg_meta["n_postings"] or 0),
-        n_segments=int(seg_meta["n_segments"] or 0),
-        bytes_blob=int(seg_meta["bytes_blob"] or 0),
-        bucket_width=max(part_sizes),
-        n_buckets=P,
-        n_batches=1,
-        store_raw=has_raw,
-        compacted_at_sec=time.time(),
-        built_at_sec=time.time(),
-        wall_sec=wall,
-    )
-    stage_store.write_json_atomic(
-        os.path.join(stage, "stats.json"), new_stats)
-    stage_store.rmtree(map_path)  # staging artifact, not part of the index
-
-    if in_place:
-        # swap: previous index parked at _pre_compact until the new one is
-        # fully in place, then deleted. Single-writer maintenance window.
-        # On rename-atomic filesystems each piece moves atomically; on
-        # object stores rename is a copy — prefer dest= + alias repoint
-        # (catalog.py) there, which this swap path never requires.
-        pre = os.path.join(index_dir, "_pre_compact")
-        if store.exists(pre):
-            store.rmtree(pre)
-        store.makedirs(pre)
-        # fuzzydict is an OPTIONAL piece: swapped when (re)built above,
-        # tolerated absent on either side (e.g. first compaction of an
-        # index whose sidecar dir was manually removed)
-        pieces = _COMPACT_PIECES + (("fuzzydict",) if had_fuzzydict
-                                    else ())
-        for name in pieces:
-            old_piece = os.path.join(index_dir, name)
-            if store.exists(old_piece):
-                store.rename(old_piece, os.path.join(pre, name))
-        for name in pieces:
-            staged_piece = os.path.join(stage, name)
-            if store.exists(staged_piece):
-                store.rename(staged_piece,
-                             os.path.join(index_dir, name))
-        store.rmtree(pre)
-        store.rmtree(stage)
-
-    return BuildMetrics(
-        n_docs=n_docs,
-        n_postings=int(seg_meta["n_postings"] or 0),
-        n_segments=int(seg_meta["n_segments"] or 0),
-        bytes_blob=int(seg_meta["bytes_blob"] or 0),
-        total_tokens=int(seg_meta["total_tokens"] or 0),
-        wall_sec=time.time() - t0,
-    )
-
-
-_COMPACT_PIECES = ("data", "termdict", "_manifests", "stats.json")
-
-
-def _recover_pre_compact(store, index_dir: str) -> None:
-    """Auto-recover from a crash inside a previous in-place compaction
-    swap. The swap parks the old index at ``_pre_compact`` piece by piece,
-    then moves the staged pieces in; a crash anywhere in between leaves
-    the index root incomplete (or mixed-generation) while ``_pre_compact``
-    still holds every not-yet-overwritten old piece. Recovery restores the
-    PRE-compaction index exactly: every piece present under
-    ``_pre_compact`` replaces its root counterpart (pieces the crash never
-    moved are already the same generation; staged new-generation pieces
-    that made it to the root are discarded — they derive from the old
-    index and the re-run compaction rebuilds them).
-
-    Restore ONLY when the swap is provably incomplete. Both swap phases
-    remove pieces from the root before putting their replacements back
-    (phase 1 parks root pieces under ``_pre_compact`` one rename at a
-    time; phase 2 moves staged pieces in one rename at a time), so a
-    crash anywhere inside the swap leaves the root missing at least one
-    of ``_COMPACT_PIECES``. Conversely, a root with all pieces present
-    means the swap FINISHED and only the final ``rmtree(_pre_compact)``
-    was lost — then ``_pre_compact`` is a completed swap's leftover and
-    is deleted, never restored: batches appended between that crash and
-    this call live only in the new generation's ``data``/``_manifests``,
-    and restoring the old generation over them would silently destroy
-    committed ingest. No-op when ``_pre_compact`` is absent."""
-    pre = vstore.join(index_dir, "_pre_compact")
-    if not store.exists(pre):
-        return
-    if all(store.exists(vstore.join(index_dir, name))
-           for name in _COMPACT_PIECES):
-        # completed swap's leftover (crash after phase 2, before cleanup):
-        # the root is the live new generation — possibly with appends on
-        # top — so just finish the interrupted cleanup
-        store.rmtree(pre)
-        store.rmtree(vstore.join(index_dir, "_compact_tmp"))
-        return
-    for name in _COMPACT_PIECES + ("fuzzydict",):  # fuzzydict: optional
-        src = vstore.join(pre, name)
-        if store.exists(src):
-            dst = vstore.join(index_dir, name)
-            if store.exists(dst):
-                store.rmtree(dst)
-            store.rename(src, dst)
-    store.rmtree(pre)
-    store.rmtree(vstore.join(index_dir, "_compact_tmp"))
+    entry = _batch_entry(
+        spark, root, new_batch, compacted=True,
+        compacted_from=stats["n_batches"], partitions=pids, buckets=pids,
+        docid_range=[0, n_docs], n_docs=n_docs,
+        bucket_width=max(part_sizes), wall_sec=time.time() - t0)
+    td = f"termdict/{sid}"
+    _write_termdict(_term_rows(spark, root, [entry]),
+                    vstore.join(root, td), P)
+    fd = base["fuzzydict"]
+    if fd:
+        # the vocabulary can SHRINK here (tombstone purge drops
+        # fully-deleted terms): rebuild the sidecar from the new termdict
+        fd = dict(fd, files=_fuzzy_files(
+            spark, root_store, root, sid,
+            spark.read.parquet(vstore.join(root, td)).select("term"),
+            fd["max_edits"], fd["num_files"]))
+    root_store.rmtree(stage)  # staging artifact, not part of the index
+    now = time.time()
+    _commit(root_store, root, _next(
+        prev, batches=[entry], termdict=td, fuzzydict=fd, tombstones=None,
+        last_epoch=base["last_epoch"],
+        stats=dict(stats, store_raw=has_raw, compacted_at_sec=now,
+                   built_at_sec=now, wall_sec=now - t0)), prev)
+    return _metrics(entry, n_docs, t0)
 
 
 def _sweep_file_ranges(root: str, dirs: list[str],
@@ -2210,8 +1803,7 @@ def _sweep_file_ranges(root: str, dirs: list[str],
     driver-side metadata sweep, no row reads. Parquet stats truncation is
     conservative (min rounds down, max rounds up), so pruning on these
     bounds can only over-include, never miss a file. Paths are stored
-    relative to ``root`` (the directory that will be the index root when
-    the manifest is read). A ``dirs`` entry that does not exist (e.g. a
+    relative to ``root``, the index root. A ``dirs`` entry that does not exist (e.g. a
     batch whose docs all analyzed to zero tokens writes no kind=s dir) is
     skipped. A file with absent stats gets null bounds — planners must
     always include it."""
@@ -2255,70 +1847,3 @@ def _sweep_file_ranges(root: str, dirs: list[str],
                 f"{key}_max": max(maxs) if maxs else None,
             })
     return entries
-
-
-def _extend_file_manifests(store, out_dir: str, manifest_dir: str,
-                           batch_id: int, batch_path: str) -> None:
-    """Extend segfiles/docfiles with ONE batch's file ranges (replacing any
-    stale entries under the same batch path — a replayed append rewrites
-    the dir with fresh file names). No-op when a manifest is absent (the
-    build layout never writes one; the first merge/compact creates it and
-    appends maintain it from then on)."""
-    specs = (("segfiles.json", "term", "term", "kind=s"),
-             ("docfiles.json", "docid", "docid", "kind=d"))
-    prefix = f"data/batch={batch_id}/"
-    for mf, column, key, sub in specs:
-        mp = os.path.join(manifest_dir, mf)
-        if not store.exists(mp):
-            continue
-        kept = [e for e in store.read_json(mp)["files"]
-                if not e["path"].startswith(prefix)]
-        new = _sweep_file_ranges(out_dir,
-                                 [os.path.join(batch_path, sub)],
-                                 column, key)
-        _write_manifest(mp, files=kept + new)
-
-
-def _write_segfiles_manifest(root: str, manifest_dir: str,
-                             seg_dirs: list[str]) -> None:
-    """``_manifests/segfiles.json``: per-segment-file term ranges so the
-    query planner (query.py::_seg_scan) enumerates only the files whose
-    range covers a query term."""
-    _write_manifest(
-        os.path.join(manifest_dir, "segfiles.json"),
-        files=_sweep_file_ranges(root, seg_dirs, "term", "term"),
-    )
-
-
-def _write_docfiles_manifest(root: str, manifest_dir: str,
-                             doc_dirs: list[str]) -> None:
-    """``_manifests/docfiles.json``: per-docmap-file docid ranges so
-    result hydration (query.py::_docmap_for) opens only the files covering
-    the k result ids instead of sweeping every docmap footer. Docmap files
-    are docid-sorted both in the build layout (docids assigned in
-    partition order) and after merge/compact rewrites, so ranges are tight
-    and ~disjoint."""
-    _write_manifest(
-        os.path.join(manifest_dir, "docfiles.json"),
-        files=_sweep_file_ranges(root, doc_dirs, "docid", "docid"),
-    )
-
-
-def _write_manifest(path: str, **kv) -> None:
-    # atomic commit: a manifest is either absent or complete (POSIX rename
-    # locally; per-scheme commit semantics in storage.py)
-    vstore.get_store(path).write_json_atomic(path, kv)
-
-
-def _is_complete(manifest_path: str, data_path: str) -> bool:
-    store = vstore.get_store(manifest_path)
-    return (
-        store.exists(manifest_path)
-        and store.exists(vstore.join(data_path, "_SUCCESS"))
-    )
-
-
-def load_stats(index_dir: str) -> dict:
-    return vstore.get_store(index_dir).read_json(
-        vstore.join(index_dir, "stats.json")
-    )

@@ -28,6 +28,18 @@ from visigoth_spark import pipeline as P
 
 # shared SQL fragments -------------------------------------------------------
 
+# prefix of the /tmp index-cache keys: bumped when the on-disk index layout
+# changes, so an index cached by older code is rebuilt instead of opened
+_CACHE_LAYOUT = "snapshot-v1:"
+
+
+def _cache_key(tag: str, sf_dir: str) -> str:
+    import hashlib
+
+    key = (_CACHE_LAYOUT + tag + sf_dir).encode()
+    return hashlib.md5(key).hexdigest()[:10]
+
+
 SQL_TOKENS = """
 toks AS (
     SELECT doc_id, t FROM (
@@ -378,21 +390,19 @@ def q_bm25_stemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from visigoth_spark.analysis import AnalyzerConfig
-    from visigoth_spark.build import build_index
+    from visigoth_spark.build import build_index, index_exists
     from visigoth_spark.query import SearchIndex
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
     docs = _docs(spark, sf_dir).select(
         F.format_string("doc-%012d", F.col("doc_id")).alias("url"), "text"
     )
-    # one cached index per sf_dir (stats.json is written last, so its
-    # presence marks a complete build) — repeated harness runs reuse it
-    # instead of accumulating temp dirs
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    # one cached index per sf_dir (it is openable once its build has
+    # committed) — repeated harness runs reuse it instead of accumulating
+    # temp dirs
+    key = _cache_key("", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_stem_harness", key, "idx")
-    if not os.path.exists(os.path.join(out, "stats.json")):
+    if not index_exists(out):
         build_index(spark, docs, out, analyzer=analyzer, num_partitions=4)
     idx = SearchIndex(spark, out, analyzer=analyzer)
     res = idx.search("tables data", engine="bm25", k=10)
@@ -412,7 +422,6 @@ def q_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vg_bm25_stemmed`` must then hash-match the same DuckDB oracle — the
     oracle is ingest-path-invariant, so a match pins decode → docid remap →
     re-encode end-to-end against an independent engine."""
-    import hashlib
     import os
     import tempfile
 
@@ -422,10 +431,10 @@ def q_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
     # "v3:" = compacted-layout version, bumped when compact_index's output
-    # changes (v2 segfiles.json term-range manifest; v3 docfiles.json
-    # hydration manifest) so a cached pre-upgrade index doesn't silently
-    # skip the new pruned query/hydration paths
-    key = hashlib.md5(("v3:" + sf_dir).encode()).hexdigest()[:10]
+    # changes (v2 per-file term ranges; v3 per-file docid ranges for
+    # hydration) so a cached pre-upgrade index doesn't silently skip the
+    # new pruned query/hydration paths
+    key = _cache_key("v3:", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_compact_harness", key,
                        "idx")
     done = os.path.join(os.path.dirname(out), "COMPACTED")
@@ -460,7 +469,6 @@ def q_bm25_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (no docid remap, no blob re-encode). The same stemmed WAND query
     must hash-match the same ingest-path-invariant DuckDB oracle, pinning
     the merged tier + regenerated file-range manifest end-to-end."""
-    import hashlib
     import os
     import tempfile
 
@@ -470,7 +478,7 @@ def q_bm25_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
     # "v2": merged layout now also writes the docfiles hydration manifest
-    key = hashlib.md5(("v2:" + sf_dir).encode()).hexdigest()[:10]
+    key = _cache_key("v2:", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_merge_harness", key,
                        "idx")
     done = os.path.join(os.path.dirname(out), "MERGED")
@@ -507,21 +515,21 @@ def q_bm25_object_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ``s3a://`` or ``hdfs://`` index would use. A hash match against the
     same ingest-path-invariant DuckDB oracle pins the non-POSIX storage
     code path end-to-end (the POSIX twin is ``vg_bm25_stemmed``)."""
-    import hashlib
     import os
     import tempfile
 
     from visigoth_spark.analysis import AnalyzerConfig
-    from visigoth_spark.build import append_index, build_index
+    from visigoth_spark.build import (append_index, build_index,
+                                      index_exists)
     from visigoth_spark.query import SearchIndex
     from visigoth_spark.storage import get_store
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
-    key = hashlib.md5(("uri-v1:" + sf_dir).encode()).hexdigest()[:10]
+    key = _cache_key("uri-v1:", sf_dir)
     out = "file://" + os.path.join(tempfile.gettempdir(),
                                    "vg_uri_harness", key, "idx")
     store = get_store(out, spark)
-    if not store.exists(out + "/stats.json"):
+    if not index_exists(out):
         docs = _docs(spark, sf_dir).select(
             F.format_string("doc-%012d", F.col("doc_id")).alias("url"),
             "text", (F.col("doc_id") % 2).alias("slice"),
@@ -565,7 +573,6 @@ def q_bm25_tie_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (ORDER BY score DESC, doc_id ASC LIMIT 4 over the same
     extended corpus) therefore pins the tie-extended over-fetch +
     url re-selection end-to-end on an APPENDED index."""
-    import hashlib
     import os
     import shutil
     import tempfile
@@ -575,7 +582,7 @@ def q_bm25_tie_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from visigoth_spark.query import SearchIndex
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
-    key = hashlib.md5(("tie-v1:" + sf_dir).encode()).hexdigest()[:10]
+    key = _cache_key("tie-v1:", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_tie_harness", key, "idx")
     done = os.path.join(os.path.dirname(out), "BUILT")
     if not os.path.exists(done):
@@ -746,21 +753,20 @@ def q_bm25_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each qid's block must hash-match the SAME per-query stemmed
     DuckDB oracle unioned with its qid. Reuses vg_bm25_stemmed's cached
     index (identical build inputs)."""
-    import hashlib
     import os
     import tempfile
 
     from visigoth_spark.analysis import AnalyzerConfig
-    from visigoth_spark.build import build_index
+    from visigoth_spark.build import build_index, index_exists
     from visigoth_spark.query import SearchIndex
 
     analyzer = AnalyzerConfig(stopwords=frozenset({"the", "a"}), stem=True)
     docs = _docs(spark, sf_dir).select(
         F.format_string("doc-%012d", F.col("doc_id")).alias("url"), "text"
     )
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    key = _cache_key("", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_stem_harness", key, "idx")
-    if not os.path.exists(os.path.join(out, "stats.json")):
+    if not index_exists(out):
         build_index(spark, docs, out, analyzer=analyzer, num_partitions=4)
     idx = SearchIndex(spark, out, analyzer=analyzer)
     res = idx.search_many(list(BATCH_QUERIES), engine="bm25", k=10)
@@ -795,18 +801,17 @@ def _plain_pos_index(spark: SparkSession, sf_dir: str):
     """Cached plain-analyzer POSITIONAL index over the documents table —
     the production build path with ``store_positions=True`` (pos_blob
     varbyte streams encoded in the same fused zero-shuffle pass)."""
-    import hashlib
     import os
     import tempfile
 
     from visigoth_spark.analysis import AnalyzerConfig
-    from visigoth_spark.build import build_index
+    from visigoth_spark.build import build_index, index_exists
     from visigoth_spark.query import SearchIndex
 
     analyzer = AnalyzerConfig(stopwords=frozenset(), stem=False)
-    key = hashlib.md5(("plainpos-v1:" + sf_dir).encode()).hexdigest()[:10]
+    key = _cache_key("plainpos-v1:", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_pos_harness", key, "idx")
-    if not os.path.exists(os.path.join(out, "stats.json")):
+    if not index_exists(out):
         docs = _docs(spark, sf_dir).select(
             F.format_string("doc-%012d", F.col("doc_id")).alias("url"),
             "text",
@@ -918,19 +923,18 @@ def q_bm25_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats keep counting them until compaction (the Lucene deleted-docs
     model). The oracle mirrors exactly that: scores from the FULL corpus
     statistics, result set filtered."""
-    import hashlib
     import os
     import tempfile
 
     from visigoth_spark.analysis import AnalyzerConfig
     from visigoth_spark.build import (build_index, delete_docs,
-                                      load_stats)
+                                      index_exists, load_stats)
     from visigoth_spark.query import SearchIndex
 
     analyzer = AnalyzerConfig(stopwords=frozenset(), stem=False)
-    key = hashlib.md5(("del-v1:" + sf_dir).encode()).hexdigest()[:10]
+    key = _cache_key("del-v1:", sf_dir)
     out = os.path.join(tempfile.gettempdir(), "vg_del_harness", key, "idx")
-    if not os.path.exists(os.path.join(out, "stats.json")):
+    if not index_exists(out):
         docs = _docs(spark, sf_dir).select(
             F.format_string("doc-%012d", F.col("doc_id")).alias("url"),
             "text",

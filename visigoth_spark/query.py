@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from visigoth_spark.analysis import (AnalyzerConfig, DEFAULT_ANALYZER,
                                      analyze_text, highlight_spans,
                                      phrase_highlight_spans)
-from visigoth_spark.build import _visible_batches, load_stats
+from visigoth_spark.build import _require
 from visigoth_spark import storage as vstore
 from visigoth_spark.codec import (
     BM25_B,
@@ -121,30 +121,6 @@ class QueryPlan:
     route: str  # "driver" | "spark" | _EMPTY_ROUTE
     slop: int = 0
     after: tuple | None = None
-
-
-def _filter_entries_visible(entries: list[dict],
-                            batches: list[int]) -> list[dict]:
-    """Keep only file-range manifest entries belonging to VISIBLE batches.
-    The manifests are maintained as a SUPERSET of the visible files
-    (append/merge extend them before their commit point — see
-    build._extend_file_manifests), so entries for an orphan batch (crashed
-    append) or a merge-replaced batch can linger; batch visibility decides
-    what the planner may touch. Entries with an unrecognized path shape
-    are kept (can't exclude what can't be attributed). With no batch
-    manifests at all (legacy dir-listing index), entries pass through."""
-    if not batches:
-        return entries
-    vis = {f"data/batch={b}/" for b in batches}
-    out = []
-    for e in entries:
-        p = e["path"]
-        if p.startswith("data/batch="):
-            head = p.split("/", 2)
-            if f"{head[0]}/{head[1]}/" not in vis:
-                continue
-        out.append(e)
-    return out
 
 
 class _RemoteTermdict:
@@ -298,8 +274,8 @@ class SearchIndex:
         self.driver_cache_max_bytes = driver_cache_max_bytes
         # hot-term cache for the driver-local route: decoded (ids, tfs,
         # dls) per term, LRU-bounded by decoded bytes. Snapshot-consistent
-        # by construction — a SearchIndex instance plans from the batch
-        # manifests read at __init__, so cache entries can never mix index
+        # by construction — a SearchIndex instance plans from the snapshot
+        # read at __init__, so cache entries can never mix index
         # generations. ~24 B/posting decoded; the default budget holds
         # ~10M postings, i.e. every term the routing bound would serve
         # driver-side anyway.
@@ -320,37 +296,27 @@ class SearchIndex:
         self._open_snapshot()
 
     def _open_snapshot(self) -> None:
-        """Read the index's committed state (stats, visible batches, scan
-        DataFrames, file-range pruners) — the snapshot this instance
-        serves until :meth:`refresh`."""
+        """Read the index's committed snapshot (one listing plus one read,
+        build.load_snapshot; FileNotFoundError before a build's final
+        commit) and derive what this instance serves until
+        :meth:`refresh`: stats, the visible batches, the scan DataFrames,
+        the file-range pruners, the tombstones and the sidecar paths."""
         spark, index_dir = self.spark, self.index_dir
-        self.stats = load_stats(index_dir)
+        snap = _require(index_dir, self._store)
+        self.stats = snap["stats"]
+        self._manifests = [b for b in snap["batches"] if b["n_docs"]]
+        self._batches = [b["batch"] for b in self._manifests]
         data_root = f"{index_dir}/data"
-        # plan from the batch MANIFESTS, not a directory listing: an orphan
-        # batch dir (crashed append, or a merge that hadn't committed) is
-        # invisible, and a batch replaced by merge_appends stays hidden even
-        # while its dir awaits GC. Falls back to the directory listing for
-        # indexes without manifests.
-        try:
-            self._manifests = _visible_batches(index_dir)
-        except (FileNotFoundError, KeyError):
-            self._manifests = []
-        self._batches = [m["batch"] for m in self._manifests]
-        if self._batches:
-            data = spark.read.option("basePath", data_root).parquet(
-                *[os.path.join(data_root, f"batch={b}")
-                  for b in self._batches]
-            )
-        else:
-            data = spark.read.option("basePath", data_root).parquet(data_root)
+        data = spark.read.option("basePath", data_root).parquet(
+            *[os.path.join(data_root, f"batch={b}") for b in self._batches])
         # kind is a partition directory -> these filters prune whole files
         post_cols = ["term", "bucket", "df_seg", "sum_tf", "min_docid",
                      "max_docid", "blob", "skips"]
         if bool(self.stats.get("store_positions")) and (
             "pos_blob" in data.columns
         ):
-            # keep the positional stream reachable through the cached /
-            # manifest-less scan path too (phrase on .cache()d indexes)
+            # keep the positional stream reachable through the cached
+            # scan path too (phrase on .cache()d indexes)
             post_cols.append("pos_blob")
         self._postings = data.filter(F.col("kind") == "s").select(*post_cols)
         # Doc.Raw sidecar (search_result.go:6-9): present when the index
@@ -362,30 +328,15 @@ class SearchIndex:
             ["raw"] if self.has_raw else []
         )
         self._docmap = data.filter(F.col("kind") == "d").select(*doc_cols)
-        # file-level term-range manifest (created by compact_index /
-        # merge_appends, MAINTAINED by append_index — each append extends
-        # it with just its own batch's file ranges): lets the query plan
-        # enumerate ONLY
-        # the segment files whose term range covers a query term — the
-        # Lucene term-dictionary -> segment-seek analogue at file level.
-        # Catalyst's row-group pruning still evaluates inside a task per
-        # file, so without this a 10^5-file index schedules 10^5 file
-        # splits per query.
-        self._segfiles = None
-        self._docfiles = None
-        import json
-
-        sf_path = os.path.join(index_dir, "_manifests", "segfiles.json")
-        if self._store.exists(sf_path):
-            self._segfiles = _filter_entries_visible(
-                self._store.read_json(sf_path)["files"], self._batches)
-        # the docid analogue for hydration: per-docmap-file docid ranges,
-        # so _docmap_for opens ~1 file per result id instead of sweeping
-        # every docmap footer
-        df_path = os.path.join(index_dir, "_manifests", "docfiles.json")
-        if self._store.exists(df_path):
-            self._docfiles = _filter_entries_visible(
-                self._store.read_json(df_path)["files"], self._batches)
+        # per-file term ranges of every visible segment file: the query
+        # plan enumerates ONLY the files whose range covers a query term —
+        # the Lucene term-dictionary -> segment-seek analogue at file
+        # level (Catalyst's row-group pruning still evaluates inside a
+        # task per file, so without this a 10^5-file index schedules 10^5
+        # file splits per query). The docid analogue serves hydration:
+        # _docmap_for opens ~1 file per result id.
+        self._segfiles = [e for b in self._manifests for e in b["segfiles"]]
+        self._docfiles = [e for b in self._manifests for e in b["docfiles"]]
         self._seg_prune = _RangePruner(self._segfiles, "term")
         self._doc_prune = _RangePruner(self._docfiles, "docid")
         # pyarrow dataset-handle cache: footer/metadata parsing is per-file
@@ -398,38 +349,25 @@ class SearchIndex:
         self._ds_cache: "dict" = _OD()
         # LSM tombstones (build.delete_docs): sorted docid array masked out
         # of every engine's candidates; purged + cleared by compact_index.
-        # Part of the snapshot — refresh() re-reads it.
         if getattr(self, "_tomb_bv", None) is not None:
             self._tomb_bv.unpersist(blocking=False)
         self._tomb_bv = None
         self._tombstones = None
-        tb_path = os.path.join(index_dir, "_manifests", "tombstones.json")
-        if self._store.exists(tb_path):
-            ids = self._store.read_json(tb_path).get("docids", [])
+        if snap["tombstones"]:
+            ids = self._store.read_json(
+                vstore.join(index_dir, snap["tombstones"]))["docids"]
             if ids:
-                self._tombstones = np.asarray(sorted(int(d) for d in ids),
-                                              dtype=np.int64)
-        # fuzzydict sidecar freshness — snapshotted like every other
-        # manifest this class reads (a mid-snapshot rebuild becomes
-        # visible at refresh(); per-call manifest reads cost 2 remote GETs
-        # per token AND poisoned the dataset-handle cache when the sidecar
-        # files were swapped underneath a live reader)
-        self._fuzzydict_ok = False
-        self._fuzzydict_d = 0  # max edit distance the sidecar serves
-        fd_man = os.path.join(index_dir, "_manifests", "fuzzydict.json")
-        td_man = os.path.join(index_dir, "_manifests", "termdict.json")
-        try:
-            if self._store.exists(fd_man) and self._store.exists(td_man):
-                fdj = self._store.read_json(fd_man)
-                self._fuzzydict_ok = (
-                    fdj.get("covers_md5")
-                    == self._store.read_json(td_man).get("covers_md5")
-                )
-                if self._fuzzydict_ok:
-                    self._fuzzydict_d = int(fdj.get("max_edits", 1))
-        except Exception:
-            self._fuzzydict_ok = False
-            self._fuzzydict_d = 0
+                self._tombstones = np.asarray(ids, dtype=np.int64)
+        # sidecars: the snapshot's termdict version (URI, and the local
+        # path when readable) and fuzzydict files — fresh by construction
+        td = snap["termdict"]
+        self._termdict = td and vstore.join(index_dir, td)
+        self._termdict_local = (td and self._local_root
+                                and os.path.join(self._local_root, td))
+        fd = snap["fuzzydict"]
+        self._fuzzydict_files = fd["files"] if fd else []
+        self._fuzzydict_ok = fd is not None
+        self._fuzzydict_d = fd["max_edits"] if fd else 0
 
     # above this size, ship the tombstone set to executors ONCE (Spark
     # broadcast) instead of with every task's kernel closure
@@ -468,17 +406,17 @@ class SearchIndex:
     def refresh(self) -> "SearchIndex":
         """Re-open the index's committed state for long-lived serving.
 
-        A SearchIndex pins the manifest snapshot read at construction —
-        correct snapshot isolation (a mid-query maintenance commit can
-        never tear results), but a serving process previously had to
-        construct a NEW instance (re-list files, re-read footers, cold
-        hot-term cache) to see a committed append/merge/compact. refresh()
-        re-reads the visible-batch set, swaps the scan DataFrames and
-        file-range pruners, closes the remote-termdict streams (footers
-        re-parsed lazily against the new files), and evicts the hot-term
-        cache SELECTIVELY:
+        A SearchIndex pins the snapshot read at construction — correct
+        snapshot isolation (a mid-query maintenance commit can never tear
+        results), but a serving process previously had to construct a NEW
+        instance (cold hot-term cache) to see a committed
+        append/merge/compact. refresh() reads the current snapshot, swaps
+        the scan DataFrames and file-range pruners, closes the
+        remote-termdict streams (footers re-parsed lazily against the new
+        files), and evicts the hot-term cache SELECTIVELY, from a diff of
+        the old and new snapshots' batch lists:
 
-        - pure appends (every previously visible batch manifest unchanged,
+        - pure appends (every previously visible batch entry unchanged,
           only new batches added): evict only terms present in the ADDED
           batches' segment files — appends never rewrite committed
           batches, so every other term's decoded arrays are still exact;
@@ -488,12 +426,11 @@ class SearchIndex:
           cached arrays stay valid; a merged batch that folded in
           POST-snapshot appends evicts the terms in its files (its dir
           holds the union, so attribution over-approximates safely);
-        - compaction / any change to a previously committed batch
-          manifest (docids reassigned, content rewritten): evict
-          everything.
+        - compaction / any change to a previously committed batch entry
+          (docids reassigned, content rewritten): evict everything.
 
         Executor-cached mode (:meth:`cache`) re-pins the new snapshot.
-        No-op cheap when nothing changed (manifest re-read only).
+        No-op cheap when nothing changed (one snapshot read).
         The reference never needs this — its MemoryIndex readers share
         the writer's map under an RWMutex (index_memory_index.go:11-18);
         snapshot-plus-refresh is the object-store equivalent."""
@@ -515,50 +452,29 @@ class SearchIndex:
 
     def _refresh_evict(self, old: dict) -> None:
         """Cache-eviction decision for refresh() (rules in its docstring).
-        ``old`` = the previous snapshot's visible {batch: manifest}."""
-        from visigoth_spark.build import _batch_manifests
-
-        def _full():
-            self._term_cache.clear()
-            self._term_cache_bytes = 0
-
-        try:
-            all_new = {m["batch"]: m
-                       for m in _batch_manifests(self.index_dir)}
-        except (FileNotFoundError, KeyError):
-            return _full()
+        ``old`` = the previous snapshot's visible {batch: entry}."""
+        new = {m["batch"]: m for m in self._manifests}
         # every batch this snapshot decoded must be accounted for: either
-        # still committed UNCHANGED, or merged away (listed in a visible
+        # still present UNCHANGED, or merged away (listed in a visible
         # batch's ``replaces`` — the re-tier preserves its segment rows
-        # byte-identically; GC may have deleted its manifest already).
-        # Compaction satisfies neither (batch manifests rewritten/removed
-        # with no replaces lineage) -> full eviction.
-        replaced_by_new: set[int] = set()
-        for m in self._manifests:
-            replaced_by_new.update(m.get("replaces", []))
-        for b, man in old.items():
-            if b in all_new:
-                if all_new[b] != man:
-                    return _full()
-            elif b not in replaced_by_new:
-                return _full()
+        # byte-identically). Compaction satisfies neither (a new batch
+        # without replaces lineage) -> full eviction.
+        replaced_by_new = {r for m in self._manifests
+                           for r in m.get("replaces", [])}
+        if any(new.get(b, man) != man or
+               (b not in new and b not in replaced_by_new)
+               for b, man in old.items()):
+            return self._evict_terms(None)
         # batches contributing content the cache has not decoded: plain
         # appends, and merged batches that folded in post-snapshot
         # appends. A merged batch whose replaces set is covered by the
         # old snapshot is a pure re-tier of already-decoded rows.
-        fresh = []
-        for m in self._manifests:
-            b = m["batch"]
-            if b in old:
-                continue
-            repl = set(m.get("replaces", []))
-            if repl and repl <= set(old):
-                continue  # file layout only; segment rows byte-identical
-            fresh.append(b)
+        fresh = [m for b, m in new.items() if b not in old and not (
+            m.get("replaces") and set(m["replaces"]) <= set(old))]
         if fresh:
             self._evict_terms(self._added_batch_terms(fresh))
 
-    def _added_batch_terms(self, batches: list[int]) -> set[str] | None:
+    def _added_batch_terms(self, batches: list[dict]) -> set[str] | None:
         """Distinct terms in the given batches' segment files (driver-side
         pyarrow read of the term column — appended batches are small by
         the maintenance model). None when unreadable: caller must evict
@@ -568,14 +484,8 @@ class SearchIndex:
         try:
             import pyarrow.dataset as ds
 
-            paths = []
-            for b in batches:
-                d = os.path.join(self._local_root, "data",
-                                 f"batch={b}", "kind=s")
-                if os.path.isdir(d):
-                    paths.extend(os.path.join(d, fn)
-                                 for fn in sorted(os.listdir(d))
-                                 if fn.endswith(".parquet"))
+            paths = [os.path.join(self._local_root, e["path"])
+                     for m in batches for e in m["segfiles"]]
             if not paths:
                 return set()
             tbl = ds.dataset(paths, format="parquet").to_table(
@@ -601,18 +511,17 @@ class SearchIndex:
     _SEG_COLS_POS = ["term", "bucket", "min_docid", "blob", "pos_blob"]
 
     def _seg_scan(self, terms: list[str], cols: list[str] | None = None):
-        """Pruned postings scan for these query terms. With a segfiles
-        manifest (written by compact_index and merge_appends), enumerate
-        ONLY the files whose term range intersects the terms: after a full
+        """Pruned postings scan for these query terms: enumerate ONLY the
+        snapshot's segment files whose term range intersects the terms
+        (build.py records every batch's ranges): after a full
         compaction every file owns a disjoint range (~1 file per term);
         after a minor merge the merged tier is disjoint while base
         build-layout files may span wide ranges — they match everything,
         which is correct, just unpruned. Parquet truncates binary column
         stats conservatively (min rounds down, max rounds up), so the
         range check can only over-include, never miss a file.
-        Returns None when no file can contain any term. Falls back to the
-        full hive-partitioned scan (row-group pruning only) for
-        non-compacted indexes and cached serving mode. ``cols`` overrides
+        Returns None when no file can contain any term. Cached serving
+        mode scans the pinned DataFrame instead. ``cols`` overrides
         the projected columns (default ``_SEG_COLS``)."""
         cols = cols or self._SEG_COLS
         pruned = self._seg_prune.prune(terms)
@@ -672,50 +581,24 @@ class SearchIndex:
                          cols: list[str] | None = None
                          ) -> pd.DataFrame | None:
         """Driver-side pyarrow read of the pruned segment rows — the same
-        file pruning decisions as _seg_scan (segfiles manifest when present,
-        else the visible batches' kind=s dirs), the same term filter pushed
-        to row-group stats. Returns None when the read can't run driver-side
-        (non-local storage, no manifests) — the caller falls back to the
-        distributed scan. An empty frame means provably no matching rows."""
+        file pruning decisions as _seg_scan, the same term filter pushed
+        to row-group stats. Returns None when the read can't run
+        driver-side (non-local storage, executor-cached mode, or a file of
+        this snapshot that is gone — a reader whose snapshot was reclaimed
+        under it; the distributed route then fails loudly instead of
+        serving partial results). An empty frame means provably no
+        matching rows."""
         cols = cols or self._SEG_COLS
-        if self._local_root is None:
-            return None  # object-store index: distributed route only
+        pruned = self._seg_prune.prune(terms)
+        if self._local_root is None or pruned is None:
+            return None
+        if not len(pruned):
+            return pd.DataFrame(columns=cols)
         try:
             import pyarrow.dataset as ds
 
-            pruned = self._seg_prune.prune(terms)
-            if pruned is not None:
-                paths = [os.path.join(self._local_root, p) for p in pruned]
-                if not paths:
-                    return pd.DataFrame(columns=cols)
-                data = self._dataset(paths)
-            else:
-                if not self._manifests:
-                    return None
-                # ds.dataset() takes a single dir OR a list of FILES —
-                # expand each visible batch's kind=s dir to its parquet
-                # files. A missing kind=s dir is legit ONLY for a batch
-                # whose docs all analyzed to zero tokens (manifest records
-                # n_segments == 0); a visible batch with n_segments > 0
-                # whose dir is gone means THIS reader's snapshot was GC'd
-                # under it (merge_appends(gc=True) / gc_index) — return
-                # None so the distributed route fails LOUDLY on the
-                # missing file instead of silently serving partial results.
-                paths = []
-                for m in self._manifests:
-                    d = os.path.join(self._local_root, "data",
-                                     f"batch={m['batch']}", "kind=s")
-                    if os.path.isdir(d):
-                        paths.extend(
-                            os.path.join(d, fn)
-                            for fn in sorted(os.listdir(d))
-                            if fn.endswith(".parquet")
-                        )
-                    elif m.get("n_segments", 0) > 0:
-                        return None
-                if not paths:
-                    return pd.DataFrame(columns=cols)
-                data = self._dataset(paths)
+            data = self._dataset(
+                [os.path.join(self._local_root, p) for p in pruned])
             tbl = data.to_table(columns=cols,
                                 filter=ds.field("term").isin(terms))
             return tbl.to_pandas()
@@ -765,8 +648,7 @@ class SearchIndex:
         pyarrow read with the range pushed to row-group stats when the
         index is local; Spark termdict scan otherwise. None only when the
         index has no termdict at all (callers raise)."""
-        td = (os.path.join(self._local_root, "termdict")
-              if self._local_root is not None else None)
+        td = self._termdict_local
         if td and os.path.isdir(td):
             try:
                 import pyarrow.dataset as ds
@@ -782,8 +664,8 @@ class SearchIndex:
         got = self._remote_termdict(lambda td: td.scan_range(lo, hi))
         if got is not None:
             return got
-        td_uri = vstore.join(self.index_dir, "termdict")
-        if not self._store.isdir(td_uri):
+        td_uri = self._termdict
+        if not td_uri or not self._store.isdir(td_uri):
             return None
         df = self.spark.read.parquet(td_uri).filter(F.col("term") >= lo)
         if hi is not None:
@@ -799,10 +681,10 @@ class SearchIndex:
         if self._local_root is not None:
             return None
         try:
-            if self._remote_td is None:
-                td_uri = vstore.join(self.index_dir, "termdict")
-                if self._store.isdir(td_uri):
-                    self._remote_td = _RemoteTermdict(self._store, td_uri)
+            td_uri = self._termdict
+            if self._remote_td is None and td_uri and \
+                    self._store.isdir(td_uri):
+                self._remote_td = _RemoteTermdict(self._store, td_uri)
             if self._remote_td is not None:
                 return read(self._remote_td)
         except Exception:
@@ -907,34 +789,30 @@ class SearchIndex:
         neighborhood sidecar (``build.build_fuzzydict``) — a point read
         of the query term's deletion-neighborhood keys (len+1 for d=1,
         O(len^2) for d=2) instead of a vocabulary scan. None when the
-        sidecar is absent, STALE (its recorded termdict covers key no
-        longer matches the live termdict), or built with a smaller
-        ``max_edits`` than asked — the caller falls back to the
-        always-correct scan. Candidates still get the exact edit-distance
+        snapshot names no sidecar, a sidecar file is unreadable, or it was
+        built with a smaller ``max_edits`` than asked — the caller falls
+        back to the always-correct scan. Candidates still get the exact edit-distance
         verify (deletion-neighborhood intersection over-admits, e.g. a
         d=1 lookup's variant intersection admits transpositions, which
         are distance 2)."""
         try:
-            if not self._fuzzydict_ok:  # absent/stale AT THIS SNAPSHOT
+            if not self._fuzzydict_ok:  # no sidecar AT THIS SNAPSHOT
                 return None
             if max_edits > self._fuzzydict_d:
                 return None  # sidecar stores a smaller neighborhood
             keys = _deletion_neighborhood(term, max_edits)
+            files = self._fuzzydict_files
             if self._local_root is not None:
-                local = os.path.join(self._local_root, "fuzzydict")
-                if not os.path.isdir(local):
-                    return None
                 import pyarrow.dataset as ds
 
-                tbl = self._dataset(local).to_table(
-                    columns=["term"],
-                    filter=ds.field("variant").isin(keys))
+                tbl = self._dataset(
+                    [os.path.join(self._local_root, f) for f in files]
+                ).to_table(columns=["term"],
+                           filter=ds.field("variant").isin(keys))
                 return sorted(set(tbl["term"].to_pylist()))
-            fd_dir = vstore.join(self.index_dir, "fuzzydict")
-            if not self._store.isdir(fd_dir):
-                return None
             rows = (
-                self.spark.read.parquet(fd_dir)
+                self.spark.read.parquet(
+                    *[vstore.join(self.index_dir, f) for f in files])
                 .filter(F.col("variant").isin(keys))
                 .select("term").distinct().collect()
             )
@@ -945,7 +823,7 @@ class SearchIndex:
     def expand_fuzzy(self, term: str, max_edits: int = 1,
                      max_terms: int = 1024) -> list[str]:
         """Vocabulary terms within Levenshtein distance ``max_edits`` of
-        ``term`` (analyzed form). With a FRESH ``fuzzydict`` sidecar
+        ``term`` (analyzed form). With a ``fuzzydict`` sidecar
         (build.build_fuzzydict) whose stored neighborhood covers
         ``max_edits``, candidates come from a SymSpell deletion-
         neighborhood point read; otherwise one termdict column scan
@@ -987,8 +865,7 @@ class SearchIndex:
         if got is not None:
             return got
         out = {t: 0 for t in terms}
-        td = (os.path.join(self._local_root, "termdict")
-              if self._local_root is not None else "")
+        td = self._termdict_local
         if td and os.path.isdir(td):
             try:
                 import pyarrow.dataset as ds
@@ -1045,27 +922,12 @@ class SearchIndex:
                 raise OSError("non-local index")  # -> Spark fallback below
             import pyarrow.dataset as ds
 
-            pruned = self._doc_prune.prune(ids)
-            if pruned is not None:
-                # manifest fast path: open only the files whose docid range
-                # covers a requested id (the manifest lists only visible
-                # batches' files, so no batch filter is needed). A stale or
-                # non-covering manifest can only MISS rows, never return
-                # wrong ones — the completeness check below falls back.
-                paths = [os.path.join(self._local_root, p) for p in pruned]
-                data = self._dataset(paths)
-                flt = ds.field("docid").isin(ids)
-            else:
-                data = self._dataset(
-                    os.path.join(self._local_root, "data"),
-                    partitioning="hive",
-                )
-                flt = (ds.field("kind") == "d") & ds.field("docid").isin(ids)
-                if self._batches:
-                    # exclude orphan/replaced batch dirs — their docmap
-                    # rows can carry the SAME docids as committed ones (a
-                    # crashed append's successor reuses its range)
-                    flt = flt & ds.field("batch").isin(self._batches)
+            # open only the files whose docid range covers a requested id
+            # (the snapshot lists only visible batches' files); an id no
+            # file admits fails the completeness check below
+            data = self._dataset([os.path.join(self._local_root, p)
+                                  for p in self._doc_prune.prune(ids)])
+            flt = ds.field("docid").isin(ids)
             tbl = data.to_table(columns=cols, filter=flt)
             raws = (tbl["raw"].to_pylist() if with_raw
                     else [None] * len(tbl))

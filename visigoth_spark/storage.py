@@ -4,9 +4,9 @@ abfs://, file://, ...).
 
 Why this exists: the data planes (corpus scan, segment/docmap parquet,
 termdict) always go through Spark readers/writers, which already speak
-every Hadoop scheme. What does NOT are the control-plane pieces — manifest
-JSON commits, batch-dir GC, the compaction swap, parquet-footer sweeps for
-the file-range manifests, the writer lock. Those were POSIX-only
+every Hadoop scheme. What does NOT are the control-plane pieces — snapshot
+commits, GC of unreferenced batch dirs and sidecar versions, parquet-footer
+sweeps for the per-file ranges, the writer lock. Those were POSIX-only
 (`os.makedirs` / `os.replace` / `open()`), so an index at
 ``s3a://bucket/idx/main`` (the CLI's own example) could be *read* as corpus
 input but never *written*. Every such call now routes through a ``Store``.
@@ -21,14 +21,17 @@ Two implementations:
   Used for ``file://`` URIs too, so the whole non-POSIX code path is
   exercisable (and tested) without an object store in the loop.
 
-Atomicity per scheme — the commit primitive ``write_atomic``:
+A commit is ONE new file (``_manifests/snapshot-<n>.json``, build.py) whose
+name no earlier commit used: it replaces nothing, so no store needs an
+atomic rename or a pre-delete for it, and readers never observe a window
+where the current snapshot is absent. Per scheme, ``write_atomic`` makes
+that one file appear complete:
 
 - LocalStore: tmp file + ``os.replace`` (POSIX-atomic rename).
 - HadoopStore on rename-atomic filesystems (hdfs, file): tmp file +
-  ``FileSystem.rename`` — readers see the old or the new manifest, never a
-  partial one; between the pre-delete of an existing destination and the
-  rename a reader can observe ABSENCE, which every manifest reader here
-  already treats as "not committed" (batch invisible), never as corruption.
+  ``FileSystem.rename`` — readers see no file or the complete one, never a
+  partial one. (Replacing an EXISTING destination pre-deletes it, so a
+  reader could observe absence; snapshot commits never replace.)
 - HadoopStore on object stores (s3a/s3/gs/abfs/oss/wasb): ONE
   ``create(overwrite=true)`` PUT — a single-object PUT is atomic on S3/GCS/
   ABFS (readers see old or new, never partial), while tmp+rename would be a
@@ -264,8 +267,8 @@ class HadoopStore(Store):
 
     def listdir(self, path):
         if not self.exists(path):
-            # match os.listdir semantics: callers (e.g. _batch_manifests)
-            # catch FileNotFoundError, not wrapped Java exceptions
+            # match os.listdir semantics: callers catch
+            # FileNotFoundError, not wrapped Java exceptions
             raise FileNotFoundError(path)
         sts = self._fs.listStatus(self._p(path))
         return sorted(st.getPath().getName() for st in sts)

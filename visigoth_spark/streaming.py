@@ -10,15 +10,11 @@ buckets are disjoint from all existing ones, and the query path needs no
 changes — it already concatenates a term's segments across batches in docid
 order.
 
-Exactly-once: BEFORE ingesting an epoch, its (index batch id, base docid,
-bucket base) allocation is durably pinned in the stream manifest
-(state="allocated"); only after append_index commits is it flipped to
-"committed". A crash between those steps makes Spark replay the epoch, which
-finds the pinned allocation and re-runs append_index with the SAME batch
-path (mode=overwrite), SAME docids and SAME buckets — a byte-level redo of
-the identical work, so the replay converges instead of appending a second
-copy (append_index's stats are likewise recomputed from manifests, never
-incremented). Committed epochs are skipped outright.
+Exactly-once: an epoch's append commits the epoch id with its batch, in
+the same snapshot (``last_epoch``). A replayed epoch at or below
+``last_epoch`` is skipped outright; one that never committed re-derives its
+batch id, docids and buckets from the current snapshot, exactly as on its
+first attempt, and overwrites whatever orphan that attempt left.
 
 At 10^12-doc scale the same shape runs against a Kafka/file source with a
 long trigger interval; the per-epoch cost is one fused analyze+encode pass
@@ -27,13 +23,11 @@ over the epoch's documents (build.py's zero-shuffle pipeline).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from visigoth_spark.analysis import AnalyzerConfig, DEFAULT_ANALYZER
-from visigoth_spark.build import append_index
+from visigoth_spark.build import (_append, _writer_lock, load_snapshot,
+                                  merge_appends)
 
 
 def foreach_batch_indexer(out_dir: str,
@@ -43,110 +37,38 @@ def foreach_batch_indexer(out_dir: str,
                           store_positions: bool = False):
     """Returns a foreachBatch(fn) that appends each micro-batch to the index.
 
-    Epoch idempotence (see module docstring): the stream manifest pins each
-    epoch's (batch, base_docid, bucket_base) allocation BEFORE ingesting, so
-    a replayed epoch redoes the identical overwrite instead of appending a
-    duplicate. Committed epochs are skipped.
+    Epoch idempotence (see module docstring): each epoch's append commits
+    ``last_epoch`` with its batch, so a replay of a committed epoch is
+    skipped and a replay of an uncommitted one redoes it.
 
     ``merge_every=k`` runs ``merge_appends`` (tiered minor compaction)
-    after every k-th committed epoch, bounding the L0 batch count a
-    long-running stream accumulates. Safe here because the stream IS the
-    single writer, and a crash mid-merge only delays the merge (the epoch
-    itself is already committed; a skipped boundary is retried at the
-    next one).
+    whenever k appended batches have accumulated since the last merge,
+    bounding the L0 batch count a long-running stream accumulates. Safe
+    here because the stream IS the single writer, and a crash mid-merge
+    only delays the merge (the epoch itself is already committed).
     """
-    from visigoth_spark import storage as vstore
-
-    manifest = os.path.join(out_dir, "_manifests", "stream_epochs.json")
-
-    def _load() -> dict:
-        store = vstore.get_store(out_dir)
-        if store.exists(manifest):
-            return store.read_json(manifest)
-        return {}
-
-    def _save(state: dict) -> None:
-        store = vstore.get_store(out_dir)
-        store.makedirs(os.path.join(out_dir, "_manifests"))
-        store.write_json_atomic(manifest, state, indent=None)
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        state = _load()
-        rec = state.get(str(epoch_id))
-        if rec is not None and rec.get("state") == "committed":
+        snap = load_snapshot(out_dir)
+        fresh = snap is None or snap["stats"] is None
+        if not fresh and snap["last_epoch"] is not None \
+                and epoch_id <= snap["last_epoch"]:
             return  # replayed epoch, already fully ingested
-        if rec is None:
-            # pin this epoch's allocation durably before any ingest work
-            from visigoth_spark.build import _batch_manifests, load_stats
-
-            if vstore.get_store(out_dir).exists(
-                    os.path.join(out_dir, "stats.json")):
-                manifests = _batch_manifests(out_dir)
-                stats = load_stats(out_dir)
-                rec = {
-                    "state": "allocated",
-                    "batch": 1 + max(m["batch"] for m in manifests),
-                    "base_docid": max(
-                        m.get("docid_range", [0, 0])[1] for m in manifests
-                    ),
-                    "bucket_base": max(
-                        stats["n_buckets"],
-                        max((max(m.get("buckets", [-1])) + 1
-                             for m in manifests), default=0),
-                    ),
-                }
-            else:
-                # first epoch: fresh build. Marked so a replay re-runs the
-                # BUILD (overwrite, idempotent) even if the crashed attempt
-                # already committed stats.json — an unpinned append here
-                # would ingest a second copy.
-                rec = {"state": "allocated", "fresh": True}
-            state[str(epoch_id)] = rec
-            _save(state)
-        if rec.get("fresh"):
-            from visigoth_spark.build import build_index
-
-            if batch_df.isEmpty():
-                # an empty FIRST epoch (e.g. a trigger firing before any
-                # source files exist) must not reach build_index, which
-                # raises on an empty corpus and would kill the stream.
-                # Commit the epoch as a no-op; the next epoch still finds
-                # no stats.json and takes the fresh-build path itself.
-                rec["state"] = "committed"
-                rec["n_docs"] = 0
-                state[str(epoch_id)] = rec
-                _save(state)
-                return
-            m = build_index(batch_df.sparkSession, batch_df, out_dir,
-                            analyzer=analyzer,
-                            num_partitions=num_partitions,
-                            store_positions=store_positions)
-        else:
-            m = append_index(
-                batch_df.sparkSession, batch_df, out_dir, analyzer=analyzer,
-                num_partitions=num_partitions,
-                batch_id=rec.get("batch"), base_docid=rec.get("base_docid"),
-                bucket_base=rec.get("bucket_base"),
-            )
-        rec["state"] = "committed"
-        rec["n_docs"] = m.n_docs
-        state[str(epoch_id)] = rec
-        _save(state)
-        if merge_every and not rec.get("fresh"):
-            # count only committed epochs that actually APPENDED docs: the
-            # fresh-build epoch and empty no-op epochs (n_docs is the
-            # post-epoch total, so an empty append has n_docs ==
-            # base_docid) must not drift the 'every k-th append' boundary
-            appended = sum(
-                1 for r in state.values()
-                if r.get("state") == "committed" and not r.get("fresh")
-                and r.get("n_docs", 0) > r.get("base_docid", 0)
-            )
-            if appended and appended % merge_every == 0:
-                from visigoth_spark.build import merge_appends
-
-                merge_appends(batch_df.sparkSession, out_dir,
-                              num_partitions=num_partitions)
+        if fresh and batch_df.isEmpty():
+            # an empty FIRST epoch (e.g. a trigger firing before any
+            # source files exist) must not reach build_index, which
+            # raises on an empty corpus and would kill the stream
+            return
+        spark = batch_df.sparkSession
+        with _writer_lock(out_dir, "append"):
+            _append(spark, batch_df, out_dir, analyzer=analyzer,
+                    num_partitions=num_partitions,
+                    store_positions=store_positions if fresh else None,
+                    commit={"last_epoch": epoch_id})
+        appended = [b for b in load_snapshot(out_dir)["batches"]
+                    if b.get("appended")]
+        if merge_every and len(appended) >= merge_every:
+            merge_appends(spark, out_dir, num_partitions=num_partitions)
 
     return fn
 
