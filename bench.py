@@ -461,10 +461,8 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.python.worker.reuse", "true")
         .config("spark.io.compression.codec", "lz4")
-        # Arrow createDataFrame/collect: the driver-local query route
-        # returns its top-k as an Arrow local relation, which collects
-        # WITHOUT a job only when this is on (conftest.py enables it for
-        # tests; a serving deployment should too)
+        # Arrow conversion: faster pandas createDataFrame / toPandas of
+        # distributed results (a top-k result reads locally either way)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 
 from visigoth_spark.build import (
     append_index,
@@ -19,7 +22,12 @@ from visigoth_spark.build import (
     merge_appends,
 )
 from visigoth_spark.corpus import generate_corpus
-from visigoth_spark.query import SearchIndex
+from visigoth_spark.query import (
+    SearchIndex,
+    _head_k_with_ties,
+    _order_keys,
+    _retiebreak_on_url,
+)
 from visigoth_spark.reference_engine import OracleIndex
 
 N_DOCS = 300
@@ -128,10 +136,86 @@ def test_auto_routes_small_queries_driver_side(spark, layouts):
     idx = SearchIndex(spark, layouts["compacted"])
     with _JobCounter(spark.sparkContext, "vg-route-small") as jc:
         df = idx.search("programación java", "bm25", 10)  # route="auto"
-        rows = df.collect()  # createDataFrame(local rows) -> still no job
+        rows = df.collect()  # read from the local result: no job
         assert rows
         assert jc.count() == 0, \
             "auto route below threshold must not run a job"
+
+
+ARROW = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+def test_driver_route_runs_no_job_with_arrow_off(spark, layouts,
+                                                 monkeypatch):
+    """The zero-job driver route does not depend on Arrow conversion: with
+    it off, a driver-routed search and an all-light search_many run no
+    job and never reach createDataFrame, and return the rows they return
+    with it on."""
+    idx = SearchIndex(spark, layouts["compacted"])
+    qs = [q for q, _ in QUERIES]  # all light here, one empty at plan time
+
+    def run():
+        one = idx.search("programación java", "bm25", 10)
+        many = idx.search_many(qs, "bm25", 10)
+        return ([tuple(r) for r in one.collect()],
+                [tuple(r) for r in many.collect()],
+                one.count(), len(many.toPandas()))
+
+    with_arrow = run()
+    assert with_arrow[0] and with_arrow[1]
+    prev = spark.conf.get(ARROW)
+    spark.conf.set(ARROW, "false")
+    try:
+        def refuse(*a, **kw):
+            raise AssertionError("the driver route called createDataFrame")
+
+        monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+        with _JobCounter(spark.sparkContext, "vg-route-arrow-off") as jc:
+            without_arrow = run()
+            assert jc.count() == 0, "driver route ran a Spark job"
+        monkeypatch.undo()
+    finally:
+        spark.conf.set(ARROW, prev)
+    assert without_arrow == with_arrow
+
+
+def test_tie_handling_equals_pandas_formulation():
+    """_head_k_with_ties and _retiebreak_on_url against the pandas sorts
+    they replaced, on seeded frames dense with exact-metric ties (index
+    labels included)."""
+    def head_k_pandas(out, metric, k):
+        if len(out) <= k:
+            return out
+        out = out.sort_values([metric, "docid"], ascending=[False, True])
+        kth = out[metric].iloc[k - 1]
+        n_keep = int((out[metric].to_numpy() >= kth).sum())
+        return out.head(min(n_keep, 2 * k))
+
+    def retiebreak_pandas(out, engine):
+        by, asc = _order_keys(engine)
+        return out.sort_values(by, ascending=asc, kind="stable",
+                               ignore_index=True)
+
+    rng = np.random.RandomState(20261017)
+    for _ in range(200):
+        n = int(rng.randint(0, 60))
+        k = int(rng.randint(1, 15))
+        out = pd.DataFrame({
+            "docid": rng.permutation(4 * n + 1)[:n].astype(np.int64),
+            # a handful of distinct values: most rows tie with another
+            "score": rng.choice([0.25, 0.5, 1.0 / 3, 2.0], n),
+            "hits": rng.randint(0, 3, n).astype(np.int32),
+        })
+        for metric in ("score", "hits"):
+            pd.testing.assert_frame_equal(
+                _head_k_with_ties(out, metric, k),
+                head_k_pandas(out, metric, k))
+        hydrated = out.assign(
+            url=[f"u{v:02d}" for v in rng.randint(0, 30, n)])
+        for engine in ("bm25", "hits", "linear"):
+            pd.testing.assert_frame_equal(
+                _retiebreak_on_url(hydrated, engine),
+                retiebreak_pandas(hydrated, engine))
 
 
 def test_auto_respects_byte_threshold(spark, layouts):

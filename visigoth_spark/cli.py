@@ -45,8 +45,9 @@ def _session(app: str):
     return (
         SparkSession.builder.appName(app)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Arrow createDataFrame: the driver-local query route returns an
-        # Arrow local relation that collects without a job only with this
+        # Arrow conversion speeds up toPandas of distributed results and
+        # createDataFrame of pandas input; the driver route does not need
+        # it (a top-k result reads its rows locally, no job either way)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.worker.reuse", "true")
         .getOrCreate()

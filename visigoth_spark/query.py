@@ -21,7 +21,12 @@ Lifecycle (≙ SURVEY §3.2, re-expressed for Spark):
           of two-pointer + skip pointers), exact BM25 scoring, local top-k
     merge: per query, engine order tie-extended at the k boundary -> one
           docid-pruned docmap point lookup (_docmap_for) hydrates the urls
-          of the whole batch -> url re-tiebreak + head(k).
+          of the whole batch -> url re-tiebreak + head(k), a pandas frame
+          on the driver. The caller gets it as a _LocalResult: a PySpark
+          DataFrame whose collect / take / count / toPandas / schema read
+          that frame, so a driver-routed query crosses into the JVM
+          neither to run a job nor to convert its rows; only other
+          DataFrame operations build (once) the Spark relation of it.
   Unbounded results (k=None) stay distributed: a docmap join instead of
   the point lookup.
 
@@ -41,12 +46,16 @@ import json
 import math
 import os
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StringType, StructField, StructType)
 
 from visigoth_spark.analysis import (AnalyzerConfig, DEFAULT_ANALYZER,
                                      analyze_text, highlight_spans,
@@ -101,9 +110,14 @@ _EMPTY_ROUTE = "none (plan-time empty)"
 # engines where every term must match: a df=0 term empties the query
 _AND_ENGINES = _AND_BM25 + ("linear", "phrase")
 
-_RESULT_TYPES = {"qid": "int", "url": "string", "docid": "long",
-                 "score": "double", "hits": "int", "raw": "string",
-                 "matches": "string"}
+_RESULT_TYPES = {"qid": IntegerType(), "url": StringType(),
+                 "docid": LongType(), "score": DoubleType(),
+                 "hits": IntegerType(), "raw": StringType(),
+                 "matches": StringType()}
+
+# the dtype Spark's toPandas() gives each result type, Arrow on or off
+_PANDAS_DTYPES = {"int": np.int32, "bigint": np.int64, "double": np.float64,
+                  "string": object}
 
 
 @dataclass
@@ -870,7 +884,8 @@ class SearchIndex:
             try:
                 import pyarrow.dataset as ds
 
-                tbl = ds.dataset(td, format="parquet").to_table(
+                # termdict/<n>/ is immutable: the cached handle stays valid
+                tbl = self._dataset(td).to_table(
                     columns=["term", "df"],
                     filter=ds.field("term").isin(terms),
                 )
@@ -1183,7 +1198,18 @@ class SearchIndex:
         Unbounded results (k=None) always run distributed.
 
         A top-k query is :meth:`search_many` of one: the same plan
-        (:meth:`explain_query` renders it) and the same executor."""
+        (:meth:`explain_query` renders it) and the same executor.
+
+        What the DataFrame is: for a top-k query (and any query answered
+        empty at plan time) a local result over the <= k rows already on
+        the driver. ``collect``, ``take`` / ``head`` / ``first``,
+        ``count``, ``isEmpty``, ``toPandas``, ``schema`` and ``columns``
+        read them without touching Spark: a driver-routed query runs no
+        Spark job and makes no JVM call, with Arrow conversion on or off.
+        Any other operation (``select``, ``unionByName``, ``show``, ...)
+        first turns the rows into a Spark local relation, once per
+        result. With ``k=None`` (and for ``noop_all``) it is a lazy
+        distributed DataFrame: nothing runs until an action."""
         self._validate(engine, route, slop, include_raw)
         if engine in ("noop_zero", "noop_all") and (
                 exclude is not None or after is not None or highlight):
@@ -1225,8 +1251,8 @@ class SearchIndex:
 
         plan = self._plan([query], engine, k, route, slop, exclude, after)[0]
         if k is not None or plan.route == _EMPTY_ROUTE:
-            return self._local_result(
-                self._execute([plan], include_raw, highlight)[0], cols)
+            out = self._execute([plan], include_raw, highlight)[0]
+            return _LocalResult(self.spark, out, cols)
         # unbounded result: stay fully distributed. Broadcast the ranked
         # ids into the docmap join only when the termdict already proves
         # the match set is small (AND matches <= min df; OR/hits <= sum
@@ -1236,7 +1262,7 @@ class SearchIndex:
         # plain join (AQE picks SMJ/shuffled-hash) keeps it executor-side.
         seg = self._plan_scan([plan])
         if seg is None:  # no segment file can contain any query term
-            return self._local_result(None, cols)
+            return _LocalResult(self.spark, None, cols)
         ranked = seg.groupBy("bucket").applyInPandas(
             self._kernel(plan), RESULT_KERNEL_SCHEMA)
         est = (min(plan.dfs.values())
@@ -1285,7 +1311,10 @@ class SearchIndex:
         job at all, a mixed batch pays exactly one.
 
         Returns (qid, url, docid, score, hits[, raw]), each qid's rows in
-        the engine's order. qid = position in ``queries``."""
+        the engine's order. qid = position in ``queries``. Like a top-k
+        :meth:`search`, the rows are already on the driver: ``collect``
+        and the other row reads touch no Spark (see there); the only
+        Spark job is the distributed one above, run before returning."""
         if engine in ("noop_zero", "noop_all"):
             raise ValueError(f"unsupported batch engine {engine!r}")
         self._validate(engine, route, slop, include_raw)
@@ -1295,7 +1324,8 @@ class SearchIndex:
             if out is not None:
                 out.insert(0, "qid", np.int32(qid))
                 found.append(out)
-        return self._local_result(
+        return _LocalResult(
+            self.spark,
             pd.concat(found, ignore_index=True) if found else None,
             _result_cols(include_raw, qid=True))
 
@@ -1414,18 +1444,78 @@ class SearchIndex:
         return self._seg_scan(terms, cols=(
             self._SEG_COLS_POS if plans[0].engine == "phrase" else None))
 
-    def _local_result(self, out_pd: pd.DataFrame | None,
-                      cols: list[str]) -> DataFrame:
-        """A result as a pandas-backed (Arrow) local relation: collect()
-        on it runs no Spark job, so a driver-routed query runs ZERO jobs
-        end to end. An empty result is a one-null-row frame limited to 0
-        — collecting createDataFrame of an empty frame launches a job."""
-        schema = ", ".join(f"{c} {_RESULT_TYPES[c]}" for c in cols)
-        if out_pd is None:
-            return self.spark.createDataFrame(
-                pd.DataFrame([[None] * len(cols)], columns=cols),
-                schema).limit(0)
-        return self.spark.createDataFrame(out_pd, schema)
+
+class _LocalResult(ClassicDataFrame):
+    """A top-k result: a classic PySpark DataFrame over the pandas frame
+    (<= k rows per query) that ``_execute`` produced. ``collect``, ``take`` /
+    ``head`` / ``first``, ``count``, ``isEmpty``, ``toPandas``, ``schema``
+    and ``columns`` answer from that frame: no py4j call and no Spark
+    job, whatever the session's Arrow setting. Every other operation
+    (``select``, ``unionByName``, ``show``, ``rdd``, ...) goes through
+    ``_jdf``, the ``createDataFrame`` of the frame, built on first use.
+
+    Relies on two PySpark internals (PLANS.md §21):
+    ``pyspark.sql.classic.dataframe.DataFrame.__new__`` runs ``__init__``
+    with ``(jdf, session)``, so this class has its own ``__new__``; and
+    the inherited methods reach the JVM only through ``self._jdf``.
+    tests/test_local_result.py pins both against a PySpark upgrade."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, pdf: pd.DataFrame | None,
+                 cols: list[str]):
+        # the attributes ClassicDataFrame.__init__ sets, but _jdf
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._schema = StructType(
+            [StructField(c, _RESULT_TYPES[c]) for c in cols])
+        if pdf is None:
+            pdf = pd.DataFrame({
+                c: pd.Series(dtype=_PANDAS_DTYPES[_RESULT_TYPES[c]
+                                                   .simpleString()])
+                for c in cols})
+        self._pdf = pdf
+
+    @property
+    def schema(self) -> StructType:
+        return self._schema
+
+    @cached_property
+    def _jdf(self):
+        """The frame as a Spark local relation. An empty result is a
+        one-null-row frame limited to 0: collecting createDataFrame of an
+        empty frame launches a job."""
+        pdf = self._pdf
+        if not len(pdf):
+            pdf = pd.DataFrame([[None] * len(pdf.columns)],
+                               columns=pdf.columns)
+        df = self._session.createDataFrame(pdf, self._schema)
+        return (df if len(self._pdf) else df.limit(0))._jdf
+
+    def _rows(self, pdf: pd.DataFrame) -> list:
+        # rows as Spark's collect builds them (StructType.fromInternal)
+        cols = [pdf[c].tolist() for c in pdf.columns]
+        return [self._schema.fromInternal(v) for v in zip(*cols)]
+
+    def collect(self) -> list:
+        return self._rows(self._pdf)
+
+    def take(self, num: int) -> list:
+        if num < 0:  # Spark's error for a negative limit
+            return super().take(num)
+        return self._rows(self._pdf.head(num))
+
+    def count(self) -> int:
+        return len(self._pdf)
+
+    def isEmpty(self) -> bool:
+        return not len(self._pdf)
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._pdf.copy()
 
 
 def _head_k_with_ties(out: pd.DataFrame, metric: str, k: int
@@ -1448,10 +1538,11 @@ def _head_k_with_ties(out: pd.DataFrame, metric: str, k: int
     docids."""
     if len(out) <= k:
         return out
-    out = out.sort_values([metric, "docid"], ascending=[False, True])
-    kth = out[metric].iloc[k - 1]
-    n_keep = int((out[metric].to_numpy() >= kth).sum())
-    return out.head(min(n_keep, 2 * k))
+    m = out[metric].to_numpy()
+    kth = -np.partition(-m, k - 1)[k - 1]  # the k-th largest metric
+    keep = np.flatnonzero(m >= kth)  # top k plus the boundary ties
+    keep = keep[np.lexsort((out["docid"].to_numpy()[keep], -m[keep]))]
+    return out.take(keep[:2 * k])
 
 
 def _retiebreak_on_url(out_pd: pd.DataFrame, engine: str) -> pd.DataFrame:
@@ -1460,10 +1551,12 @@ def _retiebreak_on_url(out_pd: pd.DataFrame, engine: str) -> pd.DataFrame:
     entities_doc.go:12-14). A no-op for pure-batch/compacted indexes where
     docid ≡ url order (rows arrive already so ordered); for appended
     indexes this re-sorts the (tie-extended, <=2k) hydrated rows — the
-    callers trim back to k after."""
-    by, asc = _order_keys(engine)
-    return out_pd.sort_values(by, ascending=asc, kind="stable",
-                              ignore_index=True)
+    callers trim back to k after. A stable sort over row positions, least
+    significant key first."""
+    order = list(range(len(out_pd)))
+    for col, asc in reversed(list(zip(*_order_keys(engine)))):
+        order.sort(key=out_pd[col].tolist().__getitem__, reverse=not asc)
+    return out_pd.take(order).reset_index(drop=True)
 
 
 def _order_keys(engine: str) -> tuple[list[str], list[bool]]:
