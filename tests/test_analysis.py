@@ -176,7 +176,9 @@ class TestExtractor:
 
 class TestAnalyzeFlatIdentity:
     """analyze_flat (Arrow/RE2 build path) must be token-identical to
-    analyze_series (regex-module query path) — the index and the query
+    analyze_series (its per-document re-slicing, and the regex-module
+    path of custom keep-patterns) and to analyze_text (the query path:
+    regex-module tokenizing below the gate) — the index and the query
     MUST see the same analyzer (index_memory_index.go:45,63)."""
 
     def _check(self, texts, cfg):
@@ -192,6 +194,7 @@ class TestAnalyzeFlatIdentity:
         terms, lens = analyze_flat(s, cfg)
         assert (lens == lens_ref).all()
         assert terms.to_pylist() == flat_ref
+        assert [analyze_text(t, cfg) for t in texts] == list(lists)
 
     def test_golden_inputs_default_analyzer(self):
         from visigoth_spark.analysis import DEFAULT_ANALYZER
@@ -217,12 +220,22 @@ class TestAnalyzeFlatIdentity:
 
         random.seed(7)
         alphabet = "abcéñqu 日ü.,!?19-_\t\ndelasción"
-        texts = [
-            "".join(random.choice(alphabet)
-                    for _ in range(random.randint(0, 120)))
-            for _ in range(500)
+        # below the query tokenizer's gate (analysis._REGEX_RE2_AGREE_BELOW)
+        # and above it: Greek, Turkish İ, combining marks, CJK, private
+        # use, astral letters/digits and code points the two regex
+        # engines classify differently (U+088F, U+0C5C, U+105C0)
+        alphabets = [
+            alphabet,
+            alphabet + "ΣσςΟΔİıI\u0307\u0301ऄ\u088f\u0c5c\ue000\uffef"
+            "\U000105c0\U0001d7ce\U00020000\U0001f600",
         ]
-        self._check(texts, DEFAULT_ANALYZER)
+        for alpha in alphabets:
+            texts = [
+                "".join(random.choice(alpha)
+                        for _ in range(random.randint(0, 120)))
+                for _ in range(500)
+            ]
+            self._check(texts, DEFAULT_ANALYZER)
 
     def test_custom_pattern_fallback(self):
         from visigoth_spark.analysis import AnalyzerConfig
@@ -268,3 +281,42 @@ class TestCaseMappingParity:
                 idx.search("ΟΔΟΣ", "bm25", 5).collect()] == ["u1"]
         assert [r["url"] for r in
                 idx.search("İstanbul", "bm25", 5).collect()] == ["u2"]
+
+
+class TestQueryTokenizerGate:
+    """analyze_text tokenizes with the regex module's [\\p{L}\\p{N}]+ only
+    when every code point of the lowered string is below
+    _REGEX_RE2_AGREE_BELOW; Arrow's RE2 tokenizes everything else (and
+    the build). The gate is sound only while the two libraries' Unicode
+    tables agree on that class below it."""
+
+    def test_regex_class_equals_re2_class_below_gate(self):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import regex
+
+        from visigoth_spark.analysis import _REGEX_RE2_AGREE_BELOW
+
+        chars = [chr(c) for c in range(ord(_REGEX_RE2_AGREE_BELOW))]
+        keep = regex.compile(r"[\p{L}\p{N}]")
+        ours = [keep.fullmatch(ch) is not None for ch in chars]
+        # RE2 keeps a char as one token iff it is in the class; otherwise
+        # the split of a lone separator is ["", ""]
+        split = pc.split_pattern_regex(pa.array(chars),
+                                       pattern=r"[^\p{L}\p{N}]+")
+        re2 = [len(p) == 1 for p in split.to_pylist()]
+        diff = [hex(ord(ch)) for ch, a, b in zip(chars, ours, re2) if a != b]
+        assert not diff, f"regex and RE2 disagree below the gate: {diff}"
+
+    def test_above_gate_takes_arrow_path(self, monkeypatch):
+        import visigoth_spark.analysis as va
+
+        calls = []
+        real = va.analyze_series
+        monkeypatch.setattr(va, "analyze_series",
+                            lambda *a, **kw: calls.append(a) or real(*a, **kw))
+        assert va.analyze_text("Curso de programación") == ["curs", "program"]
+        assert calls == []
+        # U+0C5C: a letter to regex, not to pyarrow's RE2
+        assert va.analyze_text("curso \u0c5cweb") == ["curs", "web"]
+        assert len(calls) == 1

@@ -277,9 +277,28 @@ def test_hot_term_cache_respects_byte_budget(spark, layouts):
     for q in ("programación java", "curso completo", "huevos", "python"):
         idx2.search(q, "bm25", 10, route="driver").collect()
         assert idx2._term_cache_bytes <= 64 << 10
+    # the bytes count every entry of the driver cache: hot terms and the
+    # decoded termdict / docmap row groups
     assert idx2._term_cache_bytes == sum(
-        sum(a.nbytes for a in v) for v in idx2._term_cache.values()
+        sum(a.nbytes for a in v) for v in idx2._cache.entries.values()
     )
+
+
+def test_scan_relations_built_on_first_distributed_use(spark, layouts):
+    """Opening a SearchIndex and serving driver-routed queries lists no
+    data directory: the Spark scan relations (``_data`` and the
+    ``_postings`` / ``_docmap`` views of it) are built on their first
+    distributed use, and refresh() drops them."""
+    rels = {"_data", "_postings", "_docmap"}
+    idx = SearchIndex(spark, layouts["appended"])
+    assert idx.search("programación java", "bm25", 10,
+                      route="driver").collect()
+    assert not rels & set(vars(idx))
+    unbounded = _rows(idx.search("java", "bm25", None))  # docmap join
+    assert {"_data", "_docmap"} <= set(vars(idx))
+    idx.refresh()
+    assert not rels & set(vars(idx))
+    assert _rows(idx.search("java", "bm25", None)) == unbounded
 
 
 def test_search_many_mixed_batch_splits_routes(spark, layouts):

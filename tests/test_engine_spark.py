@@ -212,11 +212,11 @@ class TestNoops:
         assert got == oracle.noop_all("anything")
 
 
-class TestTermDictFallback:
-    def test_search_without_termdict_dir(self, spark, tmp_path, oracle):
-        """term_df's driver-side termdict seek must fall back to the Spark
-        metadata scan when the termdict is absent (older index layout /
-        remote storage), with identical results."""
+class TestTermDictRequired:
+    def test_missing_termdict_dir_fails_loudly(self, spark, tmp_path):
+        """Every committed snapshot names a termdict version, and term_df
+        reads nothing else: an index whose termdict directory was deleted
+        fails to open instead of answering from a second, slower path."""
         import shutil
 
         from visigoth_spark.build import build_index
@@ -226,11 +226,8 @@ class TestTermDictFallback:
         out = str(tmp_path / "idx_no_td")
         build_index(spark, corpus, out, num_partitions=3)
         shutil.rmtree(os.path.join(out, "termdict"))
-        idx = SearchIndex(spark, out)
-        got = [(r["url"], r["score"])
-               for r in idx.search("programación java", "bm25", 10).collect()]
-        exp = oracle.bm25_search("programación java", k=10)
-        assert [u for u, _ in got] == [u for u, _ in exp]
+        with pytest.raises(FileNotFoundError):
+            SearchIndex(spark, out).search("programación java", "bm25", 10)
 
 
 class TestHeadTermSkew:

@@ -158,29 +158,34 @@ class TestHadoopStoreLifecycle:
         assert cat.list() == []
 
     def test_remote_termdict_seek(self, spark, tmp_path, corpus_pdf):
-        """_RemoteTermdict (the object-store df seek: footer parsed once,
-        row-group-pruned ranged reads) must return exactly the same dfs as
-        the index's own term_df — driven through the HadoopStore seekable
-        stream, the code path an s3a:// index takes."""
-        from visigoth_spark.query import _RemoteTermdict
+        """The termdict reader over object-store streams (the
+        object-store df seek: footer parsed once, row-group-pruned ranged
+        reads) must return exactly the same dfs as the index's own
+        term_df — driven through the HadoopStore seekable stream, the
+        code path an s3a:// index takes."""
+        from visigoth_spark.query import _ByteLRU, _termdict_reader
 
         uri = "file://" + str(tmp_path / "td_idx")
         build_index(spark, _df(spark, corpus_pdf), uri, num_partitions=4)
         idx = SearchIndex(spark, uri)
         st = vstore.get_store(uri, spark)
-        rtd = _RemoteTermdict(
-            st, vstore.join(uri, load_snapshot(uri)["termdict"]))
+        rtd = _termdict_reader(
+            st, vstore.join(uri, load_snapshot(uri)["termdict"]), None,
+            _ByteLRU(1 << 20))
         # termdict stores ANALYZED terms (default analyzer stems)
         terms = ["curs", "jav", "program", "zzz-missing"]
-        assert rtd.lookup(terms) == idx.term_df(terms)
-        assert rtd.lookup(["zzz-missing"]) == {"zzz-missing": 0}
+        dfs = idx.term_df(terms)
+        assert rtd.lookup(terms) == {t: d for t, d in dfs.items() if d}
+        assert dfs["zzz-missing"] == 0
+        assert rtd.lookup(["zzz-missing"]) == {}
+        rtd.close()
 
     def test_simulated_remote_serving(self, spark, tmp_path, corpus_pdf,
                                       monkeypatch):
         """End-to-end query path of a TRULY remote index (s3a-like):
         local_path masked to None on a file:// index, so the driver-local
         pyarrow fast paths are all unavailable — term_df must go through
-        _RemoteTermdict's ranged reads, routing must fall back to the
+        the termdict reader's ranged reads, routing must fall back to the
         distributed scan, hydration to the Spark point lookup. Results
         must equal the POSIX-served index exactly."""
         from visigoth_spark.storage import HadoopStore
@@ -199,7 +204,8 @@ class TestHadoopStoreLifecycle:
         expected = _results(SearchIndex(spark, posix))
         assert _results(idx_r) == expected
         # term_df resolved via the remote seek (no local termdict read)
-        assert idx_r._remote_td is not None
+        assert idx_r._td_reader is not None
+        assert idx_r._td_reader._handles  # the store's streams
         dfs = idx_r.term_df(["curs", "zzz-missing"])  # analyzed terms
         assert dfs["curs"] > 0 and dfs["zzz-missing"] == 0
         # batched path too

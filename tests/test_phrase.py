@@ -338,8 +338,8 @@ def test_positions_column_ignored_by_other_engines(pos_idx):
 def test_phrase_and_expansion_on_object_store_uri(spark, tmp_path):
     """Positional index at a file:// URI (HadoopStore control plane): the
     driver-side pos read is unavailable, so phrase runs the DISTRIBUTED
-    route with pos_blob in the pruned scan; prefix expansion falls back to
-    the Spark termdict scan. Results must equal the POSIX oracle."""
+    route with pos_blob in the pruned scan; prefix expansion reads the
+    termdict through its reader. Results must equal the POSIX oracle."""
     from visigoth_spark.build import build_index
 
     out = "file://" + str(tmp_path / "uidx")
@@ -360,11 +360,12 @@ def test_phrase_and_expansion_on_object_store_uri(spark, tmp_path):
     # through the HadoopStore seekable stream
     from visigoth_spark import storage as vstore
     from visigoth_spark.build import load_snapshot
-    from visigoth_spark.query import _RemoteTermdict
+    from visigoth_spark.query import _ByteLRU, _termdict_reader
 
     st = vstore.get_store(out, spark)
-    rtd = _RemoteTermdict(
-        st, vstore.join(out, load_snapshot(out)["termdict"]))
+    rtd = _termdict_reader(
+        st, vstore.join(out, load_snapshot(out)["termdict"]), None,
+        _ByteLRU(0))
     assert rtd.scan_range("pre", "prf") == ["prefab", "prefix", "presto"]
     assert "datum" in rtd.scan_range("", None)  # fuzzy's full-vocab pass
     rtd.close()

@@ -4,19 +4,35 @@ Re-expresses the reference's analysis pipeline (``analyze_compose.go:8-14``:
 tokenizer then filters in registration order; canonical order pinned by
 ``index_memory_index_test.go:11-16`` and ``README.md:67-73``) as ONE fused
 function over pandas Series / Arrow batches — the per-row Go loop
-(``analyze_clean_tokenizer.go:18-27``) becomes a batch regex findall, and the
+(``analyze_clean_tokenizer.go:18-27``) becomes a batch regex split, and the
 per-token stem loop (``analyze_stem_filter.go:9-15``) becomes a
 distinct-vocabulary dict build per batch.
 
 Tokenizer parity: the reference keeps maximal runs of runes where
 ``unicode.IsNumber(r) || unicode.IsLetter(r)`` (``analyze_clean_tokenizer.go:
-37-43``) — i.e. splits on anything that is not a Unicode letter/number. Here:
-``regex`` module pattern ``[\\p{L}\\p{N}]+``. Ordering note: the reference
-tokenizes then lowercases each token; we lowercase the whole text first so the
-tokenize pass is one vectorized call. The two orders agree whenever
-lowercasing does not change a character's letter/number class — true for all
-of Latin/web text including the fixture vocabulary (``León``); pinned by
+37-43``) — i.e. splits on anything that is not a Unicode letter/number:
+the class ``[\\p{L}\\p{N}]``. Ordering note: the reference tokenizes then
+lowercases each token; we lowercase the whole text first so the tokenize
+pass is one vectorized call. The two orders agree whenever lowercasing
+does not change a character's letter/number class — true for all of
+Latin/web text including the fixture vocabulary (``León``); pinned by
 golden tests.
+
+Two engines tokenize with that class, and both lowercase with Arrow's
+``utf8_lower`` (simple case mapping, one implementation of it):
+
+- ``analyze_flat`` (the build, and every batch): Arrow's RE2
+  ``split_pattern_regex`` over a whole column.
+- ``analyze_text`` (one query string): the ``regex`` module's findall,
+  when every code point of the lowered string is below ``U+088F``
+  (``_REGEX_RE2_AGREE_BELOW``). A compute-kernel call costs ~3 ms per
+  query string, mostly compiling its RE2 pattern on every call; the
+  compiled ``regex`` pattern costs microseconds. The two libraries'
+  Unicode tables (``regex`` 2026.5.9, pyarrow 16.1.0's RE2) agree on
+  ``\\p{L}\\p{N}`` for every code point below ``U+088F`` and disagree on
+  9,661 newer assignments above it, so any other string takes the Arrow
+  path. ``tests/test_analysis.py`` checks the agreement on every code
+  point below the gate, so a library upgrade that moves it fails there.
 
 The same analyzer MUST be used at index time and query time
 (``index_memory_index.go:45,63`` uses one pipeline for both).
@@ -31,10 +47,15 @@ from typing import Iterable
 import pandas as pd
 import regex
 
-from visigoth_spark.stemmer_es import stem_vocab
+from visigoth_spark.stemmer_es import stem_cached, stem_vocab
 from visigoth_spark.stopwords_es import SPANISH_STOPWORDS
 
 _TOKEN_RE = regex.compile(r"[\p{L}\p{N}]+")
+
+# the first code point where the regex module's and Arrow RE2's
+# [\p{L}\p{N}] disagree (module docstring): analyze_text tokenizes a
+# lowered string with _TOKEN_RE only when every code point is below it
+_REGEX_RE2_AGREE_BELOW = "\u088f"
 
 
 @dataclass(frozen=True)
@@ -79,9 +100,9 @@ def analyze_flat(texts: pd.Series, cfg: AnalyzerConfig = DEFAULT_ANALYZER):
     per-row ``regex.findall`` path on the bench corpus, on top of the
     cheaper Arrow-native downstream groupby.
 
-    Token-identical to ``analyze_series`` (which the query side uses):
+    Token-identical to ``analyze_text`` (which the query side uses):
     pinned by golden + fuzz identity tests in tests/test_analysis.py.
-    Custom keep-patterns fall back to ``analyze_series`` + flatten."""
+    Custom keep-patterns fall back to the regex-module path + flatten."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -146,7 +167,7 @@ def analyze_flat(texts: pd.Series, cfg: AnalyzerConfig = DEFAULT_ANALYZER):
 def _analyze_lists_python(texts: pd.Series, cfg: AnalyzerConfig) -> list[list[str]]:
     """Regex-module analysis for CUSTOM keep-patterns (the pluggable A7
     surface). NOTE: uses Python ``str.lower()`` — for the default pattern
-    the Arrow path below is authoritative instead (see analyze_series)."""
+    the Arrow lowercasing is authoritative instead (see analyze_series)."""
     s = texts.fillna("")
     if cfg.lowercase:
         s = s.str.lower()
@@ -176,7 +197,7 @@ def analyze_series(texts: pd.Series, cfg: AnalyzerConfig = DEFAULT_ANALYZER) -> 
     context-sensitive characters — Greek final sigma, Turkish İ — and the
     reference's per-rune ``unicode.ToLower`` matches the SIMPLE mapping, so
     the Arrow path is also the better parity choice.) Custom keep-patterns
-    use the regex-module path."""
+    use the regex-module path (``_analyze_lists_python``)."""
     if cfg.keep_pattern == _DEFAULT_KEEP and cfg.lowercase:
         terms, lens = analyze_flat(texts, cfg)
         vals = terms.to_pylist()
@@ -190,7 +211,27 @@ def analyze_series(texts: pd.Series, cfg: AnalyzerConfig = DEFAULT_ANALYZER) -> 
 
 
 def analyze_text(text: str, cfg: AnalyzerConfig = DEFAULT_ANALYZER) -> list[str]:
-    """Driver-side single-string analysis (query strings are tiny)."""
+    """Driver-side single-string analysis (query strings are tiny): the
+    tokens ``analyze_series`` gives for ``[text]``.
+
+    For the default keep-pattern this lowercases with Arrow's
+    ``utf8_lower`` (the build's case mapping), then, when every code point
+    of the lowered string is below ``_REGEX_RE2_AGREE_BELOW``, tokenizes
+    with the compiled ``regex`` pattern, drops stopwords and stems through
+    the ``stem_cached`` memo — without the per-call RE2 compile of
+    ``split_pattern_regex``. Any other string, and custom keep-patterns,
+    go through ``analyze_series``. The module docstring says why the gate
+    keeps both engines token-identical."""
+    if (cfg.keep_pattern == _DEFAULT_KEEP and cfg.lowercase
+            and isinstance(text, str) and text):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        lowered = pc.utf8_lower(pa.scalar(text, pa.string())).as_py()
+        if max(lowered) < _REGEX_RE2_AGREE_BELOW:
+            sw = cfg.stopwords
+            toks = [t for t in _TOKEN_RE.findall(lowered) if t not in sw]
+            return [stem_cached(t) for t in toks] if cfg.stem else toks
     return analyze_series(pd.Series([text]), cfg).iloc[0]
 
 

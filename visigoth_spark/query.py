@@ -3,10 +3,15 @@
 Lifecycle (≙ SURVEY §3.2, re-expressed for Spark):
   plan (SearchIndex._plan, driver, reads only the term dictionary):
           analyze(query) with the SAME analyzer as indexing
-          (index_memory_index.go:45,63 — one pipeline for both), expand
-          prefix/fuzzy tokens, one termdict df probe over query + NOT
-          terms. A term with df=0 means AND-empty: answered without a job
-          (the reference's LinearSearch early exit,
+          (index_memory_index.go:45,63 — one pipeline for both; a query
+          string is tokenized by a precompiled pattern, see
+          analysis.analyze_text), expand prefix/fuzzy tokens against
+          the termdict's range scan, one termdict df probe over query +
+          NOT terms: a binary search in the termdict row groups covering
+          each term, decoded once per snapshot into the driver cache
+          (_SortedParquet; no parquet dataset scan, no Spark job). A term
+          with df=0 means AND-empty: answered without a job (the
+          reference's LinearSearch early exit,
           search_linear_search.go:65-67, promoted to plan time). Then
           idf x boost and the route (_route_driver's cost model).
           explain_query renders this plan without executing it.
@@ -20,8 +25,9 @@ Lifecycle (≙ SURVEY §3.2, re-expressed for Spark):
           galloping intersection via searchsorted (the vectorized analogue
           of two-pointer + skip pointers), exact BM25 scoring, local top-k
     merge: per query, engine order tie-extended at the k boundary -> one
-          docid-pruned docmap point lookup (_docmap_for) hydrates the urls
-          of the whole batch -> url re-tiebreak + head(k), a pandas frame
+          docid-pruned docmap point lookup (_docmap_for: binary search in
+          cached docmap row groups) hydrates the urls of the whole batch
+          -> url re-tiebreak + head(k), a pandas frame
           on the driver. The caller gets it as a _LocalResult: a PySpark
           DataFrame whose collect / take / count / toPandas / schema read
           that frame, so a driver-routed query crosses into the JVM
@@ -42,9 +48,11 @@ oracle.
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 import os
+from collections import OrderedDict
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Iterator
@@ -137,97 +145,235 @@ class QueryPlan:
     after: tuple | None = None
 
 
-class _RemoteTermdict:
-    """Row-group-pruned term-dictionary seek over an OBJECT-STORE index.
-    Locally the termdict is read through pyarrow datasets; on s3a/hdfs the
-    fallback was a Spark job per query just to resolve df/idf. This reads
-    each termdict file's footer ONCE through the store's seekable stream
-    (kept open), then per lookup fetches only the 1 MB row groups whose
-    term range covers a query term — a handful of ranged GETs instead of a
-    job. Termdict files are term-range partitioned and term-sorted
-    (build.py), so ranges are tight and ~disjoint."""
+def _nbytes(value: tuple) -> int:
+    return sum(a.nbytes for a in value)
 
-    def __init__(self, store, td_dir: str):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        self._files = []  # (ParquetFile, [(min, max)] per row group)
-        self._streams = []  # underlying seekables, closed on close()
-        for fn in store.listdir(td_dir):
-            if not fn.endswith(".parquet"):
-                continue
-            f = store.open_seekable(vstore.join(td_dir, fn))
-            self._streams.append(f)
-            pf = pq.ParquetFile(pa.PythonFile(f, mode="r"))
-            md = pf.metadata
-            names = [md.schema.column(i).name
-                     for i in range(md.num_columns)]
-            ci = names.index("term")
+class _ByteLRU:
+    """The driver cache of one SearchIndex: decoded hot terms (str keys,
+    :meth:`SearchIndex._decoded_term`) and decoded row groups of the term
+    dictionary and the docmap (``(path, row_group)`` keys,
+    :class:`_SortedParquet`) in ONE least-recently-used order, bounded by
+    the bytes of the arrays it holds (``driver_cache_max_bytes``). Values
+    are tuples of numpy / Arrow arrays; one larger than the whole budget,
+    or any value under a budget of 0, is not kept."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self.nbytes = 0
+        self.entries: OrderedDict = OrderedDict()
+
+    def __contains__(self, key) -> bool:
+        return key in self.entries
+
+    def get(self, key):
+        hit = self.entries.get(key)
+        if hit is not None:
+            self.entries.move_to_end(key)
+        return hit
+
+    def put(self, key, value: tuple) -> None:
+        cost = _nbytes(value)
+        if self.max_bytes <= 0 or cost > self.max_bytes or key in self:
+            return
+        self.entries[key] = value
+        self.nbytes += cost
+        while self.nbytes > self.max_bytes:
+            self.nbytes -= _nbytes(self.entries.popitem(last=False)[1])
+
+    def drop(self, pred) -> None:
+        """Remove every entry whose key satisfies ``pred``."""
+        for key in [k for k in self.entries if pred(k)]:
+            self.nbytes -= _nbytes(self.entries.pop(key))
+
+
+class _SortedParquet:
+    """Point and range reads over parquet files sorted by one ``key``
+    column — the term dictionary ``termdict/<n>/`` (by term, value ``df``)
+    and the docmap files (by docid, value ``url``) — a row group at a time:
+    the Lucene terms-index shape over columnar blocks probed in place
+    (ICDE 2025, *Columnar Formatted Inverted Index*).
+
+    Each file's footer is read once, for its per-row-group key min/max.
+    A row group is decoded the first time a probe needs it into two
+    arrays, the sorted keys and the values (numpy for integers, Arrow for
+    strings; no per-row Python objects), kept in the index's driver cache
+    (:class:`_ByteLRU`) under ``(path, row_group)``. With a budget of 0 a
+    probe still decodes only the row groups whose range covers its keys.
+    A probe is a binary search verified by equality. String keys are in
+    the writer's (Spark's) UTF-8 byte order, which is code-point order,
+    i.e. Python ``str`` order. A row group the writer left out of key
+    order (``merge_appends``' docmap files: their ``partitionBy("kind")``
+    write does not keep the ``sortWithinPartitions`` order) is sorted
+    once, at decode.
+
+    With ``open_file`` (the termdict: a local file, or an object store's
+    seekable stream so a decode is a ranged GET) each file is opened once
+    and read through that handle until :meth:`close`, so a write op that
+    deletes the files after this reader opened them does not break it.
+    Without (the docmap: too many files to hold open), a file is reopened
+    per decode from its parsed footer, and a cached row group of a file
+    that is gone raises FileNotFoundError: the snapshot was reclaimed
+    under this reader, which must fail loudly, not serve what is left."""
+
+    def __init__(self, paths: list[str], key: str, value: str,
+                 cache: _ByteLRU, open_file=None):
+        self.paths = list(paths)
+        self._cols = [key, value]
+        self._cache = cache
+        self._open_file = open_file
+        # path -> (FileMetaData | ParquetFile on a held handle,
+        #          [(min, max) | None per row group])
+        self._files: dict = {}
+        self._handles: list = []
+
+    def _ranges(self, path: str) -> list:
+        """The key (min, max) of each row group of ``path`` (None: no
+        statistics, always read); the footer is parsed on first use."""
+        f = self._files.get(path)
+        if f is None:
+            import pyarrow.parquet as pq
+
+            if self._open_file is None:
+                src = md = pq.read_metadata(path)
+            else:
+                self._handles.append(self._open_file(path))
+                src = pq.ParquetFile(self._handles[-1])
+                md = src.metadata
+            ci = md.schema.names.index(self._cols[0])
             ranges = []
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(ci).statistics
-                if st is None or st.min is None or st.max is None:
-                    ranges.append(None)  # no stats: always read
-                else:
-                    ranges.append((st.min, st.max))
-            self._files.append((pf, ranges))
+                ok = (st is not None and st.has_min_max and not
+                      isinstance(st.min, bytes) and not
+                      isinstance(st.max, bytes))
+                ranges.append((st.min, st.max) if ok else None)
+            f = self._files[path] = (src, ranges)
+        return f[1]
 
-    def lookup(self, terms: list[str]) -> dict[str, int]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def open(self) -> None:
+        """Read every file's footer now (and, with ``open_file``, open
+        it)."""
+        for path in self.paths:
+            self._ranges(path)
 
-        out = {t: 0 for t in terms}
-        tset = pa.array(terms, type=pa.string())
-        for pf, ranges in self._files:
-            need = [
-                i for i, r in enumerate(ranges)
-                if r is None or any(r[0] <= t <= r[1] for t in terms)
-            ]
-            for i in need:
-                # Arrow-side probe: is_in + filter stay in C, so only the
-                # <= len(terms) matched rows ever cross into Python (a
-                # 1 MB row group of a pathological vocabulary would
-                # otherwise be marshalled wholesale per query)
-                tbl = pf.read_row_group(i, columns=["term", "df"])
-                hit = tbl.filter(pc.is_in(tbl["term"], value_set=tset))
-                for t, d in zip(hit["term"].to_pylist(),
-                                hit["df"].to_pylist()):
-                    out[t] += int(d)
+    def _block(self, path: str, rg: int) -> tuple:
+        """(sorted keys, values) of one row group, through the cache."""
+        import pyarrow.parquet as pq
+
+        src = self._files[path][0]
+        blk = self._cache.get((path, rg))
+        if blk is not None:
+            if self._open_file is None and not os.path.exists(path):
+                raise FileNotFoundError(
+                    f"{path}: reclaimed under this reader (refresh() or "
+                    f"reopen the index)")
+            return blk
+        if isinstance(src, pq.FileMetaData):
+            with pq.ParquetFile(path, metadata=src) as pf:
+                tbl = pf.read_row_group(rg, columns=self._cols)
+        else:
+            tbl = src.read_row_group(rg, columns=self._cols)
+        blk = _sorted_block(*(tbl.column(c) for c in self._cols))
+        self._cache.put((path, rg), blk)
+        return blk
+
+    def lookup(self, keys: list, paths=None) -> dict:
+        """{key: value} for each of ``keys`` found, visiting only
+        ``paths`` (default: every file) and in them only the row groups
+        whose range covers the key."""
+        need: dict = {}
+        for path in self.paths if paths is None else paths:
+            for rg, r in enumerate(self._ranges(path)):
+                ks = [k for k in keys if r is None or r[0] <= k <= r[1]]
+                if ks:
+                    need[path, rg] = ks
+        out = {}
+        for (path, rg), ks in need.items():
+            karr, vals = self._block(path, rg)
+            for k in ks:
+                i = _bisect_left(karr, k)
+                if i < len(karr) and _key_at(karr, i) == k:
+                    out[k] = _key_at(vals, i)
         return out
 
     def scan_range(self, lo: str, hi: str | None) -> list[str]:
-        """Vocabulary terms in [lo, hi) — the prefix-expansion range seek
-        for object-store indexes: only the row groups whose term range
-        intersects the window are fetched (ranged GETs); hi=None scans the
-        whole vocabulary (the fuzzy candidate pass)."""
-        import pyarrow.compute as pc
-
+        """The string keys in [lo, hi), sorted; ``hi=None`` reads every
+        key (the fuzzy candidate pass over the whole vocabulary)."""
         out: list[str] = []
-        for pf, ranges in self._files:
-            need = [
-                i for i, r in enumerate(ranges)
-                if r is None or (r[1] >= lo and (hi is None or r[0] < hi))
-            ]
-            for i in need:
-                tbl = pf.read_row_group(i, columns=["term"])
-                m = pc.greater_equal(tbl["term"], lo)
-                if hi is not None:
-                    m = pc.and_(m, pc.less(tbl["term"], hi))
-                out.extend(tbl.filter(m)["term"].to_pylist())
+        for path in self.paths:
+            for rg, r in enumerate(self._ranges(path)):
+                if r is None or (r[1] >= lo and (hi is None or r[0] < hi)):
+                    karr, _ = self._block(path, rg)
+                    i = _bisect_left(karr, lo)
+                    j = len(karr) if hi is None else _bisect_left(karr, hi)
+                    out.extend(karr.slice(i, max(0, j - i)).to_pylist())
         return sorted(out)
 
     def close(self) -> None:
-        """Release the held JVM streams. Called when the reader is
-        invalidated (e.g. a maintenance op swapped the termdict under it)
-        — without this a long-lived serving index would leak one
-        FSDataInputStream per termdict file per rebuild."""
+        """Release the held file handles (a refresh builds a new reader
+        over the new snapshot's files)."""
         import contextlib
 
-        for f in self._streams:
+        for f in self._handles:
             with contextlib.suppress(Exception):
                 f.close()
-        self._files = []
-        self._streams = []
+        self._files = {}
+        self._handles = []
+
+
+def _sorted_block(keys, vals) -> tuple:
+    """(keys, values) of one row group, sorted by key: numpy for integer
+    columns, Arrow arrays otherwise."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, vals = keys.combine_chunks(), vals.combine_chunks()
+    n = len(keys)
+    if n > 1 and not pc.all(pc.less_equal(keys.slice(0, n - 1),
+                                          keys.slice(1))).as_py():
+        order = pc.sort_indices(keys)
+        keys, vals = keys.take(order), vals.take(order)
+    return tuple(a.to_numpy(zero_copy_only=False)
+                 if pa.types.is_integer(a.type) else a for a in (keys, vals))
+
+
+def _key_at(arr, i: int):
+    if isinstance(arr, np.ndarray):
+        return arr[i].item()
+    return arr[i].as_py()
+
+
+def _bisect_left(keys, k) -> int:
+    """Leftmost insertion point of ``k`` in sorted ``keys``: numpy
+    searchsorted, or a bisect over the UTF-8 bytes of an Arrow string
+    array (byte order is code-point order)."""
+    if isinstance(keys, np.ndarray):
+        return int(np.searchsorted(keys, k))
+    if not len(keys):
+        return 0
+    offs = np.frombuffer(keys.buffers()[1], np.int32, len(keys) + 1,
+                         keys.offset * 4)
+    data = memoryview(keys.buffers()[2] or b"")
+    return bisect.bisect_left(range(len(keys)), k.encode(),
+                              key=lambda i: data[offs[i]:offs[i + 1]]
+                              .tobytes())
+
+
+def _termdict_reader(store, td_dir: str, local_dir: str | None,
+                     cache: _ByteLRU) -> _SortedParquet:
+    """The term -> df reader of one termdict version: its files held open
+    locally from ``local_dir`` when the bytes are local, else through the
+    store's seekable streams (ranged GETs on an object store)."""
+    import pyarrow as pa
+
+    names = [fn for fn in store.listdir(td_dir) if fn.endswith(".parquet")]
+    if local_dir:
+        return _SortedParquet([os.path.join(local_dir, fn) for fn in names],
+                              "term", "df", cache, pa.OSFile)
+    return _SortedParquet(
+        [vstore.join(td_dir, fn) for fn in names], "term", "df", cache,
+        lambda p: pa.PythonFile(store.open_seekable(p), mode="r"))
 
 
 class _RangePruner:
@@ -286,62 +432,57 @@ class SearchIndex:
         self.driver_local_max_bytes = driver_local_max_bytes
         self.driver_local_max_postings = driver_local_max_postings
         self.driver_cache_max_bytes = driver_cache_max_bytes
-        # hot-term cache for the driver-local route: decoded (ids, tfs,
-        # dls) per term, LRU-bounded by decoded bytes. Snapshot-consistent
-        # by construction — a SearchIndex instance plans from the snapshot
-        # read at __init__, so cache entries can never mix index
-        # generations. ~24 B/posting decoded; the default budget holds
-        # ~10M postings, i.e. every term the routing bound would serve
-        # driver-side anyway.
-        from collections import OrderedDict
-        self._term_cache: "OrderedDict[str, tuple]" = OrderedDict()
-        self._term_cache_bytes = 0
+        # the driver cache (_ByteLRU): the hot-term cache of the
+        # driver-local route — decoded (ids, tfs, dls) per term — and the
+        # decoded termdict / docmap row groups, LRU-bounded together by
+        # decoded bytes. Snapshot-consistent by construction — a
+        # SearchIndex instance plans from the snapshot read at __init__,
+        # and refresh() evicts what the new snapshot changed. ~24 B/posting
+        # decoded; the default budget holds ~10M postings, i.e. every term
+        # the routing bound would serve driver-side anyway.
+        self._cache = _ByteLRU(driver_cache_max_bytes)
         self._cached = False
         self._store = vstore.get_store(index_dir, spark)
         # POSIX path when the index bytes are directly readable by local
         # libraries (plain paths and file:// URIs). None on object stores:
-        # the driver-local pyarrow fast paths (routing, termdict seek,
-        # docmap point lookup) are skipped and every query runs the
-        # distributed route — the right split there anyway (those paths
-        # exist to dodge job latency on local serving, not to stream an
-        # object store through the driver).
+        # the driver-local pyarrow fast paths (routing, docmap point
+        # lookup) are skipped and every query runs the distributed route
+        # — the right split there anyway (those paths exist to dodge job
+        # latency on local serving, not to stream an object store through
+        # the driver). The termdict seek runs on both (ranged GETs there).
         self._local_root = self._store.local_path(index_dir)
-        self._remote_td = None  # lazy _RemoteTermdict for URI indexes
+        self._td_reader = None  # the termdict's _SortedParquet
         self._open_snapshot()
+
+    @property
+    def _term_cache(self) -> dict:
+        """The hot-term entries of the driver cache (term -> arrays)."""
+        return {k: v for k, v in self._cache.entries.items()
+                if isinstance(k, str)}
+
+    @property
+    def _term_cache_bytes(self) -> int:
+        """Bytes held by the whole driver cache (terms and row groups)."""
+        return self._cache.nbytes
 
     def _open_snapshot(self) -> None:
         """Read the index's committed snapshot (one listing plus one read,
         build.load_snapshot; FileNotFoundError before a build's final
         commit) and derive what this instance serves until
-        :meth:`refresh`: stats, the visible batches, the scan DataFrames,
-        the file-range pruners, the tombstones and the sidecar paths."""
-        spark, index_dir = self.spark, self.index_dir
+        :meth:`refresh`: stats, the visible batches, the file-range
+        pruners, the tombstones, the sidecar paths and the docmap reader.
+        Opening lists no data directory: the Spark scan relations
+        (``_postings``, ``_docmap``) are built on their first use."""
+        index_dir = self.index_dir
         snap = _require(index_dir, self._store)
         self.stats = snap["stats"]
         self._manifests = [b for b in snap["batches"] if b["n_docs"]]
         self._batches = [b["batch"] for b in self._manifests]
-        data_root = f"{index_dir}/data"
-        data = spark.read.option("basePath", data_root).parquet(
-            *[os.path.join(data_root, f"batch={b}") for b in self._batches])
-        # kind is a partition directory -> these filters prune whole files
-        post_cols = ["term", "bucket", "df_seg", "sum_tf", "min_docid",
-                     "max_docid", "blob", "skips"]
-        if bool(self.stats.get("store_positions")) and (
-            "pos_blob" in data.columns
-        ):
-            # keep the positional stream reachable through the cached
-            # scan path too (phrase on .cache()d indexes)
-            post_cols.append("pos_blob")
-        self._postings = data.filter(F.col("kind") == "s").select(*post_cols)
+        for rel in ("_data", "_postings", "_docmap"):
+            self.__dict__.pop(rel, None)
         # Doc.Raw sidecar (search_result.go:6-9): present when the index
         # was built with store_raw/statement_col
-        self.has_raw = bool(self.stats.get("store_raw")) and (
-            "raw" in data.columns
-        )
-        doc_cols = ["docid", "url", "doclen"] + (
-            ["raw"] if self.has_raw else []
-        )
-        self._docmap = data.filter(F.col("kind") == "d").select(*doc_cols)
+        self.has_raw = bool(self.stats.get("store_raw"))
         # per-file term ranges of every visible segment file: the query
         # plan enumerates ONLY the files whose range covers a query term —
         # the Lucene term-dictionary -> segment-seek analogue at file
@@ -358,9 +499,7 @@ class SearchIndex:
         # query (profiled ~0.3 s/query on a 6M-doc index's docmap point
         # lookups). Keyed by the opened path set, LRU-bounded; cleared on
         # snapshot reopen (refresh — visibility changes the path sets).
-        from collections import OrderedDict as _OD
-
-        self._ds_cache: "dict" = _OD()
+        self._ds_cache: "dict" = OrderedDict()
         # LSM tombstones (build.delete_docs): sorted docid array masked out
         # of every engine's candidates; purged + cleared by compact_index.
         if getattr(self, "_tomb_bv", None) is not None:
@@ -373,15 +512,61 @@ class SearchIndex:
             if ids:
                 self._tombstones = np.asarray(ids, dtype=np.int64)
         # sidecars: the snapshot's termdict version (URI, and the local
-        # path when readable) and fuzzydict files — fresh by construction
+        # path when readable) and fuzzydict files — fresh by construction.
+        # Every snapshot a reader can open names a termdict: the build's
+        # final commit writes it, and every later op keeps or replaces it.
         td = snap["termdict"]
-        self._termdict = td and vstore.join(index_dir, td)
-        self._termdict_local = (td and self._local_root
+        self._termdict = vstore.join(index_dir, td)
+        self._termdict_local = (self._local_root
                                 and os.path.join(self._local_root, td))
+        if self._td_reader is not None:
+            self._td_reader.close()
+        self._td_reader = None
+        if self._local_root:
+            # hold this version's files open from now on: the next append
+            # deletes it, and this snapshot's reader still reads it
+            self._termdict_probe().open()
         fd = snap["fuzzydict"]
         self._fuzzydict_files = fd["files"] if fd else []
         self._fuzzydict_ok = fd is not None
         self._fuzzydict_d = fd["max_edits"] if fd else 0
+        # docid -> url point reads over the docmap files (local indexes);
+        # cached row groups of files this snapshot no longer names, and of
+        # any other termdict version, are dropped
+        doc_paths = ([os.path.join(self._local_root, e["path"])
+                      for e in self._docfiles] if self._local_root else [])
+        self._doc_reader = _SortedParquet(doc_paths, "docid", "url",
+                                          self._cache)
+        live = set(doc_paths)
+        td_dirs = (self._termdict, self._termdict_local)
+        self._cache.drop(lambda k: isinstance(k, tuple) and not (
+            k[0] in live or os.path.dirname(k[0]) in td_dirs))
+
+    @cached_property
+    def _data(self) -> DataFrame:
+        """Every visible batch's files, one Spark relation (a JVM listing:
+        built only when a distributed path first needs it)."""
+        data_root = f"{self.index_dir}/data"
+        return self.spark.read.option("basePath", data_root).parquet(
+            *[os.path.join(data_root, f"batch={b}") for b in self._batches])
+
+    @cached_property
+    def _postings(self) -> DataFrame:
+        """The segment rows of every visible batch (kind is a partition
+        directory, so the filter prunes whole files)."""
+        cols = ["term", "bucket", "df_seg", "sum_tf", "min_docid",
+                "max_docid", "blob", "skips"]
+        if self.has_positions:
+            # the positional stream, for phrase on .cache()d indexes
+            cols.append("pos_blob")
+        return self._data.filter(F.col("kind") == "s").select(*cols)
+
+    @cached_property
+    def _docmap(self) -> DataFrame:
+        """The docmap rows (docid, url, doclen[, raw]) of every visible
+        batch."""
+        cols = ["docid", "url", "doclen"] + (["raw"] if self.has_raw else [])
+        return self._data.filter(F.col("kind") == "d").select(*cols)
 
     # above this size, ship the tombstone set to executors ONCE (Spark
     # broadcast) instead of with every task's kernel closure
@@ -425,10 +610,12 @@ class SearchIndex:
         results), but a serving process previously had to construct a NEW
         instance (cold hot-term cache) to see a committed
         append/merge/compact. refresh() reads the current snapshot, swaps
-        the scan DataFrames and file-range pruners, closes the
-        remote-termdict streams (footers re-parsed lazily against the new
-        files), and evicts the hot-term cache SELECTIVELY, from a diff of
-        the old and new snapshots' batch lists:
+        the file-range pruners, drops the Spark scan relations (rebuilt on
+        their next use), replaces the termdict reader (its held files
+        closed, the new version's opened), drops the cached termdict /
+        docmap row groups of files the new snapshot no longer names, and
+        evicts the hot-term cache SELECTIVELY, from a diff of the old and
+        new snapshots' batch lists:
 
         - pure appends (every previously visible batch entry unchanged,
           only new batches added): evict only terms present in the ADDED
@@ -454,9 +641,6 @@ class SearchIndex:
             self._postings.unpersist()
             self._docmap.unpersist()
             self._cached = False
-        if self._remote_td is not None:
-            self._remote_td.close()
-            self._remote_td = None
         self._open_snapshot()
         if self._term_cache:
             self._refresh_evict(old)
@@ -509,15 +693,11 @@ class SearchIndex:
             return None
 
     def _evict_terms(self, terms: set[str] | None) -> None:
-        if terms is None:  # couldn't attribute -> full eviction
-            self._term_cache.clear()
-            self._term_cache_bytes = 0
-            return
-        for t in terms:
-            for key in (t, _POS_KEY + t):  # plain AND positional entries
-                hit = self._term_cache.pop(key, None)
-                if hit is not None:
-                    self._term_cache_bytes -= sum(a.nbytes for a in hit)
+        if terms is None:  # couldn't attribute -> every term entry
+            return self._cache.drop(lambda k: isinstance(k, str))
+        # plain AND positional entries
+        keys = set(terms).union(_POS_KEY + t for t in terms)
+        self._cache.drop(keys.__contains__)
 
     _SEG_COLS = ["term", "bucket", "min_docid", "blob", "skips"]
     # phrase scans: skips are unused (no WAND over phrase candidates
@@ -626,28 +806,16 @@ class SearchIndex:
         prefix). None when the driver-side read isn't possible (caller
         falls back to the distributed route)."""
         key = _POS_KEY + term if positional else term
-        hit = self._term_cache.get(key)
+        hit = self._cache.get(key)
         if hit is not None:
-            self._term_cache.move_to_end(key)
             return hit
         pdf = self._driver_seg_rows(
             [term], cols=self._SEG_COLS_POS if positional else None)
         if pdf is None:
             return None
         decoded = _decode_term_segments(pdf, term, positional)
-        self._cache_put(key, decoded)
+        self._cache.put(key, decoded)
         return decoded
-
-    def _cache_put(self, key: str, decoded: tuple) -> None:
-        if self.driver_cache_max_bytes <= 0:
-            return
-        cost = sum(a.nbytes for a in decoded)
-        if cost <= self.driver_cache_max_bytes:
-            self._term_cache[key] = decoded
-            self._term_cache_bytes += cost
-            while self._term_cache_bytes > self.driver_cache_max_bytes:
-                _, old = self._term_cache.popitem(last=False)
-                self._term_cache_bytes -= sum(a.nbytes for a in old)
 
     @property
     def has_positions(self) -> bool:
@@ -657,55 +825,16 @@ class SearchIndex:
         return bool(self.stats.get("store_positions"))
 
     # ---- term-dictionary expansion (prefix / fuzzy engines) ---------------
-    def _vocab_range(self, lo: str, hi: str | None) -> list[str] | None:
-        """Terms in [lo, hi) from the term-sorted termdict. Driver-side
-        pyarrow read with the range pushed to row-group stats when the
-        index is local; Spark termdict scan otherwise. None only when the
-        index has no termdict at all (callers raise)."""
-        td = self._termdict_local
-        if td and os.path.isdir(td):
-            try:
-                import pyarrow.dataset as ds
-
-                flt = ds.field("term") >= lo
-                if hi is not None:
-                    flt = flt & (ds.field("term") < hi)
-                tbl = self._dataset(td).to_table(
-                    columns=["term"], filter=flt)
-                return tbl["term"].to_pylist()
-            except Exception:
-                pass
-        got = self._remote_termdict(lambda td: td.scan_range(lo, hi))
-        if got is not None:
-            return got
-        td_uri = self._termdict
-        if not td_uri or not self._store.isdir(td_uri):
-            return None
-        df = self.spark.read.parquet(td_uri).filter(F.col("term") >= lo)
-        if hi is not None:
-            df = df.filter(F.col("term") < hi)
-        return [r["term"] for r in df.select("term").collect()]
-
-    def _remote_termdict(self, read):
-        """``read(_RemoteTermdict)`` on an object-store index: a
-        row-group-pruned remote termdict seek (footers parsed once, cached)
-        — a few ranged GETs instead of a Spark job. None on a local index,
-        without a termdict, or when the read fails (the JVM streams are
-        released; callers fall back to a Spark scan)."""
-        if self._local_root is not None:
-            return None
-        try:
-            td_uri = self._termdict
-            if self._remote_td is None and td_uri and \
-                    self._store.isdir(td_uri):
-                self._remote_td = _RemoteTermdict(self._store, td_uri)
-            if self._remote_td is not None:
-                return read(self._remote_td)
-        except Exception:
-            if self._remote_td is not None:
-                self._remote_td.close()
-            self._remote_td = None
-        return None
+    def _termdict_probe(self) -> _SortedParquet:
+        """The snapshot's term dictionary reader (opened with the snapshot
+        on a local index, on first use on an object store): the df lookup
+        of term_df and the range scans of the prefix / fuzzy expansions,
+        with no Spark job on any store."""
+        if self._td_reader is None:
+            self._td_reader = _termdict_reader(
+                self._store, self._termdict, self._termdict_local,
+                self._cache)
+        return self._td_reader
 
     def expand_prefix(self, prefix: str, max_terms: int = 1024) -> list[str]:
         """Vocabulary terms starting with ``prefix`` (over the ANALYZED
@@ -717,11 +846,7 @@ class SearchIndex:
         if not prefix:
             return []
         hi = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-        terms = self._vocab_range(prefix, hi)
-        if terms is None:
-            raise ValueError(
-                "prefix expansion requires an index with a termdict")
-        return sorted(terms)[:max_terms]
+        return self._termdict_probe().scan_range(prefix, hi)[:max_terms]
 
     def suggest(self, term: str, max_edits: int = 1, k: int = 5
                 ) -> list[tuple[str, int]]:
@@ -853,10 +978,7 @@ class SearchIndex:
                 out = [t for t in cands
                        if _edit_distance_le(term, t, max_edits)]
                 return sorted(out)[:max_terms]
-        terms = self._vocab_range("", None)
-        if terms is None:
-            raise ValueError(
-                "fuzzy expansion requires an index with a termdict")
+        terms = self._termdict_probe().scan_range("", None)
         lt = len(term)
         out = [t for t in terms
                if abs(len(t) - lt) <= max_edits
@@ -868,42 +990,13 @@ class SearchIndex:
         return self.stats["n_docs"]
 
     def term_df(self, terms: list[str]) -> dict[str, int]:
-        """df per term. Fast path: driver-side pruned read of the term-sorted
-        termdict parquet (row-group stats skip everything outside the query
-        terms) — a term-dictionary seek, no Spark job. Falls back to a Spark
-        metadata scan for indexes built without a termdict or on non-local
-        storage."""
+        """df per term: a term-dictionary seek — binary search in the
+        termdict row groups whose term range covers each term, decoded
+        once into the driver cache (:class:`_SortedParquet`); no Spark
+        job, on local and object-store indexes alike."""
         if not terms:
             return {}
-        got = self._remote_termdict(lambda td: td.lookup(terms))
-        if got is not None:
-            return got
-        out = {t: 0 for t in terms}
-        td = self._termdict_local
-        if td and os.path.isdir(td):
-            try:
-                import pyarrow.dataset as ds
-
-                # termdict/<n>/ is immutable: the cached handle stays valid
-                tbl = self._dataset(td).to_table(
-                    columns=["term", "df"],
-                    filter=ds.field("term").isin(terms),
-                )
-                for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-                    out[t] = int(d)
-                return out
-            except Exception:
-                pass
-        seg = self._seg_scan(terms, cols=["term", "df_seg"])
-        if seg is None:  # no segment file's term range covers any term
-            return out
-        rows = (
-            seg.groupBy("term")
-            .agg(F.sum("df_seg").alias("df"))
-            .collect()
-        )
-        out.update({r["term"]: r["df"] for r in rows})
-        return out
+        return dict.fromkeys(terms, 0) | self._termdict_probe().lookup(terms)
 
     _DS_CACHE_MAX = 64
 
@@ -927,33 +1020,31 @@ class SearchIndex:
 
     def _docmap_for(self, ids: list[int], with_raw: bool = False
                     ) -> dict[int, tuple[str, str | None]]:
-        """docid -> (url, raw) point lookup. Driver-side pruned read of the
-        docid-sorted docmap files (row-group stats make this touch only the
-        row groups covering the ids); Spark fallback otherwise."""
+        """docid -> (url, raw) point lookup on the driver, reading only
+        the docmap files whose docid range covers a requested id (the
+        snapshot lists only visible batches' files): urls through the
+        docmap reader's cached row groups, ``raw`` through a pyarrow
+        dataset read filtered to the ids. Spark lookup when the index is
+        not local or an id was not found."""
         with_raw = with_raw and self.has_raw
-        cols = ["docid", "url"] + (["raw"] if with_raw else [])
-        try:
-            if self._local_root is None:
-                raise OSError("non-local index")  # -> Spark fallback below
-            import pyarrow.dataset as ds
+        if self._local_root is not None:
+            paths = [os.path.join(self._local_root, p)
+                     for p in self._doc_prune.prune(ids)]
+            if with_raw:
+                import pyarrow.dataset as ds
 
-            # open only the files whose docid range covers a requested id
-            # (the snapshot lists only visible batches' files); an id no
-            # file admits fails the completeness check below
-            data = self._dataset([os.path.join(self._local_root, p)
-                                  for p in self._doc_prune.prune(ids)])
-            flt = ds.field("docid").isin(ids)
-            tbl = data.to_table(columns=cols, filter=flt)
-            raws = (tbl["raw"].to_pylist() if with_raw
-                    else [None] * len(tbl))
-            got = {
-                d: (u, r) for d, u, r in
-                zip(tbl["docid"].to_pylist(), tbl["url"].to_pylist(), raws)
-            }
+                tbl = self._dataset(paths).to_table(
+                    columns=["docid", "url", "raw"],
+                    filter=ds.field("docid").isin(ids))
+                got = dict(zip(tbl["docid"].to_pylist(),
+                               zip(tbl["url"].to_pylist(),
+                                   tbl["raw"].to_pylist())))
+            else:
+                got = {d: (u, None) for d, u in
+                       self._doc_reader.lookup(ids, paths).items()}
             if len(got) == len(set(ids)):
                 return got
-        except Exception:
-            pass
+        cols = ["docid", "url"] + (["raw"] if with_raw else [])
         rows = (
             self._docmap.filter(F.col("docid").isin(ids))
             .select(*cols).collect()
@@ -1047,8 +1138,7 @@ class SearchIndex:
             "seg_files_planned": (None if pruned is None else len(pruned)),
             "seg_files_total": (None if self._segfiles is None
                                 else len(self._segfiles)),
-            "cached_terms": [t for t in p.terms
-                             if key + t in self._term_cache],
+            "cached_terms": [t for t in p.terms if key + t in self._cache],
             "n_docs": self.stats["n_docs"],
         }
 
