@@ -37,7 +37,8 @@ DOCS_PER_SF = 6_000_000  # sf0.1 -> 600k docs
 
 # Scaling-run parallelism levels (N and 4N). NOT 8 vs 32: this host
 # advertises 32 vCPUs but delivers only ~12 physical cores' worth of
-# aggregate compute (tools/cpu_scaling.py: throughput peaks at ~16 procs
+# aggregate compute (a CPU-scaling probe, in git history as
+# tools/cpu_scaling.py at 9d56d7a: throughput peaks at ~16 procs
 # and DROPS at 32), so an 8->32 wall-clock comparison measures vCPU
 # oversubscription, not the engine. 2->8 stays inside the host's linear
 # region and is the honest N->4N evidence (protocol + host data in
@@ -797,10 +798,10 @@ Per-query latencies (sec): {json.dumps(r['queries'], indent=0)}
 Positional suite (sec): {json.dumps(r.get('positional', {}).get('queries', {}), indent=0)}
 
 Round-5 evidence (not regenerated by this file): the same-window A/B of
-round-3 vs round-4 code with finalize_segments on/off (tools/ab_bench.py,
-ab_bench_out.json) and the sf1 6M-doc scale run (tools/sf1_bench.py,
-sf1_bench_out.json) are reported in BASELINE.md under "Round-5 A/B window"
-and "Round-5 sf1 scale run".
+round-3 vs round-4 code with finalize_segments on/off (ab_bench_out.json,
+from tools/ab_bench.py, in git history at a806d10) and the sf1 6M-doc
+scale run (tools/sf1_bench.py, sf1_bench_out.json) are reported in
+BASELINE.md under "Round-5 A/B window" and "Round-5 sf1 scale run".
 """
     with open(os.path.join(_REPO, "BENCH.md"), "w") as f:
         f.write(md)

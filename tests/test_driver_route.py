@@ -287,9 +287,9 @@ def test_hot_term_cache_respects_byte_budget(spark, layouts):
 def test_scan_relations_built_on_first_distributed_use(spark, layouts):
     """Opening a SearchIndex and serving driver-routed queries lists no
     data directory: the Spark scan relations (``_data`` and the
-    ``_postings`` / ``_docmap`` views of it) are built on their first
-    distributed use, and refresh() drops them."""
-    rels = {"_data", "_postings", "_docmap"}
+    ``_docmap`` view of it) are built on their first distributed use, and
+    refresh() drops them."""
+    rels = {"_data", "_docmap"}
     idx = SearchIndex(spark, layouts["appended"])
     assert idx.search("programación java", "bm25", 10,
                       route="driver").collect()

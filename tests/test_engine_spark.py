@@ -68,7 +68,7 @@ class TestBuild:
 
     def test_segment_bounded_by_bucket_width(self, index):
         bw = index.stats["bucket_width"]
-        rows = index._postings.select("df_seg").collect()
+        rows = index._data.filter("kind = 's'").select("df_seg").collect()
         assert max(r["df_seg"] for r in rows) <= bw
 
 
@@ -128,7 +128,7 @@ class TestWandParity:
     @pytest.mark.parametrize("q", QUERIES)
     def test_wand_equals_exhaustive(self, index, oracle, q):
         got = [(r["url"], r["score"])
-               for r in index.search(q, "bm25_wand", k=10).collect()]
+               for r in index.search(q, "bm25", k=10).collect()]
         exp = oracle.bm25_search(q, k=10)
         assert [u for u, _ in got] == [u for u, _ in exp], q
         for (u1, s1), (u2, s2) in zip(got, exp):
@@ -184,8 +184,8 @@ class TestSearchMany:
              "xyzzynomatch", "curso web", "java java"]
 
     @pytest.mark.parametrize("engine",
-                             ["bm25", "bm25_wand", "bm25_exhaustive",
-                              "bm25_or", "hits", "linear"])
+                             ["bm25", "bm25_exhaustive", "bm25_or", "hits",
+                              "linear"])
     def test_batch_equals_single(self, index, engine):
         batch = index.search_many(self.BATCH, engine, k=10).collect()
         by_qid: dict[int, list] = {}
@@ -250,7 +250,8 @@ class TestHeadTermSkew:
         idx = SearchIndex(spark, out)
         stats = load_stats(out)
 
-        seg = idx._postings.filter("term = 'omnipresent'")  # stemmed form
+        seg = idx._data.filter(  # stemmed form
+            "kind = 's' AND term = 'omnipresent'")
         rows = seg.select("bucket", "df_seg").collect()
         # present in every doc -> one segment per bucket, each bounded by
         # the structural per-partition doc count

@@ -359,3 +359,37 @@ def test_half_written_manifests_regenerated_by_next_merge(spark, tmp_path,
     assert len(idx._docfiles) == sum(len(b["docfiles"])
                                      for b in _visible(out))
     assert idx.search("curso", "bm25", 10).count() > 0
+
+
+def _unsorted_files(out):
+    """Data files of the snapshot's batches whose rows are out of key
+    order: ``kind=s`` files must be term-sorted, ``kind=d`` files
+    docid-sorted (the row-group min/max the readers prune on assume it)."""
+    import pyarrow.parquet as pq
+
+    bad = []
+    for b in _visible(out):
+        bdir = os.path.join(out, "data", f"batch={b['batch']}")
+        for kind, key in (("s", "term"), ("d", "docid")):
+            kdir = os.path.join(bdir, f"kind={kind}")
+            for fn in sorted(os.listdir(kdir)):
+                if not fn.endswith(".parquet"):
+                    continue
+                keys = pq.read_table(os.path.join(kdir, fn),
+                                     columns=[key])[key].to_pylist()
+                if keys != sorted(keys):
+                    bad.append(f"batch={b['batch']}/kind={kind}/{fn}")
+    return bad
+
+
+def test_merged_and_compacted_files_are_key_sorted(spark, tmp_path):
+    """merge_appends and compact_index sort within each output file and
+    write it under ``kind=``; the write must keep that order."""
+    _, slices = _slices(300, 3)
+    out = _appended(spark, tmp_path, "sorted", slices)
+    merge_appends(spark, out, num_partitions=2)
+    assert any(b.get("merged") for b in _visible(out))
+    assert _unsorted_files(out) == []
+    compact_index(spark, out, num_partitions=4)
+    assert [b.get("compacted") for b in _visible(out)] == [True]
+    assert _unsorted_files(out) == []

@@ -515,23 +515,6 @@ def test_phrase_body_fuzz_vs_brute():
         assert got == want, (trial, tokens, slop, docs, got, want)
 
 
-def test_phrase_on_cached_index(spark, tmp_path):
-    """.cache() pins the postings DataFrame and disables file pruning —
-    the positional column must remain reachable through that scan path
-    (regression: _postings originally projected pos_blob away)."""
-    from visigoth_spark.build import build_index
-
-    out = str(tmp_path / "cacheidx")
-    df = spark.createDataFrame(DOCS[:8], "url string, text string")
-    build_index(spark, df, out, analyzer=AN, num_partitions=2,
-                store_positions=True)
-    idx = SearchIndex(spark, out, analyzer=AN).cache()
-    corpus = {u: analyze_text(t, AN) for u, t in DOCS[:8]}
-    want = phrase_oracle(corpus, ("alpha", "beta"))
-    got = _got(idx.search("alpha beta", engine="phrase", k=10))
-    _assert_matches(got, want)
-
-
 def test_streamed_appends_inherit_positions(spark, tmp_path):
     """A stream appending into a positional base index inherits
     store_positions (epoch appends read the flag from stats), so phrase

@@ -101,8 +101,9 @@ class TestRangePruner:
         )
         assert list(d.prune([5, 12])) == ["x", "y"]
         assert list(d.prune([25])) == []
-        assert _RangePruner(None, "term").prune(["a"]) is None
-        assert _RangePruner([], "docid").prune([1]) is None
+        # no manifest prunes to no file, never to "scan everything"
+        assert list(_RangePruner(None, "term").prune(["a"])) == []
+        assert list(_RangePruner([], "docid").prune([1])) == []
 
     def test_matches_naive_loop(self):
         rng = np.random.RandomState(7)

@@ -1213,10 +1213,13 @@ def merge_appends(
     store.rmtree(batch_path)  # inert orphan from a crashed prior merge
     rows = _read_batches(spark, index_dir, to_merge)
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
+    # each sort leads with the (constant) partition column: the
+    # partitionBy("kind") write requires that order, and would otherwise
+    # plan its own sort on kind, which drops the one below
     (
         rows.filter(F.col("kind") == "s").drop("batch")
         .repartitionByRange(max(1, min(64, P)), "term")
-        .sortWithinPartitions("term", "bucket", "min_docid")
+        .sortWithinPartitions("kind", "term", "bucket", "min_docid")
         .write.mode("overwrite")
         .option("parquet.block.size", str(4 * 1024 * 1024))
         .partitionBy("kind")
@@ -1225,7 +1228,7 @@ def merge_appends(
     (
         rows.filter(F.col("kind") == "d").drop("batch")
         .repartitionByRange(max(1, min(32, P)), "docid")
-        .sortWithinPartitions("docid")
+        .sortWithinPartitions("kind", "docid")
         .write.mode("append")
         .option("parquet.block.size", str(4 * 1024 * 1024))
         .partitionBy("kind")
@@ -1760,7 +1763,8 @@ def compact_index(
         joined.groupBy("bucket", "chunk")
         .applyInPandas(encode_group, OUT_SCHEMA)
         .repartitionByRange(n_seg_files, "term")
-        .sortWithinPartitions("term", "bucket")
+        # kind first: see merge_appends' partitioned writes
+        .sortWithinPartitions("kind", "term", "bucket")
         .write.mode("append")
         .option("parquet.block.size", str(4 * 1024 * 1024))
         .partitionBy("kind")

@@ -10,7 +10,7 @@ Usage (cluster):
 
     spark-submit --py-files /tmp/visigoth_spark.zip \
         visigoth_spark/cli.py query \
-        --index s3a://bucket/idx/main --engine bm25_wand -k 10 \
+        --index s3a://bucket/idx/main --engine bm25 -k 10 \
         "programación java"
 
 Local (sandbox) smoke:
@@ -135,10 +135,9 @@ def cmd_query(argv: list[str]) -> int:
     p = argparse.ArgumentParser(prog="cli query")
     p.add_argument("--index", required=True)
     p.add_argument("--engine", default="bm25",
-                   choices=["bm25", "bm25_wand", "bm25_exhaustive",
-                            "bm25_or", "phrase", "bm25_prefix",
-                            "bm25_fuzzy", "hits", "linear", "noop_zero",
-                            "noop_all"])
+                   choices=["bm25", "bm25_exhaustive", "bm25_or",
+                            "phrase", "bm25_prefix", "bm25_fuzzy", "hits",
+                            "linear", "noop_zero", "noop_all"])
     p.add_argument("-k", type=int, default=10)
     p.add_argument("--no-stem", action="store_true")
     p.add_argument("--route", default="auto",

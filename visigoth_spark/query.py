@@ -54,7 +54,7 @@ import math
 import os
 from collections import OrderedDict
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, lru_cache
 from typing import Iterator
 
 import numpy as np
@@ -84,17 +84,17 @@ from visigoth_spark.codec import (
 RESULT_KERNEL_SCHEMA = "docid long, score double, hits int"
 
 # ≙ the EngineType enum (search_search.go:5-22). `SmartsHits` is declared but
-# unimplemented in the reference — our bm25/bm25_wand engines occupy that
-# slot rather than inventing semantics for it.
+# unimplemented in the reference — our bm25 engine occupies that slot
+# rather than inventing semantics for it.
 # `bm25` IS the block-max WAND path (skip-pointer decode + UB pruning);
 # `bm25_exhaustive` keeps the full-decode kernel as the in-repo test oracle
 # (TestWandParity pins bit-identical scores between the two).
 ENGINES = frozenset(
-    {"bm25", "bm25_wand", "bm25_exhaustive", "bm25_or", "hits", "linear",
+    {"bm25", "bm25_exhaustive", "bm25_or", "hits", "linear",
      "noop_zero", "noop_all", "phrase", "bm25_prefix", "bm25_fuzzy"}
 )
 
-_AND_BM25 = ("bm25", "bm25_wand", "bm25_exhaustive")
+_AND_BM25 = ("bm25", "bm25_exhaustive")
 
 # multi-term expansion engines: each analyzed query token expands against
 # the term dictionary (prefix match / Levenshtein<=max_edits), then the
@@ -202,10 +202,10 @@ class _SortedParquet:
     probe still decodes only the row groups whose range covers its keys.
     A probe is a binary search verified by equality. String keys are in
     the writer's (Spark's) UTF-8 byte order, which is code-point order,
-    i.e. Python ``str`` order. A row group the writer left out of key
-    order (``merge_appends``' docmap files: their ``partitionBy("kind")``
-    write does not keep the ``sortWithinPartitions`` order) is sorted
-    once, at decode.
+    i.e. Python ``str`` order. A row group out of key order is sorted
+    once, at decode: indexes merged by an older ``merge_appends``, whose
+    ``partitionBy("kind")`` write dropped its sort, hold such docmap
+    files.
 
     With ``open_file`` (the termdict: a local file, or an object store's
     seekable stream so a decode is a ranged GET) each file is opened once
@@ -386,10 +386,7 @@ class _RangePruner:
     always included (can't be excluded). Returns paths in manifest order."""
 
     def __init__(self, entries: list[dict] | None, key: str):
-        self.entries = entries
-        if not entries:
-            self.paths = None
-            return
+        entries = entries or []
         self.paths = np.array([e["path"] for e in entries], dtype=object)
         mins = [e.get(f"{key}_min") for e in entries]
         maxs = [e.get(f"{key}_max") for e in entries]
@@ -397,17 +394,15 @@ class _RangePruner:
         if key == "docid":
             fill_lo, fill_hi, dt = np.iinfo(np.int64).max, -1, np.int64
         else:
-            fill_lo, fill_hi, dt = "\U0010ffff", "", None
+            fill_lo, fill_hi, dt = "\U0010ffff", "", str
         self.mins = np.array(
             [fill_lo if m is None else m for m in mins], dtype=dt)
         self.maxs = np.array(
             [fill_hi if m is None else m for m in maxs], dtype=dt)
 
-    def prune(self, keys: list) -> np.ndarray | None:
+    def prune(self, keys: list) -> np.ndarray:
         """Paths whose [min, max] covers any key (plus stat-less files);
-        None when no manifest is loaded."""
-        if self.paths is None:
-            return None
+        empty for an empty manifest."""
         mask = self.always.copy()
         for t in keys:
             mask |= (self.mins <= t) & (t <= self.maxs)
@@ -441,15 +436,15 @@ class SearchIndex:
         # decoded; the default budget holds ~10M postings, i.e. every term
         # the routing bound would serve driver-side anyway.
         self._cache = _ByteLRU(driver_cache_max_bytes)
-        self._cached = False
         self._store = vstore.get_store(index_dir, spark)
         # POSIX path when the index bytes are directly readable by local
         # libraries (plain paths and file:// URIs). None on object stores:
         # the driver-local pyarrow fast paths (routing, docmap point
         # lookup) are skipped and every query runs the distributed route
-        # — the right split there anyway (those paths exist to dodge job
-        # latency on local serving, not to stream an object store through
-        # the driver). The termdict seek runs on both (ranged GETs there).
+        # over the same pruned segment files — the right split there
+        # anyway (those paths exist to dodge job latency on local serving,
+        # not to stream an object store through the driver). The termdict
+        # seek runs on both (ranged GETs there).
         self._local_root = self._store.local_path(index_dir)
         self._td_reader = None  # the termdict's _SortedParquet
         self._open_snapshot()
@@ -472,13 +467,13 @@ class SearchIndex:
         :meth:`refresh`: stats, the visible batches, the file-range
         pruners, the tombstones, the sidecar paths and the docmap reader.
         Opening lists no data directory: the Spark scan relations
-        (``_postings``, ``_docmap``) are built on their first use."""
+        (``_data``, ``_docmap``) are built on their first use."""
         index_dir = self.index_dir
         snap = _require(index_dir, self._store)
         self.stats = snap["stats"]
         self._manifests = [b for b in snap["batches"] if b["n_docs"]]
         self._batches = [b["batch"] for b in self._manifests]
-        for rel in ("_data", "_postings", "_docmap"):
+        for rel in ("_data", "_docmap"):
             self.__dict__.pop(rel, None)
         # Doc.Raw sidecar (search_result.go:6-9): present when the index
         # was built with store_raw/statement_col
@@ -551,17 +546,6 @@ class SearchIndex:
             *[os.path.join(data_root, f"batch={b}") for b in self._batches])
 
     @cached_property
-    def _postings(self) -> DataFrame:
-        """The segment rows of every visible batch (kind is a partition
-        directory, so the filter prunes whole files)."""
-        cols = ["term", "bucket", "df_seg", "sum_tf", "min_docid",
-                "max_docid", "blob", "skips"]
-        if self.has_positions:
-            # the positional stream, for phrase on .cache()d indexes
-            cols.append("pos_blob")
-        return self._data.filter(F.col("kind") == "s").select(*cols)
-
-    @cached_property
     def _docmap(self) -> DataFrame:
         """The docmap rows (docid, url, doclen[, raw]) of every visible
         batch."""
@@ -584,23 +568,6 @@ class SearchIndex:
             self._tomb_bv = self.spark.sparkContext.broadcast(
                 self._tombstones)
         return self._tomb_bv
-
-    def cache(self) -> "SearchIndex":
-        """Pin the postings + docmap in executor memory (the warm-index
-        serving mode: on a cluster this is what OS page cache / an in-memory
-        layer gives a long-running query service). Materializes both."""
-        self._postings = self._postings.persist()
-        self._docmap = self._docmap.persist()
-        self._postings.count()
-        self._docmap.count()
-        # the pinned in-memory postings beat a per-query file enumeration —
-        # route queries through the cached DataFrame instead (this also
-        # turns off the auto driver-local route: the executor-cached scan
-        # is the serving layer the caller asked for)
-        self._segfiles = None
-        self._seg_prune = _RangePruner(None, "term")
-        self._cached = True
-        return self
 
     def refresh(self) -> "SearchIndex":
         """Re-open the index's committed state for long-lived serving.
@@ -630,22 +597,14 @@ class SearchIndex:
         - compaction / any change to a previously committed batch entry
           (docids reassigned, content rewritten): evict everything.
 
-        Executor-cached mode (:meth:`cache`) re-pins the new snapshot.
         No-op cheap when nothing changed (one snapshot read).
         The reference never needs this — its MemoryIndex readers share
         the writer's map under an RWMutex (index_memory_index.go:11-18);
         snapshot-plus-refresh is the object-store equivalent."""
         old = {m["batch"]: m for m in self._manifests}
-        was_cached = self._cached
-        if was_cached:
-            self._postings.unpersist()
-            self._docmap.unpersist()
-            self._cached = False
         self._open_snapshot()
         if self._term_cache:
             self._refresh_evict(old)
-        if was_cached:
-            self.cache()
         return self
 
     def _refresh_evict(self, old: dict) -> None:
@@ -713,28 +672,23 @@ class SearchIndex:
         build-layout files may span wide ranges — they match everything,
         which is correct, just unpruned. Parquet truncates binary column
         stats conservatively (min rounds down, max rounds up), so the
-        range check can only over-include, never miss a file.
-        Returns None when no file can contain any term. Cached serving
-        mode scans the pinned DataFrame instead. ``cols`` overrides
-        the projected columns (default ``_SEG_COLS``)."""
-        cols = cols or self._SEG_COLS
-        pruned = self._seg_prune.prune(terms)
-        if pruned is not None:
-            paths = [os.path.join(self.index_dir, p) for p in pruned]
-            if not paths:
-                return None
-            schema = ("bucket int, term string, df_seg int, sum_tf long, "
-                      "min_docid long, max_docid long, blob binary, "
-                      "skips binary, docid long, url string, doclen int, "
-                      "raw string, pos_blob binary")
-            return (
-                self.spark.read.schema(schema).parquet(*paths)
-                .filter(F.col("term").isin(terms))
-                .select(*cols)
-            )
+        range check can only over-include, never miss a file. This is the
+        only postings scan of the distributed route. Returns None when no
+        file can contain any term (an index with no segment files
+        included). ``cols`` overrides the projected columns (default
+        ``_SEG_COLS``)."""
+        paths = [os.path.join(self.index_dir, p)
+                 for p in self._seg_prune.prune(terms)]
+        if not paths:
+            return None
+        schema = ("bucket int, term string, df_seg int, sum_tf long, "
+                  "min_docid long, max_docid long, blob binary, "
+                  "skips binary, docid long, url string, doclen int, "
+                  "raw string, pos_blob binary")
         return (
-            self._postings.filter(F.col("term").isin(terms))
-            .select(*cols)
+            self.spark.read.schema(schema).parquet(*paths)
+            .filter(F.col("term").isin(terms))
+            .select(*(cols or self._SEG_COLS))
         )
 
     def _route_driver(self, dfs: dict[str, int], route: str) -> bool:
@@ -756,9 +710,9 @@ class SearchIndex:
         Term frequency is zipfian, so in a real workload almost every
         query is under both bounds; at 10^12 docs a head term's df alone
         pushes past them and those queries stay distributed — exactly the
-        right split at scale. Executor-cached (:meth:`cache`) and
-        object-store indexes always route distributed."""
-        if route == "spark" or self._cached or self._local_root is None:
+        right split at scale. Object-store indexes always route
+        distributed. Both routes read the same pruned segment files."""
+        if route == "spark" or self._local_root is None:
             return False
         if route == "driver":
             return True
@@ -777,15 +731,15 @@ class SearchIndex:
         """Driver-side pyarrow read of the pruned segment rows — the same
         file pruning decisions as _seg_scan, the same term filter pushed
         to row-group stats. Returns None when the read can't run
-        driver-side (non-local storage, executor-cached mode, or a file of
-        this snapshot that is gone — a reader whose snapshot was reclaimed
-        under it; the distributed route then fails loudly instead of
-        serving partial results). An empty frame means provably no
-        matching rows."""
+        driver-side (non-local storage, or a file of this snapshot that is
+        gone — a reader whose snapshot was reclaimed under it; the
+        distributed route then fails loudly instead of serving partial
+        results). An empty frame means provably no matching rows (no
+        file's range covers a term)."""
+        if self._local_root is None:
+            return None
         cols = cols or self._SEG_COLS
         pruned = self._seg_prune.prune(terms)
-        if self._local_root is None or pruned is None:
-            return None
         if not len(pruned):
             return pd.DataFrame(columns=cols)
         try:
@@ -1118,8 +1072,6 @@ class SearchIndex:
         self._validate(engine, "auto", 0, False)
         p = self._plan([query], engine, k, exclude=exclude)[0]
         empty = p.route == _EMPTY_ROUTE
-        pruned = (self._seg_prune.prune(p.terms + p.excl_terms)
-                  if p.terms else None)
         key = _POS_KEY if p.engine == "phrase" else ""
         return {
             "query": query,
@@ -1135,9 +1087,10 @@ class SearchIndex:
             "route": p.route,
             "fetch_rows": (None if empty or k is None
                            else (k if p.engine == "linear" else 2 * k)),
-            "seg_files_planned": (None if pruned is None else len(pruned)),
-            "seg_files_total": (None if self._segfiles is None
-                                else len(self._segfiles)),
+            "seg_files_planned": (
+                len(self._seg_prune.prune(p.terms + p.excl_terms))
+                if p.terms else None),
+            "seg_files_total": len(self._segfiles),
             "cached_terms": [t for t in p.terms if key + t in self._cache],
             "n_docs": self.stats["n_docs"],
         }
@@ -1245,10 +1198,9 @@ class SearchIndex:
                highlight: bool = False,
                after: tuple | None = None) -> DataFrame:
         """Returns a DataFrame (url, docid, score, hits[, raw]) ordered by
-        the engine's contract. Engines: bm25 (= block-max WAND) | bm25_wand
-        (alias) | bm25_exhaustive (full-decode test oracle) | bm25_or |
-        phrase | bm25_prefix | bm25_fuzzy | hits | linear | noop_zero |
-        noop_all.
+        the engine's contract. Engines: bm25 (= block-max WAND) |
+        bm25_exhaustive (full-decode test oracle) | bm25_or | phrase |
+        bm25_prefix | bm25_fuzzy | hits | linear | noop_zero | noop_all.
 
         ``include_raw`` hydrates the stored document content into a ``raw``
         column (≙ Doc.Raw, search_result.go:6-9 / the "raw" field of
@@ -1514,8 +1466,7 @@ class SearchIndex:
         # with whole-term decoded arrays in hand, exhaustive exact scoring
         # IS the fastest plan (WAND's partial decode saves nothing once
         # everything is decoded); scores bit-identical (TestWandParity)
-        body_engine = ("bm25_exhaustive" if p.engine in ("bm25", "bm25_wand")
-                       else p.engine)
+        body_engine = "bm25_exhaustive" if p.engine == "bm25" else p.engine
         return _decoded_body(arrays, body_engine, p.terms, p.mult, p.idf,
                              avgdl, threshold=len(p.tokens), k=p.k,
                              excl=excl_ids, after=p.after)
@@ -1562,12 +1513,7 @@ class _LocalResult(ClassicDataFrame):
         self._support_repr_html = False
         self._schema = StructType(
             [StructField(c, _RESULT_TYPES[c]) for c in cols])
-        if pdf is None:
-            pdf = pd.DataFrame({
-                c: pd.Series(dtype=_PANDAS_DTYPES[_RESULT_TYPES[c]
-                                                   .simpleString()])
-                for c in cols})
-        self._pdf = pdf
+        self._pdf = _empty_frame(tuple(cols)) if pdf is None else pdf
 
     @property
     def schema(self) -> StructType:
@@ -1606,6 +1552,17 @@ class _LocalResult(ClassicDataFrame):
 
     def toPandas(self) -> pd.DataFrame:
         return self._pdf.copy()
+
+
+@lru_cache
+def _empty_frame(cols: tuple[str, ...]) -> pd.DataFrame:
+    """The empty result frame of these columns, typed as Spark's
+    ``toPandas`` types them. Built once per column list and shared by every
+    empty :class:`_LocalResult`: nothing mutates a result's frame, and
+    ``toPandas`` returns a copy."""
+    return pd.DataFrame({
+        c: pd.Series(dtype=_PANDAS_DTYPES[_RESULT_TYPES[c].simpleString()])
+        for c in cols})
 
 
 def _head_k_with_ties(out: pd.DataFrame, metric: str, k: int
@@ -2229,7 +2186,7 @@ def _make_kernel(engine: str, terms: list[str], multiplicity: dict[str, int],
         excl = getattr(excl_ids, "value", excl_ids)
         excl = _with_excl(excl, [_decode_term_segments(pdf, t)[0]
                                  for t in excl_terms or []])
-        if engine in ("bm25", "bm25_wand"):
+        if engine == "bm25":
             if after is not None:
                 # paging wants top-k BELOW the cursor — the inverse of what
                 # block-max pruning keeps; page queries score exhaustively
@@ -2352,7 +2309,7 @@ def _decoded_body(decoded: dict, engine: str, terms: list[str],
              "hits": np.full(len(cand), threshold, dtype=np.int32)}
         )
 
-    # bm25_exhaustive (and the hot-term-cache path for bm25/bm25_wand):
+    # bm25_exhaustive (and the hot-term-cache path for bm25):
     # exact scoring of the AND candidates — the in-repo oracle for the
     # WAND path; summation in sorted-term order for float64 determinism
     score = np.zeros(len(cand), dtype=np.float64)
