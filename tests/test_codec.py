@@ -11,6 +11,9 @@ from hypothesis import strategies as st
 from visigoth_spark.codec import (
     BLOCK_SIZE,
     decode_block,
+    decode_docid_groups,
+    decode_docids,
+    decode_groups,
     decode_segment,
     decode_skips,
     encode_segment,
@@ -153,3 +156,57 @@ class TestSkipsAndBlockMax:
         np.testing.assert_array_equal(d, docids)
         np.testing.assert_array_equal(t, tfs)
         np.testing.assert_array_equal(l, dls)
+
+
+class TestDecodeGroups:
+    """The batch decode equals per-blob decode_segment / decode_docids
+    exactly, over the shapes that take different varbyte branches."""
+
+    @staticmethod
+    def _blobs(rng, n_blobs):
+        blobs = []
+        for i in range(n_blobs):
+            n = int(rng.choice([1, 2, BLOCK_SIZE - 1, BLOCK_SIZE + 1,
+                                3 * BLOCK_SIZE + 7, rng.randint(1, 600)]))
+            # first docids >= 2^49 take _n_bytes' big-value branch; 2^62
+            # starts overflow the global delta sum across a few blobs
+            first = int(rng.choice([0, 2**49 - 3, 2**49 + rng.randint(2**40),
+                                    2**62]))
+            gaps = rng.randint(1, 1 << rng.randint(1, 30), size=n)
+            docids = first + np.cumsum(gaps).astype(np.int64) - 1
+            # multi-byte tfs and doclens (up to 3 and 5 varbyte bytes)
+            tfs = rng.randint(1, 1 << rng.randint(1, 20), size=n)
+            dls = rng.randint(1, 1 << rng.randint(1, 32), size=n)
+            blob, _ = encode_segment(docids, tfs, dls)
+            # Spark Rows carry bytearray, Arrow batches bytes
+            blobs.append(bytearray(blob) if i % 2 else blob)
+        return blobs
+
+    @pytest.mark.parametrize("seed", range(25))
+    def test_equals_per_blob_decode(self, seed):
+        rng = np.random.RandomState(seed)
+        for n_blobs in (0, 1, rng.randint(2, 40)):
+            blobs = self._blobs(rng, n_blobs)
+            per = [decode_segment(bytes(b)) for b in blobs]
+            ids, tfs, dls, starts, n = decode_groups(blobs)
+            assert n.tolist() == [len(p[0]) for p in per]
+            assert starts.tolist() == (np.cumsum(n) - n).tolist()
+            for j, got in enumerate((ids, tfs, dls)):
+                want = (np.concatenate([p[j] for p in per]) if per
+                        else np.zeros(0, dtype=np.int64))
+                assert got.dtype == np.int64
+                np.testing.assert_array_equal(got, want)
+            d_ids, d_starts, d_n = decode_docid_groups(blobs)
+            want = (np.concatenate([decode_docids(bytes(b)) for b in blobs])
+                    if blobs else np.zeros(0, dtype=np.int64))
+            assert d_ids.dtype == np.int64
+            np.testing.assert_array_equal(d_ids, want)
+            np.testing.assert_array_equal(d_starts, starts)
+            np.testing.assert_array_equal(d_n, n)
+
+    def test_base_anchoring(self):
+        blob, _ = encode_segment(np.array([500, 502]), np.array([1, 2]),
+                                 np.array([3, 4]), base=499)
+        ids, _, _, _, _ = decode_groups([blob, blob], base=499)
+        assert ids.tolist() == [500, 502, 500, 502]
+        assert decode_docid_groups([blob], base=499)[0].tolist() == [500, 502]

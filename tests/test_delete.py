@@ -319,3 +319,38 @@ def test_indexed_df_matches_indexed(spark, didx):
     want = sorted(idx2.indexed("alpha").tolist())
     got = sorted(r.docid for r in idx2.indexed_df("alpha").collect())
     assert got == want and 0 not in got and 2 not in got
+
+
+def test_compact_tombstone_purge_starts_no_python_rdd(spark, didx, tmp_path,
+                                                      monkeypatch):
+    """The tombstone ids reach compaction's anti-join as an Arrow-backed
+    local relation, not a parallelize -> map PythonRDD that starts Python
+    workers for a handful of integers; with the Arrow flag on or off, no
+    PythonRDD is created and the compacted index is the same."""
+    from pyspark.core.rdd import PipelinedRDD
+
+    from visigoth_spark.build import compact_index, delete_docs
+
+    made = []
+    jrdd = PipelinedRDD._jrdd
+    monkeypatch.setattr(PipelinedRDD, "_jrdd", property(
+        lambda self: made.append(1) or jrdd.fget(self)))
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    got = {}
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            out = str(tmp_path / f"arrow-{arrow}")
+            shutil.copytree(didx, out)
+            delete_docs(spark, out, urls=sorted(OLD))
+            compact_index(spark, out, num_partitions=2)
+            assert made == [], arrow
+            idx = SearchIndex(spark, out, analyzer=AN)
+            got[arrow] = (
+                [tuple(r) for r in idx._docmap.orderBy("docid").collect()],
+                _got(idx.search("alpha beta", engine="bm25", k=10)))
+    finally:
+        spark.conf.set(key, saved)
+    assert got["true"] == got["false"]
+    assert not {r[1] for r in got["true"][0]} & OLD

@@ -393,3 +393,51 @@ def test_merged_and_compacted_files_are_key_sorted(spark, tmp_path):
     compact_index(spark, out, num_partitions=4)
     assert [b.get("compacted") for b in _visible(out)] == [True]
     assert _unsorted_files(out) == []
+
+
+def test_batch_term_decode_equals_per_segment_concat(spark, tmp_path):
+    """query._decode_term_segments (one batch decode of a term's segments,
+    rows picked with numpy) equals the per-segment decode_segment /
+    decode_positions concatenation in min_docid order, on an index with a
+    build tier, a merged tier, a later append and tombstones, with the
+    segment rows handed over shuffled."""
+    import numpy as np
+
+    from visigoth_spark.analysis import analyze_text
+    from visigoth_spark.build import delete_docs
+    from visigoth_spark.codec import decode_positions, decode_segment
+    from visigoth_spark.query import _decode_term_segments
+
+    pdf, slices = _slices(120, 3)
+    out = _appended(spark, tmp_path, "dec", slices, store_positions=True)
+    merge_appends(spark, out, num_partitions=2)
+    extra = generate_corpus(150).sort_values("url").iloc[120:]
+    append_index(spark, _df(spark, extra), out, num_partitions=2,
+                 store_positions=True)
+    delete_docs(spark, out, urls=sorted(pdf["url"])[::7])
+    idx = SearchIndex(spark, out)
+    terms = analyze_text("curso programación java web gratis",
+                         idx.analyzer) + ["nosuchterm"]
+    seg = idx._driver_seg_rows(
+        terms, cols=["term", "bucket", "min_docid", "blob", "pos_blob"])
+    assert seg is not None
+    seg = seg.sample(frac=1.0, random_state=7).reset_index(drop=True)
+    out_of_order = 0
+    for t in terms:
+        rows = seg[seg["term"] == t]
+        out_of_order += int(
+            (np.diff(rows["min_docid"].to_numpy()) < 0).any())
+        parts = []
+        for _, r in rows.sort_values("min_docid").iterrows():
+            d, tf, dl = decode_segment(bytes(r["blob"]))
+            parts.append((d, tf, dl, decode_positions(bytes(r["pos_blob"]),
+                                                      tf)))
+        want = [np.concatenate([p[j] for p in parts]) if parts
+                else np.zeros(0, dtype=np.int64) for j in range(4)]
+        got = _decode_term_segments(seg, t, positional=True)
+        for j in range(4):
+            np.testing.assert_array_equal(got[j], want[j], err_msg=t)
+        for j in range(3):
+            np.testing.assert_array_equal(
+                _decode_term_segments(seg, t)[j], want[j], err_msg=t)
+    assert out_of_order >= 2

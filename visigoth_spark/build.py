@@ -73,11 +73,13 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visigoth_spark.analysis import AnalyzerConfig, DEFAULT_ANALYZER, analyze_flat
-from visigoth_spark.codec import encode_groups, encode_positions_groups
+from visigoth_spark.codec import (decode_groups, decode_positions,
+                                  encode_groups, encode_positions_groups)
 from visigoth_spark import storage as vstore
 
 # one fused output schema: segment rows (kind='s') + docmap rows (kind='d').
@@ -243,6 +245,15 @@ def _input_file_size(f: str, spark) -> int:
     if vstore.is_uri(f):
         return vstore.get_store(f, spark).getsize(f)
     return os.path.getsize(f)
+
+
+def _tick(op: str, label: str, since: list[float]) -> None:
+    """With ``VISIGOTH_TIMING=1``, print the seconds since ``since[0]`` as
+    stage ``label`` of ``op``; restart the stage clock either way."""
+    if os.environ.get("VISIGOTH_TIMING") == "1":
+        print(f"# {op} phase {label}: {time.time() - since[0]:.2f}s",
+              flush=True)
+    since[0] = time.time()
 
 
 def _ranged_corpus(corpus: DataFrame, num_partitions: int,
@@ -576,14 +587,6 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         )
     index_col = statement_col or "text"
     raw_col = "text" if (store_raw or statement_col) else None
-    timing = os.environ.get("VISIGOTH_TIMING") == "1"
-
-    def tick(label: str, since: list[float]) -> None:
-        if timing:
-            print(f"# build phase {label}: {time.time() - since[0]:.1f}s",
-                  flush=True)
-        since[0] = time.time()
-
     tmark = [t0]
     store = vstore.get_store(out_dir, spark)
     store.makedirs(vstore.join(out_dir, "_manifests"))
@@ -623,7 +626,7 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         persisted = True
     try:
         offsets = _partition_offsets(src)
-        tick("offsets", tmark)
+        _tick("build", "offsets", tmark)
         n_docs = offsets.pop(-1)
         if n_docs == 0:
             raise ValueError("empty corpus")
@@ -667,13 +670,13 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
                 .partitionBy("kind")
                 .parquet(batch_path)
             )
-            tick(f"batch {bi}", tmark)
+            _tick("build", f"batch {bi}", tmark)
             if finalize_segments:
                 # term-range rewrite of the not-yet-committed batch dir
                 _finalize_batch_segments(
                     spark, store, batch_path,
                     n_files=max(1, min(64, len(batch_pids))))
-                tick(f"batch {bi} finalize", tmark)
+                _tick("build", f"batch {bi} finalize", tmark)
             end = offsets.get(batch_pids[-1] + 1, n_docs)
             widths = [offsets.get(p + 1, n_docs) - offsets[p]
                       for p in batch_pids]
@@ -697,7 +700,7 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         td = f"termdict/{n}"
         _write_termdict(_term_rows(spark, out_dir, batches),
                         vstore.join(out_dir, td), P)
-        tick("termdict", tmark)
+        _tick("build", "termdict", tmark)
         stats = {
             "bm25": {"k1": 1.2, "b": 0.75},
             "store_raw": raw_col is not None,
@@ -1533,14 +1536,18 @@ def compact_index(
     Dataflow (never touches corpus text — compaction is metadata + postings
     only, ~bytes_blob + docmap in, same out):
 
-      docmap (all batches) --repartitionByRange(url)--> pass 0 offsets
+      docmap (all batches) --left_anti tombstones (Arrow local relation,
+        broadcast)--> --repartitionByRange(url)--> pass 0 offsets
         --mapInPandas--> map(docid_old -> docid_new, bucket_new) [staged]
-      segments --decode--> (term, docid_old, tf) [doclens ride in the blob]
+      segments --mapInPandas: codec.decode_groups, one varbyte pass per
+        Arrow batch--> (term, docid_old, tf, dl) [doclens ride in the blob]
         --join map on docid_old (broadcast when small, SMJ at scale)-->
         --groupBy(bucket, docid_new // flush_docs) applyInPandas-->
-          re-encoded segment rows  --repartitionByRange(term)--> write
+          re-encoded segment rows [staged, so encode runs once]
+          --repartitionByRange(term)--> write
       a new termdict version (and fuzzydict, when the index has one);
       ONE snapshot commits the compacted batch in place of every batch.
+      ``VISIGOTH_TIMING=1`` prints each stage's seconds.
 
     Invariants preserved (asserted by tests/test_compact.py): the multiset
     of per-term (url, tf, doclen) postings, n_docs, total_tokens,
@@ -1557,14 +1564,15 @@ def compact_index(
     version, the next snapshot names them instead of the old generation,
     and the old generation is deleted after that commit. Readers see the
     old index or the new one at every step — no rename is involved, so the
-    same holds on object stores. The docid-map staging dir
-    (``_compact_tmp``) is deleted before the commit; a stale one from a
-    crashed run is cleared on the next call.
+    same holds on object stores. The staging dir (``_compact_tmp``: the
+    docid map and the encoded segments) is deleted before the commit; a
+    stale one from a crashed run is cleared on the next call.
     """
     import visigoth_spark
 
     visigoth_spark.ensure_shipped(spark)
     t0 = time.time()
+    tmark = [t0]
     store = vstore.get_store(index_dir, spark)
     base = _require(index_dir, store)
     stats = base["stats"]
@@ -1594,11 +1602,13 @@ def compact_index(
     # join below (inner on docid_old). Stats recompute from the re-encoded
     # data, so n_docs/df/avgdl stop counting them — the Lucene merge
     # semantics — and the tombstone set is NOT carried to the new
-    # generation (old docids would alias remapped ones).
+    # generation (old docids would alias remapped ones). The ids go in as
+    # an Arrow table: a JVM local relation whatever the Arrow flag, where a
+    # list of tuples is a PythonRDD job that starts Python workers.
     tombs = _tombstone_ids(store, index_dir, base)
     if tombs:
-        tdf = spark.createDataFrame([(int(t),) for t in tombs],
-                                    "docid long")
+        tdf = spark.createDataFrame(
+            pa.table({"docid": pa.array(tombs, pa.int64())}))
         docmap_old = docmap_old.join(F.broadcast(tdf), "docid", "left_anti")
 
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
@@ -1659,6 +1669,7 @@ def compact_index(
     finally:
         src.unpersist()
     map_df = spark.read.parquet(map_path)
+    _tick("compact", "offsets/remap", tmark)
 
     # ---- new docmap (kind=d), docid-sorted files, 4 MB row groups ----------
     batch_path = vstore.join(root, "data", f"batch={new_batch}")
@@ -1682,43 +1693,32 @@ def compact_index(
         .partitionBy("kind")
         .parquet(batch_path)
     )
+    _tick("compact", "docmap write", tmark)
 
     # ---- postings: decode -> remap -> re-encode ----------------------------
-    from visigoth_spark.codec import decode_segment
-
-    from visigoth_spark.codec import decode_positions
-
     def explode_gen(iterator):
         for pdf in iterator:
             if len(pdf) == 0:
                 continue
-            terms = pdf["term"].to_numpy(dtype=object)
-            ids_acc, tfs_acc, dls_acc, reps = [], [], [], []
-            pos_acc: list = []
-            for i, blob in enumerate(pdf["blob"]):
-                d, tf, dl = decode_segment(bytes(blob))
-                ids_acc.append(d)
-                tfs_acc.append(tf)
-                dls_acc.append(dl)
-                reps.append(len(d))
-                if has_pos:
-                    # per-posting position lists ride the shuffle as
-                    # array<long> and re-encode on the other side
-                    flat = decode_positions(
-                        bytes(pdf["pos_blob"].iloc[i]), tf)
-                    pos_acc.extend(
-                        np.split(flat, np.cumsum(tf[:-1])))
+            # every segment of the Arrow batch in one decode pass
+            ids, tfs, dls, _, n = decode_groups(pdf["blob"].to_numpy())
             out = {
-                "term": np.repeat(terms, reps),
-                "docid_old": np.concatenate(ids_acc),
-                "tf": np.concatenate(tfs_acc),
+                "term": np.repeat(pdf["term"].to_numpy(dtype=object), n),
+                "docid_old": ids,
+                "tf": tfs,
                 # doclen rides the blob (decode gives it for free), so
                 # the remap join below only carries (docid, bucket) —
                 # a narrower build side and shuffle
-                "dl": np.concatenate(dls_acc),
+                "dl": dls,
             }
             if has_pos:
-                out["pos"] = pd.Series(pos_acc, dtype=object)
+                # per-posting position lists ride the shuffle as
+                # array<long> and re-encode on the other side; position
+                # streams are posting-local, so the batch's concatenated
+                # streams decode as one
+                flat = decode_positions(b"".join(pdf["pos_blob"]), tfs)
+                out["pos"] = pd.Series(np.split(flat, np.cumsum(tfs[:-1])),
+                                       dtype=object)
             yield pd.DataFrame(out)
 
     explode_schema = "term string, docid_old long, tf long, dl long"
@@ -1744,24 +1744,31 @@ def compact_index(
         "chunk", F.floor(F.col("docid") / F.lit(flush_docs)))
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = pdf["term"].to_numpy(dtype=object)
+        # sort on integer term codes (codes follow the sorted vocabulary)
+        # instead of comparing Python strings inside lexsort
+        codes, vocab = pd.factorize(pdf["term"].to_numpy(dtype=object),
+                                    sort=True)
         d = pdf["docid"].to_numpy(np.int64)
         tf = pdf["tf"].to_numpy(np.int64)
         dl = pdf["dl"].to_numpy(np.int64)
-        order = np.lexsort((d, t))
+        order = np.lexsort((d, codes))
         pos = None
         if "pos" in pdf.columns:
             pos = np.concatenate(
                 [np.asarray(p, dtype=np.int64)
                  for p in pdf["pos"].to_numpy(dtype=object)[order]]
             ) if len(pdf) else np.zeros(0, dtype=np.int64)
-        return _seg_frame(t[order], d[order], tf[order], dl[order],
+        return _seg_frame(vocab[codes[order]], d[order], tf[order], dl[order],
                           int(pdf["bucket"].iloc[0]), positions=pos)
 
     n_seg_files = max(1, min(64, P))
+    # staged as parquet: the range partitioner's sampling job and the write
+    # would each run encode_group over every group if they read the plan
+    seg_path = vstore.join(stage, "segments")
+    (joined.groupBy("bucket", "chunk").applyInPandas(encode_group, OUT_SCHEMA)
+     .write.mode("overwrite").parquet(seg_path))
     (
-        joined.groupBy("bucket", "chunk")
-        .applyInPandas(encode_group, OUT_SCHEMA)
+        spark.read.parquet(seg_path)
         .repartitionByRange(n_seg_files, "term")
         # kind first: see merge_appends' partitioned writes
         .sortWithinPartitions("kind", "term", "bucket")
@@ -1770,6 +1777,7 @@ def compact_index(
         .partitionBy("kind")
         .parquet(batch_path)
     )
+    _tick("compact", "postings decode/encode/write", tmark)
 
     # ---- termdict + fuzzydict + the commit ---------------------------------
     pids = sorted(offsets)
@@ -1783,6 +1791,7 @@ def compact_index(
     td = f"termdict/{sid}"
     _write_termdict(_term_rows(spark, root, [entry]),
                     vstore.join(root, td), P)
+    _tick("compact", "termdict", tmark)
     fd = base["fuzzydict"]
     if fd:
         # the vocabulary can SHRINK here (tombstone purge drops
@@ -1791,6 +1800,7 @@ def compact_index(
             spark, root_store, root, sid,
             spark.read.parquet(vstore.join(root, td)).select("term"),
             fd["max_edits"], fd["num_files"]))
+        _tick("compact", "fuzzydict", tmark)
     root_store.rmtree(stage)  # staging artifact, not part of the index
     now = time.time()
     _commit(root_store, root, _next(
@@ -1798,6 +1808,7 @@ def compact_index(
         last_epoch=base["last_epoch"],
         stats=dict(stats, store_raw=has_raw, compacted_at_sec=now,
                    built_at_sec=now, wall_sec=now - t0)), prev)
+    _tick("compact", "commit", tmark)
     return _metrics(entry, n_docs, t0)
 
 

@@ -20,6 +20,15 @@ Layout (little-endian throughout):
   decreasing in dl, so norm(max_tf, min_dl, avgdl) computed at QUERY time
   (when avgdl is known) upper-bounds every posting in the block — this keeps
   the index build a single corpus scan (no pre-pass just to learn avgdl).
+
+Batch kernels: :func:`encode_groups` encodes many segments and
+:func:`decode_groups` decodes many blobs, each with ONE varbyte pass over
+the concatenated streams, so the per-segment Python cost is a slice or a
+``len``. Every whole-segment decode — compaction's postings pass, a term's
+segments on either query route, the OR path's docid streams
+(:func:`decode_docid_groups`) — goes through them. :func:`decode_segment`
+and :func:`decode_docids` are the one-blob forms, kept as the reference the
+batch kernels are tested against.
 """
 
 from __future__ import annotations
@@ -91,23 +100,22 @@ def vb_encode(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def vb_decode(buf: np.ndarray, n: int | None = None) -> np.ndarray:
     """Decode a varbyte stream (uint8 array) back to uint64 values."""
     buf = np.asarray(buf, dtype=np.uint8)
-    if len(buf) == 0:
-        return np.zeros(0, dtype=np.uint64)
-    is_last = (buf & 0x80) == 0
-    vid = np.zeros(len(buf), dtype=np.int64)
-    vid[1:] = np.cumsum(is_last[:-1])
-    starts_idx = np.nonzero(
-        np.concatenate(([True], is_last[:-1]))
-    )[0]
-    pos_in_val = np.arange(len(buf), dtype=np.int64) - starts_idx[vid]
-    n_vals = int(is_last.sum())
-    vals = np.zeros(n_vals, dtype=np.uint64)
-    contrib = (buf & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos_in_val.astype(np.uint64)
-    )
-    np.add.at(vals, vid, contrib)
+    is_last = buf < 0x80
+    if is_last.all():  # pure 1-byte stream (empty included): no shifts
+        vals = buf.astype(np.uint64)
+    else:
+        if not is_last[-1]:
+            raise ValueError("varbyte stream ends inside a value")
+        starts = np.flatnonzero(np.concatenate(([True], is_last[:-1])))
+        # byte i carries bits 7*(i - start of its value) and up; the
+        # groups of one value never overlap, so a segmented sum is exact
+        pos_in_val = np.arange(len(buf), dtype=np.int64) - np.repeat(
+            starts, np.diff(np.append(starts, len(buf))))
+        contrib = (buf & np.uint8(0x7F)).astype(np.uint64) << (
+            np.uint64(7) * pos_in_val.astype(np.uint64))
+        vals = np.add.reduceat(contrib, starts)
     if n is not None:
-        assert n_vals == n, f"decoded {n_vals} values, expected {n}"
+        assert len(vals) == n, f"decoded {len(vals)} values, expected {n}"
     return vals
 
 
@@ -263,6 +271,61 @@ def decode_docids(blob: bytes, base: int = -1) -> np.ndarray:
     body = np.frombuffer(blob, dtype=np.uint8, offset=16)
     deltas = vb_decode(body[: int(header["off_tfs"])], n)
     return np.cumsum(deltas.astype(np.int64)) + base
+
+
+def _ranges(lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """The concatenated index ranges [lo[i], lo[i] + n[i]) — a gather index
+    over many variable-length runs, built without a loop."""
+    return np.arange(int(n.sum()), dtype=np.int64) + np.repeat(
+        lo - (np.cumsum(n) - n), n)
+
+
+def _group_values(blobs, ids_only: bool):
+    """Per-blob first posting index and posting count, and ONE varbyte
+    decode of every blob's body (just the docid stream with ``ids_only``).
+    Every stream ends on a value boundary, so the bodies decode back to
+    back: blob i's values follow blob i-1's, ids then tfs then doclens."""
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    at = np.cumsum(lens) - lens
+    hdr = buf[at[:, None] + np.arange(16)].view(_HEADER)[:, 0]
+    n = hdr["n"].astype(np.int64)
+    body = hdr["off_tfs"].astype(np.int64) if ids_only else lens - 16
+    vals = vb_decode(buf[_ranges(at + 16, body)],
+                     int(n.sum()) * (1 if ids_only else 3))
+    return np.cumsum(n) - n, n, vals
+
+
+def _docids_from_deltas(deltas: np.ndarray, starts: np.ndarray,
+                        n: np.ndarray, base: int) -> np.ndarray:
+    """Per-blob prefix sums of the docid deltas. One global cumsum minus
+    the sum carried in from the earlier blobs; int64 wraps modulo 2^64,
+    so the difference is exact even when the global sum overflows."""
+    cs = np.zeros(len(deltas) + 1, dtype=np.int64)
+    np.cumsum(deltas.astype(np.int64), out=cs[1:])
+    return cs[1:] - np.repeat(cs[starts], n) + base
+
+
+def decode_groups(blobs, base: int = -1):
+    """Decode MANY segment blobs in one vectorized pass — the decode twin
+    of :func:`encode_groups`. Returns ``(docids, tfs, doclens, starts,
+    n)``: the int64 postings of every blob, concatenated in blob order,
+    plus each blob's first posting index and posting count. Equal to
+    concatenating :func:`decode_segment` per blob, but the per-blob Python
+    cost is one ``len`` and one join instead of three numpy decodes."""
+    starts, n, vals = _group_values(blobs, ids_only=False)
+    idx = _ranges(3 * starts, n)
+    rep = np.repeat(n, n)
+    return (_docids_from_deltas(vals[idx], starts, n, base),
+            vals[idx + rep].astype(np.int64),
+            vals[idx + 2 * rep].astype(np.int64), starts, n)
+
+
+def decode_docid_groups(blobs, base: int = -1):
+    """:func:`decode_groups` for the docid streams only — ``(docids,
+    starts, n)``; tf and doclen bytes are never read."""
+    starts, n, deltas = _group_values(blobs, ids_only=True)
+    return _docids_from_deltas(deltas, starts, n, base), starts, n
 
 
 def decode_skips(skips: bytes) -> np.ndarray:

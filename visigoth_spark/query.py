@@ -74,9 +74,9 @@ from visigoth_spark.codec import (
     BM25_B,
     BM25_K1,
     decode_block,
-    decode_docids,
+    decode_docid_groups,
+    decode_groups,
     decode_positions,
-    decode_segment,
     decode_skips,
     tf_norm,
 )
@@ -1020,12 +1020,10 @@ class SearchIndex:
         seg = self._seg_scan([term])
         if seg is None:  # no segment file's term range covers it
             return np.zeros(0, dtype=np.int64)
-        rows = seg.select("bucket", "min_docid", "blob").collect()
-        if not rows:
-            return np.zeros(0, dtype=np.int64)
-        parts = [decode_segment(bytes(r["blob"]))[0]
-                 for r in sorted(rows, key=lambda r: r["min_docid"])]
-        return _mask_excl(np.concatenate(parts), self._tombstones)
+        rows = sorted(seg.select("min_docid", "blob").collect(),
+                      key=lambda r: r["min_docid"])
+        ids = decode_docid_groups([r["blob"] for r in rows])[0]
+        return _mask_excl(ids, self._tombstones)
 
     def indexed_df(self, term: str) -> DataFrame:
         """Distributed variant of ``indexed()`` (round-4 verdict "What's
@@ -1033,7 +1031,8 @@ class SearchIndex:
         long)`` WITHOUT materializing it on the driver — for a head term
         at web scale ``indexed()``'s ndarray is a multi-GB driver array,
         while this stays a lazy executor-side decode (term-range-pruned
-        scan → per-blob numpy decode in mapInPandas → tombstone mask).
+        scan → one batch docid decode per Arrow batch in mapInPandas →
+        tombstone mask).
         Row order is NOT defined (segments decode in parallel); sort or
         aggregate downstream. The bounded tombstone set (``tombstone_max``
         gate in build.delete_docs) ships in the task closure."""
@@ -1046,11 +1045,10 @@ class SearchIndex:
             import pandas as pd
 
             for pdf in it:
-                for blob in pdf["blob"]:
-                    ids = decode_segment(bytes(blob))[0]
-                    if tomb is not None:
-                        ids = ids[_excl_keep_mask(ids, tomb)]
-                    yield pd.DataFrame({"docid": ids})
+                ids = decode_docid_groups(pdf["blob"].to_numpy())[0]
+                if tomb is not None:
+                    ids = ids[_excl_keep_mask(ids, tomb)]
+                yield pd.DataFrame({"docid": ids})
 
         return seg.select("blob").mapInPandas(gen, "docid long")
 
@@ -1654,29 +1652,31 @@ def _with_excl(excl: np.ndarray | None, id_lists: list[np.ndarray]
     return tex if excl is None else np.union1d(excl, tex)
 
 
+def _term_segment_rows(pdf: pd.DataFrame, term: str) -> np.ndarray:
+    """Row positions of ``term``'s segments in ``pdf``, in docid order (a
+    term's segments cover disjoint docid ranges)."""
+    sel = np.flatnonzero(pdf["term"].to_numpy() == term)
+    return sel[np.argsort(pdf["min_docid"].to_numpy()[sel], kind="stable")]
+
+
 def _decode_term_segments(pdf: pd.DataFrame, term: str,
                           positional: bool = False):
     """Concat a term's (disjoint, docid-ranged) segments in docid order:
     (ids, tfs, dls), plus with ``positional`` the flat per-occurrence
     position stream (posting runs tiling it in docid order, ascending
-    within a posting)."""
-    rows = pdf[pdf["term"] == term].sort_values("min_docid")
-    parts = []
-    for blob, pblob in zip(rows["blob"], rows["pos_blob"] if positional
-                           else rows["blob"]):
-        part = decode_segment(bytes(blob))
-        if positional:
-            if pblob is None:
-                raise ValueError(
-                    "segment has no pos_blob — phrase queries require an "
-                    "index built with store_positions=True"
-                )
-            part = (*part, decode_positions(bytes(pblob), part[1]))
-        parts.append(part)
-    return tuple(
-        np.concatenate([pt[j] for pt in parts]) if parts
-        else np.zeros(0, dtype=np.int64)
-        for j in range(4 if positional else 3))
+    within a posting). All segments decode in one batch pass; position
+    streams are posting-local, so their concatenation decodes as one."""
+    rows = _term_segment_rows(pdf, term)
+    ids, tfs, dls, _, _ = decode_groups(pdf["blob"].to_numpy()[rows])
+    if not positional:
+        return ids, tfs, dls
+    pblobs = pdf["pos_blob"].to_numpy()[rows]
+    if any(b is None for b in pblobs):
+        raise ValueError(
+            "segment has no pos_blob — phrase queries require an "
+            "index built with store_positions=True"
+        )
+    return ids, tfs, dls, decode_positions(b"".join(pblobs), tfs)
 
 
 def _deletion_neighborhood(term: str, d: int) -> list[str]:
@@ -1915,9 +1915,13 @@ def _decode_term_blocks_for(
     instead of decoding it wholesale — the vectorized analogue of the
     two-pointer-with-skips walk (the reference's plain two-pointer kernel is
     search_linear_search.go:12-31)."""
-    rows = pdf[pdf["term"] == term].sort_values("min_docid")
-    ids_p, tfs_p, dls_p, bmx_p, bmn_p = [], [], [], [], []
-    for blob, skips_b in zip(rows["blob"], rows["skips"]):
+    rows = _term_segment_rows(pdf, term)
+    # one entry per decoded piece, in docid order; a dense segment holds
+    # a placeholder that the batch decode below fills
+    parts: list = []
+    dense: list[tuple[int, bytes, np.ndarray]] = []
+    for blob, skips_b in zip(pdf["blob"].to_numpy()[rows],
+                             pdf["skips"].to_numpy()[rows]):
         skips = decode_skips(bytes(skips_b))
         if len(skips) == 0:
             continue
@@ -1926,36 +1930,34 @@ def _decode_term_blocks_for(
         blk_idx = np.unique(blk_of[blk_of < len(skips)])
         if len(blk_idx) == 0:
             continue
-        blob_b = bytes(blob)
         if len(blk_idx) * 2 >= len(skips):
             # dense candidates (head query driven by a not-so-rare term):
             # per-block random access pays python overhead per block, so
-            # once half the blocks are needed ONE wholesale vectorized
-            # decode is cheaper — skip only when skipping pays. The extra
+            # once half the blocks are needed the wholesale batch decode
+            # below is cheaper — skip only when skipping pays. The extra
             # postings are harmless: the caller probes candidates by
             # searchsorted, and the block-max arrays stay per-posting.
-            d, t, l = decode_segment(blob_b)
-            ids_p.append(d)
-            tfs_p.append(t)
-            dls_p.append(l)
-            bmx_p.append(np.repeat(skips["max_tf"].astype(np.int64),
-                                   skips["n"]))
-            bmn_p.append(np.repeat(skips["min_dl"].astype(np.int64),
-                                   skips["n"]))
+            dense.append((len(parts), blob, skips))
+            parts.append(None)
             continue
+        blob_b = bytes(blob)
         for bi in blk_idx:
             d, t, l = decode_block(blob_b, skips, int(bi))
-            ids_p.append(d)
-            tfs_p.append(t)
-            dls_p.append(l)
-            bmx_p.append(np.full(len(d), skips["max_tf"][bi], dtype=np.int64))
-            bmn_p.append(np.full(len(d), skips["min_dl"][bi], dtype=np.int64))
-    if not ids_p:
+            parts.append((d, t, l,
+                          np.full(len(d), skips["max_tf"][bi], np.int64),
+                          np.full(len(d), skips["min_dl"][bi], np.int64)))
+    if not parts:
         z = np.zeros(0, dtype=np.int64)
         return z, z.copy(), z.copy(), z.copy(), z.copy()
-    return (np.concatenate(ids_p), np.concatenate(tfs_p),
-            np.concatenate(dls_p), np.concatenate(bmx_p),
-            np.concatenate(bmn_p))
+    if dense:
+        d, t, l, starts, n = decode_groups([b for _, b, _ in dense])
+        for (at, _, skips), s, e in zip(dense, starts, starts + n):
+            parts[at] = (d[s:e], t[s:e], l[s:e],
+                         np.repeat(skips["max_tf"].astype(np.int64),
+                                   skips["n"]),
+                         np.repeat(skips["min_dl"].astype(np.int64),
+                                   skips["n"]))
+    return tuple(np.concatenate([pt[j] for pt in parts]) for j in range(5))
 
 
 def _wand_kernel_body(pdf: pd.DataFrame, terms: list[str],
@@ -2060,8 +2062,9 @@ def _or_kernel_body(pdf: pd.DataFrame, terms: list[str],
                     after: tuple | None = None) -> pd.DataFrame:
     """Disjunctive (OR) block-max WAND for one bucket:
 
-    1. per term, decode ONLY the docid streams (codec.decode_docids) and
-       derive each posting's block-max contribution straight from the skip
+    1. per term, decode ONLY the docid streams (one
+       codec.decode_docid_groups pass over its segments) and derive each
+       posting's block-max contribution straight from the skip
        records (per-posting repeat of the block's max_tf/min_dl — no tf/dl
        decode at all yet);
     2. union the docids; per-doc upper bound = segmented sum of the
@@ -2078,22 +2081,17 @@ def _or_kernel_body(pdf: pd.DataFrame, terms: list[str],
     ub_parts: list[np.ndarray] = []
     id_parts: list[np.ndarray] = []
     for t in present:
-        rows = pdf[pdf["term"] == t].sort_values("min_docid")
-        ids_l, ub_l = [], []
-        for blob, skips_b in zip(rows["blob"], rows["skips"]):
-            d = decode_docids(bytes(blob))
-            sk = decode_skips(bytes(skips_b))
-            ids_l.append(d)
-            ub_l.append(
-                idf[t] * (BM25_K1 + 1.0) * tf_norm(
-                    np.repeat(sk["max_tf"].astype(np.float64), sk["n"]),
-                    np.repeat(sk["min_dl"].astype(np.float64), sk["n"]),
-                    avgdl,
-                )
-            )
-        ids_per[t] = np.concatenate(ids_l)
+        rows = _term_segment_rows(pdf, t)
+        ids_per[t] = decode_docid_groups(pdf["blob"].to_numpy()[rows])[0]
+        sk = decode_skips(b"".join(pdf["skips"].to_numpy()[rows]))
         id_parts.append(ids_per[t])
-        ub_parts.append(np.concatenate(ub_l))
+        ub_parts.append(
+            idf[t] * (BM25_K1 + 1.0) * tf_norm(
+                np.repeat(sk["max_tf"].astype(np.float64), sk["n"]),
+                np.repeat(sk["min_dl"].astype(np.float64), sk["n"]),
+                avgdl,
+            )
+        )
     uniq, inv = np.unique(np.concatenate(id_parts), return_inverse=True)
     ub = np.bincount(inv, weights=np.concatenate(ub_parts),
                      minlength=len(uniq))
