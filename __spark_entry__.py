@@ -79,7 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     out = os.path.join(tempfile.mkdtemp(prefix="vg_entry_"), "idx")
     build_index(spark, corpus, out, analyzer=SQL_SAFE_ANALYZER,
-                num_partitions=4, n_buckets=4)
+                num_partitions=4)
     idx = SearchIndex(spark, out, analyzer=SQL_SAFE_ANALYZER)
     return idx.search("spark join", engine="bm25", k=10)
 

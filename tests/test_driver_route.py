@@ -61,23 +61,23 @@ def layouts(spark, tmp_path_factory):
 
     out = {}
     b = str(root / "build")
-    build_index(spark, df(pdf), b, num_partitions=4, n_buckets=3)
+    build_index(spark, df(pdf), b, num_partitions=4)
     out["build"] = b
 
     a = str(root / "appended")
-    build_index(spark, df(pdf.iloc[:200]), a, num_partitions=4, n_buckets=3)
+    build_index(spark, df(pdf.iloc[:200]), a, num_partitions=4)
     append_index(spark, df(pdf.iloc[200:]), a, num_partitions=2)
     out["appended"] = a
 
     m = str(root / "merged")
-    build_index(spark, df(pdf.iloc[:150]), m, num_partitions=4, n_buckets=3)
+    build_index(spark, df(pdf.iloc[:150]), m, num_partitions=4)
     append_index(spark, df(pdf.iloc[150:220]), m, num_partitions=2)
     append_index(spark, df(pdf.iloc[220:]), m, num_partitions=2)
     merge_appends(spark, m, num_partitions=2)
     out["merged"] = m
 
     c = str(root / "compacted")
-    build_index(spark, df(pdf.iloc[:200]), c, num_partitions=4, n_buckets=3)
+    build_index(spark, df(pdf.iloc[:200]), c, num_partitions=4)
     append_index(spark, df(pdf.iloc[200:]), c, num_partitions=2)
     compact_index(spark, c, num_partitions=4)
     out["compacted"] = c
@@ -246,7 +246,7 @@ def test_include_raw_rides_the_driver_route(spark, tmp_path):
     pdf = generate_corpus(80).sort_values("url").reset_index(drop=True)
     out = str(tmp_path / "raw")
     build_index(spark, spark.createDataFrame(pdf[["url", "text", "lang"]]),
-                out, num_partitions=2, n_buckets=2, store_raw=True)
+                out, num_partitions=2, store_raw=True)
     idx = SearchIndex(spark, out)
     by_url = dict(zip(pdf["url"], pdf["text"]))
     rows = idx.search("programación", "bm25", 5, include_raw=True,

@@ -32,7 +32,7 @@ def index(spark, tmp_path_factory):
     corpus_pd = generate_corpus(N_DOCS)
     corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
     out = str(tmp_path_factory.mktemp("index") / "idx")
-    build_index(spark, corpus, out, num_partitions=6, n_buckets=5,
+    build_index(spark, corpus, out, num_partitions=6,
                 n_batches=2)
     return SearchIndex(spark, out)
 
@@ -281,7 +281,7 @@ class TestResume:
         corpus_pd = generate_corpus(120)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         out = str(tmp_path / "idx")
-        build_index(spark, corpus, out, num_partitions=2, n_buckets=2,
+        build_index(spark, corpus, out, num_partitions=2,
                     n_batches=5)
         empties = []
         for m in load_snapshot(out)["batches"]:
@@ -306,18 +306,18 @@ class TestResume:
         corpus_pd = generate_corpus(120)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         cold = str(tmp_path / "cold")
-        build_index(spark, corpus, cold, num_partitions=4, n_buckets=4,
+        build_index(spark, corpus, cold, num_partitions=4,
                     n_batches=3)
         stats1 = load_stats(cold)
         # crash at batch 1's progress commit -> only batches 1, 2 rebuild
         out = str(tmp_path / "idx")
         with crash_store(match="snapshot-1") as st:
-            build_index(spark, corpus, out, num_partitions=4, n_buckets=4,
+            build_index(spark, corpus, out, num_partitions=4,
                         n_batches=3)
         assert st["fired"]
         b0 = os.path.join(out, "data", "batch=0")
         m0 = os.path.getmtime(b0)
-        build_index(spark, corpus, out, num_partitions=4, n_buckets=4,
+        build_index(spark, corpus, out, num_partitions=4,
                     n_batches=3, resume=True)
         stats2 = load_stats(out)
         assert stats2["n_postings"] == stats1["n_postings"]
@@ -329,13 +329,13 @@ class TestResume:
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         cold = str(tmp_path / "cold")
         warm = str(tmp_path / "warm")
-        build_index(spark, corpus, cold, num_partitions=4, n_buckets=4,
+        build_index(spark, corpus, cold, num_partitions=4,
                     n_batches=2)
         with crash_store(match="snapshot-1") as st:
-            build_index(spark, corpus, warm, num_partitions=4, n_buckets=4,
+            build_index(spark, corpus, warm, num_partitions=4,
                         n_batches=2)
         assert st["fired"]
-        build_index(spark, corpus, warm, num_partitions=4, n_buckets=4,
+        build_index(spark, corpus, warm, num_partitions=4,
                     n_batches=2, resume=True)
         q = "programación java"
         a = SearchIndex(spark, cold).search(q, "bm25", 10).collect()
@@ -348,7 +348,7 @@ class TestResume:
         corpus_pd = generate_corpus(60)
         corpus = spark.createDataFrame(corpus_pd[["url", "text", "lang"]])
         out = str(tmp_path / "idx")
-        build_index(spark, corpus, out, num_partitions=2, n_buckets=2)
+        build_index(spark, corpus, out, num_partitions=2)
         from visigoth_spark.build import load_snapshot
 
         m = load_snapshot(out)["batches"][0]

@@ -44,7 +44,7 @@ def idx(spark, tmp_path_factory):
     pdf = generate_corpus(120).sort_values("url").reset_index(drop=True)
     out = str(tmp_path_factory.mktemp("local_result") / "idx")
     build_index(spark, spark.createDataFrame(pdf[["url", "text", "lang"]]),
-                out, num_partitions=2, n_buckets=2, store_raw=True)
+                out, num_partitions=2, store_raw=True)
     return SearchIndex(spark, out)
 
 

@@ -362,36 +362,71 @@ def test_half_written_manifests_regenerated_by_next_merge(spark, tmp_path,
 
 
 def _unsorted_files(out):
-    """Data files of the snapshot's batches whose rows are out of key
-    order: ``kind=s`` files must be term-sorted, ``kind=d`` files
-    docid-sorted (the row-group min/max the readers prune on assume it)."""
+    """Data files of the snapshot's batches whose rows break the key order
+    their writer promises: built (finalized), merged and compacted
+    ``kind=s`` files are sorted by (term, bucket, min_docid), every
+    ``kind=d`` file by docid (the row-group min/max the readers prune on
+    assume it). An appended batch's segment files keep the order of the
+    fused write, which promises none across flushes."""
     import pyarrow.parquet as pq
 
     bad = []
     for b in _visible(out):
         bdir = os.path.join(out, "data", f"batch={b['batch']}")
-        for kind, key in (("s", "term"), ("d", "docid")):
+        keys = {"d": ["docid"]}
+        if not b.get("appended"):
+            keys["s"] = ["term", "bucket", "min_docid"]
+        for kind, key in keys.items():
             kdir = os.path.join(bdir, f"kind={kind}")
             for fn in sorted(os.listdir(kdir)):
                 if not fn.endswith(".parquet"):
                     continue
-                keys = pq.read_table(os.path.join(kdir, fn),
-                                     columns=[key])[key].to_pylist()
-                if keys != sorted(keys):
+                tbl = pq.read_table(os.path.join(kdir, fn), columns=key)
+                rows = list(zip(*(tbl[c].to_pylist() for c in key)))
+                if rows != sorted(rows):
                     bad.append(f"batch={b['batch']}/kind={kind}/{fn}")
     return bad
 
 
 def test_merged_and_compacted_files_are_key_sorted(spark, tmp_path):
-    """merge_appends and compact_index sort within each output file and
-    write it under ``kind=``; the write must keep that order."""
+    """Each writer keeps its key order through the partitioned ``kind=``
+    write: checked after a two-batch build, each append, an update, a
+    merge, and a compaction whose ``flush_docs`` splits a (term, bucket)
+    into several chunks."""
+    import pyarrow.parquet as pq
+
+    from visigoth_spark.build import update_docs
+
     _, slices = _slices(300, 3)
-    out = _appended(spark, tmp_path, "sorted", slices)
+    out = str(tmp_path / "sorted")
+    build_index(spark, _df(spark, slices[0]), out, num_partitions=4,
+                n_batches=2)
+    assert len(_visible(out)) == 2
+    assert _unsorted_files(out) == []
+    for s in slices[1:]:
+        append_index(spark, _df(spark, s), out, num_partitions=2)
+        assert _unsorted_files(out) == []
+    update_docs(spark, out, _df(spark, slices[1].iloc[:20].assign(
+        text="curso java nuevo")), num_partitions=2)
+    assert _unsorted_files(out) == []
     merge_appends(spark, out, num_partitions=2)
     assert any(b.get("merged") for b in _visible(out))
     assert _unsorted_files(out) == []
-    compact_index(spark, out, num_partitions=4)
-    assert [b.get("compacted") for b in _visible(out)] == [True]
+    # uncoalesced shuffles spread a (term, bucket)'s chunks over several
+    # staged files, so only the writer's sort puts them in min_docid order
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        compact_index(spark, out, num_partitions=4, flush_docs=16)
+    finally:
+        spark.conf.set(key, saved)
+    (entry,) = _visible(out)
+    assert entry.get("compacted")
+    seg = pq.read_table(
+        os.path.join(out, "data", f"batch={entry['batch']}", "kind=s"),
+        columns=["term", "bucket"]).to_pandas()
+    assert seg.duplicated().sum() > 100  # several chunks per (term, bucket)
     assert _unsorted_files(out) == []
 
 

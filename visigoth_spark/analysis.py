@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import html as _html
 from dataclasses import dataclass, field
-from typing import Iterable
 
 import pandas as pd
 import regex
@@ -371,11 +370,3 @@ def extract_text_series(html_col: pd.Series) -> pd.Series:
         [extract_text(b if b is not None else b"") for b in html_col.tolist()],
         index=html_col.index,
     )
-
-
-def build_vocab(texts: Iterable[str], cfg: AnalyzerConfig = DEFAULT_ANALYZER) -> set[str]:
-    """Distinct analyzed terms over an iterable of raw texts (test helper)."""
-    out: set[str] = set()
-    for lst in analyze_series(pd.Series(list(texts)), cfg):
-        out.update(lst)
-    return out

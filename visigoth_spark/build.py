@@ -517,34 +517,29 @@ def build_index(
     resume: bool = False,
     assume_sorted: bool = False,
     flush_docs: int = 500_000,
-    n_buckets: int | None = None,  # accepted for API compat; bucket == pid
     store_raw: bool = False,
     statement_col: str | None = None,
-    finalize_segments: bool = True,
     store_positions: bool = False,
 ) -> BuildMetrics:
     """Build (or resume) the inverted index at ``out_dir``.
+
+    Each batch's segment files are rewritten term-range partitioned right
+    after its fused zero-shuffle write (``_finalize_batch_segments``: the
+    layout ``compact_index`` produces), so a fresh index is query-ready
+    with file-level pruning from the first search: the planner enumerates
+    ~1 segment file per query term instead of scheduling one split per
+    corpus partition (the reference analogue is the hash-map probe being
+    O(1) from the first Put, index_memory_index.go:24-27). Cost: one extra
+    read+write of the COMPRESSED posting blobs per batch (~bytes_blob, a
+    few percent of corpus bytes — never the corpus text, never the
+    docmap/raw rows). Appends keep the fused layout; ``merge_appends``
+    and ``compact_index`` establish the serving layout for them.
 
     ``store_positions``: also store each posting's token positions (in the
     analyzed token sequence) as the parallel ``pos_blob`` varbyte stream —
     required for ``engine="phrase"`` queries. Off by default: positions
     roughly double posting bytes at web scale, and every non-phrase query
     path ignores (and never reads) the column.
-
-    ``finalize_segments`` (default True): after each batch's fused
-    zero-shuffle write, rewrite that batch's segment files term-range
-    partitioned (the same layout ``compact_index`` produces). Every batch
-    records its per-file term/docid ranges in the snapshot either way;
-    finalized files make the term ranges tight. A fresh index is then query-ready with file-level
-    pruning from the first search: the planner enumerates ~1 segment file
-    per query term instead of scheduling one split per corpus partition
-    (the reference analogue is the hash-map probe being O(1) from the
-    first Put, index_memory_index.go:24-27). Cost: one extra read+write
-    of the COMPRESSED posting blobs per batch (~bytes_blob, a few percent
-    of corpus bytes — never the corpus text, never the docmap/raw rows).
-    Set False for maximum-throughput ingest where a merge/compact pass
-    will establish the serving layout anyway (the append/streaming path's
-    tiering model).
 
     ``store_raw``: store each document's content in the docmap so results
     can hydrate ``Doc.Raw`` (≙ search_result.go:6-9 / the ``"raw"`` field of
@@ -571,9 +566,9 @@ def build_index(
 
 def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
            num_partitions=None, n_batches=1, resume=False,
-           assume_sorted=False, flush_docs=500_000, n_buckets=None,
-           store_raw=False, statement_col=None, finalize_segments=True,
-           store_positions=False, commit=None) -> BuildMetrics:
+           assume_sorted=False, flush_docs=500_000, store_raw=False,
+           statement_col=None, store_positions=False, commit=None
+           ) -> BuildMetrics:
     """``build_index``; ``commit`` holds extra snapshot fields for the
     final commit (the streaming epoch of a stream's first build)."""
     t0 = time.time()
@@ -585,8 +580,10 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
             f"statement_col {statement_col!r} not in corpus columns "
             f"{corpus.columns}"
         )
-    index_col = statement_col or "text"
-    raw_col = "text" if (store_raw or statement_col) else None
+    gen_kw = dict(analyzer=analyzer, flush_docs=flush_docs,
+                  index_col=statement_col or "text",
+                  raw_col="text" if (store_raw or statement_col) else None,
+                  store_positions=store_positions)
     tmark = [t0]
     store = vstore.get_store(out_dir, spark)
     store.makedirs(vstore.join(out_dir, "_manifests"))
@@ -647,45 +644,14 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
                 batches.append({"batch": bi, "partitions": [],
                                 "buckets": [], "n_docs": 0})
                 continue
-            tb = time.time()
-            batch_path = vstore.join(out_dir, "data", f"batch={bi}")
             part = src
             if len(batch_pids) < P:
                 part = src.withColumn(
                     "_pid", F.spark_partition_id()
                 ).filter(F.col("_pid").isin(batch_pids)).drop("_pid")
-            fused = part.mapInPandas(
-                _fused_generator(offsets, analyzer, flush_docs,
-                                 index_col=index_col, raw_col=raw_col,
-                                 store_positions=store_positions),
-                OUT_SCHEMA,
-            )
-            # small row groups: segment files are term-sorted and docmap
-            # files docid-sorted, so 4 MB row groups turn query-term and
-            # docid filters into row-group-level scan pruning (the parquet
-            # analogue of the term-dictionary seek)
-            (
-                fused.write.mode("overwrite")
-                .option("parquet.block.size", str(4 * 1024 * 1024))
-                .partitionBy("kind")
-                .parquet(batch_path)
-            )
-            _tick("build", f"batch {bi}", tmark)
-            if finalize_segments:
-                # term-range rewrite of the not-yet-committed batch dir
-                _finalize_batch_segments(
-                    spark, store, batch_path,
-                    n_files=max(1, min(64, len(batch_pids))))
-                _tick("build", f"batch {bi} finalize", tmark)
-            end = offsets.get(batch_pids[-1] + 1, n_docs)
-            widths = [offsets.get(p + 1, n_docs) - offsets[p]
-                      for p in batch_pids]
-            batches.append(_batch_entry(
-                spark, out_dir, bi, partitions=batch_pids,
-                buckets=batch_pids,
-                docid_range=[offsets[batch_pids[0]], end],
-                n_docs=end - offsets[batch_pids[0]],
-                bucket_width=max(widths), wall_sec=time.time() - tb))
+            batches.append(_index_batch(
+                spark, store, out_dir, bi, part, offsets, batch_pids,
+                n_docs, 0, gen_kw, "build", tmark))
             # progress commit: resume skips the batches it names
             snap = _commit(store, out_dir, _next(
                 snap, batches=list(batches), stats=None, termdict=None),
@@ -703,7 +669,7 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         _tick("build", "termdict", tmark)
         stats = {
             "bm25": {"k1": 1.2, "b": 0.75},
-            "store_raw": raw_col is not None,
+            "store_raw": bool(store_raw or statement_col),
             "store_positions": store_positions,
             "statement_col": statement_col,
             "analyzer": {
@@ -730,42 +696,113 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
             src.unpersist()
 
 
-_SEG_FILE_SCHEMA = ("bucket int, term string, df_seg int, sum_tf long, "
-                    "min_docid long, max_docid long, blob binary, "
-                    "skips binary, docid long, url string, doclen int, "
-                    "raw string, pos_blob binary")
+# the columns of a ``kind=s`` / ``kind=d`` file: the partitioned write
+# keeps ``kind`` in the directory name only
+_SEG_FILE_SCHEMA = OUT_SCHEMA.removeprefix("kind string, ")
+
+
+# ---- the on-disk layout: one writer per file kind --------------------------
+# Every data file of a batch is written by one of these three. Rows carry
+# ``kind`` ('s' segment, 'd' docmap) and land under ``<path>/kind=<k>/`` in
+# 4 MB row groups: segment files are term-sorted and docmap files
+# docid-sorted, so query-term and docid filters prune row groups (the
+# parquet analogue of the term-dictionary seek) and the per-file ranges
+# the snapshot records prune whole files.
+
+def _write_batch_rows(rows: DataFrame, path: str,
+                      mode: str = "overwrite") -> None:
+    """Write ``rows`` of either kind under ``path``, one dir per kind. The
+    fused build/append write calls it directly; the write then sorts only
+    by ``kind``, so within a kind the rows keep whatever order Spark's
+    sort leaves (readers sort a row group at decode:
+    ``query._SortedParquet``)."""
+    (
+        rows.write.mode(mode)
+        .option("parquet.block.size", str(4 * 1024 * 1024))
+        .partitionBy("kind")
+        .parquet(path)
+    )
+
+
+def _write_segments(rows: DataFrame, path: str, n_files: int,
+                    mode: str = "overwrite") -> None:
+    """Segment rows, term-range partitioned into at most 64 files (disjoint
+    per-file term ranges) and sorted by (term, bucket, min_docid) within
+    each. The sort leads with the constant ``kind``: the partitioned write
+    requires that order and would otherwise plan its own sort on ``kind``,
+    which drops the one below."""
+    _write_batch_rows(
+        rows.repartitionByRange(max(1, min(64, n_files)), "term")
+        .sortWithinPartitions("kind", "term", "bucket", "min_docid"),
+        path, mode)
+
+
+def _write_docmap(rows: DataFrame, path: str, n_files: int,
+                  mode: str = "overwrite") -> None:
+    """Docmap rows, docid-range partitioned into ``n_files`` files and
+    docid-sorted within each (``kind`` first, as in ``_write_segments``)."""
+    _write_batch_rows(
+        rows.repartitionByRange(n_files, "docid")
+        .sortWithinPartitions("kind", "docid"),
+        path, mode)
 
 
 def _finalize_batch_segments(spark: SparkSession, store, batch_path: str,
                              n_files: int) -> None:
-    """Rewrite one batch's ``kind=s`` dir term-range partitioned (disjoint
-    per-file term ranges, term-sorted rows, 4 MB row groups) — the layout
-    ``compact_index`` produces, established at build time so the per-file
-    term ranges prune to ~1 file per query term from the first search. Only
-    the compressed posting blobs move (one read+write of ~bytes_blob);
-    the docmap files never do. Content is row-identical — file placement
-    is the only thing that changes (the bench's resume digest compares
-    sorted rows for exactly this reason). The batch dir is not named by
-    any snapshot yet (the caller commits it after this returns), so a
-    crash mid-rewrite leaves it unreferenced and resume redoes it."""
-    seg_dir = os.path.join(batch_path, "kind=s")
+    """Rewrite one batch's ``kind=s`` dir through ``_write_segments`` —
+    the layout ``compact_index`` produces, established at build time so
+    the per-file term ranges prune to ~1 file per query term from the
+    first search. Only the compressed posting blobs move (one read+write
+    of ~bytes_blob); the docmap files never do. Content is row-identical
+    — file placement is the only thing that changes (the bench's resume
+    digest compares sorted rows for exactly this reason). The rewrite goes
+    to a temp dir that then replaces ``kind=s``; the batch dir is not
+    named by any snapshot yet (the caller commits it after this returns),
+    so a crash mid-rewrite leaves it unreferenced and resume redoes it."""
+    seg_dir = vstore.join(batch_path, "kind=s")
     if not store.isdir(seg_dir):
         return  # batch whose docs all analyzed to zero tokens
-    files = [os.path.join(seg_dir, f) for f in store.listdir(seg_dir)
+    files = [vstore.join(seg_dir, f) for f in store.listdir(seg_dir)
              if f.endswith(".parquet")]
     if not files:
         return
-    tmp = os.path.join(batch_path, "_seg_tmp")
-    (
-        spark.read.schema(_SEG_FILE_SCHEMA).parquet(*files)
-        .repartitionByRange(n_files, "term")
-        .sortWithinPartitions("term", "bucket", "min_docid")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(4 * 1024 * 1024))
-        .parquet(tmp)
-    )
+    tmp = vstore.join(batch_path, "_seg_tmp")
+    # basePath: ``kind`` comes back as the hive column the writer keys on
+    _write_segments(
+        spark.read.option("basePath", batch_path).schema(OUT_SCHEMA)
+        .parquet(*files), tmp, n_files)
     store.rmtree(seg_dir)
-    store.rename(tmp, seg_dir)
+    store.rename(vstore.join(tmp, "kind=s"), seg_dir)
+    store.rmtree(tmp)
+
+
+def _index_batch(spark: SparkSession, store, out_dir: str, batch: int,
+                 src: DataFrame, offsets: dict[int, int], pids: list[int],
+                 n_total: int, bucket_base: int, gen_kw: dict, op: str,
+                 tmark: list[float], **fields) -> dict:
+    """Index corpus partitions ``pids`` of ``src`` as batch ``batch`` of a
+    build (``op="build"``) or an append: the fused write (docids from
+    ``offsets``, ``n_total`` past the last partition; ``gen_kw`` are
+    ``_fused_generator``'s options), the term-range segment rewrite when
+    building, and the batch's snapshot entry (``fields`` first). Bucket
+    = ``bucket_base`` + partition id. ``tmark`` is the op's stage clock;
+    the entry's ``wall_sec`` counts from it."""
+    t0 = tmark[0]
+    path = vstore.join(out_dir, "data", f"batch={batch}")
+    gen = _fused_generator(offsets, bucket_base=bucket_base, **gen_kw)
+    _write_batch_rows(src.mapInPandas(gen, OUT_SCHEMA), path)
+    _tick(op, f"batch {batch}", tmark)
+    if op == "build":
+        _finalize_batch_segments(spark, store, path, n_files=len(pids))
+        _tick(op, f"batch {batch} finalize", tmark)
+    ends = [offsets.get(p + 1, n_total) for p in pids]
+    return _batch_entry(
+        spark, out_dir, batch, **fields, partitions=pids,
+        buckets=[bucket_base + p for p in pids],
+        docid_range=[offsets[pids[0]], ends[-1]],
+        n_docs=ends[-1] - offsets[pids[0]],
+        bucket_width=max(e - offsets[p] for p, e in zip(pids, ends)),
+        wall_sec=time.time() - t0)
 
 
 def _seg_meta(spark: SparkSession, batch_path: str):
@@ -1093,9 +1130,6 @@ def _append(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         raise ValueError(
             "cannot enable store_raw on an existing index built without it"
         )
-    index_col = statement_col or "text"
-    raw_col = "text" if (store_raw or statement_col
-                         or stats.get("store_raw")) else None
 
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
     extra = (statement_col,) if statement_col else ()
@@ -1108,28 +1142,14 @@ def _append(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
         offsets = {pid: off + base_docid for pid, off in offsets.items()}
         P = len(offsets)
 
-        batch_path = vstore.join(out_dir, "data", f"batch={batch_id}")
-        fused = src.mapInPandas(
-            _fused_generator(offsets, analyzer, flush_docs, bucket_base,
-                             index_col=index_col, raw_col=raw_col,
-                             store_positions=store_positions),
-            OUT_SCHEMA,
-        )
-        (
-            fused.write.mode("overwrite")
-            .option("parquet.block.size", str(4 * 1024 * 1024))
-            .partitionBy("kind")
-            .parquet(batch_path)
-        )
-        starts = [offsets[p] for p in sorted(offsets)]
-        widths = [b - a for a, b in zip(starts, starts[1:])]
-        widths.append(base_docid + n_new - starts[-1])
-        entry = _batch_entry(
-            spark, out_dir, batch_id, appended=True,
-            partitions=sorted(offsets),
-            buckets=[bucket_base + i for i in range(P)],
-            docid_range=[base_docid, base_docid + n_new], n_docs=n_new,
-            bucket_width=max(widths), wall_sec=time.time() - t0)
+        entry = _index_batch(
+            spark, store, out_dir, batch_id, src, offsets, sorted(offsets),
+            base_docid + n_new, bucket_base,
+            dict(analyzer=analyzer, flush_docs=flush_docs,
+                 index_col=statement_col or "text",
+                 raw_col="text" if stats.get("store_raw") else None,
+                 store_positions=store_positions),
+            "append", [t0], appended=True)
         batches = [b for b in base["batches"] if b["batch"] != batch_id]
         n = base["id"] + 1
         td = f"termdict/{n}"
@@ -1214,29 +1234,11 @@ def merge_appends(
     new_batch = 1 + max(b["batch"] for b in base["batches"])
     batch_path = vstore.join(index_dir, "data", f"batch={new_batch}")
     store.rmtree(batch_path)  # inert orphan from a crashed prior merge
-    rows = _read_batches(spark, index_dir, to_merge)
+    rows = _read_batches(spark, index_dir, to_merge).drop("batch")
     P = num_partitions or spark.sparkContext.defaultParallelism * 2
-    # each sort leads with the (constant) partition column: the
-    # partitionBy("kind") write requires that order, and would otherwise
-    # plan its own sort on kind, which drops the one below
-    (
-        rows.filter(F.col("kind") == "s").drop("batch")
-        .repartitionByRange(max(1, min(64, P)), "term")
-        .sortWithinPartitions("kind", "term", "bucket", "min_docid")
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(4 * 1024 * 1024))
-        .partitionBy("kind")
-        .parquet(batch_path)
-    )
-    (
-        rows.filter(F.col("kind") == "d").drop("batch")
-        .repartitionByRange(max(1, min(32, P)), "docid")
-        .sortWithinPartitions("kind", "docid")
-        .write.mode("append")
-        .option("parquet.block.size", str(4 * 1024 * 1024))
-        .partitionBy("kind")
-        .parquet(batch_path)
-    )
+    _write_segments(rows.filter(F.col("kind") == "s"), batch_path, P)
+    _write_docmap(rows.filter(F.col("kind") == "d"), batch_path,
+                  max(1, min(32, P)), mode="append")
     entry = _batch_entry(
         spark, index_dir, new_batch, merged=True, replaces=src_ids,
         docid_range=[min(b["docid_range"][0] for b in to_merge),
@@ -1671,12 +1673,10 @@ def compact_index(
     map_df = spark.read.parquet(map_path)
     _tick("compact", "offsets/remap", tmark)
 
-    # ---- new docmap (kind=d), docid-sorted files, 4 MB row groups ----------
+    # ---- new docmap (kind=d) ----------------------------------------------
     batch_path = vstore.join(root, "data", f"batch={new_batch}")
     n = F.lit
-    docmap_new = map_df.repartitionByRange(
-        P, "docid"
-    ).sortWithinPartitions("docid").select(
+    _write_docmap(map_df.select(
         n("d").alias("kind"), "bucket", n("").alias("term"),
         n(0).alias("df_seg"), n(0).cast("long").alias("sum_tf"),
         n(0).cast("long").alias("min_docid"),
@@ -1686,13 +1686,7 @@ def compact_index(
         "docid", "url", "doclen",
         (F.col("raw") if has_raw else n(None).cast("string")).alias("raw"),
         n(None).cast("binary").alias("pos_blob"),
-    )
-    (
-        docmap_new.write.mode("overwrite")
-        .option("parquet.block.size", str(4 * 1024 * 1024))
-        .partitionBy("kind")
-        .parquet(batch_path)
-    )
+    ), batch_path, P)
     _tick("compact", "docmap write", tmark)
 
     # ---- postings: decode -> remap -> re-encode ----------------------------
@@ -1761,22 +1755,13 @@ def compact_index(
         return _seg_frame(vocab[codes[order]], d[order], tf[order], dl[order],
                           int(pdf["bucket"].iloc[0]), positions=pos)
 
-    n_seg_files = max(1, min(64, P))
     # staged as parquet: the range partitioner's sampling job and the write
     # would each run encode_group over every group if they read the plan
     seg_path = vstore.join(stage, "segments")
     (joined.groupBy("bucket", "chunk").applyInPandas(encode_group, OUT_SCHEMA)
      .write.mode("overwrite").parquet(seg_path))
-    (
-        spark.read.parquet(seg_path)
-        .repartitionByRange(n_seg_files, "term")
-        # kind first: see merge_appends' partitioned writes
-        .sortWithinPartitions("kind", "term", "bucket")
-        .write.mode("append")
-        .option("parquet.block.size", str(4 * 1024 * 1024))
-        .partitionBy("kind")
-        .parquet(batch_path)
-    )
+    _write_segments(spark.read.parquet(seg_path), batch_path, P,
+                    mode="append")
     _tick("compact", "postings decode/encode/write", tmark)
 
     # ---- termdict + fuzzydict + the commit ---------------------------------

@@ -68,7 +68,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType,
 from visigoth_spark.analysis import (AnalyzerConfig, DEFAULT_ANALYZER,
                                      analyze_text, highlight_spans,
                                      phrase_highlight_spans)
-from visigoth_spark.build import _require
+from visigoth_spark.build import _SEG_FILE_SCHEMA, _read_batches, _require
 from visigoth_spark import storage as vstore
 from visigoth_spark.codec import (
     BM25_B,
@@ -202,10 +202,11 @@ class _SortedParquet:
     probe still decodes only the row groups whose range covers its keys.
     A probe is a binary search verified by equality. String keys are in
     the writer's (Spark's) UTF-8 byte order, which is code-point order,
-    i.e. Python ``str`` order. A row group out of key order is sorted
-    once, at decode: indexes merged by an older ``merge_appends``, whose
-    ``partitionBy("kind")`` write dropped its sort, hold such docmap
-    files.
+    i.e. Python ``str`` order. A row group is sorted once, at decode,
+    because not every writer promises key order within a file: the fused
+    build/append write (``build._write_batch_rows``) sorts only by
+    ``kind``, so the rows of a kind keep whatever order Spark's sort
+    leaves them in, and Spark does not promise a stable sort.
 
     With ``open_file`` (the termdict: a local file, or an object store's
     seekable stream so a decode is a ranged GET) each file is opened once
@@ -541,9 +542,7 @@ class SearchIndex:
     def _data(self) -> DataFrame:
         """Every visible batch's files, one Spark relation (a JVM listing:
         built only when a distributed path first needs it)."""
-        data_root = f"{self.index_dir}/data"
-        return self.spark.read.option("basePath", data_root).parquet(
-            *[os.path.join(data_root, f"batch={b}") for b in self._batches])
+        return _read_batches(self.spark, self.index_dir, self._manifests)
 
     @cached_property
     def _docmap(self) -> DataFrame:
@@ -681,12 +680,8 @@ class SearchIndex:
                  for p in self._seg_prune.prune(terms)]
         if not paths:
             return None
-        schema = ("bucket int, term string, df_seg int, sum_tf long, "
-                  "min_docid long, max_docid long, blob binary, "
-                  "skips binary, docid long, url string, doclen int, "
-                  "raw string, pos_blob binary")
         return (
-            self.spark.read.schema(schema).parquet(*paths)
+            self.spark.read.schema(_SEG_FILE_SCHEMA).parquet(*paths)
             .filter(F.col("term").isin(terms))
             .select(*(cols or self._SEG_COLS))
         )
@@ -1276,16 +1271,15 @@ class SearchIndex:
                    F.lit(0).alias("hits")] + (["raw"] if include_raw else [])
             src = self._docmap
             if self._tombstones is not None:
-                if len(self._tombstones) <= self._TOMB_BROADCAST_MIN:
-                    src = src.filter(~F.col("docid").isin(
-                        [int(d) for d in self._tombstones]))
-                else:
-                    # a big tombstone set as IN-literals would bloat the
-                    # Catalyst plan itself — anti-join a broadcast instead
-                    tdf = self.spark.createDataFrame(
-                        [(int(d),) for d in self._tombstones],
-                        "docid long")
-                    src = src.join(F.broadcast(tdf), "docid", "left_anti")
+                import pyarrow as pa
+
+                # anti-join a broadcast of the ids, built from an Arrow
+                # table: a JVM local relation whatever the Arrow flag, where
+                # a list of tuples is a PythonRDD job, and IN-literals bloat
+                # the Catalyst plan of a big set
+                tdf = self.spark.createDataFrame(
+                    pa.table({"docid": self._tombstones}))
+                src = src.join(F.broadcast(tdf), "docid", "left_anti")
             out = src.select(*sel).orderBy("docid")
             return out.limit(k) if k is not None else out
 
