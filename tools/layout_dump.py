@@ -38,6 +38,10 @@ import shutil
 import sys
 import tempfile
 
+# the seed-961 ``maintain`` inputs of perfbench; two dumps compare only
+# when both ran on these
+DOCS, APPEND_DOCS, DELETE_DOCS, SEED = 3000, 500, 50, 961
+
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
@@ -45,10 +49,6 @@ def main() -> int:
     ap.add_argument("--repo", default=os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))),
         help="checkout whose visigoth_spark to import (default: this one)")
-    ap.add_argument("--docs", type=int, default=3000)
-    ap.add_argument("--append-docs", type=int, default=500)
-    ap.add_argument("--delete-docs", type=int, default=50)
-    ap.add_argument("--seed", type=int, default=961)
     a = ap.parse_args()
 
     repo = os.path.abspath(a.repo)
@@ -83,8 +83,8 @@ def main() -> int:
 
     try:
         corpus = os.path.join(work, "corpus.parquet")
-        write_corpus_parquet(corpus, a.docs, a.seed)
-        extra = generate_corpus(2 * a.append_docs, a.seed + 1)
+        write_corpus_parquet(corpus, DOCS, SEED)
+        extra = generate_corpus(2 * APPEND_DOCS, SEED + 1)
         extra["url"] = extra["url"].str.replace("/page-", "/new-")
         extra = extra[["url", "text", "lang"]]
         out = []
@@ -92,13 +92,13 @@ def main() -> int:
                        assume_sorted=True)
         out.append(layout("build"))
         for i in range(2):
-            part = extra.iloc[i * a.append_docs:(i + 1) * a.append_docs]
+            part = extra.iloc[i * APPEND_DOCS:(i + 1) * APPEND_DOCS]
             vb.append_index(spark, spark.createDataFrame(part), idx)
             out.append(layout(f"append {i}"))
         urls = list(pd.read_parquet(corpus, columns=["url"])["url"]) + list(
             extra["url"])
-        pick = np.random.RandomState(a.seed).choice(
-            len(urls), a.delete_docs, replace=False)
+        pick = np.random.RandomState(SEED).choice(
+            len(urls), DELETE_DOCS, replace=False)
         vb.delete_docs(spark, idx, urls=[urls[i] for i in sorted(pick)])
         out.append(layout("delete"))
         vb.merge_appends(spark, idx)

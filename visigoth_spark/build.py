@@ -644,6 +644,7 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
                 batches.append({"batch": bi, "partitions": [],
                                 "buckets": [], "n_docs": 0})
                 continue
+            tb = time.time()
             part = src
             if len(batch_pids) < P:
                 part = src.withColumn(
@@ -651,7 +652,7 @@ def _build(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
                 ).filter(F.col("_pid").isin(batch_pids)).drop("_pid")
             batches.append(_index_batch(
                 spark, store, out_dir, bi, part, offsets, batch_pids,
-                n_docs, 0, gen_kw, "build", tmark))
+                n_docs, 0, gen_kw, "build", tb, tmark))
             # progress commit: resume skips the batches it names
             snap = _commit(store, out_dir, _next(
                 snap, batches=list(batches), stats=None, termdict=None),
@@ -779,15 +780,15 @@ def _finalize_batch_segments(spark: SparkSession, store, batch_path: str,
 def _index_batch(spark: SparkSession, store, out_dir: str, batch: int,
                  src: DataFrame, offsets: dict[int, int], pids: list[int],
                  n_total: int, bucket_base: int, gen_kw: dict, op: str,
-                 tmark: list[float], **fields) -> dict:
+                 t0: float, tmark: list[float]) -> dict:
     """Index corpus partitions ``pids`` of ``src`` as batch ``batch`` of a
-    build (``op="build"``) or an append: the fused write (docids from
-    ``offsets``, ``n_total`` past the last partition; ``gen_kw`` are
-    ``_fused_generator``'s options), the term-range segment rewrite when
-    building, and the batch's snapshot entry (``fields`` first). Bucket
-    = ``bucket_base`` + partition id. ``tmark`` is the op's stage clock;
-    the entry's ``wall_sec`` counts from it."""
-    t0 = tmark[0]
+    build (``op="build"``) or an append (``op="append"``): the fused write
+    (docids from ``offsets``, ``n_total`` past the last partition;
+    ``gen_kw`` are ``_fused_generator``'s options), the term-range segment
+    rewrite when building, and the batch's snapshot entry, marked
+    ``appended`` for an append. Bucket = ``bucket_base`` + partition id.
+    The entry's ``wall_sec`` counts from ``t0``; ``tmark`` is the op's
+    stage clock."""
     path = vstore.join(out_dir, "data", f"batch={batch}")
     gen = _fused_generator(offsets, bucket_base=bucket_base, **gen_kw)
     _write_batch_rows(src.mapInPandas(gen, OUT_SCHEMA), path)
@@ -796,8 +797,9 @@ def _index_batch(spark: SparkSession, store, out_dir: str, batch: int,
         _finalize_batch_segments(spark, store, path, n_files=len(pids))
         _tick(op, f"batch {batch} finalize", tmark)
     ends = [offsets.get(p + 1, n_total) for p in pids]
+    mark = {"appended": True} if op == "append" else {}
     return _batch_entry(
-        spark, out_dir, batch, **fields, partitions=pids,
+        spark, out_dir, batch, **mark, partitions=pids,
         buckets=[bucket_base + p for p in pids],
         docid_range=[offsets[pids[0]], ends[-1]],
         n_docs=ends[-1] - offsets[pids[0]],
@@ -1149,7 +1151,7 @@ def _append(spark, corpus, out_dir, analyzer=DEFAULT_ANALYZER,
                  index_col=statement_col or "text",
                  raw_col="text" if stats.get("store_raw") else None,
                  store_positions=store_positions),
-            "append", [t0], appended=True)
+            "append", t0, [t0])
         batches = [b for b in base["batches"] if b["batch"] != batch_id]
         n = base["id"] + 1
         td = f"termdict/{n}"
